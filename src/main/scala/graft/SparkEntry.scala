@@ -1135,11 +1135,13 @@ object SparkEntry {
     // end, and the served store must equal the one-shot aggregation
     // over all events (same oracle as gold_candles_1m). Fresh store
     // per invocation so repeat runs do the full maintenance work.
-    "stream_candles_store" -> ((s, dir) =>
-      graft.streaming.StreamedBatch.replayIntoCandleStore(s,
-        Tables.events(s, dir), "ts", "event_id",
-        tempIndexDir("graft-stream-store"),
-        stageKey = Some(s"$dir:events"))),
+    "stream_candles_store" -> ((s, dir) => {
+      val store = tempIndexDir("graft-stream-store")
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        Tables.events(s, dir), "ts", "event_id", Candles.candleStore(store),
+        stageKey = Some(s"$dir:events"))
+      Candles.candlesFromStore(s, store)
+    }),
     // streaming ingestion INTO the persisted ANN index: batch 0 builds
     // (quantizer sample = lowest vec_ids, all in the first
     // chronological-by-id chunk), later micro-batches append via
@@ -1152,9 +1154,9 @@ object SparkEntry {
     "stream_ann_extend" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = streamStoreDir("graft-stream-ann", dir)
-      graft.streaming.StreamedBatch.replayIntoAnnIndex(s, emb,
-        "vec_id", "vec_id", idx, stageKey = Some(s"$dir:embeddings"),
-        resume = true)
+      graft.streaming.StreamedBatch.replayIntoStore(s, emb,
+        "vec_id", "vec_id", Pq.annStore(idx),
+        stageKey = Some(s"$dir:embeddings"), resume = true)
       // the replay + its ledger IS the timed operation (fresh index per
       // invocation); only the check's recompute side shares the
       // memoized sample quantizers
@@ -1175,8 +1177,8 @@ object SparkEntry {
     // re-delivery on repeats).
     "stream_neardup_extend" -> ((s, dir) => {
       val idx = streamStoreDir("graft-stream-neardup", dir)
-      graft.streaming.StreamedBatch.replayIntoNearDupIndex(s,
-        Tables.documents(s, dir), "doc_id", "doc_id", idx,
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        Tables.documents(s, dir), "doc_id", "doc_id", Dedup.nearDupStore(idx),
         stageKey = Some(s"$dir:documents"), resume = true)
       Dedup.indexedPairs(s, idx)
     }),
@@ -1190,8 +1192,9 @@ object SparkEntry {
     "stream_containment_extend" -> ((s, dir) => {
       val idx = streamStoreDir("graft-stream-cont", dir)
       val d = Tables.documents(s, dir)
-      graft.streaming.StreamedBatch.replayIntoContainmentIndex(s,
-        d.filter(col("doc_id") % 10 =!= 0), "doc_id", "doc_id", idx,
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        d.filter(col("doc_id") % 10 =!= 0), "doc_id", "doc_id",
+        Dedup.containmentStore(idx),
         stageKey = Some(s"$dir:documents-corpus"), resume = true)
       d.filter(col("doc_id") % 10 =!= 0).join(
         Dedup.containmentAcrossIndexed(d.filter(col("doc_id") % 10 === 0),
@@ -1208,9 +1211,9 @@ object SparkEntry {
       val idx = streamStoreDir("graft-stream-edit", dir)
       val d = Tables.documents(s, dir)
         .withColumn("k", substring(col("text"), 1, 32))
-      graft.streaming.StreamedBatch.replayIntoEditIndex(s,
+      graft.streaming.StreamedBatch.replayIntoStore(s,
         d.filter(col("doc_id") % 10 =!= 0).select("doc_id", "k"),
-        "doc_id", "doc_id", "k", idx,
+        "doc_id", "doc_id", Dedup.editStore(idx, "k"),
         stageKey = Some(s"$dir:documents-keyed32"), resume = true)
       d.filter(col("doc_id") % 10 =!= 0).join(
         Dedup.editAcrossIndexed(d.filter(col("doc_id") % 10 === 0), "k", idx)
@@ -1227,8 +1230,8 @@ object SparkEntry {
     // vocab).
     "stream_vocab_extend" -> ((s, dir) => {
       val idx = streamStoreDir("graft-stream-vocab", dir)
-      graft.streaming.StreamedBatch.replayIntoVocab(s,
-        Tables.documents(s, dir), "doc_id", "doc_id", idx,
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        Tables.documents(s, dir), "doc_id", "doc_id", TextOps.vocabStore(idx),
         stageKey = Some(s"$dir:documents"), resume = true)
       TextOps.scoreAgainstVocab(Tables.documents(s, dir), idx)
     }),
@@ -1241,8 +1244,9 @@ object SparkEntry {
       val d = Tables.documents(s, dir)
       val (_, cut2) = spanGateIndex(s, dir)
       val store = streamStoreDir("graft-stream-spans", dir)
-      graft.streaming.StreamedBatch.replayIntoSpanIndex(s,
-        d.filter(col("doc_id") <= cut2), "doc_id", "doc_id", store,
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        d.filter(col("doc_id") <= cut2), "doc_id", "doc_id",
+        Dedup.spanStore(store),
         stageKey = Some(s"$dir:documents-spans"), resume = true)
       Dedup.dedupSpansIncremental(d.filter(col("doc_id") > cut2), store)
     }),
@@ -1254,9 +1258,10 @@ object SparkEntry {
     "stream_novelty_extend" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
       val store = streamStoreDir("graft-stream-grams", dir)
-      graft.streaming.StreamedBatch.replayIntoGramStore(s,
-        d.filter(col("doc_id") % 10 =!= 0), "doc_id", "doc_id", store,
-        n = 2, stageKey = Some(s"$dir:documents-ref"), resume = true)
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        d.filter(col("doc_id") % 10 =!= 0), "doc_id", "doc_id",
+        TextOps.gramStore(store, n = 2),
+        stageKey = Some(s"$dir:documents-ref"), resume = true)
       TextOps.noveltyAgainstStore(d.filter(col("doc_id") % 10 === 0), store)
     }),
     // streaming maintenance of the PCA moment store: batch 0 builds,
@@ -1268,9 +1273,9 @@ object SparkEntry {
     "stream_pca_extend" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val store = streamStoreDir("graft-stream-pca", dir)
-      graft.streaming.StreamedBatch.replayIntoMomentStore(s, emb,
-        "vec_id", "vec_id", store, stageKey = Some(s"$dir:embeddings"),
-        resume = true)
+      graft.streaming.StreamedBatch.replayIntoStore(s, emb,
+        "vec_id", "vec_id", Pca.momentStore(store),
+        stageKey = Some(s"$dir:embeddings"), resume = true)
       Pca.incrementalCheck(emb, store, k = 16, expectShards = 3)
     }),
     // streaming maintenance of the residual ANN ranking model: batch 0
@@ -1281,9 +1286,9 @@ object SparkEntry {
     "stream_rproj_extend" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val store = streamStoreDir("graft-stream-rproj", dir)
-      graft.streaming.StreamedBatch.replayIntoResidualStore(s, emb,
-        "vec_id", "vec_id", store, stageKey = Some(s"$dir:embeddings"),
-        resume = true)
+      graft.streaming.StreamedBatch.replayIntoStore(s, emb,
+        "vec_id", "vec_id", Pca.residualStore(store),
+        stageKey = Some(s"$dir:embeddings"), resume = true)
       Pca.ivfResidualStoreCheck(emb, store, kDims = 16, expectShards = 3)
     }),
     // streaming maintenance of the quantile-summary store: batch 0
@@ -1295,9 +1300,9 @@ object SparkEntry {
     "stream_quantile_extend" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
       val store = streamStoreDir("graft-stream-quantile", dir)
-      graft.streaming.StreamedBatch.replayIntoQuantileStore(s, ev,
-        "ts", "event_id", "value", store, stageKey = Some(s"$dir:events"),
-        resume = true)
+      graft.streaming.StreamedBatch.replayIntoStore(s, ev,
+        "ts", "event_id", Quantiles.quantileStore(store, "value"),
+        stageKey = Some(s"$dir:events"), resume = true)
       Quantiles.quantileCheck(ev, "value", store,
         qs = Seq(0.01, 0.25, 0.5, 0.75, 0.99), expectShards = 3)
     }),
@@ -1312,8 +1317,8 @@ object SparkEntry {
       val idx = streamStoreDir("graft-stream-nb", dir)
       val d = Tables.documents(s, dir)
       val t = pmod(col("doc_id"), lit(5))
-      graft.streaming.StreamedBatch.replayIntoNbModel(s,
-        d.filter(t =!= 0), "doc_id", "doc_id", idx, "lang",
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        d.filter(t =!= 0), "doc_id", "doc_id", Classifier.nbStore(idx, "lang"),
         stageKey = Some(s"$dir:documents-train"), resume = true)
       Classifier.classifyWithModel(d.filter(t === 0), idx)
     }),
@@ -1696,10 +1701,10 @@ object SparkEntry {
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey"), col("c_name"))
       val store = streamStoreDir("graft-stream-bloom", dir)
-      graft.streaming.StreamedBatch.replayIntoBloomStore(
-        s, dim, "c_custkey", "c_custkey", store, "c_custkey",
-        expectedKeys = 100000L, stageKey = Some(s"$dir:bloom-dim"),
-        resume = true)
+      graft.streaming.StreamedBatch.replayIntoStore(
+        s, dim, "c_custkey", "c_custkey",
+        Bloom.bloomStore(store, "c_custkey", expectedKeys = 100000L),
+        stageKey = Some(s"$dir:bloom-dim"), resume = true)
       Bloom.bloomStoreJoin(Tables.orders(s, dir), dim,
           "o_custkey", "c_custkey", store)
         .select(col("o_orderkey"), col("c_name"), col("o_totalprice"))
@@ -1740,8 +1745,9 @@ object SparkEntry {
     // — the crash-recovery semantics the sink actually guarantees.
     "stream_merge_upsert" -> ((s, dir) => {
       val store = streamMergeGateStore(s, dir)
-      graft.streaming.StreamedBatch.replayIntoMergeTable(s,
-        Tables.events(s, dir), "ts", "event_id", store, Seq("user_id"),
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        Tables.events(s, dir), "ts", "event_id",
+        graft.util.Lake.mergeStore(store, Seq("user_id"), Seq("ts", "event_id")),
         stageKey = Some(s"stream-merge:$dir"), resume = true)
       graft.util.Lake.mergeRead(s, store)
     }),
@@ -1758,10 +1764,11 @@ object SparkEntry {
       val store = streamCdcGateStore(s, dir)
       val changes = Tables.events(s, dir).withColumn("op",
         when(col("event_type") === "purchase", lit("D")).otherwise(lit("U")))
-      graft.streaming.StreamedBatch.replayIntoMergeTable(s, changes,
-        "ts", "event_id", store, Seq("user_id"), opCol = Some("op"),
-        stageKey = Some(s"stream-cdc:$dir"), resume = true,
-        autoOptimizeFiles = 8)
+      graft.streaming.StreamedBatch.replayIntoStore(s, changes,
+        "ts", "event_id",
+        graft.util.Lake.mergeStore(store, Seq("user_id"), Seq("ts", "event_id"),
+          opCol = Some("op")),
+        stageKey = Some(s"stream-cdc:$dir"), resume = true, autoCompact = 8)
       graft.util.Lake.mergeRead(s, store)
     }),
     // DELETE FROM ... WHERE as a file-pruned rewrite: read at the
@@ -2096,8 +2103,9 @@ object SparkEntry {
     "stream_dsir_extend" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
       val store = streamStoreDir("graft-stream-dsir", dir)
-      graft.streaming.StreamedBatch.replayIntoDsirStore(s,
-        d.filter(col("doc_id") % 7 === 0), "doc_id", "doc_id", store,
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        d.filter(col("doc_id") % 7 === 0), "doc_id", "doc_id",
+        Curation.dsirStore(store),
         stageKey = Some(s"$dir:documents-dsir-target"), resume = true)
       Curation.dsirAgainstStore(d, store)
     }),
@@ -2552,11 +2560,11 @@ object SparkEntry {
       val store = streamStoreDir("graft-stream-heavy", dir)
       // self-derived capacity (capacityFor): the exact serve below
       // must stay PROVABLE at every sf — see heavyGateStore
-      graft.streaming.StreamedBatch.replayIntoHeavyStore(s, docs,
-        "doc_id", "doc_id", store, stageKey = Some(s"$dir:documents"),
-        resume = true,
-        capacity = FreqSketch.capacityFor(
-          TextOps.ngrams(FreqSketch.widenToCores(docs), 2).count()))
+      graft.streaming.StreamedBatch.replayIntoStore(s, docs,
+        "doc_id", "doc_id",
+        FreqSketch.heavyStore(store, capacity = FreqSketch.capacityFor(
+          TextOps.ngrams(FreqSketch.widenToCores(docs), 2).count())),
+        stageKey = Some(s"$dir:documents"), resume = true)
       FreqSketch.heavyTopKExact(
         TextOps.ngrams(FreqSketch.widenToCores(docs), 2), "ngram", store, k = 20)
     }),
@@ -2590,15 +2598,14 @@ object SparkEntry {
     // ledgered postings/lengths — BM25 served from the streamed index
     // must equal the raw-corpus recomputation (stable store + resume:
     // repeats are ledgered no-op re-deliveries)
-    // autoCompactFiles: the long-running index's OPTIMIZE policy runs
+    // autoCompact: the long-running index's OPTIMIZE policy runs
     // inside the stream (file count stays bounded, term pruning stays
     // sharp) and the served ranking must be invariant to it
     "stream_text_extend" -> ((s, dir) => {
       val idx = streamStoreDir("graft-stream-tidx", dir)
-      graft.streaming.StreamedBatch.replayIntoTextIndex(s,
-        Tables.documents(s, dir), "doc_id", "doc_id", idx,
-        stageKey = Some(s"$dir:documents"), resume = true,
-        autoCompactFiles = 6)
+      graft.streaming.StreamedBatch.replayIntoStore(s,
+        Tables.documents(s, dir), "doc_id", "doc_id", TextIndex.indexStore(idx),
+        stageKey = Some(s"$dir:documents"), resume = true, autoCompact = 6)
       TextIndex.bm25TopK(s, idx, Seq("vector", "spark", "merge"), k = 10)
     }),
     "text_repetition" -> ((s, dir) => TextOps.repetition(Tables.documents(s, dir))),

@@ -89,6 +89,20 @@ object Bloom {
     ()
   }
 
+  /** The membership store as a streamed [[graft.util.ShardedStore]] over
+    * a dimension stream — allow-list/dimension-key maintenance: batch 0
+    * fixes the filter geometry and builds, later batches append their
+    * own (ledgered) shard filters. Bloom union is an OR over fixed
+    * geometry, so the streamed store's merged filter equals a one-shot
+    * build over everything streamed, whatever the file layout.
+    */
+  def bloomStore(path: String, keyCol: String,
+                 expectedKeys: Long = 1000000L,
+                 fpp: Double = 0.03): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "filter")(
+      buildBloomStore(_, keyCol, path, expectedKeys, fpp),
+      (b, id) => extendBloomStore(b, keyCol, path, Some(id)))
+
   /** The merged membership filter of one committed generation: shard
     * filters OR-merged in shard_id order (the union is commutative —
     * the order only pins determinism of the byte image). Driver-side:

@@ -178,13 +178,24 @@ object Candles {
     * shard/union order yields the same candles after [[finalizeCandles]].
     */
   def mergeCandlePartials(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy("window_start", "window_end", "symbol")
+    combinePartials(a.unionByName(b))
+
+  /** The associative combine over partial rows, shared by the store
+    * merge and the rollup. The re-summed `sum_value` keeps the partials'
+    * own type: Spark widens a decimal sum by 10 digits of precision,
+    * so after one merge a decimal(28,8) sum would become decimal(38,8),
+    * and [[finalizeCandles]]' division at that precision keeps only
+    * scale 8 — rounding vwap once before its 6-dp round and diverging
+    * from [[ohlcv]].
+    */
+  private def combinePartials(partials: DataFrame): DataFrame =
+    partials.groupBy("window_start", "window_end", "symbol")
       .agg(
         min(col("open_k")).as("open_k"), max(col("high")).as("high"),
         min(col("low")).as("low"), max(col("close_k")).as("close_k"),
         sum(col("trade_count")).as("trade_count"),
-        sum(col("sum_value")).as("sum_value"))
+        sum(col("sum_value")).cast(partials.schema("sum_value").dataType)
+          .as("sum_value"))
 
   /** Hierarchical re-aggregation: roll fine-grained candle PARTIALS up
     * to a coarser window (1m → 5m/15m/1h dashboards) without touching
@@ -202,13 +213,7 @@ object Candles {
       .withColumn("window_start", timestamp_seconds(col("__b")))
       .withColumn("window_end", timestamp_seconds(col("__b") + toDurSec))
       .drop("__b")
-    finalizeCandles(
-      rekeyed.groupBy("window_start", "window_end", "symbol")
-        .agg(
-          min(col("open_k")).as("open_k"), max(col("high")).as("high"),
-          min(col("low")).as("low"), max(col("close_k")).as("close_k"),
-          sum(col("trade_count")).as("trade_count"),
-          sum(col("sum_value")).as("sum_value")))
+    finalizeCandles(combinePartials(rekeyed))
   }
 
   /** Partials → the exact [[ohlcv]] output frame (map-only). */
@@ -433,31 +438,6 @@ object Candles {
     * one read+write of the LIVE data only — history never re-merges
     * (partials are already one row per (window, symbol) per date).
     */
-  /** File-count policy form of [[compactCandleStore]]: compact only
-    * when the live tree spans more than `maxVersions` owning `ver=`
-    * dirs (the quantity that grows one per update and degrades leaf
-    * listing). Returns whether a compaction ran — the streamed sink's
-    * default-on maintenance hook, same shape as
-    * [[graft.util.Manifest.autoCompactSub]].
-    */
-  /** Number of DISTINCT `ver=` dirs the current manifest references —
-    * the live-tree width [[autoCompactCandleStore]] bounds (retired
-    * generations' dirs may linger for time travel; they are not live).
-    */
-  def liveVersionCount(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Int =
-    readState(spark, path).dates.values.toSet.size
-
-  def autoCompactCandleStore(spark: org.apache.spark.sql.SparkSession,
-                             path: String, maxVersions: Int,
-                             retainGenerations: Int = 2): Boolean = {
-    require(maxVersions >= 1, s"maxVersions must be ≥ 1, got $maxVersions")
-    val live = readState(spark, path).dates.values.toSet.size
-    live > maxVersions && {
-      compactCandleStore(spark, path, retainGenerations); true
-    }
-  }
-
   def compactCandleStore(spark: org.apache.spark.sql.SparkSession, path: String,
                          retainGenerations: Int = 2): Unit = {
     require(retainGenerations >= 2,
@@ -474,6 +454,54 @@ object Candles {
       st.dates.keys.map(_ -> next).toMap, st.applied)
     retire(spark, path, next, retainGenerations)
   }
+
+  /** File-count policy form of [[compactCandleStore]]: compact only
+    * when the live tree spans more than `maxVersions` owning `ver=`
+    * dirs (the quantity that grows one per update and degrades leaf
+    * listing). Returns whether a compaction ran — the streamed sink's
+    * default-on maintenance hook, same shape as
+    * [[graft.util.Manifest.autoCompactSub]].
+    */
+  def autoCompactCandleStore(spark: org.apache.spark.sql.SparkSession,
+                             path: String, maxVersions: Int,
+                             retainGenerations: Int = 2): Boolean = {
+    require(maxVersions >= 1, s"maxVersions must be ≥ 1, got $maxVersions")
+    liveVersionCount(spark, path) > maxVersions && {
+      compactCandleStore(spark, path, retainGenerations); true
+    }
+  }
+
+  /** Number of DISTINCT `ver=` dirs the current manifest references —
+    * the live-tree width [[autoCompactCandleStore]] bounds (retired
+    * generations' dirs may linger for time travel; they are not live).
+    */
+  def liveVersionCount(spark: org.apache.spark.sql.SparkSession,
+                       path: String): Int =
+    readState(spark, path).dates.values.toSet.size
+
+  /** The candle store as a streamed [[graft.util.ShardedStore]] — the
+    * incremental-view-maintenance alternative to a stateful streaming
+    * aggregation: the store's mergeable partials ARE the state, updated
+    * per batch with O(batch + touched dates) work and served by readers
+    * at any moment through a committed generation. Batch 0 initializes
+    * ([[buildCandleStore]]); later batches fold in through
+    * [[updateCandleStore]] with the batch id as the ledgered shard id.
+    * Compaction bounds the live `ver=` dirs
+    * ([[autoCompactCandleStore]]); the ledger carries through it.
+    *
+    * The store keeps its own manifest dialect (`p_date, ver, shard_id`
+    * rows under `_meta/manifest-N`, the same path
+    * [[graft.util.Manifest]] uses), and its build records no ledger
+    * stamp, so `built` is always false: a resumed replay rebuilds.
+    */
+  def candleStore(path: String,
+                  windowDur: String = "1 minute"): graft.util.ShardedStore =
+    graft.util.ShardedStore(path,
+      build = buildCandleStore(_, path, windowDur),
+      extend = (b, id) => updateCandleStore(b, path, windowDur, Some(id)),
+      compact = (spark, maxVersions) =>
+        autoCompactCandleStore(spark, path, maxVersions),
+      built = _ => false)
 
   /** The store's candles — exactly [[ohlcv]] over everything built +
     * updated in, resolved through one committed manifest generation:

@@ -210,6 +210,21 @@ object Classifier {
     ()
   }
 
+  /** The Naive Bayes model as a streamed [[graft.util.ShardedStore]] —
+    * continuous model training as a live stream: batch 0 initializes,
+    * later batches append their own per-class count rows
+    * ([[extendNbModel]] under the ledgered batch id, so a Spark retry is
+    * a no-op instead of doubled counts biasing every later prediction
+    * toward the re-run shard's classes). Counts are additive, so
+    * classifying against the streamed store equals from-scratch
+    * [[naiveBayes]] over everything streamed. Compaction bounds both
+    * additive-count subs.
+    */
+  def nbStore(path: String, labelCol: String): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "counts", "totals")(
+      buildNbModel(_, path, labelCol),
+      (b, id) => extendNbModel(b, path, labelCol, shardId = Some(id)))
+
   /** Classify against the STORED model: old training text is never
     * re-tokenized; shard count rows merge by summation on read
     * (vocabulary-sized aggregations). Equals [[naiveBayes]] trained

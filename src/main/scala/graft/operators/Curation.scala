@@ -572,6 +572,19 @@ object Curation {
     ()
   }
 
+  /** The DSIR target as a streamed [[graft.util.ShardedStore]] — the
+    * importance-resampling reference maintained as a live stream:
+    * batch 0 builds (pinning the (n, buckets) feature space), later
+    * batches append their own ledgered count rows. Counts sum on read,
+    * so scoring any raw corpus against the streamed store equals
+    * from-scratch [[dsirLogWeights]] over everything streamed.
+    */
+  def dsirStore(path: String, n: Int = 2,
+                buckets: Int = 4096): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "counts")(
+      buildDsirTarget(_, path, n, buckets),
+      (b, id) => extendDsirTarget(b, path, Some(id)))
+
   /** Score `raw` against the STORED target distribution — equals
     * [[dsirLogWeights]](raw, everything folded into the store)
     * verbatim (count summation IS the union). One committed store

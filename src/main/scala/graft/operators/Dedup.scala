@@ -223,6 +223,22 @@ object Dedup {
     ()
   }
 
+  /** The seen-span index as a streamed [[graft.util.ShardedStore]] —
+    * the span-dedup state maintained as a live stream: batch 0
+    * initializes the index with its own elected spans, later batches
+    * append only spans the store has not seen ([[extendSpanIndex]]
+    * under the ledgered batch id; membership anti-joins make duplicate
+    * hashes answer-neutral anyway, the ledger keeps the stored set
+    * tight). The final stored set is the DISTINCT span set of
+    * everything streamed — batch-order-independent — so deduping a
+    * later tranche against the streamed store equals the from-scratch
+    * election restricted to that tranche.
+    */
+  def spanStore(path: String, spanTokens: Int = 16): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "spans")(
+      buildSpanIndex(_, path, spanTokens),
+      (b, id) => extendSpanIndex(b, path, spanTokens, Some(id)))
+
   /** First-occurrence election: keep each distinct span's earliest
     * (doc_id, pos) row; the window partitions on the precomputed span
     * HASH so the exchange carries a fixed-width key, not span text.
@@ -2038,6 +2054,26 @@ object Dedup {
     ()
   }
 
+  /** The near-dup index as a streamed [[graft.util.ShardedStore]] — the
+    * daily-ingest loop run as a LIVE stream: batch 0 builds
+    * ([[buildNearDupIndex]]), every later batch computes its
+    * incremental pair set against the stored index
+    * ([[incrementalPairs]] — old text is never re-shingled) and folds
+    * itself in through [[extendIndex]] under its ledgered batch id, so
+    * a re-run micro-batch is a no-op instead of doubled set/bucket rows
+    * fanning out every later verification join. Per-doc artifacts are
+    * deterministic, so the stored pairs equal a from-scratch
+    * [[minhashLsh]] over everything streamed. Compaction bounds all
+    * three appended row subs.
+    */
+  def nearDupStore(path: String, n: Int = 2,
+                   threshold: Double = 0.5): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "sets", "buckets", "pairs")(
+      buildNearDupIndex(_, path, n = n, threshold = threshold),
+      (b, id) => extendIndex(b,
+        incrementalPairs(b, path, n = n, threshold = threshold), path,
+        n = n, shardId = Some(id)))
+
   /** All verified near-dup pairs the index knows (`pairs/`): after
     * build + k extends, exactly the from-scratch [[minhashLsh]] pair
     * frame over everything indexed.
@@ -2197,6 +2233,22 @@ object Dedup {
     ()
   }
 
+  /** The frozen-order containment index as a streamed
+    * [[graft.util.ShardedStore]] — decon-index maintenance as a live
+    * stream: batch 0 builds (sets + postings + the frozen dftab — the
+    * df order is decided by the FIRST batch and never moves), later
+    * batches append their shard's sets and frozen-ranked postings
+    * under the ledgered batch id. Probing afterwards
+    * ([[containmentAcrossIndexed]]) equals the from-scratch cross-set
+    * containment over everything streamed — EXACT by the frozen-order
+    * argument, whatever the batch boundaries were. dftab is written
+    * once, so only the appended subs need compaction.
+    */
+  def containmentStore(path: String, n: Int = 2): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "sets", "postings")(
+      buildContainmentIndex(_, path, n = n),
+      (b, id) => extendContainmentIndex(b, path, n = n, shardId = Some(id)))
+
   // ── persisted edit index ──────────────────────────────────────────
 
   /** Build the persisted edit-distance index of a keyed corpus at
@@ -2246,6 +2298,19 @@ object Dedup {
     }
     ()
   }
+
+  /** The edit-distance index as a streamed [[graft.util.ShardedStore]]:
+    * batch 0 builds (strings + Pass-Join segments + params), later
+    * batches append their shard under the ledgered batch id. Segments
+    * are per-string-local, so the streamed store's probe answer equals
+    * the from-scratch cross join over everything streamed, and a
+    * row-preserving compaction of either sub cannot change it.
+    */
+  def editStore(path: String, strCol: String,
+                maxDist: Int = 2): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "strs", "segs")(
+      buildEditIndex(_, strCol, path, maxDist),
+      (b, id) => extendEditIndex(b, strCol, path, Some(id)))
 
   /** Cross-set edit join of `probes` against the INDEXED corpus —
     * [[editDistanceJoinAcross]]'s exact answer (spec-proven equal)

@@ -190,6 +190,26 @@ object FreqSketch {
     ()
   }
 
+  /** The n-gram heavy-hitter store as a streamed
+    * [[graft.util.ShardedStore]] over a documents stream — continuous
+    * dominant-phrase tracking: batch 0 initializes, later batches
+    * append their own (ledgered) Misra-Gries summary rows, so a Spark
+    * retry is a no-op instead of doubled counts promoting the re-run
+    * shard's items. Summaries merge with the error-additive MG rule
+    * (file-layout-blind), so exact serving from the streamed store
+    * carries the same completeness condition as the batch lifecycle.
+    */
+  def heavyStore(path: String, n: Int = 2,
+                 capacity: Int = 768): graft.util.ShardedStore = {
+    // widen the doc batch before the explode (narrow shuffle) so the
+    // shard's sketch pass is not one-file-one-task serial
+    def grams(docs: DataFrame) = TextOps.ngrams(widenToCores(docs), n)
+    graft.util.ShardedStore.onManifest(path, "sketch")(
+      b => buildHeavyStore(grams(b), "ngram", path, capacity),
+      (b, id) => extendHeavyStore(grams(b), "ngram", path, Some(id),
+        capacity = capacity))
+  }
+
   /** The merged store summary: shard maps folded with the MG merge rule
     * in shard-uid order (deterministic for a shard set; the rule
     * itself is associative and error-additive). Returns (candidate

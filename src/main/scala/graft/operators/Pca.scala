@@ -2090,6 +2090,21 @@ object Pca {
     ()
   }
 
+  /** The IVF residual model as a streamed [[graft.util.ShardedStore]] —
+    * continuous ANN ranking-model maintenance: batch 0 trains and
+    * FREEZES the coarse layout and writes the base moments, later
+    * batches assign against the frozen cells and append their own
+    * (ledgered) per-cell moment rows, so a Spark retry is a no-op
+    * instead of double-counted moments rotating every cell's axes.
+    * Moments are additive per cell, so refitting from the streamed
+    * store solves the same per-cell eigenproblems as a one-shot fit
+    * over everything streamed ([[ivfResidualStoreCheck]]).
+    */
+  def residualStore(path: String): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "moments")(
+      buildIvfResidualStore(_, path),
+      (b, id) => extendIvfResidualStore(b, path, Some(id)))
+
   /** Combined store moments per cell, shard rows summed in shard_id
     * order — deterministic for a given shard SET, independent of
     * append order or read partitioning.
@@ -2364,8 +2379,8 @@ object Pca {
 
   /** Initialize the moment store from the first corpus tranche.
     * OVERWRITE semantics (the idiom every other store build uses): a
-    * re-run — a Structured Streaming batch-0 retry in
-    * [[graft.streaming.StreamedBatch.replayIntoMomentStore]] —
+    * re-run — a Structured Streaming batch-0 retry of [[momentStore]]
+    * in [[graft.streaming.StreamedBatch.replayIntoStore]] —
     * rewrites the base moments instead of double-counting them.
     */
   def buildMomentStore(emb: DataFrame, path: String,
@@ -2391,6 +2406,18 @@ object Pca {
     }
     ()
   }
+
+  /** The moment store as a streamed [[graft.util.ShardedStore]] —
+    * continuous dimensionality-reduction maintenance: batch 0
+    * initializes, later batches append their own (ledgered) moment
+    * rows, so a Spark retry is a no-op instead of double-counted
+    * moments rotating every axis. Moments are additive, so refitting
+    * from the streamed store solves the same eigenproblem as a one-shot
+    * fit over everything streamed ([[incrementalCheck]]).
+    */
+  def momentStore(path: String): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "moments")(
+      buildMomentStore(_, path), (b, id) => extendMomentStore(b, path, Some(id)))
 
   /** Combined store moments, shard rows summed in shard_id order —
     * deterministic for a given shard SET, independent of append order

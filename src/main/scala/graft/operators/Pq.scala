@@ -562,6 +562,22 @@ object Pq {
     ()
   }
 
+  /** The ANN index as a streamed [[graft.util.ShardedStore]] — the
+    * live-embedding-pipeline shape: batch 0 initializes the index
+    * (quantizer training = the deterministic lowest-id sample, which a
+    * chronological-by-id replay places entirely in batch 0), every
+    * later batch appends through [[extendAnnIndex]] with the batch id
+    * as the shard id, so a re-run micro-batch is a ledgered no-op
+    * instead of doubled code rows. Unrefined books by design — the
+    * frozen-quantizer append is bit-identical to a from-scratch build
+    * over everything streamed (the [[extendAnnIndex]] equivalence).
+    * Each shard appends per-cell `codes` files; compaction re-clusters
+    * them by cell and preserves answers.
+    */
+  def annStore(path: String): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "codes")(
+      buildAnnIndex(_, path), (b, id) => extendAnnIndex(b, path, Some(id)))
+
   /** REBALANCE the stored index — the ANN store's OPTIMIZE: retrain
     * the coarse quantizer on the CURRENT corpus and rewrite the code
     * table partitioned by the new cells. [[extendAnnIndex]] keeps

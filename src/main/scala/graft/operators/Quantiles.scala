@@ -28,8 +28,8 @@ import org.apache.spark.sql.types._
   *
   * The store follows the repo's shard lifecycle (vocab / NB / HLL /
   * moments): one build, shard extends, streaming maintenance via
-  * [[graft.streaming.StreamedBatch.replayIntoQuantileStore]] — all
-  * committed through [[graft.util.Manifest]] generations (atomic
+  * [[quantileStore]] in [[graft.streaming.StreamedBatch.replayIntoStore]]
+  * — all committed through [[graft.util.Manifest]] generations (atomic
   * visibility, crash-safe retries, ledgered re-delivery, time travel).
   *
   *   <path>/summary/   (shard_id, shard_uid, value, weight, shard_n, r)
@@ -109,8 +109,8 @@ object Quantiles {
 
   /** Initialize the store from the first corpus tranche. OVERWRITE
     * semantics (the idiom every other store build uses): re-running the
-    * build — a Structured Streaming batch-0 retry in
-    * [[graft.streaming.StreamedBatch.replayIntoQuantileStore]] —
+    * build — a Structured Streaming batch-0 retry of [[quantileStore]]
+    * in [[graft.streaming.StreamedBatch.replayIntoStore]] —
     * rewrites the base summary instead of double-counting it.
     */
   def buildQuantileStore(df: DataFrame, valueCol: String, path: String,
@@ -138,6 +138,21 @@ object Quantiles {
     }
     ()
   }
+
+  /** The quantile-summary store as a streamed
+    * [[graft.util.ShardedStore]] — continuous percentile maintenance:
+    * batch 0 initializes, later batches append their own (ledgered)
+    * summary rows, so a Spark retry is a no-op instead of doubled
+    * weight shifting every served rank. Summaries merge by union, so
+    * serving from the streamed store (and from a row-preserving
+    * compaction of it) carries the same Σrᵢ rank-error contract as the
+    * batch lifecycle ([[quantileCheck]]).
+    */
+  def quantileStore(path: String, valueCol: String,
+                    eps: Double = 0.01): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "summary")(
+      buildQuantileStore(_, valueCol, path, eps),
+      (b, id) => extendQuantileStore(b, valueCol, path, Some(id), eps = eps))
 
   /** The merged summary, collected and value-sorted — bounded by
     * construction at Σᵢ (1/eps + 1) rows, independent of corpus size.

@@ -147,6 +147,23 @@ object TextIndex {
     graft.util.Lake.mergeAutoCompact(spark, path, Seq("term"), maxFiles,
       targetFileMB)
 
+  /** The inverted index as a streamed [[graft.util.ShardedStore]] —
+    * search-index maintenance as a live stream: batch 0 builds
+    * (postings + doc-length table + file-stats manifest), later batches
+    * append their shard's postings/lengths under the ledgered batch id
+    * (doubled postings would double BM25's df/tf). Serving afterwards —
+    * membership or BM25/RRF ranking — equals the same query against a
+    * one-shot build over everything streamed. Compaction is
+    * [[autoCompactIndex]]: each shard's files overlap every older
+    * shard's term ranges, so a long-running streamed index otherwise
+    * degrades its per-term file pruning one shard at a time.
+    */
+  def indexStore(path: String): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path)(
+      buildTextIndex(_, path), (b, id) => extendTextIndex(b, path, Some(id)))
+      .copy(compact = (spark, threshold) =>
+        autoCompactIndex(spark, path, threshold))
+
   /** The stored postings restricted to `terms` — the only corpus-side
     * data a search touches. Two pruning levels: WHOLE FILES via the
     * generation's committed term-range stats (no stale-stats window —

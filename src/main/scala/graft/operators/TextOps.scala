@@ -218,6 +218,18 @@ object TextOps {
     ()
   }
 
+  /** The reference-gram store as a streamed [[graft.util.ShardedStore]]
+    * — the novelty reference maintained as a live stream: batch 0
+    * initializes, later batches append their genuinely-new grams
+    * ([[extendGramStore]] under the ledgered batch id; set union is
+    * idempotent anyway, making this the most benign of the stores under
+    * re-delivery). Scoring against the streamed store equals
+    * from-scratch [[noveltyScore]] over everything streamed.
+    */
+  def gramStore(path: String, n: Int = 2): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "grams")(
+      buildGramStore(_, path, n), (b, id) => extendGramStore(b, path, Some(id)))
+
   /** Score docs' novelty against the STORED reference — the serving
     * side of the loop: old reference text is never re-shingled, the
     * gram set joins in as stored rows. After build + k extends this
@@ -282,6 +294,19 @@ object TextOps {
     }
     ()
   }
+
+  /** The vocabulary as a streamed [[graft.util.ShardedStore]] — the
+    * corpus-LM maintenance loop as a live stream: batch 0 initializes,
+    * later batches append their own count rows ([[extendVocab]] under
+    * the ledgered batch id, so a Spark retry is a no-op instead of
+    * doubled counts skewing every later score). Counts merge by
+    * summation, so scoring against the streamed store equals
+    * from-scratch [[unigramLogprob]] over everything streamed, and a
+    * row-preserving compaction cannot move any score.
+    */
+  def vocabStore(path: String): graft.util.ShardedStore =
+    graft.util.ShardedStore.onManifest(path, "vocab")(
+      buildVocab(_, path), (b, id) => extendVocab(b, path, shardId = Some(id)))
 
   /** The store's merged vocabulary: `(w, c)` summed across the shard
     * files of one committed generation (the newest when `asOf` is

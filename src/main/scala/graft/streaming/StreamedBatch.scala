@@ -4,6 +4,9 @@ import java.io.File
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+import graft.util.ShardedStore
 
 /** Run a watermarked streaming aggregation over a *batch* table by
   * replaying it as a chronological file stream — the harness that lets
@@ -79,31 +82,14 @@ object StreamedBatch {
         _ => new File(stageChunks(input, tsCol, tieCol, chunks), "in"))
     }
 
-  /** Batch-0 store build with cross-invocation resume — the
-    * generalization of [[replayIntoMergeTable]]'s `resume` to every
-    * `util.Manifest`-managed store family: after a successful build,
-    * an empty ledgered commit stamps `replay-batch-0` into the store's
-    * manifest, so a LATER replay of the same input (fresh checkpoint,
-    * batch ids reassigned identically by the deterministic chunking)
-    * can prove the build already happened and skip the re-init —
-    * which would otherwise clear the ledger and force every batch to
-    * re-apply. Batches 1+ then fall through to their ledgered no-ops.
-    * Only valid when the input and chunking are unchanged — the same
-    * contract a resumed checkpoint has. (The candle store keeps its
-    * own manifest dialect and its replay keeps the always-rebuild
-    * semantics.)
+  /** The file-stream source over a staged `in/` dir: one chunk per
+    * micro-batch, oldest first — the watermark advances batch by batch
+    * exactly as a live feed would.
     */
-  private def resumableBuild(spark: SparkSession, storePath: String,
-                             resume: Boolean)(build: => Unit): Unit = {
-    import graft.util.Manifest
-    if (resume && Manifest.isManaged(spark, storePath) &&
-        Manifest.applied(spark, storePath).contains("replay-batch-0")) ()
-    else {
-      build
-      Manifest.extend(spark, storePath, Some("replay-batch-0")) {}
-      ()
-    }
-  }
+  private def source(spark: SparkSession, schema: StructType, in: File): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(in.getAbsolutePath)
 
   /** Run `start`'s streaming query to completion with the session's
     * shuffle partitions clamped to `parts` for the duration — every
@@ -112,7 +98,8 @@ object StreamedBatch {
     * finalize) batches is pure commit overhead. Size the replay's
     * state partitioning to its work; a live deployment sizes it to
     * the cluster (either way it's locked into the checkpoint at first
-    * start). Restored afterwards so batch queries keep the session's
+    * start). The clamp only ever narrows the session width, and it is
+    * restored afterwards so batch queries keep the session's
     * parallelism. (RocksDB was measured for this floor and REJECTED:
     * at sf0.1 the aggregate replay runs 3.3 s on the HDFS-backed
     * provider vs 4.4 s on RocksDB — per-batch instance open/commit
@@ -120,31 +107,40 @@ object StreamedBatch {
     * state larger than executor heap should still prefer RocksDB; the
     * provider spec in StreamingSpec proves it drops in cleanly.)
     *
-    * One shared skeleton for all three replay shapes — a fix to the
+    * `stopAfterBatches = Some(k)` interrupts the query once k
+    * micro-batches have committed instead of draining it — the
+    * restart matrix's mid-stream kill.
+    *
+    * One shared skeleton for every replay shape — a fix to the
     * clamp/restore contract lands in every replay at once.
     */
-  private def runClamped(spark: SparkSession, parts: Int)
-                        (start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def runClamped(spark: SparkSession, parts: Int,
+                         stopAfterBatches: Option[Int] = None)
+                        (start: => StreamingQuery): Unit = {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    // GRAFT_STREAM_PARTS parameterises the replay state width (the
-    // same env-knob convention as GRAFT_WIDTH_TARGET): the A/B lever
-    // for sizing the replay's state partitioning without recompiling.
-    // Malformed or non-positive values fall back to the call-site
-    // width. The clamp only ever narrows the session width, so a
-    // production session keeps its own parallelism.
-    val eff = sys.env.get("GRAFT_STREAM_PARTS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse(parts)
     spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(eff, prevParts.toInt))
-    try start.awaitTermination()
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      math.min(parts, prevParts.toInt))
+    try {
+      val q = start
+      stopAfterBatches.foreach { k =>
+        while (q.isActive && q.recentProgress.count(_.numInputRows >= 0) < k)
+          Thread.sleep(50)
+        q.stop()
+      }
+      q.awaitTermination()
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
   /** Replay `input` (sorted by `tsCol`, `tieCol`) as a `chunks`-file
     * stream; apply `agg` to the watermarked stream; return the
     * append-mode output as a batch DataFrame.
+    *
+    * `stopAfterBatches` makes an interrupted run for the restart
+    * matrix: the query is killed once k micro-batches have committed,
+    * leaving the checkpoint and the file sink's _spark_metadata
+    * mid-stream; a later call with the SAME `workDirOpt` resumes from
+    * the checkpoint and must converge to the uninterrupted output (the
+    * file sink's exactly-once contract at replay scale).
     */
   def replayAggregate(spark: SparkSession, input: DataFrame,
                       tsCol: String, tieCol: String,
@@ -156,35 +152,10 @@ object StreamedBatch {
     val in = stagedIn(input, tsCol, tieCol, chunks, stageKey)
     val work = workDirOpt.getOrElse(
       Files.createTempDirectory("graft-stream-run-").toFile)
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
     val outDir = new File(work, "out").getAbsolutePath
-    stopAfterBatches match {
-      case None =>
-        runClamped(spark, parts = 8) {
-          StreamJobs.parquetAppend(agg(stream), outDir,
-            new File(work, "ckpt").getAbsolutePath)
-        }
-      case Some(k) =>
-        // interrupted run for the restart matrix: kill the query once k
-        // micro-batches have committed, leaving the checkpoint and the
-        // file sink's _spark_metadata mid-stream; a later call with the
-        // SAME workDir resumes from the checkpoint and must converge to
-        // the uninterrupted output (the file sink's exactly-once
-        // contract at replay scale)
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.min(8, prevParts.toInt))
-        try {
-          val q = StreamJobs.parquetAppend(agg(stream), outDir,
-            new File(work, "ckpt").getAbsolutePath)
-          while (q.isActive &&
-              q.recentProgress.count(_.numInputRows >= 0) < k)
-            Thread.sleep(50)
-          q.stop()
-          q.awaitTermination()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    runClamped(spark, parts = 8, stopAfterBatches) {
+      StreamJobs.parquetAppend(agg(source(spark, input.schema, in)), outDir,
+        new File(work, "ckpt").getAbsolutePath)
     }
     spark.read.parquet(outDir)
   }
@@ -216,20 +187,16 @@ object StreamedBatch {
                    stageKey: Option[String] = None): DataFrame = {
     val in = stagedIn(input, tsCol, tieCol, chunks, stageKey)
     val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val schema = input.schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
     val logDir = new File(work, "uplog").getAbsolutePath
     runClamped(spark, parts = 8) {
-      agg(stream).writeStream
+      agg(source(spark, input.schema, in)).writeStream
         .outputMode("update")
         .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
         .foreachBatch { (batch: DataFrame, id: Long) =>
           batch.withColumn("__batch", lit(id))
             .write.mode("append").parquet(logDir)
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
     }
     // upsert resolution: latest change-log row per key
@@ -241,911 +208,83 @@ object StreamedBatch {
       .drop("__rn", "__batch")
   }
 
-  /** Replay `input` as a file stream folding each micro-batch into a
-    * [[graft.operators.Candles]] candle STORE — the incremental-view-
-    * maintenance alternative to a stateful streaming aggregation: the
-    * store's mergeable partials ARE the state, updated per batch with
-    * O(batch + touched dates) work, served by readers at any moment
-    * through a committed generation.
-    *
-    * Exactly-once end-to-end on plain parquet: Structured Streaming
-    * re-runs a failed micro-batch with the SAME batch id, and
-    * `updateCandleStore(shardId = batch id)` makes the re-application
-    * a no-op via the manifest ledger — the foreachBatch idempotent-
-    * sink contract, with the idempotence actually implemented. Batch 0
-    * initializes the store (Overwrite — its own retry is idempotent
-    * too; micro-batches commit in order, so batch 0 can only re-run
-    * before batch 1 exists).
-    *
-    * Returns the store's final candles; the store at `storePath`
-    * remains live for further shards or serving.
-    */
-  /** Injected mid-micro-batch crash for the kill-point matrix
-    * (E2eProbe, r13 VERDICT task 4): the stream dies with THIS
-    * exception at a chosen (batch, phase), leaving the sink exactly as
-    * a real executor/driver loss would — phase `"before"` crashes with
-    * none of the batch's store work done, `"after-apply"` with the
-    * store updated but the micro-batch UNCOMMITTED (the re-delivery
-    * case the manifest ledger exists for), `"after-compact"`
-    * additionally after the auto-compaction rewrite. A restart on the
-    * same checkpoint + store must converge to the uninterrupted run's
-    * bytes.
+  /** Injected mid-micro-batch crash for the kill-point matrix: the
+    * stream dies with THIS exception at a chosen (batch, phase),
+    * leaving the sink exactly as a real executor/driver loss would —
+    * phase `"before"` crashes with none of the batch's store work
+    * done, `"after-apply"` with the store updated but the micro-batch
+    * UNCOMMITTED (the re-delivery case the store ledger exists for),
+    * `"after-compact"` additionally after the auto-compaction rewrite.
+    * A restart on the same checkpoint + store must converge to the
+    * uninterrupted run's answers.
     */
   final class InjectedKill(msg: String) extends RuntimeException(msg)
 
-  def replayIntoCandleStore(spark: SparkSession, input: DataFrame,
-                            tsCol: String, tieCol: String, storePath: String,
-                            windowDur: String = "1 minute",
-                            chunks: Int = 3,
-                            stageKey: Option[String] = None,
-                            autoCompactVersions: Int = 64,
-                            killPoint: Option[(Long, String)] = None,
-                            workDirOpt: Option[File] = None): DataFrame = {
-    import graft.operators.Candles
-    val in = stagedIn(input, tsCol, tieCol, chunks, stageKey)
-    val work = workDirOpt.getOrElse(
-      Files.createTempDirectory("graft-stream-run-").toFile)
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    def kill(id: Long, phase: String): Unit = killPoint.foreach {
-      case (kb, kp) if kb == id && kp == phase =>
-        throw new InjectedKill(s"injected kill at batch $id phase $phase")
-      case _ => ()
-    }
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          kill(id, "before")
-          if (id == 0) Candles.buildCandleStore(batch, storePath, windowDur)
-          else {
-            Candles.updateCandleStore(batch, storePath, windowDur,
-              shardId = Some(s"replay-batch-$id"))
-            kill(id, "after-apply")
-            // default-on maintenance: each update adds one owning ver=
-            // dir — bound the live tree (answers unchanged; the ledger
-            // carries through compaction)
-            if (autoCompactVersions > 0)
-              Candles.autoCompactCandleStore(spark, storePath,
-                autoCompactVersions)
-            kill(id, "after-compact")
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    Candles.candlesFromStore(spark, storePath)
-  }
-
-  /** Replay `input` (an embedding table) as a file stream folding each
-    * micro-batch into a persisted [[graft.operators.Pq]] ANN index —
-    * the live-embedding-pipeline shape: batch 0 initializes the index
-    * (quantizer training = the deterministic lowest-id sample, which a
-    * chronological-by-id replay places entirely in batch 0), every
-    * later batch appends through [[graft.operators.Pq.extendAnnIndex]]
-    * with the batch id as the shard id, so a re-run micro-batch (same
-    * id, the Structured Streaming retry contract) is a ledgered no-op
-    * instead of doubled code rows. Unrefined books by design — the
-    * frozen-quantizer append is bit-identical to a from-scratch build
-    * over everything streamed (the [[graft.operators.Pq.extendAnnIndex]]
-    * equivalence), which is exactly what the gate asserts.
+  /** Replay `input` (sorted by `orderCol`, `tieCol`) as a file stream
+    * folding each micro-batch into a persisted
+    * [[graft.util.ShardedStore]] — the incremental-view-maintenance
+    * alternative to a stateful streaming aggregation: the store IS the
+    * state, updated per batch with O(batch) work, served by readers at
+    * any moment through a committed generation. One replay loop for
+    * every store family (candles, ANN, near-dup, containment, edit,
+    * search index, vocabulary, seen spans, reference grams, DSIR
+    * target, NB model, PCA moments, residual moments, quantile
+    * summaries, heavy hitters, Bloom filters, the merge table).
     *
-    * The index at `indexPath` stays live for queries or further shards
-    * — the same store-maintenance contract as
-    * [[replayIntoCandleStore]], completing "every index has a
-    * streaming maintenance path".
-    */
-  def replayIntoAnnIndex(spark: SparkSession, input: DataFrame,
-                         orderCol: String, tieCol: String, indexPath: String,
-                         chunks: Int = 3,
-                         stageKey: Option[String] = None,
-                         resume: Boolean = false,
-                         autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Pq
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, indexPath, resume)(Pq.buildAnnIndex(batch, indexPath))
-          else {
-            Pq.extendAnnIndex(batch, indexPath,
-              shardId = Some(s"replay-batch-$id"))
-            // default-on: each shard appends per-cell files; compaction
-            // re-clusters by cell and preserves answers (spec-pinned)
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, indexPath,
-                "codes", autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay `input` (a documents table) as a file stream folding each
-    * micro-batch into a persisted [[graft.operators.Dedup]] near-dup
-    * index — the daily-ingest loop run as a LIVE stream: batch 0
-    * builds the index ([[graft.operators.Dedup.buildNearDupIndex]]),
-    * every later batch computes its incremental pair set against the
-    * stored index ([[graft.operators.Dedup.incrementalPairs]] — old
-    * text is never re-shingled) and folds itself in through
-    * [[graft.operators.Dedup.extendIndex]] with the batch id as the
-    * shard id, so a re-run micro-batch (the Structured Streaming retry
-    * contract) is a ledgered no-op instead of doubled set/bucket rows
-    * fanning out every later verification join. Per-doc artifacts are
-    * deterministic, so after the replay the index's stored pairs equal
-    * a from-scratch [[graft.operators.Dedup.minhashLsh]] over
-    * everything streamed (the incrementalPairs equivalence) — which is
-    * what the gate's exact-Jaccard oracle asserts.
+    * Exactly-once end to end on plain parquet: batch 0 builds the
+    * store, every later batch extends it under its batch id as the
+    * ledgered shard id, and Structured Streaming re-runs a failed
+    * micro-batch with the SAME batch id — so the re-application is a
+    * ledger no-op (the foreachBatch idempotent-sink contract).
     *
-    * The index at `indexPath` stays live for queries or further shards
-    * — the same store-maintenance contract as [[replayIntoCandleStore]]
-    * and [[replayIntoAnnIndex]].
-    */
-  def replayIntoNearDupIndex(spark: SparkSession, input: DataFrame,
-                             orderCol: String, tieCol: String, indexPath: String,
-                             chunks: Int = 3, n: Int = 2,
-                             threshold: Double = 0.5,
-                             stageKey: Option[String] = None,
-                             resume: Boolean = false,
-                             autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Dedup
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0) {
-            // returns the stored pair frame; the replay only needs the
-            // build side effect
-            resumableBuild(spark, indexPath, resume) {
-              Dedup.buildNearDupIndex(batch, indexPath, n = n, threshold = threshold)
-              ()
-            }
-          } else {
-            val pairs = Dedup.incrementalPairs(batch, indexPath,
-              n = n, threshold = threshold)
-            Dedup.extendIndex(batch, pairs, indexPath, n = n,
-              shardId = Some(s"replay-batch-$id"))
-            // default-on flat-store file-count policy on all three
-            // appended row subs (row-preserving — probe answers and
-            // the ledger are untouched)
-            if (autoCompactFiles > 0)
-              Seq("sets", "buckets", "pairs").foreach(sub =>
-                graft.util.Manifest.autoCompactSub(spark, indexPath,
-                  sub, autoCompactFiles))
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay a corpus as a file stream folding each micro-batch into
-    * the persisted frozen-order CONTAINMENT index — decon-index
-    * maintenance as a live stream: batch 0 builds (sets + postings +
-    * the frozen dftab — the df order is decided by the FIRST batch
-    * and never moves), later batches append their shard's sets and
-    * frozen-ranked postings under the batch id as the ledgered shard
-    * id (a Spark retry re-delivers into a no-op). Probing afterwards
-    * ([[graft.operators.Dedup.containmentAcrossIndexed]]) equals the
-    * from-scratch cross-set containment over everything streamed —
-    * EXACT by the frozen-order argument (Dedup.scala section
-    * comment), whatever the batch boundaries were.
-    */
-  def replayIntoContainmentIndex(spark: SparkSession, input: DataFrame,
-                                 orderCol: String, tieCol: String,
-                                 indexPath: String, chunks: Int = 3,
-                                 n: Int = 2,
-                                 stageKey: Option[String] = None,
-                                 resume: Boolean = false,
-                                 autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Dedup
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, indexPath, resume) {
-              Dedup.buildContainmentIndex(batch, indexPath, n = n)
-            }
-          else {
-            Dedup.extendContainmentIndex(batch, indexPath, n = n,
-              shardId = Some(s"replay-batch-$id"))
-            // default-on flat-store policy; dftab is frozen (written
-            // once) so only the appended subs need bounding
-            if (autoCompactFiles > 0)
-              Seq("sets", "postings").foreach(sub =>
-                graft.util.Manifest.autoCompactSub(spark, indexPath,
-                  sub, autoCompactFiles))
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay a keyed corpus as a file stream folding each micro-batch
-    * into the persisted edit-distance index
-    * ([[graft.operators.Dedup.buildEditIndex]] /
-    * `extendEditIndex`) — batch 0 builds (strings + Pass-Join
-    * segments + params), later batches append their shard with the
-    * batch id as the ledgered shard id (a Spark retry re-delivers
-    * into a no-op). Segments are per-string-local, so the streamed
-    * store's probe answer must equal the from-scratch cross join over
-    * everything streamed, verbatim.
-    */
-  def replayIntoEditIndex(spark: SparkSession, input: DataFrame,
-                          orderCol: String, tieCol: String,
-                          strCol: String, indexPath: String,
-                          chunks: Int = 3, maxDist: Int = 2,
-                          stageKey: Option[String] = None,
-                          resume: Boolean = false,
-                          autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Dedup
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, indexPath, resume) {
-              Dedup.buildEditIndex(batch, strCol, indexPath, maxDist)
-            }
-          else {
-            Dedup.extendEditIndex(batch, strCol, indexPath,
-              shardId = Some(s"replay-batch-$id"))
-            // flat-store file-count policy on both row subs (segments
-            // are per-string-local — order-free, so a row-preserving
-            // compaction cannot change any probe answer)
-            if (autoCompactFiles > 0) {
-              graft.util.Manifest.autoCompactSub(spark, indexPath,
-                "strs", autoCompactFiles)
-              graft.util.Manifest.autoCompactSub(spark, indexPath,
-                "segs", autoCompactFiles)
-            }
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay a documents table as a file stream folding each
-    * micro-batch into the persisted inverted
-    * [[graft.operators.TextIndex]] — search-index maintenance as a
-    * live stream: batch 0 builds (postings + doc-length table +
-    * file-stats manifest), later batches append their shard's
-    * postings/lengths with the batch id as the ledgered shard id (a
-    * Spark retry re-delivers into a no-op; doubled postings would
-    * double BM25's df/tf). Serving afterwards — membership or
-    * BM25/RRF ranking — must equal the same query against a one-shot
-    * build over everything streamed.
+    * `resume = true` makes the whole replay idempotent ACROSS
+    * invocations, not just across Spark's own micro-batch retries: when
+    * the store proves a previous replay of the same input already
+    * built it ([[graft.util.ShardedStore.built]]), batch 0 skips the
+    * re-init and batches 1+ fall through to their ledgered no-ops.
+    * Only valid when the input and chunking are unchanged — the same
+    * contract a resumed checkpoint has.
     *
-    * `autoCompactFiles > 0` runs [[graft.operators.TextIndex
-    * .autoCompactIndex]] after every applied batch — the same
-    * threshold policy as the merge sinks' auto-OPTIMIZE: each shard's
-    * files overlap every older shard's term ranges, so a long-running
-    * streamed index otherwise degrades its per-term file pruning one
-    * shard at a time.
+    * `autoCompact > 0` runs the store's compaction policy after every
+    * batch (default on): each extend adds files (or, for the candle
+    * store, one owning version dir), and without a policy the live
+    * tree — and every later read's listing or stats scan — grows
+    * without bound. Compaction preserves answers and the ledger.
+    *
+    * `killPoint = Some((batch, phase))` crashes the stream with an
+    * [[InjectedKill]] there; `workDirOpt` pins the checkpoint dir so a
+    * later call with the same dir (and `stageKey`, so the staged input
+    * files are the ones the checkpoint recorded) resumes the crashed
+    * run. The store at `store.path` stays live for queries or further
+    * shards.
     */
-  def replayIntoTextIndex(spark: SparkSession, input: DataFrame,
-                          orderCol: String, tieCol: String, indexPath: String,
-                          chunks: Int = 3,
-                          stageKey: Option[String] = None,
-                          resume: Boolean = false,
-                          autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.TextIndex
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, indexPath, resume)(
-              TextIndex.buildTextIndex(batch, indexPath))
-          else TextIndex.extendTextIndex(batch, indexPath,
-            shardId = Some(s"replay-batch-$id"))
-          if (autoCompactFiles > 0) {
-            TextIndex.autoCompactIndex(spark, indexPath, autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay `input` (a documents table) as a file stream folding each
-    * micro-batch's token counts into a persisted
-    * [[graft.operators.TextOps]] vocabulary store — the corpus-LM
-    * maintenance loop as a live stream: batch 0 initializes the store,
-    * later batches append their own count rows
-    * ([[graft.operators.TextOps.extendVocab]], batch id = shard id, so
-    * a Spark retry is a ledgered no-op instead of doubled counts
-    * skewing every later score). Counts merge by summation, so scoring
-    * against the streamed store equals from-scratch
-    * [[graft.operators.TextOps.unigramLogprob]] over everything
-    * streamed — the gate shares that oracle. Completes the
-    * "every index has a streaming maintenance path" set: candle store,
-    * ANN index, near-dup index, vocabulary.
-    */
-  def replayIntoVocab(spark: SparkSession, input: DataFrame,
-                      orderCol: String, tieCol: String, vocabPath: String,
+  def replayIntoStore(spark: SparkSession, input: DataFrame,
+                      orderCol: String, tieCol: String,
+                      store: ShardedStore,
                       chunks: Int = 3,
                       stageKey: Option[String] = None,
                       resume: Boolean = false,
-                      autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.TextOps
+                      autoCompact: Int = 64,
+                      killPoint: Option[(Long, String)] = None,
+                      workDirOpt: Option[File] = None): Unit = {
     val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
+    val work = workDirOpt.getOrElse(
+      Files.createTempDirectory("graft-stream-run-").toFile)
+    def kill(id: Long, phase: String): Unit =
+      if (killPoint.contains((id, phase)))
+        throw new InjectedKill(s"injected kill at batch $id phase $phase")
     runClamped(spark, parts = 8) {
-      stream.writeStream
+      source(spark, input.schema, in).writeStream
         .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, vocabPath, resume)(
-              TextOps.buildVocab(batch, vocabPath))
-          else {
-            TextOps.extendVocab(batch, vocabPath,
-              shardId = Some(s"replay-batch-$id"))
-            // default-on flat-store policy (counts sum at read —
-            // row-preserving compaction cannot move any score)
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, vocabPath,
-                "vocab", autoCompactFiles)
-            ()
-          }
+          kill(id, "before")
+          if (id > 0) store.extend(batch, ShardedStore.shardId(id))
+          else if (!(resume && store.built(spark))) store.build(batch)
+          kill(id, "after-apply")
+          if (autoCompact > 0) store.compact(spark, autoCompact)
+          kill(id, "after-compact")
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay `input` (a documents table) as a file stream folding each
-    * micro-batch's NEW span hashes into a persisted
-    * [[graft.operators.Dedup]] seen-span index — the span-dedup state
-    * maintained as a live stream: batch 0 initializes the index with
-    * its own elected spans, later batches append only spans the store
-    * has not seen ([[graft.operators.Dedup.extendSpanIndex]], batch id
-    * = shard id, ledgered no-op on re-delivery; membership anti-joins
-    * make duplicate hashes answer-neutral anyway, the ledger keeps the
-    * stored set tight). The final stored set is the DISTINCT span set
-    * of everything streamed — batch-order-independent — so deduping a
-    * later tranche against the streamed store equals the from-scratch
-    * election restricted to that tranche: the gate shares
-    * `dedup_spans_incremental`'s oracle.
-    */
-  def replayIntoSpanIndex(spark: SparkSession, input: DataFrame,
-                          orderCol: String, tieCol: String, storePath: String,
-                          spanTokens: Int = 16, chunks: Int = 3,
-                          stageKey: Option[String] = None,
-                          resume: Boolean = false,
-                          autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Dedup
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, storePath, resume)(
-              Dedup.buildSpanIndex(batch, storePath, spanTokens))
-          else {
-            Dedup.extendSpanIndex(batch, storePath, spanTokens,
-              shardId = Some(s"replay-batch-$id"))
-            // flat-store file-count policy
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, storePath,
-                "spans", autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay `input` (a documents table — the REFERENCE corpus) as a
-    * file stream folding each micro-batch's distinct n-grams into a
-    * persisted [[graft.operators.TextOps]] gram store — the novelty
-    * reference maintained as a live stream: batch 0 initializes the
-    * store, later batches append their genuinely-new grams
-    * ([[graft.operators.TextOps.extendGramStore]], batch id = shard
-    * id, so a Spark retry is a ledgered no-op; set union is idempotent
-    * anyway, making this the most benign of the stores under
-    * re-delivery). Scoring against the streamed store equals
-    * from-scratch [[graft.operators.TextOps.noveltyScore]] over
-    * everything streamed — the gate shares that oracle.
-    */
-  def replayIntoGramStore(spark: SparkSession, input: DataFrame,
-                          orderCol: String, tieCol: String, storePath: String,
-                          n: Int = 2, chunks: Int = 3,
-                          stageKey: Option[String] = None,
-                          resume: Boolean = false,
-                          autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.TextOps
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, storePath, resume)(
-              TextOps.buildGramStore(batch, storePath, n))
-          else {
-            TextOps.extendGramStore(batch, storePath,
-              shardId = Some(s"replay-batch-$id"))
-            // flat-store file-count policy (the text-index
-            // autoCompact cadence)
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, storePath,
-                "grams", autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay a documents table (the TARGET/curated corpus) as a file
-    * stream folding each micro-batch's hashed-gram bucket counts into
-    * a persisted [[graft.operators.Curation]] DSIR target store — the
-    * importance-resampling reference maintained as a live stream:
-    * batch 0 builds (pinning the (n, buckets) feature space), later
-    * batches append their own ledgered count rows. Counts sum on
-    * read, so scoring any raw corpus against the streamed store
-    * equals from-scratch [[graft.operators.Curation.dsirLogWeights]]
-    * over everything streamed — the gate shares that oracle.
-    */
-  def replayIntoDsirStore(spark: SparkSession, input: DataFrame,
-                          orderCol: String, tieCol: String, storePath: String,
-                          n: Int = 2, buckets: Int = 4096,
-                          chunks: Int = 3,
-                          stageKey: Option[String] = None,
-                          resume: Boolean = false,
-                          autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Curation
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, storePath, resume)(
-              Curation.buildDsirTarget(batch, storePath, n, buckets))
-          else {
-            Curation.extendDsirTarget(batch, storePath,
-              shardId = Some(s"replay-batch-$id"))
-            // default-on flat-store policy (counts sum at read)
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, storePath,
-                "counts", autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay `labeled` (a documents table carrying a label column) as a
-    * file stream folding each micro-batch's per-class token counts
-    * into a persisted [[graft.operators.Classifier]] Naive Bayes model
-    * — continuous model training as a live stream: batch 0 initializes
-    * the store, later batches append their own count rows
-    * ([[graft.operators.Classifier.extendNbModel]], batch id = shard
-    * id, so a Spark retry is a ledgered no-op instead of doubled
-    * counts biasing every later prediction toward the re-run shard's
-    * classes). Counts are additive, so classifying against the
-    * streamed store equals from-scratch
-    * [[graft.operators.Classifier.naiveBayes]] over everything
-    * streamed — the gate reuses the classifier's full SQL-re-derivation
-    * oracle verbatim. With this, every persisted model/index family
-    * has a streaming maintenance path: candle store, ANN index,
-    * near-dup index, vocabulary, classifier.
-    */
-  def replayIntoNbModel(spark: SparkSession, labeled: DataFrame,
-                        orderCol: String, tieCol: String, modelPath: String,
-                        labelCol: String, chunks: Int = 3,
-                        stageKey: Option[String] = None,
-                        resume: Boolean = false,
-                        autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Classifier
-    val in = stagedIn(labeled, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(labeled.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, modelPath, resume)(
-              Classifier.buildNbModel(batch, modelPath, labelCol))
-          else {
-            Classifier.extendNbModel(batch, modelPath, labelCol,
-              shardId = Some(s"replay-batch-$id"))
-            // default-on flat-store policy on both additive-count subs
-            if (autoCompactFiles > 0)
-              Seq("counts", "totals").foreach(sub =>
-                graft.util.Manifest.autoCompactSub(spark, modelPath,
-                  sub, autoCompactFiles))
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay an embeddings table as a file stream folding each
-    * micro-batch's PCA sufficient statistics into a persisted
-    * [[graft.operators.Pca]] moment store — continuous dimensionality-
-    * reduction maintenance: batch 0 initializes, later batches append
-    * their own (batch-id-ledgered) moment rows, so a Spark retry is a
-    * no-op instead of double-counted moments rotating every axis.
-    * Moments are additive, so refitting from the streamed store solves
-    * the same eigenproblem as a one-shot fit over everything streamed
-    * (gate-checked via [[graft.operators.Pca.incrementalCheck]]).
-    */
-  def replayIntoMomentStore(spark: SparkSession, input: DataFrame,
-                            orderCol: String, tieCol: String, storePath: String,
-                            chunks: Int = 3,
-                            stageKey: Option[String] = None,
-                            resume: Boolean = false,
-                            autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Pca
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, storePath, resume)(
-              Pca.buildMomentStore(batch, storePath))
-          else {
-            Pca.extendMomentStore(batch, storePath,
-              shardId = Some(s"replay-batch-$id"))
-            // default-on flat-store policy (moments are additive rows)
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, storePath,
-                "moments", autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay an embeddings table as a file stream folding each
-    * micro-batch's per-cell residual moments into a persisted
-    * [[graft.operators.Pca.IvfResidualModel]] store — continuous ANN
-    * ranking-model maintenance: batch 0 trains and FREEZES the coarse
-    * layout and writes the base moments, later batches assign against
-    * the frozen cells and append their own (batch-id-ledgered) per-cell
-    * moment rows, so a Spark retry is a no-op instead of double-counted
-    * moments rotating every cell's axes. Moments are additive per cell,
-    * so refitting from the streamed store solves the same per-cell
-    * eigenproblems as a one-shot fit over everything streamed
-    * (gate-checked via [[graft.operators.Pca.ivfResidualStoreCheck]]).
-    */
-  def replayIntoResidualStore(spark: SparkSession, input: DataFrame,
-                              orderCol: String, tieCol: String,
-                              storePath: String, chunks: Int = 3,
-                              stageKey: Option[String] = None,
-                              resume: Boolean = false,
-                              autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Pca
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, storePath, resume)(
-              Pca.buildIvfResidualStore(batch, storePath))
-          else {
-            Pca.extendIvfResidualStore(batch, storePath,
-              shardId = Some(s"replay-batch-$id"))
-            // default-on flat-store policy (moment rows are additive)
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, storePath,
-                "moments", autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay `input` as a file stream folding each micro-batch's
-    * rank-spaced quantile summary into a persisted
-    * [[graft.operators.Quantiles]] store — continuous percentile
-    * maintenance: batch 0 initializes, later batches append their own
-    * (batch-id-ledgered) summary rows, so a Spark retry is a no-op
-    * instead of doubled weight shifting every served rank. Summaries
-    * merge by union, so serving from the streamed store carries the
-    * same Σrᵢ rank-error contract as the batch lifecycle
-    * ([[graft.operators.Quantiles.quantileCheck]]).
-    */
-  def replayIntoQuantileStore(spark: SparkSession, input: DataFrame,
-                              orderCol: String, tieCol: String,
-                              valueCol: String, storePath: String,
-                              chunks: Int = 3, eps: Double = 0.01,
-                              stageKey: Option[String] = None,
-                              resume: Boolean = false,
-                              autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Quantiles
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, storePath, resume)(
-              Quantiles.buildQuantileStore(batch, valueCol, storePath, eps))
-          else {
-            Quantiles.extendQuantileStore(batch, valueCol, storePath,
-              shardId = Some(s"replay-batch-$id"), eps = eps)
-            // default-on flat-store policy (summaries merge by union —
-            // row-preserving compaction keeps the rank-error contract)
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, storePath,
-                "summary", autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay a documents table as a file stream folding each
-    * micro-batch's n-gram Misra-Gries summary into a persisted
-    * [[graft.operators.FreqSketch]] heavy-hitter store — continuous
-    * dominant-phrase tracking: batch 0 initializes, later batches
-    * append their own (batch-id-ledgered) summary rows, so a Spark
-    * retry is a no-op instead of doubled counts promoting the re-run
-    * shard's items. Summaries merge with the error-additive MG rule,
-    * so exact serving from the streamed store carries the same
-    * completeness condition as the batch lifecycle.
-    */
-  def replayIntoHeavyStore(spark: SparkSession, input: DataFrame,
-                           orderCol: String, tieCol: String,
-                           storePath: String, n: Int = 2,
-                           capacity: Int = 768, chunks: Int = 3,
-                           stageKey: Option[String] = None,
-                           resume: Boolean = false,
-                           autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.{FreqSketch, TextOps}
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // widen the doc batch before the explode (narrow shuffle) so
-          // the shard's sketch pass is not one-file-one-task serial
-          lazy val grams = TextOps.ngrams(FreqSketch.widenToCores(batch), n)
-          if (id == 0)
-            resumableBuild(spark, storePath, resume)(
-              FreqSketch.buildHeavyStore(grams, "ngram", storePath, capacity))
-          else {
-            FreqSketch.extendHeavyStore(grams, "ngram", storePath,
-              shardId = Some(s"replay-batch-$id"), capacity = capacity)
-            // default-on flat-store policy (shard summaries keep their
-            // shard_uid rows — the MG merge is file-layout-blind)
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, storePath,
-                "sketch", autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay a dimension table as a file stream folding each
-    * micro-batch's keys into a persisted [[graft.operators.Bloom]]
-    * membership store — the allow-list/dimension-key maintenance loop
-    * as a live stream: batch 0 fixes the filter geometry and builds,
-    * later batches append their own (batch-id-ledgered) shard filters.
-    * Bloom union is an OR over fixed geometry, so the streamed store's
-    * merged filter equals a one-shot build over everything streamed,
-    * and a Spark retry is a manifest-ledgered no-op. The gate serves
-    * the semi-join reduction against the streamed store and must be
-    * bit-identical to the plain unfiltered join.
-    */
-  def replayIntoBloomStore(spark: SparkSession, dim: DataFrame,
-                           orderCol: String, tieCol: String,
-                           storePath: String, keyCol: String,
-                           expectedKeys: Long = 1000000L,
-                           fpp: Double = 0.03, chunks: Int = 3,
-                           stageKey: Option[String] = None,
-                           resume: Boolean = false,
-                           autoCompactFiles: Int = 64): Unit = {
-    import graft.operators.Bloom
-    val in = stagedIn(dim, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val stream = spark.readStream.schema(dim.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id == 0)
-            resumableBuild(spark, storePath, resume)(
-              Bloom.buildBloomStore(batch, keyCol, storePath, expectedKeys, fpp))
-          else {
-            Bloom.extendBloomStore(batch, keyCol, storePath,
-              shardId = Some(s"replay-batch-$id"))
-            // default-on flat-store policy (shard filters OR at read —
-            // file layout is invisible to membership)
-            if (autoCompactFiles > 0)
-              graft.util.Manifest.autoCompactSub(spark, storePath,
-                "filter", autoCompactFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-  }
-
-  /** Replay `input` as a keyed CHANGE stream maintained into a
-    * [[graft.util.Lake.merge]] table — Delta's streaming MERGE sink
-    * (`foreachBatch` + `MERGE INTO`, the canonical CDC-upsert recipe)
-    * on the plain-parquet merge table: batch 0 initializes the table
-    * (range-laid-out by key so later merges can stats-prune files),
-    * every later micro-batch upserts its rows with a batch-id-ledgered
-    * merge, so a Spark retry re-delivers into a manifest no-op instead
-    * of double-applying.
-    *
-    * Each micro-batch is first resolved to its latest row per key
-    * (merge requires key-unique sources); with the chronological
-    * replay, later batches then overwrite earlier ones, so the final
-    * table is exactly the global latest-row-per-key of the input —
-    * the oracle's window-rank query. The per-batch dedup window
-    * partitions by key (never a global one-task window).
-    *
-    * `resume = true` makes the whole replay idempotent ACROSS
-    * invocations, not just across Spark's own micro-batch retries: a
-    * table whose generation-0 ledger already carries `replay-batch-0`
-    * was built by a previous replay of the same input, so batch 0
-    * skips the re-init (which would clear the ledger and force every
-    * later batch to re-apply) and batches 1+ fall through to their
-    * ledgered no-ops. Only valid when the input and chunking are
-    * unchanged — the same contract a resumed checkpoint has.
-    *
-    * `autoOptimizeFiles > 0` runs the [[graft.util.Lake
-    * .mergeAutoCompact]] policy after every applied batch: one
-    * generation lands per micro-batch, and without a compaction
-    * policy the live file count — and every later merge's stats scan —
-    * grows without bound.
-    */
-  def replayIntoMergeTable(spark: SparkSession, input: DataFrame,
-                           orderCol: String, tieCol: String,
-                           storePath: String, keys: Seq[String],
-                           chunks: Int = 3,
-                           stageKey: Option[String] = None,
-                           opCol: Option[String] = None,
-                           deleteOp: String = "D",
-                           resume: Boolean = false,
-                           autoOptimizeFiles: Int = 64): Unit = {
-    import graft.util.{Lake, Manifest}
-    import org.apache.spark.sql.expressions.Window
-    val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
-    def latestPerKey(batch: DataFrame): DataFrame = {
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(col(orderCol).desc, col(tieCol).desc)
-      batch.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    }
-    val stream = spark.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
-    runClamped(spark, parts = 8) {
-      stream.writeStream
-        .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          lazy val latest = latestPerKey(batch)
-          (id, opCol) match {
-            case (0, _) if resume && Manifest.isManaged(spark, storePath) &&
-                Manifest.applied(spark, storePath).contains("replay-batch-0") =>
-              // the ledger proves this exact build already happened —
-              // re-initializing would clear it and redo every batch
-              ()
-            case (0, None) =>
-              Lake.mergeInit(spark, storePath,
-                latest.repartitionByRange(4, keys.map(col): _*), keys,
-                shardId = Some("replay-batch-0"))
-            case (0, Some(op)) =>
-              // a key whose LATEST batch-0 change is a delete starts absent
-              Lake.mergeInit(spark, storePath,
-                latest.filter(col(op) =!= deleteOp).drop(op)
-                  .repartitionByRange(4, keys.map(col): _*), keys,
-                shardId = Some("replay-batch-0"))
-            case (_, None) =>
-              Lake.merge(spark, storePath, latest, keys,
-                shardId = Some(s"replay-batch-$id")); ()
-            case (_, Some(op)) =>
-              // the CDC path: latest-per-key resolution guarantees one
-              // operation per key per batch — applyChanges' contract
-              Lake.applyChanges(spark, storePath, latest, keys, op,
-                deleteOp, shardId = Some(s"replay-batch-$id")); ()
-          }
-          if (autoOptimizeFiles > 0) {
-            Lake.mergeAutoCompact(spark, storePath, keys, autoOptimizeFiles)
-            ()
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
     }
   }
@@ -1172,18 +311,15 @@ object StreamedBatch {
                  stageKey: Option[String] = None): DataFrame = {
     val in = stagedIn(input, tsCol, tieCol, chunks, stageKey)
     val work = Files.createTempDirectory("graft-stream-run-").toFile
-    val schema = input.schema
-    def source() = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.getAbsolutePath)
     val outDir = new File(work, "out").getAbsolutePath
+    def side() = source(spark, input.schema, in)
     // same state-partition sizing rationale as runClamped documents,
     // but HALVED: a stream-stream join commits FOUR state stores per
     // partition per micro-batch (left/right × keyToNumValues/
     // keyWithIndexToValue), so at equal partition counts the join
     // replay pays 4× the aggregate replay's commit floor
     runClamped(spark, parts = 4) {
-      StreamJobs.parquetAppend(join(source(), source()), outDir,
+      StreamJobs.parquetAppend(join(side(), side()), outDir,
         new File(work, "ckpt").getAbsolutePath)
     }
     spark.read.parquet(outDir)

@@ -994,6 +994,57 @@ object Lake {
     }
   }
 
+  /** The merge table as a streamed [[ShardedStore]] — Delta's streaming
+    * MERGE sink (`foreachBatch` + `MERGE INTO`, the canonical
+    * CDC-upsert recipe) on the plain-parquet merge table: batch 0
+    * initializes the table (range-laid-out by key so later merges can
+    * stats-prune files) with its batch id ledgered, every later batch
+    * upserts its rows with a ledgered [[merge]].
+    *
+    * Each batch is first resolved to its latest row per key, ordered by
+    * `latestBy` descending (merge requires key-unique sources); with a
+    * chronological replay later batches then overwrite earlier ones, so
+    * the final table is exactly the global latest-row-per-key of the
+    * input. The per-batch dedup window partitions by key (never a
+    * global one-task window). With `opCol` the batches are change sets
+    * ([[applyChanges]]): a key whose latest change is `deleteOp` is
+    * removed, and one whose latest batch-0 change is a delete starts
+    * absent.
+    *
+    * Compaction is the [[mergeAutoCompact]] policy: one generation
+    * lands per batch, and without it the live file count — and every
+    * later merge's stats scan — grows without bound.
+    */
+  def mergeStore(path: String, keys: Seq[String], latestBy: Seq[String],
+                 opCol: Option[String] = None,
+                 deleteOp: String = "D"): ShardedStore = {
+    def latest(batch: DataFrame): DataFrame = {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(keys.map(col): _*).orderBy(latestBy.map(col(_).desc): _*)
+      batch.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+    }
+    ShardedStore(path,
+      build = { batch =>
+        val live = opCol.fold(latest(batch))(op =>
+          latest(batch).filter(col(op) =!= deleteOp).drop(op))
+        mergeInit(batch.sparkSession, path,
+          live.repartitionByRange(4, keys.map(col): _*), keys,
+          shardId = Some(ShardedStore.shardId(0)))
+      },
+      extend = (batch, shardId) => opCol match {
+        case None =>
+          merge(batch.sparkSession, path, latest(batch), keys, Some(shardId))
+        case Some(op) =>
+          // latest-per-key resolution guarantees one operation per key
+          // per batch — applyChanges' contract
+          applyChanges(batch.sparkSession, path, latest(batch), keys, op,
+            deleteOp, shardId = Some(shardId))
+      },
+      compact = mergeAutoCompact(_, path, keys, _),
+      built = ShardedStore.builtOnManifest(_, path))
+  }
+
   /** [[mergeRead]] restricted to `lo <= keyCol <= hi`, pruning whole
     * files through the stats committed WITH the generation — Delta
     * data skipping on the READ path, with no stale-stats window by

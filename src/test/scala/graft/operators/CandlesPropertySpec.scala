@@ -78,4 +78,39 @@ class CandlesPropertySpec extends SparkSuite with Matchers {
       assert(a.sameElements(b))
     }
   }
+
+  test("store candles with decimal(18,8) prices: build plus updates == ohlcv") {
+    // a merge re-sums decimal partials; if the sum widened to
+    // decimal(38,8), finalize's division would keep only scale 8 and
+    // round vwap before its 6-dp round (0.00000149 / 3 -> 0.00000050
+    // -> 0.000001, where ohlcv's average gives 0.000000). Tiny prices
+    // put the 6-dp rounding boundary within reach of every sample.
+    val fixed = List((0L, new Timestamp(base + 1000L), "BTC", 49L),
+      (1L, new Timestamp(base + 2000L), "BTC", 50L),
+      (2L, new Timestamp(base + 3000L), "BTC", 50L))
+    val tinyGen = Gen.nonEmptyListOf(for {
+      offsetSec <- Gen.choose(0, 600)
+      symbol <- Gen.oneOf("BTC", "ETH")
+      units <- Gen.choose(1L, 999L)
+    } yield (0L, new Timestamp(base + offsetSec * 1000L), symbol, units))
+      .map(_.zipWithIndex.map { case ((_, t, s, u), i) => (i.toLong, t, s, u) })
+    val generated = (1 to 4).flatMap(i =>
+      tinyGen.apply(Gen.Parameters.default, Seed(i.toLong)))
+    (fixed +: generated).zipWithIndex.foreach { case (trades, si) =>
+      val df = trades.toDF("event_id", "ts", "event_type", "units")
+        .withColumn("value", (col("units") / lit(100000000L)).cast("decimal(18,8)"))
+        .drop("units")
+      val store = java.nio.file.Files.createTempDirectory("candle-dec").toString
+      // build plus two ledgered updates: shard = event_id mod 3
+      def shard(i: Int) = df.filter(pmod(col("event_id"), lit(3)) === i)
+      Candles.buildCandleStore(shard(0), store)
+      Candles.updateCandleStore(shard(1), store, shardId = Some("u1"))
+      Candles.updateCandleStore(shard(2), store, shardId = Some("u2"))
+      val got = Candles.candlesFromStore(spark, store)
+        .orderBy("symbol", "window_start").collect()
+      val want = Candles.ohlcv(df, tieCol = Some("event_id"))
+        .orderBy("symbol", "window_start").collect()
+      withClue(s"sample $si: ") { got.toSeq shouldBe want.toSeq }
+    }
+  }
 }

@@ -146,14 +146,15 @@ class TextIndexSpec extends SparkSuite with Matchers {
     val plain = s"$base/plain"
     val auto = s"$base/auto"
     // 5 chronological chunks, no policy: every shard's files accrete
-    graft.streaming.StreamedBatch.replayIntoTextIndex(spark, docs,
-      "doc_id", "doc_id", plain, chunks = 5)
+    graft.streaming.StreamedBatch.replayIntoStore(spark, docs,
+      "doc_id", "doc_id", TextIndex.indexStore(plain), chunks = 5)
     def liveData(p: String): Int =
       graft.util.Manifest.snapshot(spark, p).files.count(_.startsWith("data/"))
     liveData(plain) should be > 4
     // same stream with the threshold policy: file count stays bounded
-    graft.streaming.StreamedBatch.replayIntoTextIndex(spark, docs,
-      "doc_id", "doc_id", auto, chunks = 5, autoCompactFiles = 4)
+    graft.streaming.StreamedBatch.replayIntoStore(spark, docs,
+      "doc_id", "doc_id", TextIndex.indexStore(auto), chunks = 5,
+      autoCompact = 4)
     liveData(auto) should be <= 4
     // ranking served from the compacted streamed index is unchanged
     val terms = Seq("vector", "spark", "merge")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -319,8 +320,9 @@ class StreamingSpec extends SparkSuite with Matchers {
       "and the manifest tracked one generation per micro-batch") {
     val events = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
     val store = java.nio.file.Files.createTempDirectory("stream-merge").toString
-    StreamedBatch.replayIntoMergeTable(spark, events, "ts", "event_id",
-      store, Seq("user_id"), chunks = 4)
+    StreamedBatch.replayIntoStore(spark, events, "ts", "event_id",
+      graft.util.Lake.mergeStore(store, Seq("user_id"), Seq("ts", "event_id")),
+      chunks = 4)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
     val want = events.withColumn("rn", row_number().over(w))
@@ -342,9 +344,11 @@ class StreamingSpec extends SparkSuite with Matchers {
       "generation), and auto-OPTIMIZE bounds the sink's live file count") {
     val events = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
     val store = java.nio.file.Files.createTempDirectory("stream-merge-resume").toString
-    def replay(): Unit = StreamedBatch.replayIntoMergeTable(spark, events,
-      "ts", "event_id", store, Seq("user_id"), chunks = 6,
-      stageKey = Some("resume-spec"), resume = true, autoOptimizeFiles = 4)
+    def replay(): Unit = StreamedBatch.replayIntoStore(spark, events,
+      "ts", "event_id",
+      graft.util.Lake.mergeStore(store, Seq("user_id"), Seq("ts", "event_id")),
+      chunks = 6, stageKey = Some("resume-spec"), resume = true,
+      autoCompact = 4)
     replay()
     val gen1 = graft.util.Manifest.snapshot(spark, store).gen
     val rows1 = graft.util.Lake.mergeRead(spark, store).collect().toSet
@@ -374,8 +378,8 @@ class StreamingSpec extends SparkSuite with Matchers {
       "input is all ledgered no-ops — same generation, same scores") {
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val store = java.nio.file.Files.createTempDirectory("stream-vocab-resume").toString
-    def replay(): Unit = StreamedBatch.replayIntoVocab(spark, docs,
-      "doc_id", "doc_id", store, chunks = 4,
+    def replay(): Unit = StreamedBatch.replayIntoStore(spark, docs,
+      "doc_id", "doc_id", TextOps.vocabStore(store), chunks = 4,
       stageKey = Some("vocab-resume-spec"), resume = true)
     replay()
     val gen1 = graft.util.Manifest.snapshot(spark, store).gen
@@ -399,8 +403,9 @@ class StreamingSpec extends SparkSuite with Matchers {
     val corpus = docs.filter(col("doc_id") % 3 =!= 0)
     val probes = docs.filter(col("doc_id") % 3 === 0)
     val store = java.nio.file.Files.createTempDirectory("stream-cont-resume").toString
-    def replay(): Unit = StreamedBatch.replayIntoContainmentIndex(spark,
-      corpus, "doc_id", "doc_id", store, chunks = 4,
+    def replay(): Unit = StreamedBatch.replayIntoStore(spark,
+      corpus, "doc_id", "doc_id", graft.operators.Dedup.containmentStore(store),
+      chunks = 4,
       stageKey = Some("cont-resume-spec"), resume = true)
     replay()
     val gen1 = graft.util.Manifest.snapshot(spark, store).gen
@@ -425,9 +430,9 @@ class StreamingSpec extends SparkSuite with Matchers {
     val reference = docs.filter(col("doc_id") % 3 =!= 0)
     val target = docs.filter(col("doc_id") % 3 === 0)
     val store = java.nio.file.Files.createTempDirectory("stream-gram-compact").toString
-    StreamedBatch.replayIntoGramStore(spark, reference, "doc_id", "doc_id",
-      store, n = 2, chunks = 6, stageKey = Some("gram-compact-spec"),
-      autoCompactFiles = 2)
+    StreamedBatch.replayIntoStore(spark, reference, "doc_id", "doc_id",
+      TextOps.gramStore(store, n = 2), chunks = 6,
+      stageKey = Some("gram-compact-spec"), autoCompact = 2)
     def liveGramFiles(asOf: Option[Int] = None): Int =
       graft.util.Manifest.snapshot(spark, store, asOf)
         .files.count(_.startsWith("grams/"))
@@ -457,9 +462,9 @@ class StreamingSpec extends SparkSuite with Matchers {
     val corpus = keyed.filter(col("doc_id") % 3 =!= 0)
     val probes = keyed.filter(col("doc_id") % 3 === 0)
     val store = java.nio.file.Files.createTempDirectory("stream-edit-compact").toString
-    StreamedBatch.replayIntoEditIndex(spark, corpus, "doc_id", "doc_id",
-      "k", store, chunks = 6, stageKey = Some("edit-compact-spec"),
-      autoCompactFiles = 2)
+    StreamedBatch.replayIntoStore(spark, corpus, "doc_id", "doc_id",
+      graft.operators.Dedup.editStore(store, "k"), chunks = 6,
+      stageKey = Some("edit-compact-spec"), autoCompact = 2)
     val snap = graft.util.Manifest.snapshot(spark, store)
     snap.files.count(_.startsWith("strs/")) should be <= 3
     snap.files.count(_.startsWith("segs/")) should be <= 3
@@ -478,8 +483,8 @@ class StreamingSpec extends SparkSuite with Matchers {
     val ref = docs.filter(col("doc_id") <= mx * 2 / 3)
     val tranche = docs.filter(col("doc_id") > mx * 2 / 3)
     val store = java.nio.file.Files.createTempDirectory("stream-span-resume").toString
-    def replay(): Unit = StreamedBatch.replayIntoSpanIndex(spark,
-      ref, "doc_id", "doc_id", store, chunks = 4,
+    def replay(): Unit = StreamedBatch.replayIntoStore(spark,
+      ref, "doc_id", "doc_id", graft.operators.Dedup.spanStore(store), chunks = 4,
       stageKey = Some("span-resume-spec"), resume = true)
     replay()
     val gen1 = graft.util.Manifest.snapshot(spark, store).gen
@@ -504,8 +509,8 @@ class StreamingSpec extends SparkSuite with Matchers {
     val reference = docs.filter(col("doc_id") % 3 =!= 0)
     val target = docs.filter(col("doc_id") % 3 === 0)
     val store = java.nio.file.Files.createTempDirectory("stream-gram-resume").toString
-    def replay(): Unit = StreamedBatch.replayIntoGramStore(spark,
-      reference, "doc_id", "doc_id", store, n = 2, chunks = 4,
+    def replay(): Unit = StreamedBatch.replayIntoStore(spark,
+      reference, "doc_id", "doc_id", TextOps.gramStore(store, n = 2), chunks = 4,
       stageKey = Some("gram-resume-spec"), resume = true)
     replay()
     val gen1 = graft.util.Manifest.snapshot(spark, store).gen
@@ -530,8 +535,9 @@ class StreamingSpec extends SparkSuite with Matchers {
     val corpus = keyed.filter(col("doc_id") % 3 =!= 0)
     val probes = keyed.filter(col("doc_id") % 3 === 0)
     val store = java.nio.file.Files.createTempDirectory("stream-edit-resume").toString
-    def replay(): Unit = StreamedBatch.replayIntoEditIndex(spark,
-      corpus, "doc_id", "doc_id", "k", store, chunks = 4,
+    def replay(): Unit = StreamedBatch.replayIntoStore(spark,
+      corpus, "doc_id", "doc_id", graft.operators.Dedup.editStore(store, "k"),
+      chunks = 4,
       stageKey = Some("edit-resume-spec"), resume = true)
     replay()
     val gen1 = graft.util.Manifest.snapshot(spark, store).gen
@@ -568,8 +574,9 @@ class StreamingSpec extends SparkSuite with Matchers {
       "and a re-delivered batch is a ledgered no-op") {
     val events = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
     val store = java.nio.file.Files.createTempDirectory("stream-store").toString
-    val served = StreamedBatch.replayIntoCandleStore(spark, events,
-      "ts", "event_id", store, chunks = 4)
+    StreamedBatch.replayIntoStore(spark, events, "ts", "event_id",
+      Candles.candleStore(store), chunks = 4)
+    val served = Candles.candlesFromStore(spark, store)
     val batch = Candles.ohlcv(events, tieCol = Some("event_id"))
     served.exceptAll(batch).count() shouldBe 0
     batch.exceptAll(served).count() shouldBe 0
@@ -589,8 +596,8 @@ class StreamingSpec extends SparkSuite with Matchers {
     import graft.operators.Pq
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val idx = java.nio.file.Files.createTempDirectory("stream-ann").toString
-    StreamedBatch.replayIntoAnnIndex(spark, emb, "vec_id", "vec_id", idx,
-      chunks = 4)
+    StreamedBatch.replayIntoStore(spark, emb, "vec_id", "vec_id",
+      Pq.annStore(idx), chunks = 4)
     // batch 0 built, batches 1..3 appended through the ledger
     graft.util.Manifest.applied(spark, idx) shouldBe
       Set("replay-batch-0", "replay-batch-1", "replay-batch-2", "replay-batch-3")
@@ -610,8 +617,8 @@ class StreamingSpec extends SparkSuite with Matchers {
     import graft.operators.Dedup
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val idx = java.nio.file.Files.createTempDirectory("stream-neardup").toString
-    StreamedBatch.replayIntoNearDupIndex(spark, docs, "doc_id", "doc_id", idx,
-      chunks = 4)
+    StreamedBatch.replayIntoStore(spark, docs, "doc_id", "doc_id",
+      Dedup.nearDupStore(idx), chunks = 4)
     graft.util.Manifest.applied(spark, idx) shouldBe
       Set("replay-batch-0", "replay-batch-1", "replay-batch-2", "replay-batch-3")
     // per-doc artifacts are deterministic, so the streamed index's
@@ -633,8 +640,8 @@ class StreamingSpec extends SparkSuite with Matchers {
     import graft.operators.TextOps
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val store = java.nio.file.Files.createTempDirectory("stream-vocab").toString
-    StreamedBatch.replayIntoVocab(spark, docs, "doc_id", "doc_id", store,
-      chunks = 4)
+    StreamedBatch.replayIntoStore(spark, docs, "doc_id", "doc_id",
+      TextOps.vocabStore(store), chunks = 4)
     graft.util.Manifest.applied(spark, store) shouldBe
       Set("replay-batch-0", "replay-batch-1", "replay-batch-2", "replay-batch-3")
     // counts merge by summation: streamed store == from-scratch LM
@@ -655,8 +662,8 @@ class StreamingSpec extends SparkSuite with Matchers {
     val train = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     val test = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
     val store = java.nio.file.Files.createTempDirectory("stream-nb").toString
-    StreamedBatch.replayIntoNbModel(spark, train, "doc_id", "doc_id", store,
-      "lang", chunks = 4)
+    StreamedBatch.replayIntoStore(spark, train, "doc_id", "doc_id",
+      Classifier.nbStore(store, "lang"), chunks = 4)
     graft.util.Manifest.applied(spark, store) shouldBe
       Set("replay-batch-0", "replay-batch-1", "replay-batch-2", "replay-batch-3")
     // per-class counts merge by summation: streamed model == scratch
@@ -747,112 +754,148 @@ class StreamingSpec extends SparkSuite with Matchers {
 
   test("default-on auto-compaction: N micro-batches leave every streamed " +
       "store family's live file count bounded by the policy") {
-    // every replay sink now defaults autoCompactFiles = 64; here each
-    // family runs with a TINY threshold and many chunks so the policy
-    // provably fires, and the live per-sub file count after the replay
-    // sits at/under it (the hook runs after each applied extend, so
-    // the final state is post-compaction). The merge sink's equivalent
-    // is covered by the replayIntoMergeTable resume spec.
+    // every store replay defaults autoCompact = 64; here each family
+    // runs with a TINY threshold and many chunks so the policy provably
+    // fires, and the live per-sub count after the replay sits at/under
+    // its bound (the hook runs after each applied batch, so the final
+    // state is post-compaction). The merge table's equivalent is
+    // covered by the merge-sink resume spec.
+    import graft.operators._
+    import graft.util.ShardedStore
     val sf = "/root/testdata/sf0.001"
     val events = graft.util.Tables.events(spark, sf)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val t = 2 // maxFiles per sub
+    // the candle store's live unit is its owning version dirs ("ver"),
+    // every other store's the manifest's live files under a sub
     def live(store: String, sub: String): Int =
-      graft.util.Manifest.snapshot(spark, store).files
+      if (sub == "ver") Candles.liveVersionCount(spark, store)
+      else graft.util.Manifest.snapshot(spark, store).files
         .count(_.startsWith(s"$sub/"))
-    def assertBounded(store: String, subs: Seq[String]): Unit =
-      subs.foreach { sub =>
-        withClue(s"$store sub=$sub: ") { live(store, sub) should be <= t }
+    case class Family(name: String, store: String => ShardedStore,
+                      input: DataFrame, order: String, tie: String,
+                      chunks: Int, threshold: Int, subs: Seq[String],
+                      bound: Int)
+    def byDoc(name: String, store: String => ShardedStore,
+              subs: String*): Family =
+      Family(name, store, docs, "doc_id", "doc_id", 6, t, subs, t)
+    val families = Seq(
+      Family("candle", Candles.candleStore(_), events, "ts", "event_id",
+        6, 1, Seq("ver"), 1),
+      // codes/ is cell-partitioned: the post-compaction floor is one
+      // file per live cell (nlist = 16 default), not the flat
+      // threshold — the policy bounds growth at shards × cells → cells
+      Family("ann", Pq.annStore, emb, "vec_id", "vec_id", 3, t,
+        Seq("codes"), 16),
+      byDoc("ndup", Dedup.nearDupStore(_), "sets", "buckets", "pairs"),
+      byDoc("cont", Dedup.containmentStore(_), "sets", "postings"),
+      Family("edit", Dedup.editStore(_, "k"),
+        docs.select(col("doc_id"), substring(col("text"), 1, 24).as("k")),
+        "doc_id", "doc_id", 6, t, Seq("strs", "segs"), t),
+      byDoc("tidx", TextIndex.indexStore, "data"),
+      byDoc("vocab", TextOps.vocabStore, "vocab"),
+      byDoc("span", Dedup.spanStore(_), "spans"),
+      byDoc("gram", TextOps.gramStore(_), "grams"),
+      byDoc("nb", Classifier.nbStore(_, "lang"), "counts", "totals"),
+      Family("mom", Pca.momentStore, emb, "vec_id", "vec_id", 6, t,
+        Seq("moments"), t),
+      Family("q", Quantiles.quantileStore(_, "value"), events, "ts",
+        "event_id", 6, t, Seq("summary"), t),
+      byDoc("heavy", FreqSketch.heavyStore(_), "sketch"),
+      Family("bloom", Bloom.bloomStore(_, "user_id"),
+        events.select(col("user_id")).distinct(), "user_id", "user_id",
+        6, t, Seq("filter"), t),
+      byDoc("dsir", Curation.dsirStore(_), "counts"))
+    val paths = families.map { f =>
+      val path = tmp(s"ac-${f.name}-")
+      StreamedBatch.replayIntoStore(spark, f.input, f.order, f.tie,
+        f.store(path), chunks = f.chunks, autoCompact = f.threshold)
+      f.subs.foreach { sub =>
+        withClue(s"${f.name} sub=$sub: ") { live(path, sub) should be <= f.bound }
       }
-
-    val candle = tmp("ac-candle-")
-    StreamedBatch.replayIntoCandleStore(spark, events, "ts", "event_id",
-      candle, chunks = 6, autoCompactVersions = 1)
-    Candles.liveVersionCount(spark, candle) should be <= 1
-
-    val ann = tmp("ac-ann-")
-    StreamedBatch.replayIntoAnnIndex(spark, emb, "vec_id", "vec_id", ann,
-      chunks = 3, autoCompactFiles = t)
-    // codes/ is cell-partitioned: the post-compaction floor is one
-    // file per live cell (nlist = 16 default), not the flat threshold
-    // — the policy bounds growth at shards × cells → cells
-    live(ann, "codes") should be <= 16
-
-    val ndup = tmp("ac-ndup-")
-    StreamedBatch.replayIntoNearDupIndex(spark, docs, "doc_id", "doc_id",
-      ndup, chunks = 6, autoCompactFiles = t)
-    assertBounded(ndup, Seq("sets", "buckets", "pairs"))
-
-    val cont = tmp("ac-cont-")
-    StreamedBatch.replayIntoContainmentIndex(spark, docs, "doc_id",
-      "doc_id", cont, chunks = 6, autoCompactFiles = t)
-    assertBounded(cont, Seq("sets", "postings"))
-
-    val edit = tmp("ac-edit-")
-    StreamedBatch.replayIntoEditIndex(spark,
-      docs.select(col("doc_id"), substring(col("text"), 1, 24).as("k")),
-      "doc_id", "doc_id", "k", edit, chunks = 6, autoCompactFiles = t)
-    assertBounded(edit, Seq("strs", "segs"))
-
-    val tidx = tmp("ac-tidx-")
-    StreamedBatch.replayIntoTextIndex(spark, docs, "doc_id", "doc_id",
-      tidx, chunks = 6, autoCompactFiles = t)
-    assertBounded(tidx, Seq("data"))
-
-    val vocab = tmp("ac-vocab-")
-    StreamedBatch.replayIntoVocab(spark, docs, "doc_id", "doc_id", vocab,
-      chunks = 6, autoCompactFiles = t)
-    assertBounded(vocab, Seq("vocab"))
-
-    val span = tmp("ac-span-")
-    StreamedBatch.replayIntoSpanIndex(spark, docs, "doc_id", "doc_id",
-      span, chunks = 6, autoCompactFiles = t)
-    assertBounded(span, Seq("spans"))
-
-    val gram = tmp("ac-gram-")
-    StreamedBatch.replayIntoGramStore(spark, docs, "doc_id", "doc_id",
-      gram, chunks = 6, autoCompactFiles = t)
-    assertBounded(gram, Seq("grams"))
-
-    val nb = tmp("ac-nb-")
-    StreamedBatch.replayIntoNbModel(spark, docs, "doc_id", "doc_id", nb,
-      "lang", chunks = 6, autoCompactFiles = t)
-    assertBounded(nb, Seq("counts", "totals"))
-
-    val mom = tmp("ac-mom-")
-    StreamedBatch.replayIntoMomentStore(spark, emb, "vec_id", "vec_id",
-      mom, chunks = 6, autoCompactFiles = t)
-    assertBounded(mom, Seq("moments"))
-
-    val qs = tmp("ac-q-")
-    StreamedBatch.replayIntoQuantileStore(spark, events, "ts", "event_id",
-      "value", qs, chunks = 6, autoCompactFiles = t)
-    assertBounded(qs, Seq("summary"))
-
-    val heavy = tmp("ac-heavy-")
-    StreamedBatch.replayIntoHeavyStore(spark, docs, "doc_id", "doc_id",
-      heavy, chunks = 6, autoCompactFiles = t)
-    assertBounded(heavy, Seq("sketch"))
-
-    val bloom = tmp("ac-bloom-")
-    StreamedBatch.replayIntoBloomStore(spark, events
-        .select(col("user_id")).distinct(), "user_id", "user_id",
-      bloom, "user_id", chunks = 6, autoCompactFiles = t)
-    assertBounded(bloom, Seq("filter"))
-
-    val dsir = tmp("ac-dsir-")
-    StreamedBatch.replayIntoDsirStore(spark, docs, "doc_id", "doc_id",
-      dsir, chunks = 6, autoCompactFiles = t)
-    assertBounded(dsir, Seq("counts"))
+      f.name -> path
+    }.toMap
 
     // compaction preserved answers + the ledger on a representative
-    // store of each merge style: additive counts (vocab) and
-    // membership union (bloom)
-    val scored = TextOps.scoreAgainstVocab(docs, vocab)
+    // store of the additive-count merge style
+    val scored = TextOps.scoreAgainstVocab(docs, paths("vocab"))
     val want = TextOps.unigramLogprob(docs)
     scored.exceptAll(want).count() shouldBe 0
     want.exceptAll(scored).count() shouldBe 0
-    graft.util.Manifest.applied(spark, vocab) should contain("replay-batch-1")
+    graft.util.Manifest.applied(spark, paths("vocab")) should contain("replay-batch-1")
+  }
+
+  test("kill-point matrix: an append replay stopped after one committed " +
+      "batch resumes on its checkpoint to the uninterrupted output") {
+    val events = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
+    def gold(st: DataFrame): DataFrame =
+      Candles.ohlcv(st.withWatermark("ts", "10 minutes"), tieCol = Some("event_id"))
+    val want = StreamedBatch.replayAggregate(spark, events, "ts", "event_id",
+      gold, chunks = 4)
+    // the stopped run and its resume share one staged input: the file
+    // source's checkpoint tracks input files by path
+    val work = new java.io.File(tmp("kill-append-"))
+    def run(stop: Option[Int]): DataFrame =
+      StreamedBatch.replayAggregate(spark, events, "ts", "event_id", gold,
+        chunks = 4, stageKey = Some("kill-append-spec"),
+        stopAfterBatches = stop, workDirOpt = Some(work))
+    scala.util.Try(run(Some(1)))
+    val got = run(None)
+    want.count() should be > 0L
+    got.exceptAll(want).count() shouldBe 0
+    want.exceptAll(got).count() shouldBe 0
+  }
+
+  test("kill-point matrix: a store replay crashed before the apply, after " +
+      "the apply, or after the compaction resumes to the uninterrupted " +
+      "store — candle store, a Manifest store, the merge table") {
+    val sf = "/root/testdata/sf0.001"
+    val events = graft.util.Tables.events(spark, sf)
+    val docs = graft.util.Tables.documents(spark, sf)
+    def injected(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
+        .exists(_.isInstanceOf[StreamedBatch.InjectedKill])
+    // (family, store, replay input, order/tie column, what a reader sees)
+    val families = Seq[(String, String => graft.util.ShardedStore, DataFrame,
+        String, String, String => DataFrame)](
+      ("candle", Candles.candleStore(_), events, "ts", "event_id",
+        Candles.candlesFromStore(spark, _)),
+      ("vocab", TextOps.vocabStore, docs, "doc_id", "doc_id",
+        TextOps.scoreAgainstVocab(docs, _)),
+      ("merge", graft.util.Lake.mergeStore(_, Seq("user_id"),
+          Seq("ts", "event_id")), events, "ts", "event_id",
+        graft.util.Lake.mergeRead(spark, _)))
+    families.foreach { case (name, store, input, order, tie, read) =>
+      def rows(path: String) = read(path).collect().map(_.toString).sorted
+      // a crashed run and its resume MUST share one staged input — the
+      // file-source checkpoint tracks input files by path
+      def replay(path: String, work: java.io.File, threshold: Int,
+                 killPoint: Option[(Long, String)]): Unit =
+        StreamedBatch.replayIntoStore(spark, input, order, tie, store(path),
+          chunks = 4, stageKey = Some(s"kill-spec-$name"),
+          autoCompact = threshold, killPoint = killPoint,
+          workDirOpt = Some(work))
+      val uninterrupted = tmp(s"kill-$name-ref-")
+      replay(uninterrupted, new java.io.File(tmp("kill-work-")), 64, None)
+      val want = rows(uninterrupted)
+      want.length should be > 0
+      for ((batch, phase) <- Seq((1L, "before"), (1L, "after-apply"),
+          (2L, "after-compact"))) withClue(s"$name ($batch, $phase): ") {
+        // the after-compact point must crash after a compaction that
+        // actually rewrote the tree — threshold 1 forces one every batch
+        val threshold = if (phase == "after-compact") 1 else 64
+        val path = tmp(s"kill-$name-")
+        val work = new java.io.File(tmp("kill-work-"))
+        val e = intercept[Exception](
+          replay(path, work, threshold, Some((batch, phase))))
+        injected(e) shouldBe true
+        // resume on the same checkpoint + store: the crashed batch is
+        // re-delivered, and the ledger must make any part of it that
+        // already landed a no-op
+        replay(path, work, threshold, None)
+        rows(path) shouldBe want
+      }
+    }
   }
 }
