@@ -83,8 +83,7 @@ object E2eProbe {
 
     // 3. gold through the streamed candle STORE (incremental view
     // maintenance; update semantics — every window, live ones too)
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("e2e-candle-store-").toString
+    val storeDir = graft.util.Scratch.dir("e2e-candle-store-").toString
     val served = timed("gold_candle_store") {
       graft.streaming.StreamedBatch.replayIntoStore(spark, events,
         "ts", "event_id", Candles.candleStore(storeDir))

@@ -78,8 +78,7 @@ object LatencyProbe {
       f""""n":${xs.size},"p50":${pct(xs, 0.50)}%.2f,"p95":${pct(xs, 0.95)}%.2f,"p99":${pct(xs, 0.99)}%.2f"""
 
     for (rate <- rates) {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"latency-$rate-").toString
+      val root = graft.util.Scratch.dir(s"latency-$rate-").toString
       val rawDir = s"$root/raw"
       new java.io.File(rawDir).mkdirs()
       val paths = graft.streaming.StreamJobs.MedallionPaths(root)

@@ -602,8 +602,7 @@ object ScaleProbe {
       // store lifecycle at this sf: target split into 3 ledgered
       // tranches (one re-delivered), scored read-only — must equal
       // from-scratch exactly (count summation IS the union)
-      val store = java.nio.file.Files
-        .createTempDirectory("dsir-probe-").toString
+      val store = graft.util.Scratch.dir("dsir-probe-").toString
       val t = pmod(col("doc_id"), lit(3))
       timed("dsir_store_lifecycle") {
         Curation.buildDsirTarget(target.filter(t === 0), store)

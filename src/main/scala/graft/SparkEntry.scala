@@ -23,6 +23,64 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Candles.ohlcv(Tables.events(spark, "/root/testdata/sf0.001"))
 
+  /** The session every gate-running main (Verify, Bench, Profile) uses:
+    * `local[SPARK_GRAFT_CPUS]` (default 4), one shuffle partition per
+    * core, UTC session time zone.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** One lazily built value per key, behind [[memo]]. */
+  private final class Cell { @volatile var value: Option[Any] = None }
+  private val cells = new java.util.concurrent.ConcurrentHashMap[String, Cell]()
+
+  /** Per-JVM memo of gate fixtures and trained models (quantizers, PCA
+    * fits, calibrated probe budgets). Each `build` is a deterministic
+    * function of its key, so memoizing changes no gate's bytes; it only
+    * moves fixture builds and training off the timed path of every
+    * repeat call (Bench runs each gate twice, Verify and PlanAudit once
+    * more). The first caller of `key` runs `build`, concurrent callers
+    * wait for it, and later callers get its value. A `build` that
+    * throws leaves the key unbuilt, so the next call retries.
+    *
+    * The map only hands out cells; `build` runs outside its
+    * `computeIfAbsent`, under the cell's own lock. Builds nest (the
+    * wide corpus reads the clustered one, the ANN indexes read the
+    * trained quantizers), and a mapping function that updates its own
+    * map throws `IllegalStateException("Recursive update")`.
+    */
+  private[graft] def memo[T](key: String)(build: => T): T = {
+    val cell = cells.computeIfAbsent(key, _ => new Cell)
+    cell.synchronized {
+      if (cell.value.isEmpty) cell.value = Some(build)
+      cell.value.get.asInstanceOf[T]
+    }
+  }
+
+  /** `key`'s memoized value if this JVM has built it; never builds. */
+  private def memoized[T](key: String): Option[T] =
+    Option(cells.get(key)).flatMap(_.value).map(_.asInstanceOf[T])
+
+  /** A memoized gate fixture: on the first call per (`name`, sfDir
+    * `dir`), `build` fills a fresh [[graft.util.Scratch]] dir; every
+    * call returns that dir's path.
+    */
+  private[graft] def fixture(name: String, dir: String)(build: String => Unit): String =
+    memo(s"$name#$dir") {
+      val path = graft.util.Scratch.dir(name).toString
+      build(path)
+      path
+    }
+
   /** Per-(JVM, sfDir) memo of the `dedup_incremental` gate's persisted
     * near-dup index: builds on tranche 1 (doc_id%3==1), then folds
     * tranche 2 through the full increment→[[Dedup.extendIndex]]
@@ -33,18 +91,15 @@ object SparkEntry {
     * DuckDB oracle. Memoized so Bench's two timing runs and Verify's
     * sweep pay the build once, not per call.
     */
-  private val dedupIndexMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupGateIndex(s: SparkSession, dir: String): String =
-    dedupIndexMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-dedup-index")
+    fixture("graft-dedup-index", dir) { idx =>
       val docs = Tables.documents(s, dir)
       val t1 = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
       val t2 = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
       Dedup.buildNearDupIndex(t1, idx, n = 2, threshold = 0.5)
       val p2 = Dedup.incrementalPairs(t2, idx, n = 2, threshold = 0.5)
       Dedup.extendIndex(t2, p2, idx, n = 2)
-      idx
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `cur_decon_containment_indexed`
     * gate's persisted containment index: built on 2/3 of the corpus
@@ -53,16 +108,13 @@ object SparkEntry {
     * path under the same all-pairs DuckDB oracle as the from-scratch
     * decon gate.
     */
-  private val contIndexMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def containmentGateIndex(s: SparkSession, dir: String): String =
-    contIndexMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-cont-index")
+    fixture("graft-cont-index", dir) { idx =>
       val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
       Dedup.buildContainmentIndex(corpus.filter(col("doc_id") % 3 =!= 1), idx)
       Dedup.extendContainmentIndex(corpus.filter(col("doc_id") % 3 === 1),
         idx, shardId = Some("g1"))
-      idx
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `sim_ann_rebalance` gate's index:
     * built on the first HALF of vec_ids (quantizer fits that tranche),
@@ -72,19 +124,16 @@ object SparkEntry {
     * recompute on the current corpus), the same contract the
     * build/extend gates pin.
     */
-  private val annRebalanceMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def annRebalanceGateIndex(s: SparkSession, dir: String): String =
-    annRebalanceMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-ann-rebalance")
+    fixture("graft-ann-rebalance", dir) { idx =>
       val emb = Tables.embeddings(s, dir)
       val cut = emb.agg(max("vec_id")).head().getLong(0) / 2
       Pq.buildAnnIndex(emb.filter(col("vec_id") <= cut), idx)
       Pq.extendAnnIndex(emb.filter(col("vec_id") > cut), idx)
       Pq.rebalanceAnnIndex(emb, idx, coarseIters = 0,
-        centsOpt = Some(trainedCentsMemo(s"$dir#flat16x0",
+        centsOpt = Some(memo(s"$dir#flat16x0")(
           Similarity.coarseCentroids(emb, nlist = 16, iters = 0))))
-      idx
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the exact-Jaccard PAIR SET the survivor-
     * policy gates consume (`cur_keep_best`, `cur_split_leakage_safe`).
@@ -94,15 +143,12 @@ object SparkEntry {
     * once, then every downstream policy (canonical selection, split
     * assignment, weighting) reads the same pair table.
     */
-  private val pairsMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def jaccardGatePairs(s: SparkSession, dir: String): DataFrame = {
-    val p = pairsMemo.computeIfAbsent(dir, _ => {
-      val out = tempIndexDir("graft-pairs")
+    val p = fixture("graft-pairs", dir) { out =>
       Dedup.ngramJaccard(Tables.documents(s, dir), n = 2, threshold = 0.5)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$out/pairs")
-      out
-    })
+    }
     s.read.parquet(s"$p/pairs")
   }
 
@@ -116,10 +162,8 @@ object SparkEntry {
     * miner stays measured by `sim_lsh_scaled`; oracles and hashes are
     * untouched.
     */
-  private val scaledPairsMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def scaledGatePairs(s: SparkSession, dir: String): DataFrame = {
-    val p = scaledPairsMemo.computeIfAbsent(dir, _ => {
-      val out = tempIndexDir("graft-scaled-pairs")
+    val p = fixture("graft-scaled-pairs", dir) { out =>
       val emb = Tables.embeddings(s, dir)
       // r14: geometry from the multi-word escalation at a HIGH recall
       // bar (0.9999) — within the legacy budget where that bar already
@@ -136,8 +180,7 @@ object SparkEntry {
        else Similarity.lshPairs(emb, 0.4, planes, bands))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$out/pairs")
-      out
-    })
+    }
     s.read.parquet(s"$p/pairs")
   }
 
@@ -147,32 +190,26 @@ object SparkEntry {
     * appends — count summation is the union, so scoring against the
     * store must equal the from-scratch [[Curation.dsirLogWeights]].
     */
-  private val dsirStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dsirGateStore(s: SparkSession, dir: String): String =
-    dsirStoreMemo.computeIfAbsent(dir, _ => {
-      val store = tempIndexDir("graft-dsir-store")
+    fixture("graft-dsir-store", dir) { store =>
       val tgt = Tables.documents(s, dir).filter(col("doc_id") % 7 === 0)
       val t = pmod(col("doc_id"), lit(3))
       Curation.buildDsirTarget(tgt.filter(t === 0), store)
       Curation.extendDsirTarget(tgt.filter(t === 1), store, Some("t1"))
       Curation.extendDsirTarget(tgt.filter(t === 2), store, Some("t2"))
-      store
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the persisted reference-GRAM store the
     * `text_novelty_store` gate probes — built on 2/3 of the reference
     * split, extended with the rest, like [[containmentGateIndex]].
     */
-  private val gramStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def gramStoreIndex(s: SparkSession, dir: String): String =
-    gramStoreMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-gram-store")
+    fixture("graft-gram-store", dir) { idx =>
       val ref = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
       TextOps.buildGramStore(ref.filter(col("doc_id") % 3 =!= 1), idx, n = 2)
       TextOps.extendGramStore(ref.filter(col("doc_id") % 3 === 1),
         idx, shardId = Some("g1"))
-      idx
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the persisted EDIT index the
     * `cur_decon_edit_indexed` gate probes — built on 2/3 of the
@@ -180,10 +217,8 @@ object SparkEntry {
     * (the gates time the stored-index PROBE path, the operation a
     * daily decon loop amortizes the build against).
     */
-  private val editIndexMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def editGateIndex(s: SparkSession, dir: String): String =
-    editIndexMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-edit-index")
+    fixture("graft-edit-index", dir) { idx =>
       val corpus = Tables.documents(s, dir)
         .withColumn("k", substring(col("text"), 1, 32))
         .filter(col("doc_id") % 10 =!= 0)
@@ -191,8 +226,7 @@ object SparkEntry {
         maxDist = 2)
       Dedup.extendEditIndex(corpus.filter(col("doc_id") % 3 === 1), "k",
         idx, shardId = Some("g1"))
-      idx
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `sim_topk_ann_index` gate's persisted
     * IVF-PQ index, built at the production config (nlist=16, 2 Lloyd
@@ -202,22 +236,18 @@ object SparkEntry {
     * stored-index QUERY path, which is the operation a serving loop
     * amortizes the build against.
     */
-  private val annIndexMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def annGateIndex(s: SparkSession, dir: String): String =
-    annIndexMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-ann-index")
+    fixture("graft-ann-index", dir) { idx =>
       // trained quantizers come from the shared per-(JVM, sfDir) memo —
       // the same deterministic training sim_topk_ivfpq uses, so the
       // stored index is byte-identical to an in-build training and the
       // Lloyd rounds are paid once per JVM, not per gate invocation
       val emb = Tables.embeddings(s, dir)
       Pq.buildAnnIndex(emb, idx, kmeansIters = 2, coarseIters = 1,
-        centsOpt = Some(trainedCentsMemo(s"$dir#flat16x1",
+        centsOpt = Some(memo(s"$dir#flat16x1")(
           Similarity.coarseCentroids(emb, nlist = 16, iters = 1))),
-        booksOpt = Some(trainedBooksMemo(s"$dir#books8x64x2",
-          Pq.trainedBooks(emb, kmeansIters = 2))))
-      idx
-    })
+        booksOpt = Some(memo(s"$dir#books8x64x2")(Pq.trainedBooks(emb, kmeansIters = 2))))
+    }
 
   /** Per-(JVM, sfDir) memo of the `sim_topk_ann_extend` gate's index:
     * built on the first 2/3 of vec_ids, then the remaining shard folded
@@ -227,16 +257,13 @@ object SparkEntry {
     * deterministic lowest-vec_id samples lie in tranche 1), which is
     * exactly what [[Pq.annIndexSelfCheck]] then asserts.
     */
-  private val annExtendMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def annExtendGateIndex(s: SparkSession, dir: String): String =
-    annExtendMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-ann-extend")
+    fixture("graft-ann-extend", dir) { idx =>
       val emb = Tables.embeddings(s, dir)
       val cut = emb.agg(max("vec_id")).head().getLong(0) * 2 / 3
       Pq.buildAnnIndex(emb.filter(col("vec_id") <= cut), idx)
       Pq.extendAnnIndex(emb.filter(col("vec_id") > cut), idx)
-      idx
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `gold_candles_incremental` gate's
     * candle store: partial-aggregate build on tranche 1 (event_id%3==1)
@@ -247,15 +274,12 @@ object SparkEntry {
     * build→update→query lifecycle sits under the gold_candles_1m
     * oracle.
     */
-  private val candleStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def candleGateStore(s: SparkSession, dir: String): String =
-    candleStoreMemo.computeIfAbsent(dir, _ => {
-      val store = tempIndexDir("graft-candle-store")
+    fixture("graft-candle-store", dir) { store =>
       val ev = Tables.events(s, dir)
       Candles.buildCandleStore(ev.filter(pmod(col("event_id"), lit(3)) === 1), store)
       Candles.updateCandleStore(ev.filter(pmod(col("event_id"), lit(3)) === 2), store)
-      store
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `lake_zorder_roundtrip` gate's table:
     * a 3-column slice of events rewritten by
@@ -265,16 +289,13 @@ object SparkEntry {
     * QUALITY claims (narrow per-file min/max boxes, file skipping)
     * are spec-asserted in LakeSpec where file-level stats are visible.
     */
-  private val zorderMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def zorderGateTable(s: SparkSession, dir: String): String =
-    zorderMemo.computeIfAbsent(dir, _ => {
-      val t = tempIndexDir("graft-zorder")
+    fixture("graft-zorder", dir) { t =>
       Tables.events(s, dir).select("event_id", "user_id", "value")
         .write.mode("overwrite").parquet(t)
       graft.util.Lake.compactClustered(s, t, Seq("user_id", "value"),
         targetFileMB = 1)
-      t
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `dedup_spans_incremental` gate's
     * seen-span index: built on the lowest doc_id tercile, extended with
@@ -283,21 +304,18 @@ object SparkEntry {
     * condition under which the incremental lifecycle must reproduce
     * the from-scratch [[Dedup.dedupSpans]] election exactly.
     */
-  private val spanIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-  private def spanGateIndex(s: SparkSession, dir: String): (String, Long) =
-    spanIndexMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-span-index")
-      val docs = Tables.documents(s, dir)
-      val mx = docs.agg(max("doc_id")).head().getLong(0)
-      val (cut1, cut2) = (mx / 3, mx * 2 / 3)
+  private def spanGateIndex(s: SparkSession, dir: String): (String, Long) = {
+    val docs = Tables.documents(s, dir)
+    // the tercile cut is memoized too: repeat gate invocations
+    // (Verify, PlanAudit, Bench x2) must not re-aggregate max(doc_id)
+    val mx = memo(s"$dir#max-doc-id")(docs.agg(max("doc_id")).head().getLong(0))
+    val (cut1, cut2) = (mx / 3, mx * 2 / 3)
+    (fixture("graft-span-index", dir) { idx =>
       Dedup.buildSpanIndex(docs.filter(col("doc_id") <= cut1), idx)
       Dedup.extendSpanIndex(
         docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2), idx)
-      // the tercile cut is part of the memo: repeat gate invocations
-      // (Verify, PlanAudit, Bench x2) must not re-aggregate max(doc_id)
-      (idx, cut2)
-    })
+    }, cut2)
+  }
 
   /** Per-(JVM, sfDir) memo of the `dedup_components_incremental` gate's
     * component store: labels built on the first PAIR tranche
@@ -309,16 +327,13 @@ object SparkEntry {
     * recursive-CTE closure oracle — and the timed operation is the
     * daily-loop merge, not the one-time build.
     */
-  private val compIndexMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def componentGateIndex(s: SparkSession, dir: String): String =
-    compIndexMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-comp-index")
+    fixture("graft-comp-index", dir) { idx =>
       val pairs = Dedup.ngramJaccard(Tables.documents(s, dir), n = 2, threshold = 0.5)
       val t = pmod(col("doc_a") + col("doc_b"), lit(3))
       Dedup.buildComponents(pairs.filter(t === 0), idx)
       Dedup.extendComponents(pairs.filter(t === 1), idx)
-      idx
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `sim_ann_clustered` gate's CLUSTERED
     * corpus, materialized to parquet: the blend is a lazy plan, and the
@@ -327,14 +342,11 @@ object SparkEntry {
     * a parquet scan and pins the center collect + max(vec_id) agg to
     * one evaluation.
     */
-  private val clusteredMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def clusteredGateCorpus(s: SparkSession, dir: String): String =
-    clusteredMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-clustered")
+    fixture("graft-clustered", dir) { path =>
       Similarity.clusteredCorpus(Tables.embeddings(s, dir))
         .write.mode("overwrite").parquet(path)
-      path
-    })
+    }
 
   /** The `sim_topk_wide` gate's corpus: the clustered corpus widened
     * 4× by cosine-preserving diagonal ±1 copies (d = 256, every
@@ -342,17 +354,14 @@ object SparkEntry {
     * the ScaleProbe `dwidth` fixture), materialized once per
     * (JVM, sfDir) like the clustered corpus itself.
     */
-  private val wideMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def wideGateCorpus(s: SparkSession, dir: String): String =
-    wideMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-wide256")
+    fixture("graft-wide256", dir) { path =>
       s.read.parquet(clusteredGateCorpus(s, dir))
         .withColumn("embedding", concat((0 until 4).map(j =>
           transform(col("embedding"), (x, i) =>
             when(pmod(i + lit(j), lit(3)) === 0, -x).otherwise(x))): _*))
         .write.mode("overwrite").parquet(path)
-      path
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `text_unigram_incremental` gate's
     * vocabulary store: token counts built on the first doc_id tercile,
@@ -361,10 +370,8 @@ object SparkEntry {
     * vocabulary — counts are additive, so the answer equals
     * from-scratch [[TextOps.unigramLogprob]] and shares its oracle.
     */
-  private val vocabMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def vocabGateStore(s: SparkSession, dir: String): String =
-    vocabMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-vocab")
+    fixture("graft-vocab", dir) { idx =>
       val docs = Tables.documents(s, dir)
       val t = pmod(col("doc_id"), lit(3))
       TextOps.buildVocab(docs.filter(t === 0), idx)
@@ -381,8 +388,7 @@ object SparkEntry {
         .select(explode(split(col("text"), " ")).as("w"))
         .groupBy(col("w")).agg((count(lit(1)) * 1000).as("c"))
         .coalesce(1).write.mode("append").parquet(s"$idx/vocab")
-      idx
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `text_nb_incremental` gate's stored
     * Naive Bayes model: built on one slice of the doc_id%5!=0 training
@@ -391,10 +397,8 @@ object SparkEntry {
     * into a no-op (a doubled shard would bias every prediction). The
     * gate classifies the held-out fifth read-only against the store.
     */
-  private val nbMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def nbGateModel(s: SparkSession, dir: String): String =
-    nbMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-nb-model")
+    fixture("graft-nb-model", dir) { idx =>
       val d = Tables.documents(s, dir)
       val t = pmod(col("doc_id"), lit(5))
       Classifier.buildNbModel(d.filter(t === 1), idx, "lang")
@@ -402,8 +406,7 @@ object SparkEntry {
       Classifier.extendNbModel(d.filter(t === 3 || t === 4), idx, "lang",
         shardId = Some("s34"))
       Classifier.extendNbModel(d.filter(t === 2), idx, "lang", shardId = Some("s2"))
-      idx
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `text_bpe_*` gates' trained BPE
     * model: 12 merges learned over the whole documents table
@@ -412,20 +415,17 @@ object SparkEntry {
     * train-once/serve-many shape; training itself is spec-verified
     * equal to a sequential reference implementation.
     */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** The sfDir of the most recent BPE-gate run in this JVM — oracle
-    * construction must use THIS dir's model, not an arbitrary memo
-    * entry, when one JVM verifies more than one sfDir (dev loop).
-    */
-  private val bpeLastDir = new java.util.concurrent.atomic.AtomicReference[String](null)
   private def bpeGateModel(s: SparkSession, dir: String): String = {
     bpeLastDir.set(dir)
-    bpeMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-bpe")
+    fixture("graft-bpe", dir) { path =>
       TextOps.trainBpe(Tables.documents(s, dir), path, nMerges = 12)
-      path
-    })
+    }
   }
+  /** The sfDir of the most recent BPE-gate run in this JVM — oracle
+    * construction must use THIS dir's model, not another sfDir's, when
+    * one JVM verifies more than one sfDir (dev loop).
+    */
+  private val bpeLastDir = new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Per-(JVM, sfDir) memo of the `pca_incremental` gate's moment
     * store: PCA sufficient statistics built on the first vec_id mod-3
@@ -435,18 +435,15 @@ object SparkEntry {
     * axis). The gate then refits from the store and checks the model
     * against a fresh full-corpus covariance pass.
     */
-  private val pcaStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pcaGateStore(s: SparkSession, dir: String): String =
-    pcaStoreMemo.computeIfAbsent(dir, _ => {
-      val store = tempIndexDir("graft-pca-store")
+    fixture("graft-pca-store", dir) { store =>
       val emb = Tables.embeddings(s, dir)
       val t = pmod(col("vec_id"), lit(3))
       Pca.buildMomentStore(emb.filter(t === 0), store)
       Pca.extendMomentStore(emb.filter(t === 1), store, Some("t1"))
       Pca.extendMomentStore(emb.filter(t === 2), store, Some("t2"))
       Pca.extendMomentStore(emb.filter(t === 1), store, Some("t1"))
-      store
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `sim_ann_rproj_store` gate's
     * persisted residual-model store: coarse layout trained and FROZEN
@@ -456,18 +453,15 @@ object SparkEntry {
     * against a fresh full-corpus pass (the [[pcaGateStore]] shape, one
     * level down: per-cell instead of global moments).
     */
-  private val rprojStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def rprojGateStore(s: SparkSession, dir: String): String =
-    rprojStoreMemo.computeIfAbsent(dir, _ => {
-      val store = tempIndexDir("graft-rproj-store")
+    fixture("graft-rproj-store", dir) { store =>
       val emb = Tables.embeddings(s, dir)
       val t = pmod(col("vec_id"), lit(3))
       Pca.buildIvfResidualStore(emb.filter(t === 0), store)
       Pca.extendIvfResidualStore(emb.filter(t === 1), store, Some("t1"))
       Pca.extendIvfResidualStore(emb.filter(t === 2), store, Some("t2"))
       Pca.extendIvfResidualStore(emb.filter(t === 1), store, Some("t1"))
-      store
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `text_heavy_store` gate's
     * heavy-hitter sketch store: per-tercile Misra-Gries bigram
@@ -479,10 +473,8 @@ object SparkEntry {
     * re-delivery of shard `t1`, which must no-op (doubled sketch
     * counts would promote t1's items in the merged candidate set).
     */
-  private val heavyStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def heavyGateStore(s: SparkSession, dir: String): String =
-    heavyStoreMemo.computeIfAbsent(dir, _ => {
-      val store = tempIndexDir("graft-heavy-store")
+    fixture("graft-heavy-store", dir) { store =>
       // widen the DOC side before the explode: the sketch passes then
       // run at full parallelism and the (wide) gram rows never shuffle
       val docs = FreqSketch.widenToCores(Tables.documents(s, dir))
@@ -493,8 +485,7 @@ object SparkEntry {
       FreqSketch.extendHeavyStore(grams(1), "ngram", store, Some("t1"), cap)
       FreqSketch.extendHeavyStore(grams(2), "ngram", store, Some("t2"), cap)
       FreqSketch.extendHeavyStore(grams(1), "ngram", store, Some("t1"), cap)
-      store
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `q_bloom_store` gate's membership
     * store: Bloom filters over the BUILDING-segment customer keys,
@@ -506,10 +497,8 @@ object SparkEntry {
     * merged stored filter and must match the plain unfiltered join
     * bit-for-bit.
     */
-  private val bloomStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bloomGateStore(s: SparkSession, dir: String): String =
-    bloomStoreMemo.computeIfAbsent(dir, _ => {
-      val store = tempIndexDir("graft-bloom-store")
+    fixture("graft-bloom-store", dir) { store =>
       val dim = Tables.customer(s, dir)
         .filter(col("c_mktsegment") === "BUILDING")
       val t = pmod(col("c_custkey"), lit(3))
@@ -518,8 +507,20 @@ object SparkEntry {
       Bloom.extendBloomStore(dim.filter(t === 1), "c_custkey", store, Some("t1"))
       Bloom.extendBloomStore(dim.filter(t === 2), "c_custkey", store, Some("t2"))
       Bloom.extendBloomStore(dim.filter(t === 1), "c_custkey", store, Some("t1"))
-      store
-    })
+    }
+
+  /** Stable per-(JVM, sfDir, family) store PATHS for the streaming
+    * store-maintenance gates (merge/CDC sinks and every other store
+    * family): unlike the other gate fixtures these do NOT pre-build
+    * anything — the gates run the replay on every invocation, with
+    * `resume = true`. The first invocation pays the full build +
+    * extends; the stable path turns every repeat into the
+    * ledgered-no-op re-delivery the sink contract promises (the
+    * crash-recovery semantics the sinks actually guarantee, now the
+    * measured path).
+    */
+  private def streamStoreDir(family: String, dir: String): String =
+    fixture(family, dir)(_ => ())
 
   /** Per-(JVM, sfDir) memo of the `q_merge_upsert` gate's
     * manifest-managed merge table: `orders` initialized range-laid-out
@@ -530,34 +531,8 @@ object SparkEntry {
     * manifest ledger must no-op (a double-applied merge would
     * double-insert and fail the oracle's row count).
     */
-  /** Stable per-(JVM, sfDir) store PATHS for the streaming merge/CDC
-    * sink gates: unlike the other gate memos these do NOT pre-build
-    * anything — the gates run the replay on every invocation; the
-    * stable path plus `resume = true` is what turns a repeat replay
-    * into the ledgered-no-op re-delivery the sink contract promises.
-    */
-  private val streamMergeMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def streamMergeGateStore(s: SparkSession, dir: String): String =
-    streamMergeMemo.computeIfAbsent(dir, _ => tempIndexDir("graft-stream-merge"))
-  private val streamCdcMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def streamCdcGateStore(s: SparkSession, dir: String): String =
-    streamCdcMemo.computeIfAbsent(dir, _ => tempIndexDir("graft-stream-cdc"))
-
-  /** The merge/CDC sink pattern generalized to every streaming
-    * store-maintenance gate: a stable per-(JVM, sfDir, family) store
-    * path whose replay runs with `resume = true` — the first
-    * invocation pays the full build + extends, repeats re-deliver
-    * every batch into ledgered no-ops (the crash-recovery semantics
-    * the sinks actually guarantee, now the measured path).
-    */
-  private val streamStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def streamStoreDir(family: String, dir: String): String =
-    streamStoreMemo.computeIfAbsent(s"$family#$dir", _ => tempIndexDir(family))
-
-  private val mergeStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def mergeGateStore(s: SparkSession, dir: String): String =
-    mergeStoreMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-merge-table")
+    fixture("graft-merge-table", dir) { path =>
       val orders = Tables.orders(s, dir)
       graft.util.Lake.mergeInit(s, path,
         orders.repartitionByRange(8, col("o_orderkey")), Seq("o_orderkey"))
@@ -572,8 +547,7 @@ object SparkEntry {
         shardId = Some("m1"))
       graft.util.Lake.merge(s, path, upd, Seq("o_orderkey"),
         shardId = Some("m1"))
-      path
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `q_merge_constraint` gate's table: a
     * 3-column orders subset under a persisted CHECK constraint
@@ -582,10 +556,8 @@ object SparkEntry {
     * table untouched — its negated prices would otherwise survive into
     * the final hash — and the valid ledgered merge then lands.
     */
-  private val constraintStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def constraintGateStore(s: SparkSession, dir: String): String =
-    constraintStoreMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-merge-constraint")
+    fixture("graft-merge-constraint", dir) { path =>
       val orders = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       graft.util.Lake.mergeInit(s, path,
@@ -603,8 +575,7 @@ object SparkEntry {
       graft.util.Lake.merge(s, path,
         touched.withColumn("o_orderstatus", lit("C")),
         Seq("o_orderkey"), shardId = Some("c1"))
-      path
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `q_merge_generated` gate's table:
     * orders projected to 3 columns plus a `price_band` DERIVED column
@@ -614,10 +585,8 @@ object SparkEntry {
     * divergent value must refuse (the integrity half), and the
     * re-delivered shard no-ops.
     */
-  private val generatedStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def generatedGateStore(s: SparkSession, dir: String): String =
-    generatedStoreMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-merge-generated")
+    fixture("graft-merge-generated", dir) { path =>
       val bandExpr = "CASE WHEN o_totalprice >= 150000 THEN 'high' ELSE 'std' END"
       val orders = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -657,8 +626,7 @@ object SparkEntry {
           .select(col("o_orderkey"), lit("G").as("o_orderstatus"),
             halvedCents.as("o_totalprice")),
         Seq("o_orderkey"), shardId = Some("g1"))
-      path
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `q_merge_evolve` gate's table: a
     * 3-column `orders` projection initialized range-laid-out by key,
@@ -669,10 +637,8 @@ object SparkEntry {
     * untouched pre-evolution files read the new column as NULL. The
     * same shard id is re-delivered and must ledger-no-op.
     */
-  private val evolveStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def evolveGateStore(s: SparkSession, dir: String): String =
-    evolveStoreMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-merge-evolve")
+    fixture("graft-merge-evolve", dir) { path =>
       val orders = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       graft.util.Lake.mergeInit(s, path,
@@ -685,8 +651,7 @@ object SparkEntry {
         shardId = Some("e1"), evolve = true)
       graft.util.Lake.merge(s, path, upd, Seq("o_orderkey"),
         shardId = Some("e1"), evolve = true)
-      path
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the DML gates' table: `orders`
     * initialized (gen 0), then `DELETE WHERE` (gen 1), then
@@ -696,10 +661,8 @@ object SparkEntry {
     * travel is gated too (a delete that leaked into gen 2's update
     * output, or vice versa, hash-fails its generation's oracle).
     */
-  private val dmlStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dmlGateStore(s: SparkSession, dir: String): String =
-    dmlStoreMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-dml-table")
+    fixture("graft-dml-table", dir) { path =>
       graft.util.Lake.mergeInit(s, path,
         Tables.orders(s, dir).repartitionByRange(8, col("o_orderkey")),
         Seq("o_orderkey"))
@@ -710,22 +673,18 @@ object SparkEntry {
         col("o_totalprice") > 400000,
         Map("o_orderpriority" -> lit("1-URGENT-XL")),
         Seq("o_orderkey"), shardId = Some("u1"))
-      path
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `mm_binary_source` gate's image-file
     * directory: every decodable PNG payload written once as a real
     * file (`<doc_id>.png`), re-ingested through the `binaryFile`
     * source by the gate.
     */
-  private val imageFilesDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def imageFilesMemo(s: SparkSession, dir: String): String =
-    imageFilesDirs.computeIfAbsent(dir, _ => {
-      val d = tempIndexDir("graft-image-files")
+    fixture("graft-image-files", dir) { d =>
       Multimodal.writeImageFiles(
         Multimodal.asImageTable(Tables.documents(s, dir)), d)
-      d
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `q_merge_optimize` gate's store:
     * `orders` fragmented by three narrow merges, then OPTIMIZE'd
@@ -734,10 +693,8 @@ object SparkEntry {
     * gate's stats-pruned range read over the REGENERATED stats returns
     * exactly the merged rows (compaction invisible in the answer).
     */
-  private val optimizeStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def optimizeGateStore(s: SparkSession, dir: String): String =
-    optimizeStoreMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-optimize-table")
+    fixture("graft-optimize-table", dir) { path =>
       val orders = Tables.orders(s, dir)
       graft.util.Lake.mergeInit(s, path,
         orders.repartitionByRange(8, col("o_orderkey")), Seq("o_orderkey"))
@@ -750,8 +707,7 @@ object SparkEntry {
         Seq("o_orderkey"), clusterBy = Seq("o_orderkey"))
       require(after < before,
         s"mergeCompact must shrink the file count ($before -> $after)")
-      path
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `q_merge_checked` gate's store — the
     * write-audit-publish lifecycle: a BAD batch (planted nulls +
@@ -761,10 +717,8 @@ object SparkEntry {
     * rejection that leaked rows, or a gate that blocked the clean
     * batch, hash-fails the oracle.
     */
-  private val checkedStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def checkedGateStore(s: SparkSession, dir: String): String =
-    checkedStoreMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-checked-table")
+    fixture("graft-checked-table", dir) { path =>
       val orders = Tables.orders(s, dir)
       graft.util.Lake.mergeInit(s, path,
         orders.repartitionByRange(8, col("o_orderkey")), Seq("o_orderkey"))
@@ -788,8 +742,7 @@ object SparkEntry {
       val ok = graft.util.Lake.mergeChecked(s, path, clean,
         Seq("o_orderkey"), checks, shardId = Some("wap-1"))
       require(ok.isRight, "clean batch must publish")
-      path
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `q_restore_table` gate's store: a
     * destructive DELETE rolled back with [[graft.util.Manifest.restore]]
@@ -798,10 +751,8 @@ object SparkEntry {
     * replayed DML shard id must STILL no-op: restore rewinds data, not
     * writer-idempotency history).
     */
-  private val restoreStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def restoreGateStore(s: SparkSession, dir: String): String =
-    restoreStoreMemo.computeIfAbsent(dir, _ => {
-      val path = tempIndexDir("graft-restore-table")
+    fixture("graft-restore-table", dir) { path =>
       graft.util.Lake.mergeInit(s, path,
         Tables.orders(s, dir).repartitionByRange(8, col("o_orderkey")),
         Seq("o_orderkey"))
@@ -812,8 +763,7 @@ object SparkEntry {
       val replay = graft.util.Lake.deleteWhere(s, path, lit(true),
         Seq("o_orderkey"), shardId = Some("oops"))
       require(!replay.applied, "restore must not reset the shard ledger")
-      path
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `q_quantile_store` gate's summary
     * store: rank-spaced weighted samples of `events.value` built on the
@@ -824,18 +774,15 @@ object SparkEntry {
     * alone and checks the ε rank-error contract against exact ranks
     * recomputed from the corpus.
     */
-  private val quantileStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def quantileGateStore(s: SparkSession, dir: String): String =
-    quantileStoreMemo.computeIfAbsent(dir, _ => {
-      val store = tempIndexDir("graft-quantile-store")
+    fixture("graft-quantile-store", dir) { store =>
       val ev = Tables.events(s, dir)
       val t = pmod(col("event_id"), lit(3))
       Quantiles.buildQuantileStore(ev.filter(t === 0), "value", store)
       Quantiles.extendQuantileStore(ev.filter(t === 1), "value", store, Some("t1"))
       Quantiles.extendQuantileStore(ev.filter(t === 2), "value", store, Some("t2"))
       Quantiles.extendQuantileStore(ev.filter(t === 1), "value", store, Some("t1"))
-      store
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `lake_orc_roundtrip` /
     * `lake_csv_roundtrip` gates' tables: one events slice written in
@@ -843,14 +790,11 @@ object SparkEntry {
     * reads are the format-breadth claim; the oracle is the plain
     * parquet-sourced SQL, so the round trip must be lossless.
     */
-  private val formatMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def formatGateTable(s: SparkSession, dir: String, fmt: String): String =
-    formatMemo.computeIfAbsent(s"$dir#$fmt", _ => {
-      val t = tempIndexDir(s"graft-$fmt")
+    fixture(s"graft-$fmt", dir) { t =>
       Tables.events(s, dir).select("event_id", "user_id", "event_type", "value")
         .write.format(fmt).option("header", "true").mode("overwrite").save(t)
-      t
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `lake_stats_skipping` gate's table:
     * the Z-ordered events slice (same layout as `lake_zorder_roundtrip`
@@ -860,17 +804,14 @@ object SparkEntry {
     * against the plain SQL filter proves skipping drops no rows; the
     * file-pruning claim itself is spec-asserted in LakeSpec.
     */
-  private val statsSkipMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def statsSkipGateTable(s: SparkSession, dir: String): String =
-    statsSkipMemo.computeIfAbsent(dir, _ => {
-      val t = tempIndexDir("graft-statsskip")
+    fixture("graft-statsskip", dir) { t =>
       Tables.events(s, dir).select("event_id", "user_id", "value")
         .write.mode("overwrite").parquet(t)
       graft.util.Lake.compactClustered(s, t, Seq("user_id", "value"),
         targetFileMB = 1)
       graft.util.Lake.buildFileStats(s, t, Seq("user_id", "value"))
-      t
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `q_distinct_store` gate's HLL
     * distinct-count store: per-(event_type) user sketches built on the
@@ -881,10 +822,8 @@ object SparkEntry {
     * additivity — must match exactly) and the exact distinct count
     * (the 5% HLL error contract at lgK=12).
     */
-  private val hllStoreMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def hllGateStore(s: SparkSession, dir: String): String =
-    hllStoreMemo.computeIfAbsent(dir, _ => {
-      val store = tempIndexDir("graft-hll-store")
+    fixture("graft-hll-store", dir) { store =>
       val ev = Tables.events(s, dir)
       val t = pmod(col("event_id"), lit(3))
       Hll.buildDistinctStore(ev.filter(t === 0), Seq("event_type"), "user_id", store)
@@ -894,80 +833,21 @@ object SparkEntry {
         store, shardId = Some("t2"))
       Hll.extendDistinctStore(ev.filter(t === 1), Seq("event_type"), "user_id",
         store, shardId = Some("t1"))
-      store
-    })
+    }
 
   /** Per-(JVM, sfDir) memo of the `text_search_*` gates' inverted
     * index: postings built on the first doc_id tercile, the other two
     * folded in as ledgered appends. Both search gates read the stored
     * posting lists only — the corpus text is never rescanned.
     */
-  private val textIndexMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def textIndexGateStore(s: SparkSession, dir: String): String =
-    textIndexMemo.computeIfAbsent(dir, _ => {
-      val idx = tempIndexDir("graft-text-index")
+    fixture("graft-text-index", dir) { idx =>
       val docs = Tables.documents(s, dir)
       val t = pmod(col("doc_id"), lit(3))
       TextIndex.buildTextIndex(docs.filter(t === 0), idx)
       TextIndex.extendTextIndex(docs.filter(t === 1), idx, shardId = Some("t1"))
       TextIndex.extendTextIndex(docs.filter(t === 2), idx, shardId = Some("t2"))
-      idx
-    })
-
-  /** Per-(JVM, sfDir, config) memo of TRAINED quantizers — coarse
-    * centroids and refined PQ codebooks. Training is a deterministic
-    * function of (corpus, nlist/m/k, iters), so memoizing changes no
-    * gate's bytes; it only moves the Lloyd rounds off the timed path of
-    * every check that searches with the same trained layout (Bench runs
-    * each gate twice, Verify once more — without the memo the same
-    * training re-runs 3× per gate per sfDir).
-    */
-  private val centsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Similarity.Cents]()
-  /** Per-(JVM, corpus, k) memo of a fitted [[Pca.PcaModel]] — the fit
-    * is a deterministic function of (corpus, k), so memoizing changes
-    * no gate's bytes; it moves the one-pass covariance + Jacobi off
-    * the timed path of every PCA search check (same rationale as the
-    * trained-quantizer memos).
-    */
-  private val pcaModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Pca.PcaModel]()
-  private def fittedPcaMemo(key: String, train: => Pca.PcaModel): Pca.PcaModel =
-    pcaModelMemo.computeIfAbsent(key, _ => train)
-
-  private def trainedCentsMemo(key: String, train: => Similarity.Cents): Similarity.Cents =
-    centsMemo.computeIfAbsent(key, _ => train)
-
-  private val ivfResidualModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Pca.IvfResidualModel]()
-  private def ivfResidualMemo(key: String,
-                              train: => Pca.IvfResidualModel): Pca.IvfResidualModel =
-    ivfResidualModelMemo.computeIfAbsent(key, _ => train)
-
-  private val wideResidualModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Pca.WideResidualModel]()
-  private def wideResidualMemo(key: String,
-                               train: => Pca.WideResidualModel): Pca.WideResidualModel =
-    wideResidualModelMemo.computeIfAbsent(key, _ => train)
-
-  private val rprojNprobeMemoMap =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private def rprojNprobeMemo(key: String, calibrate: => Int): Int =
-    rprojNprobeMemoMap.computeIfAbsent(key, _ => Int.box(calibrate)).intValue()
-
-  /** Per-(JVM, sfDir) memo of the `sim_topk_auto` gate's PERSISTED
-    * two-arm dispatch store (r15 VERDICT task 3) — both calibration
-    * ladders are training-class work, calibrated ONCE into a
-    * manifest-ledgered store; every gate invocation then serves from
-    * the STORED decision (three tiny reads, no corpus scan, no
-    * re-calibration — the fresh-session serve-many shape), so the gate
-    * times store-read dispatch + the dispatched search.
-    */
-  private val annDispatchStoreMemoMap =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def annDispatchStoreMemo(key: String,
-                                   build: => String): String =
-    annDispatchStoreMemoMap.computeIfAbsent(key, _ => build)
+    }
 
   /** The `cur_semantic_prototypes` gate's trained centroids, per
     * (JVM, sfDir) — 16 cells × 2 Lloyd rounds over the whole
@@ -979,25 +859,8 @@ object SparkEntry {
     new java.util.concurrent.atomic.AtomicReference[String](null)
   private def semGateCents(s: SparkSession, dir: String): Similarity.Cents = {
     semCentsLastDir.set(dir)
-    trainedCentsMemo(s"$dir#sem16x2",
+    memo(s"$dir#sem16x2")(
       Similarity.coarseCentroids(Tables.embeddings(s, dir), nlist = 16, iters = 2))
-  }
-
-  private val booksMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-  private def trainedBooksMemo(key: String,
-      train: => Array[Array[Array[Double]]]): Array[Array[Array[Double]]] =
-    booksMemo.computeIfAbsent(key, _ => train)
-
-  private def tempIndexDir(prefix: String): String = {
-    val idx = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
-      }
-      rm(idx.toFile)
-    }
-    idx.toString
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -1136,7 +999,7 @@ object SparkEntry {
     // over all events (same oracle as gold_candles_1m). Fresh store
     // per invocation so repeat runs do the full maintenance work.
     "stream_candles_store" -> ((s, dir) => {
-      val store = tempIndexDir("graft-stream-store")
+      val store = graft.util.Scratch.dir("graft-stream-store").toString
       graft.streaming.StreamedBatch.replayIntoStore(s,
         Tables.events(s, dir), "ts", "event_id", Candles.candleStore(store),
         stageKey = Some(s"$dir:events"))
@@ -1161,10 +1024,9 @@ object SparkEntry {
       // invocation); only the check's recompute side shares the
       // memoized sample quantizers
       Pq.annIndexSelfCheck(emb, emb.filter(col("vec_id") < 5), idx, k = 10,
-        centsOpt = Some(trainedCentsMemo(s"$dir#flat16x0",
+        centsOpt = Some(memo(s"$dir#flat16x0")(
           Similarity.coarseCentroids(emb, nlist = 16, iters = 0))),
-        booksOpt = Some(trainedBooksMemo(s"$dir#books8x64x0",
-          Pq.trainedBooks(emb))))
+        booksOpt = Some(memo(s"$dir#books8x64x0")(Pq.trainedBooks(emb))))
     }),
     // streaming ingestion INTO the persisted near-dup index: batch 0
     // builds, later micro-batches run incrementalPairs against the
@@ -1744,7 +1606,7 @@ object SparkEntry {
     // maintenance, repeats re-deliver every batch into ledgered no-ops
     // — the crash-recovery semantics the sink actually guarantees.
     "stream_merge_upsert" -> ((s, dir) => {
-      val store = streamMergeGateStore(s, dir)
+      val store = streamStoreDir("graft-stream-merge", dir)
       graft.streaming.StreamedBatch.replayIntoStore(s,
         Tables.events(s, dir), "ts", "event_id",
         graft.util.Lake.mergeStore(store, Seq("user_id"), Seq("ts", "event_id")),
@@ -1761,7 +1623,7 @@ object SparkEntry {
     // — this gate's hash is the proof). Same resume contract as
     // stream_merge_upsert.
     "stream_apply_changes" -> ((s, dir) => {
-      val store = streamCdcGateStore(s, dir)
+      val store = streamStoreDir("graft-stream-cdc", dir)
       val changes = Tables.events(s, dir).withColumn("op",
         when(col("event_type") === "purchase", lit("D")).otherwise(lit("U")))
       graft.streaming.StreamedBatch.replayIntoStore(s, changes,
@@ -2287,13 +2149,12 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val corpus = emb.filter(col("vec_id") % 10 =!= 0)
       val bench = emb.filter(col("vec_id") % 10 === 0)
-      val model = ivfResidualMemo(s"$dir#rproj16-decon",
-        Pca.fitIvfResidual(corpus, kDims = 16))
-      val np = rprojNprobeMemo(s"$dir#rproj16-decon-np", {
+      val model = memo(s"$dir#rproj16-decon")(Pca.fitIvfResidual(corpus, kDims = 16))
+      val np = memo(s"$dir#rproj16-decon-np") {
         val (_, npFloor) = Similarity.scaledIvfConfig(corpus.count())
         Pca.calibrateThresholdNprobe(corpus, model.cents, bench, 0.45,
           floor = math.max(8, npFloor))
-      })
+      }
       Curation.semanticDeconResidualCheck(corpus, bench, 0.45,
         modelOpt = Some(model), nprobe = np)
     }),
@@ -2758,7 +2619,7 @@ object SparkEntry {
     // is paid once, not per Bench/Verify invocation.
     "sim_topk_ivf_check" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val cents = trainedCentsMemo(s"$dir#flat16x1",
+      val cents = memo(s"$dir#flat16x1")(
         Similarity.coarseCentroids(emb, nlist = 16, iters = 1))
       Similarity.ivfSelfCheck(emb, emb.filter(col("vec_id") < 5), k = 10,
         coarseIters = 1, centsOpt = Some(cents))
@@ -2781,10 +2642,9 @@ object SparkEntry {
     // 0.88-0.94 across sf0.001/0.01/0.1 vs the 0.5 bound.
     "sim_topk_ivfpq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val cents = trainedCentsMemo(s"$dir#flat16x1",
+      val cents = memo(s"$dir#flat16x1")(
         Similarity.coarseCentroids(emb, nlist = 16, iters = 1))
-      val books = trainedBooksMemo(s"$dir#books8x64x2",
-        Pq.trainedBooks(emb, kmeansIters = 2))
+      val books = memo(s"$dir#books8x64x2")(Pq.trainedBooks(emb, kmeansIters = 2))
       Pq.ivfPqSelfCheck(emb, emb.filter(col("vec_id") < 5), k = 10,
         coarseIters = 1, centsOpt = Some(cents), booksOpt = Some(books))
     }),
@@ -2797,9 +2657,9 @@ object SparkEntry {
     // Quantizers memoized like the flat gate's; training deterministic.
     "sim_topk_ivfpq_residual" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val cents = trainedCentsMemo(s"$dir#flat16x1",
+      val cents = memo(s"$dir#flat16x1")(
         Similarity.coarseCentroids(emb, nlist = 16, iters = 1))
-      val books = trainedBooksMemo(s"$dir#rbooks8x64x2",
+      val books = memo(s"$dir#rbooks8x64x2")(
         Pq.residualBooks(emb, cents, kmeansIters = 2))
       Pq.ivfPqResidualSelfCheck(emb, emb.filter(col("vec_id") < 5), k = 10,
         coarseIters = 1, oversample = 3,
@@ -2817,10 +2677,9 @@ object SparkEntry {
       // but the Lloyd rounds stop sitting on the timed path
       Pq.annIndexSelfCheck(emb, emb.filter(col("vec_id") < 5),
         annGateIndex(s, dir), k = 10,
-        centsOpt = Some(trainedCentsMemo(s"$dir#flat16x1",
+        centsOpt = Some(memo(s"$dir#flat16x1")(
           Similarity.coarseCentroids(emb, nlist = 16, iters = 1))),
-        booksOpt = Some(trainedBooksMemo(s"$dir#books8x64x2",
-          Pq.trainedBooks(emb, kmeansIters = 2))))
+        booksOpt = Some(memo(s"$dir#books8x64x2")(Pq.trainedBooks(emb, kmeansIters = 2))))
     }),
     // the append lifecycle: index built on 2/3 of the corpus, the rest
     // folded in with the frozen quantizers — searching the extended
@@ -2835,10 +2694,9 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       Pq.annIndexSelfCheck(emb, emb.filter(col("vec_id") < 5),
         annRebalanceGateIndex(s, dir), k = 10,
-        centsOpt = Some(trainedCentsMemo(s"$dir#flat16x0",
+        centsOpt = Some(memo(s"$dir#flat16x0")(
           Similarity.coarseCentroids(emb, nlist = 16, iters = 0))),
-        booksOpt = Some(trainedBooksMemo(s"$dir#books8x64x0",
-          Pq.trainedBooks(emb))))
+        booksOpt = Some(memo(s"$dir#books8x64x0")(Pq.trainedBooks(emb))))
     }),
     "sim_topk_ann_extend" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
@@ -2846,10 +2704,9 @@ object SparkEntry {
       // sample — memoizing them only skips the repeated sample scans
       Pq.annIndexSelfCheck(emb, emb.filter(col("vec_id") < 5),
         annExtendGateIndex(s, dir), k = 10,
-        centsOpt = Some(trainedCentsMemo(s"$dir#flat16x0",
+        centsOpt = Some(memo(s"$dir#flat16x0")(
           Similarity.coarseCentroids(emb, nlist = 16, iters = 0))),
-        booksOpt = Some(trainedBooksMemo(s"$dir#books8x64x0",
-          Pq.trainedBooks(emb))))
+        booksOpt = Some(memo(s"$dir#books8x64x0")(Pq.trainedBooks(emb))))
     }),
     // the trained-quantizer contract on a deliberately CLUSTERED corpus
     // (contiguous-id groups pulled toward 4 centers — the sorted-corpus
@@ -2873,7 +2730,7 @@ object SparkEntry {
     "sim_topk_pca" -> ((s, dir) => {
       val emb = s.read.parquet(clusteredGateCorpus(s, dir))
       Pca.pcaSearchCheck(emb,
-        modelOpt = Some(fittedPcaMemo(s"$dir#clustered-pca16", Pca.fit(emb, 16))))
+        modelOpt = Some(memo(s"$dir#clustered-pca16")(Pca.fit(emb, 16))))
     }),
     // the at-scale composition: candidates from the trained-IVF cell
     // equi-join in the 16-dim REDUCED space (distances d/k× cheaper,
@@ -2883,7 +2740,7 @@ object SparkEntry {
     // have something real to preserve
     "sim_topk_pca_ivf" -> ((s, dir) => {
       val emb = s.read.parquet(clusteredGateCorpus(s, dir))
-      val model = fittedPcaMemo(s"$dir#clustered-pca16", Pca.fit(emb, 16))
+      val model = memo(s"$dir#clustered-pca16")(Pca.fit(emb, 16))
       // Lloyd-trained centroids over the PROJECTED corpus at the
       // OCCUPANCY-SCALED geometry (nlist ≈ √n — the r14 config layer;
       // 16 at sf0.01, 45 at sf0.1), memoized like every trained
@@ -2891,7 +2748,7 @@ object SparkEntry {
       // composed SEARCH, training amortizes
       val (nl, _) = Similarity.scaledIvfConfig(emb.count())
       Pca.pcaIvfCheck(emb, modelOpt = Some(model),
-        centsOpt = Some(trainedCentsMemo(s"$dir#pca16-ivf${nl}x3",
+        centsOpt = Some(memo(s"$dir#pca16-ivf${nl}x3")(
           Similarity.coarseCentroids(
             Pca.project(emb, model, projCol = "embedding"),
             nlist = nl, iters = 3))))
@@ -2907,16 +2764,15 @@ object SparkEntry {
     // every trained artifact (the sim_ann_* convention).
     "sim_topk_ivf_rproj" -> ((s, dir) => {
       val emb = s.read.parquet(clusteredGateCorpus(s, dir))
-      val model = ivfResidualMemo(s"$dir#rproj16",
-        Pca.fitIvfResidual(emb, kDims = 16))
+      val model = memo(s"$dir#rproj16")(Pca.fitIvfResidual(emb, kDims = 16))
       // calibration is training-class work (amortized like the model
       // fit — the sim_ann_* convention): memoized per (JVM, sfDir) so
       // the gate times the SEARCH the calibrated budget serves
-      val np = rprojNprobeMemo(s"$dir#rproj16-np", {
+      val np = memo(s"$dir#rproj16-np") {
         val (_, npFloor) = Similarity.scaledIvfConfig(emb.count())
         Pca.calibrateResidualNprobe(emb, model,
           floor = math.max(8, npFloor))
-      })
+      }
       Pca.ivfResidualCheck(emb, nprobe = np, modelOpt = Some(model))
     }),
     // AUTO-DISPATCHED ANN serving (r14 VERDICT task: make the residual
@@ -2929,20 +2785,19 @@ object SparkEntry {
     // probe-printed, not a gate column.
     "sim_topk_auto" -> ((s, dir) => {
       val emb = s.read.parquet(clusteredGateCorpus(s, dir))
-      val model = fittedPcaMemo(s"$dir#clustered-pca16", Pca.fit(emb, 16))
+      val model = memo(s"$dir#clustered-pca16")(Pca.fit(emb, 16))
       val (nl, npRaw) = Similarity.scaledIvfConfig(emb.count())
-      val cents = trainedCentsMemo(s"$dir#pca16-ivf${nl}x3",
+      val cents = memo(s"$dir#pca16-ivf${nl}x3")(
         Similarity.coarseCentroids(
           Pca.project(emb, model, projCol = "embedding"),
           nlist = nl, iters = 3))
-      val rmodel = ivfResidualMemo(s"$dir#rproj16",
-        Pca.fitIvfResidual(emb, kDims = 16))
-      val store = annDispatchStoreMemo(s"$dir#ann-auto-store", {
-        val p = tempIndexDir("graft-ann-dispatch")
+      val rmodel = memo(s"$dir#rproj16")(Pca.fitIvfResidual(emb, kDims = 16))
+      // both calibration ladders are training-class work, calibrated
+      // ONCE per (JVM, sfDir) into a manifest-ledgered dispatch store
+      val store = fixture("graft-ann-dispatch", dir) { p =>
         Pca.buildAnnDispatchStore(emb, p, model, cents, rmodel,
           floor = math.max(8, npRaw))
-        p
-      })
+      }
       // the serving path reads the decision FROM THE STORE on every
       // invocation (r15 VERDICT task 3): a fresh session pays three
       // tiny manifest reads, never the two calibration ladders
@@ -2961,13 +2816,13 @@ object SparkEntry {
     // prices the projection loss the way serving would.
     "sim_topk_wide" -> ((s, dir) => {
       val emb = s.read.parquet(wideGateCorpus(s, dir))
-      val wmodel = wideResidualMemo(s"$dir#wide256to32",
+      val wmodel = memo(s"$dir#wide256to32")(
         Pca.fitIvfResidualWide(emb, kDims = 16, dRed = 32))
-      val np = rprojNprobeMemo(s"$dir#wide256to32-np", {
+      val np = memo(s"$dir#wide256to32-np") {
         val (_, npFloor) = Similarity.scaledIvfConfig(emb.count())
         Pca.calibrateWideResidualBudget(emb, wmodel,
           floor = math.max(8, npFloor)).nprobe
-      })
+      }
       Pca.ivfResidualWideCheck(emb, nprobe = np, wmodelOpt = Some(wmodel))
     }),
     // cross-set kNN at the RESIDUAL geometry (r14 VERDICT task 4): the
@@ -2981,13 +2836,12 @@ object SparkEntry {
       val emb = s.read.parquet(clusteredGateCorpus(s, dir))
       val corpus = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
       val queries = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
-      val model = ivfResidualMemo(s"$dir#rproj16-cross",
-        Pca.fitIvfResidual(corpus, kDims = 16))
-      val np = rprojNprobeMemo(s"$dir#rproj16-cross-np", {
+      val model = memo(s"$dir#rproj16-cross")(Pca.fitIvfResidual(corpus, kDims = 16))
+      val np = memo(s"$dir#rproj16-cross-np") {
         val (_, npFloor) = Similarity.scaledIvfConfig(corpus.count())
         Pca.calibrateResidualNprobe(corpus, model,
           floor = math.max(8, npFloor))
-      })
+      }
       Pca.ivfResidualCrossCheck(corpus, queries, nprobe = np,
         modelOpt = Some(model))
     }),
@@ -3022,7 +2876,7 @@ object SparkEntry {
         k = 16, expectShards = 3)),
     "sim_ann_clustered" -> ((s, dir) => {
       val emb = s.read.parquet(clusteredGateCorpus(s, dir))
-      val cents = trainedCentsMemo(s"$dir#clustered16x3",
+      val cents = memo(s"$dir#clustered16x3")(
         Similarity.coarseCentroids(emb, nlist = 16, iters = 3))
       Similarity.ivfTrainedCheck(emb,
         emb.filter(pmod(col("vec_id"), lit(101)) === 7), k = 10,
@@ -6047,7 +5901,7 @@ object SparkEntry {
   private def semOracles: Map[String, String] =
     (for {
       dir <- Option(semCentsLastDir.get)
-      cents <- Option(centsMemo.get(s"$dir#sem16x2"))
+      cents <- memoized[Similarity.Cents](s"$dir#sem16x2")
     } yield {
       val values = cents.map { case (cid, v, _) =>
         s"($cid, [${v.map(_.toString).mkString(", ")}])"
@@ -6096,9 +5950,8 @@ object SparkEntry {
     */
   private def bpeOracles: Map[String, String] =
     (for {
-      path <- Option(bpeLastDir.get).flatMap(d => Option(bpeMemo.get(d)))
-                .orElse { val it = bpeMemo.values().iterator()
-                          if (it.hasNext) Some(it.next()) else None }
+      dir <- Option(bpeLastDir.get)
+      path <- memoized[String](s"graft-bpe#$dir")
       spark <- SparkSession.getActiveSession
         .orElse(SparkSession.getDefaultSession)
       rows <- scala.util.Try(

@@ -145,8 +145,7 @@ object ThroughputProbe {
     def runRate(section: String, rate: Int,
                 syms: Array[String] = symbols)(
         start: String => Seq[(String, org.apache.spark.sql.streaming.StreamingQuery)]): Unit = {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"tput-$section-$rate-").toString
+      val root = graft.util.Scratch.dir(s"tput-$section-$rate-").toString
       val rawDir = s"$root/raw"
       new java.io.File(rawDir).mkdirs()
       val queries = start(root)

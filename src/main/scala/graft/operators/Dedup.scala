@@ -1516,19 +1516,11 @@ object Dedup {
     * a materialization whose lifecycle is the filesystem's, not the
     * block manager's. Lands in the SparkContext checkpoint dir when one
     * is set (the cluster-correct location: executors must reach it); a
-    * driver-local temp dir, cleaned on JVM exit, otherwise (local-mode
-    * sessions — this repo's test/verify harness).
+    * driver-local [[graft.util.Scratch]] dir, cleaned on JVM exit,
+    * otherwise (local-mode sessions — this repo's test/verify harness).
     */
-  private lazy val localSnapDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-materialize")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
-      }
-      rm(d.toFile)
-    }
-    d.toString
-  }
+  private lazy val localSnapDir: String =
+    graft.util.Scratch.dir("graft-materialize").toString
 
   /** [[writeThroughAt]] for snapshots that live as long as the result
     * frame may be read: the returned scan IS the caller's return-value

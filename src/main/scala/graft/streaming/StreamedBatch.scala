@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import graft.util.ShardedStore
+import graft.util.{Scratch, ShardedStore}
 
 /** Run a watermarked streaming aggregation over a *batch* table by
   * replaying it as a chronological file stream — the harness that lets
@@ -42,7 +42,7 @@ object StreamedBatch {
     */
   private def stageChunks(input: DataFrame, tsCol: String, tieCol: String,
                           chunks: Int): File = {
-    val work = Files.createTempDirectory("graft-stream-").toFile
+    val work = Scratch.dir("graft-stream-")
     val streamIn = new File(work, "in"); streamIn.mkdirs()
     val stage = new File(work, "stage")
     input.repartitionByRange(chunks, col(tsCol), col(tieCol))
@@ -150,8 +150,7 @@ object StreamedBatch {
                       stopAfterBatches: Option[Int] = None,
                       workDirOpt: Option[File] = None): DataFrame = {
     val in = stagedIn(input, tsCol, tieCol, chunks, stageKey)
-    val work = workDirOpt.getOrElse(
-      Files.createTempDirectory("graft-stream-run-").toFile)
+    val work = workDirOpt.getOrElse(Scratch.dir("graft-stream-run-"))
     val outDir = new File(work, "out").getAbsolutePath
     runClamped(spark, parts = 8, stopAfterBatches) {
       StreamJobs.parquetAppend(agg(source(spark, input.schema, in)), outDir,
@@ -186,7 +185,7 @@ object StreamedBatch {
                    chunks: Int = 3,
                    stageKey: Option[String] = None): DataFrame = {
     val in = stagedIn(input, tsCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
+    val work = Scratch.dir("graft-stream-run-")
     val logDir = new File(work, "uplog").getAbsolutePath
     runClamped(spark, parts = 8) {
       agg(source(spark, input.schema, in)).writeStream
@@ -268,8 +267,7 @@ object StreamedBatch {
                       killPoint: Option[(Long, String)] = None,
                       workDirOpt: Option[File] = None): Unit = {
     val in = stagedIn(input, orderCol, tieCol, chunks, stageKey)
-    val work = workDirOpt.getOrElse(
-      Files.createTempDirectory("graft-stream-run-").toFile)
+    val work = workDirOpt.getOrElse(Scratch.dir("graft-stream-run-"))
     def kill(id: Long, phase: String): Unit =
       if (killPoint.contains((id, phase)))
         throw new InjectedKill(s"injected kill at batch $id phase $phase")
@@ -310,7 +308,7 @@ object StreamedBatch {
                  chunks: Int = 3,
                  stageKey: Option[String] = None): DataFrame = {
     val in = stagedIn(input, tsCol, tieCol, chunks, stageKey)
-    val work = Files.createTempDirectory("graft-stream-run-").toFile
+    val work = Scratch.dir("graft-stream-run-")
     val outDir = new File(work, "out").getAbsolutePath
     def side() = source(spark, input.schema, in)
     // same state-partition sizing rationale as runClamped documents,

@@ -57,4 +57,74 @@ class SparkEntrySpec extends AnyFunSuite with Matchers {
       withClue(s"$name references unknown tables: ") { unknown shouldBe empty }
     }
   }
+
+  test("memo: eight concurrent callers on one key run build exactly once") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val calls = (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[Int] {
+        def call(): Int = {
+          start.await()
+          SparkEntry.memo("spec-memo#concurrent") {
+            Thread.sleep(100)
+            builds.incrementAndGet()
+          }
+        }
+      }))
+      start.countDown()
+      calls.map(_.get(30, java.util.concurrent.TimeUnit.SECONDS)) shouldBe Seq.fill(8)(1)
+      builds.get shouldBe 1
+    } finally pool.shutdownNow()
+  }
+
+  test("memo: a memo built inside another memo's build does not throw") {
+    // fixtures nest (the wide corpus reads the clustered one). A build
+    // run inside ConcurrentHashMap.computeIfAbsent throws
+    // IllegalStateException("Recursive update") once a nested key lands
+    // in the outer key's bin or grows the table, so nest many keys
+    val outer = SparkEntry.memo("spec-memo#outer") {
+      (0 until 512).map(i => SparkEntry.memo(s"spec-memo#inner-$i")(i)).sum
+    }
+    outer shouldBe (0 until 512).sum
+    SparkEntry.memo[Int]("spec-memo#inner-7")(fail("inner rebuilt")) shouldBe 7
+  }
+
+  test("memo: a throwing build is not cached; the next call rebuilds") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    an[IllegalStateException] should be thrownBy
+      SparkEntry.memo[Int]("spec-memo#throws") {
+        builds.incrementAndGet()
+        throw new IllegalStateException("build failed")
+      }
+    SparkEntry.memo("spec-memo#throws") { builds.incrementAndGet(); 7 } shouldBe 7
+    SparkEntry.memo[Int]("spec-memo#throws")(fail("rebuilt after success")) shouldBe 7
+    builds.get shouldBe 2
+  }
+
+  test("memo: distinct keys build separately") {
+    SparkEntry.memo("spec-memo#a")("a") shouldBe "a"
+    SparkEntry.memo("spec-memo#b")("b") shouldBe "b"
+    SparkEntry.memo("spec-memo#a")("b") shouldBe "a"
+  }
+
+  test("fixture: builds once per (name, dir) into a fresh scratch dir") {
+    val root = graft.util.Scratch.root.getAbsolutePath
+    val built = new java.util.concurrent.atomic.AtomicInteger()
+    def fx(dir: String) = SparkEntry.fixture("spec-fixture", dir) { path =>
+      built.incrementAndGet()
+      new java.io.File(path).list() shouldBe empty
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path, "f"), dir)
+    }
+    val a = fx("sf-a")
+    fx("sf-a") shouldBe a
+    val b = fx("sf-b")
+    b should not be a
+    built.get shouldBe 2
+    Seq(a, b).foreach { p =>
+      new java.io.File(p).getParent shouldBe root
+      new java.io.File(p).getName should startWith("spec-fixture")
+    }
+    java.nio.file.Files.readString(java.nio.file.Paths.get(b, "f")) shouldBe "sf-b"
+  }
 }

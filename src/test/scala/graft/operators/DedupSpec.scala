@@ -513,9 +513,15 @@ class DedupSpec extends SparkSuite with Matchers {
     val gate = graft.SparkEntry.queries("dedup_incremental")(spark, "/root/testdata/sf0.001")
     gate.orderBy("doc_a", "doc_b").collect() shouldBe
       Dedup.minhashLsh(docs, n = 2, threshold = 0.5).orderBy("doc_a", "doc_b").collect()
-    // second call hits the memo: same result, no rebuild
+    // second call hits the memo: same result, no rebuild (a rebuild
+    // would fill a fresh scratch dir)
+    def indexDirs() =
+      graft.util.Scratch.root.list().count(_.startsWith("graft-dedup-index"))
+    val built = indexDirs()
+    built should be >= 1
     graft.SparkEntry.queries("dedup_incremental")(spark, "/root/testdata/sf0.001")
       .count() shouldBe gate.count()
+    indexDirs() shouldBe built
   }
 
   test("multi-probe index lifecycle == from-scratch minhashLshMultiProbe") {

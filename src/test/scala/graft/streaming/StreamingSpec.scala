@@ -898,4 +898,24 @@ class StreamingSpec extends SparkSuite with Matchers {
       }
     }
   }
+
+  test("a replay with no workDirOpt stages its input and runs its work " +
+      "dir under the scratch root") {
+    val events = spark.range(0, 40).select(col("id").as("event_id"),
+      timestamp_seconds(col("id") * 60).as("ts"))
+    val root = graft.util.Scratch.root
+    def children() = root.listFiles().map(_.getName).toSet
+    val before = children()
+    val out = StreamedBatch.replayAggregate(spark, events, "ts", "event_id",
+      st => st.withWatermark("ts", "1 minute")
+        .groupBy(window(col("ts"), "5 minutes")).count())
+    val added = children() -- before
+    // one staging dir (`in/` chunks) and one work dir (ckpt + out)
+    added.count(_.startsWith("graft-stream-run-")) shouldBe 1
+    added.count(n => n.startsWith("graft-stream-") &&
+      !n.startsWith("graft-stream-run-")) shouldBe 1
+    out.inputFiles should not be empty
+    all(out.inputFiles.map(new java.net.URI(_).getPath)) should
+      startWith(root.getAbsolutePath + "/graft-stream-run-")
+  }
 }
