@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-proof corpus generator: blow the driver's sf0.1 testdata up
@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   *    own strides; `nation`/`region` stay fixed (the TPC-H rule —
   *    scale grows facts, not the 25-nation world).
   *
-  * Run: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.GenScale
+  * Run: `SPARK_GRAFT_CPUS=$(nproc) sbt "runMain graft.GenScale
   * /root/testdata/sf0.1 /root/repo/target/sf1 10"`. Output tables are
   * directories named `<table>.parquet` — Spark's reader treats them
   * exactly like the driver's single files.
@@ -57,14 +57,7 @@ object GenScale {
     // shouldn't pay for a full factor-25 lakehouse
     val only = args.lift(3).map(_.split(",").toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     def write(name: String, df: => DataFrame, files: Int): Unit =
       if (wanted(name)) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -45,14 +44,7 @@ object LatencyProbe {
     val rates = if (args.nonEmpty) args(0).split(",").map(_.toInt).toSeq
                 else Seq(200, 2000)
     val runSecs = args.lift(1).map(_.toInt).getOrElse(40)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("latency-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     // per-query micro-batch durations, keyed by runId (set at start)
     val durations = new java.util.concurrent.ConcurrentHashMap[

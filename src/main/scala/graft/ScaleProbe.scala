@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-attribution probe for the banded pair families (round-11
@@ -36,21 +35,15 @@ object ScaleProbe {
     // the bar. Ground truth is linear: the twins are the only cos ≥
     // 0.9 pairs by construction (GenScale), and their exact cosines
     // come from one keyed join — no O(n²) reference pass needed.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkEntry.session()
     // shuffle-partition override: the saturation corpora (n ≥ 5e5)
     // push ~2e9 candidate rows through the pair distinct — at 32
     // partitions that is >1 GB of hash table per task × 32 concurrent,
     // which thrashes the GC; 8× more partitions keeps each task's
     // build inside executor memory (exactly the
     // spark.sql.shuffle.partitions sizing rule the brief names)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     def timed[A](what: String)(body: => A): A = {

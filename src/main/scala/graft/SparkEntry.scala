@@ -267,12 +267,12 @@ object SparkEntry {
 
   /** Per-(JVM, sfDir) memo of the `gold_candles_incremental` gate's
     * candle store: partial-aggregate build on tranche 1 (event_id%3==1)
-    * then [[Candles.updateCandleStore]] with tranche 2 — the in-place
-    * dynamic-partition-overwrite update path — leaving a store covering
-    * tranches 1∪2. The gate query then serves candles over store ∪
-    * tranche 3 through the read-only merge view, so the full
-    * build→update→query lifecycle sits under the gold_candles_1m
-    * oracle.
+    * then [[Candles.updateCandleStore]] with tranche 2 — the touched
+    * dates' files swapped in one [[graft.util.Manifest]] commit —
+    * leaving a store covering tranches 1∪2. The gate query then serves
+    * candles over store ∪ tranche 3 through the read-only merge view,
+    * so the full build→update→query lifecycle sits under the
+    * gold_candles_1m oracle.
     */
   private def candleGateStore(s: SparkSession, dir: String): String =
     fixture("graft-candle-store", dir) { store =>
@@ -1225,7 +1225,7 @@ object SparkEntry {
     // the reference's TITLE feature as a real stream-STREAM join: two
     // independent file-stream sources over the same replay (A = even,
     // B = odd event_ids), watermarked band join via Medallion
-    // .streamSpread. Inner-join emission is not watermark-gated and the
+    // .streamSpreadBucketed. Inner-join emission is not watermark-gated and the
     // chronological replay makes no row late, so the emitted set equals
     // the batch band join — the DuckDB inequality-join SQL is the
     // oracle.

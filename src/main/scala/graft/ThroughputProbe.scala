@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -43,14 +43,7 @@ object ThroughputProbe {
     val runSecs = args.lift(1).map(_.toInt).getOrElse(30)
     val sections = args.lift(2).map(_.split(",").toSet)
       .getOrElse(Set("medallion"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("throughput-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     // per-run micro-batch durations and input-row counts
     case class Prog(durMs: Long, rows: Long)

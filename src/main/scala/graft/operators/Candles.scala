@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.{Manifest, ShardedStore}
 
 /** Gold-layer candle computation — the reference's flagship query
   * (reference `src/jobs/gold_layer.py:55-80`): 1-minute OHLC + VWAP
@@ -124,35 +125,17 @@ object Candles {
   // finalize time as sum/count, so it needs no merge rule of its own.
   //
   // Lifecycle (mirrors Dedup's near-dup index): [[buildCandleStore]]
-  // writes partials parquet partitioned by `p_date(window_start)`;
-  // [[updateCandleStore]] folds a new event shard in by writing ONLY
-  // the date partitions the shard touches; [[candlesFromStore]] /
-  // [[candlesWithShard]] finalize to the exact [[ohlcv]] frame —
-  // untouched partitions flow map-only (union side of the plan, no
-  // shuffle), only touched partials and the shard pay the merge
-  // aggregation.
+  // writes partials parquet under `data/`, partitioned by
+  // `p_date(window_start)`; [[updateCandleStore]] folds a new event
+  // shard in by rewriting ONLY the date partitions the shard touches;
+  // [[candlesFromStore]] / [[candlesWithShard]] finalize to the exact
+  // [[ohlcv]] frame — untouched partitions flow map-only (union side of
+  // the plan, no shuffle), only touched partials and the shard pay the
+  // merge aggregation.
   //
-  // Durability model (the Delta-_delta_log analog on plain parquet):
-  // data lives in immutable `data/ver=N/p_date=D/` leaf dirs — an
-  // update never rewrites an existing file — and a store GENERATION is
-  // a manifest (`_meta/manifest-N/`, a tiny parquet table) mapping each
-  // date to the version dir that currently owns it, plus the ledger of
-  // applied shard ids. The newest manifest with a `_SUCCESS` marker IS
-  // the store state:
-  //  * atomic visibility — readers resolve date→dir through one
-  //    committed manifest, so they see a complete generation, never a
-  //    mid-update mix (the previous generation's leaves are retained
-  //    until the NEXT commit, so an in-flight reader holding manifest
-  //    N survives the commit of N+1);
-  //  * crash safety — a failure before the manifest commit leaves only
-  //    orphaned `ver=N+1` leaves and a _SUCCESS-less manifest dir,
-  //    both ignored by readers and overwritten by the retry;
-  //  * idempotent retries — an update carrying a `shardId` is a no-op
-  //    when the ledger already lists it (the Delta `txn` action's
-  //    dedup; counts/sums are additive, so WITHOUT the ledger a
-  //    re-applied shard would double-count).
-  // Single WRITER at a time remains the caller's contract (as with
-  // [[graft.util.Lake.compact]]); readers are unrestricted.
+  // Durability (atomic commits, reader snapshots, the applied-shard
+  // ledger, time travel, concurrency) is [[graft.util.Manifest]]'s
+  // generation-manifest protocol, the one every persisted store uses.
 
   /** Mergeable per-(window, symbol) candle partials of `events`.
     * Columns: window bounds, symbol, `open_k`/`close_k` (winning
@@ -226,258 +209,78 @@ object Candles {
   private def withPDate(partials: DataFrame): DataFrame =
     partials.withColumn("p_date", to_date(col("window_start")))
 
-  private def dataPath(path: String) = s"$path/data"
-  private def metaPath(path: String) = s"$path/_meta"
-
-  /** A committed store generation: manifest number, date → owning
-    * version dir, applied shard ids.
+  /** The root-relative partial files `files` as one frame with its
+    * `p_date` partition column, or zero rows of `schemaFrom`'s shape
+    * when there are none (a shard can touch only new dates).
     */
-  private case class StoreState(n: Int, dates: Map[String, Int],
-                                applied: Set[String])
+  private def readPartials(spark: SparkSession, path: String,
+                           files: Seq[String], schemaFrom: DataFrame): DataFrame =
+    if (files.isEmpty) schemaFrom.filter(lit(false))
+    else spark.read.option("basePath", s"$path/data")
+      .parquet(files.map(f => s"$path/$f"): _*)
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession,
-                   p: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Generation numbers of every COMMITTED manifest (`_SUCCESS`
-    * present — a crashed manifest write is invisible), ascending.
-    * These are the store's time-travel points: how many survive is the
-    * updater's `retainGenerations`.
-    */
-  def storeGenerations(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Seq[Int] = {
-    val fs = fsOf(spark, path)
-    fs.listStatus(new org.apache.hadoop.fs.Path(metaPath(path)))
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("manifest-") &&
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      .map(_.getName.stripPrefix("manifest-").toInt)
-      .sorted.toSeq
-  }
-
-  /** Resolve one committed store generation — the newest when `asOf`
-    * is None. Driver-side work is one directory listing plus a tiny
-    * parquet read.
-    */
-  private def readState(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        asOf: Option[Int] = None): StoreState = {
-    val gens = storeGenerations(spark, path)
-    require(gens.nonEmpty, s"no committed candle-store manifest under $path")
-    val n = asOf match {
-      case None => gens.max
-      case Some(g) =>
-        require(gens.contains(g),
-          s"candle-store generation $g not retained under $path " +
-            s"(available: ${gens.mkString(",")})")
-        g
-    }
-    val rows = spark.read.parquet(s"${metaPath(path)}/manifest-$n").collect()
-    StoreState(n,
-      rows.filter(!_.isNullAt(0)).map(r => r.getString(0) -> r.getInt(1)).toMap,
-      rows.filter(_.isNullAt(0)).map(_.getString(2)).toSet)
-  }
-
-  /** Write + commit manifest `n` (Spark's `_SUCCESS` marker is the
-    * commit point; Overwrite mode makes a crashed attempt retryable).
-    */
-  private def writeState(spark: org.apache.spark.sql.SparkSession, path: String,
-                         n: Int, dates: Map[String, Int],
-                         applied: Set[String]): Unit = {
-    import spark.implicits._
-    val rows =
-      dates.toSeq.map { case (d, v) => (Option(d), Option(v), Option.empty[String]) } ++
-        applied.toSeq.map(s => (Option.empty[String], Option.empty[Int], Option(s)))
-    rows.toDF("p_date", "ver", "shard_id")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"${metaPath(path)}/manifest-$n")
-  }
-
-  /** The store's partial-aggregate frame for `wanted` dates (all when
-    * None), resolved through one committed manifest: each date reads
-    * exactly its owning `ver=/p_date=` leaf dir — file listing is
-    * bounded by the dates asked for, and a concurrent update commit
-    * cannot mix generations into the scan.
-    */
-  private def storedPartials(spark: org.apache.spark.sql.SparkSession,
-                             path: String, st: StoreState,
-                             wanted: Option[Set[String]]): DataFrame = {
-    val sel = wanted.map(w => st.dates.view.filterKeys(w).toMap).getOrElse(st.dates)
-    val leaves = sel.toSeq.sortBy(_._1)
-      .map { case (d, v) => s"${dataPath(path)}/ver=$v/p_date=$d" }
-    if (leaves.isEmpty)
-      // schema-stable empty frame (a shard can touch only new dates)
-      spark.read.option("basePath", dataPath(path))
-        .parquet(dataPath(path)).filter(lit(false)).drop("ver")
-    else
-      spark.read.option("basePath", dataPath(path))
-        .parquet(leaves: _*).drop("ver")
-  }
-
-  /** Drop manifests (and the data versions only they reference) older
-    * than the newest `retain` generations. The retained window is both
-    * the in-flight-reader grace period AND the time-travel horizon —
-    * a reader that resolved any retained manifest keeps every leaf it
-    * needs; anything older is unreachable garbage.
-    */
-  private def retire(spark: org.apache.spark.sql.SparkSession, path: String,
-                     current: Int, retain: Int): Unit = {
-    val fs = fsOf(spark, path)
-    val floor = current - (retain - 1)
-    val kept = storeGenerations(spark, path).filter(_ >= floor)
-    val live = kept
-      .flatMap(g => readState(spark, path, Some(g)).dates.values).toSet
-    fs.listStatus(new org.apache.hadoop.fs.Path(dataPath(path)))
-      .filter(_.isDirectory).map(_.getPath)
-      .filter(p => p.getName.startsWith("ver=") &&
-        !live(p.getName.stripPrefix("ver=").toInt))
-      .foreach(fs.delete(_, true))
-    fs.listStatus(new org.apache.hadoop.fs.Path(metaPath(path)))
-      .filter(_.isDirectory).map(_.getPath)
-      .filter { p =>
-        val name = p.getName
-        !name.startsWith("manifest-") ||
-          name.stripPrefix("manifest-").toInt < floor
-      }
-      .foreach(fs.delete(_, true))
-  }
-
-  /** Initialize the candle store: partials of `events` land as
-    * generation 0 (`data/ver=0/p_date=…` + manifest-0). A re-build
-    * over a previously used path clears the old `_meta`/`data` trees
-    * FIRST — without that, a surviving manifest with a higher
-    * generation number than 0 would stay the newest committed one and
-    * [[readState]] would silently resolve the stale pre-rebuild store
-    * (and its applied-shard ledger), ignoring the rebuild entirely.
+  /** Initialize the candle store: partials of `events`, partitioned by
+    * `p_date`, committed as generation 0 ([[Manifest.init]] clears any
+    * previous store at `path` first, its ledger included).
     */
   def buildCandleStore(events: DataFrame, path: String,
-                       windowDur: String = "1 minute"): Unit = {
-    val spark = events.sparkSession
-    val fs0 = fsOf(spark, path)
-    Seq(metaPath(path), dataPath(path)).foreach { p =>
-      fs0.delete(new org.apache.hadoop.fs.Path(p), true)
+                       windowDur: String = "1 minute"): Unit =
+    Manifest.init(events.sparkSession, path) {
+      withPDate(candlePartials(events, windowDur))
+        .write.partitionBy("p_date").parquet(s"$path/data")
     }
-    withPDate(candlePartials(events, windowDur))
-      .write.partitionBy("p_date")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"${dataPath(path)}/ver=0")
-    val fs = fsOf(spark, path)
-    val dates = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"${dataPath(path)}/ver=0"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("p_date="))
-      .map(_.stripPrefix("p_date=") -> 0).toMap
-    writeState(spark, path, 0, dates, Set.empty)
-  }
 
-  /** Fold a new event shard into the store, writing ONLY the date
-    * partitions the shard's windows land in (one new `ver=` dir), then
-    * committing the next manifest generation. Cost is
+  /** Fold a new event shard into the store, rewriting ONLY the date
+    * partitions the shard's windows land in: the touched dates' live
+    * files are read, merged with the shard's partials, and swapped for
+    * the merged files in one [[Manifest.rewriteFiles]] commit. Cost is
     * O(shard + touched partitions) — history outside the shard's date
     * range is never read or written. `shardId` (when given) is checked
     * against and recorded in the manifest ledger, making re-application
     * after a retry a no-op instead of a double count. An EMPTY shard
-    * returns immediately. Crash at any point leaves the committed
-    * generation untouched (see the durability model above).
-    * `retainGenerations` (≥ 2) sets how many committed generations
-    * survive each update — the time-travel horizon for
+    * commits nothing. `retainGenerations` (≥ 2) sets how many committed
+    * generations survive each update — the time-travel horizon for
     * [[candlesFromStore]]'s `asOf` reads.
     */
   def updateCandleStore(newEvents: DataFrame, path: String,
                         windowDur: String = "1 minute",
                         shardId: Option[String] = None,
                         retainGenerations: Int = 2): Unit = {
-    require(retainGenerations >= 2,
-      "retainGenerations must be >= 2 (current + the in-flight-reader grace generation)")
     val spark = newEvents.sparkSession
-    val st = readState(spark, path)
-    if (shardId.exists(st.applied)) return
+    val snap = Manifest.snapshot(spark, path)
+    if (shardId.exists(snap.applied)) return
     val delta = withPDate(candlePartials(newEvents, windowDur))
-    // the touched dates drive leaf selection and the new manifest — a
-    // bounded driver-side list (a shard spans few dates), same contract
-    // as the probed-cell collect in Pq.annTopK
+    // the touched dates select the live files to rewrite — a bounded
+    // driver-side list (a shard spans few dates), same contract as the
+    // probed-cell collect in Pq.annTopK
     val dates = delta.select("p_date").distinct()
       .collect().map(_.getDate(0).toString).toSet
     if (dates.isEmpty) return
-    val touched = storedPartials(spark, path, st, Some(dates))
-    val merged = withPDate(
-      mergeCandlePartials(touched.drop("p_date"), delta.drop("p_date")))
-    val next = st.n + 1
-    merged.write.partitionBy("p_date")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"${dataPath(path)}/ver=$next")
-    writeState(spark, path, next,
-      st.dates ++ dates.map(_ -> next),
-      st.applied ++ shardId)
-    retire(spark, path, next, retainGenerations)
-  }
-
-  /** Compact the store into ONE new generation: every live leaf
-    * rewrites into `ver=n+1` (one file per date — the write
-    * repartitions by `p_date`, rows clustered by (window_start,
-    * symbol) within each leaf for scan locality), and manifest `n+1`
-    * maps every date to it, carrying the applied-shard ledger forward
-    * unchanged so retried shards stay no-ops across the compaction.
-    *
-    * Why it exists: each [[updateCandleStore]] adds one `ver=` dir
-    * owning just the dates it touched; after a year of daily shards
-    * the live tree spans ~365 version dirs, and the per-read leaf
-    * listing (and every filesystem's directory metadata) scales with
-    * update COUNT instead of date count. Compaction resets that to one
-    * dir — the maintenance op that keeps the accretion bounded, same
-    * role as [[graft.util.Lake.compact]] for flat dirs.
-    *
-    * Protocol-honoring: the new generation commits through the same
-    * `_SUCCESS`-marked manifest (readers see old or new, never a mix),
-    * prior retained generations stay resolvable for `asOf` time travel
-    * (their leaves survive [[retire]] until they age out), and the
-    * single-writer contract is the caller's, as with updates. Cost is
-    * one read+write of the LIVE data only — history never re-merges
-    * (partials are already one row per (window, symbol) per date).
-    */
-  def compactCandleStore(spark: org.apache.spark.sql.SparkSession, path: String,
-                         retainGenerations: Int = 2): Unit = {
-    require(retainGenerations >= 2,
-      "retainGenerations must be >= 2 (current + the in-flight-reader grace generation)")
-    val st = readState(spark, path)
-    val next = st.n + 1
-    storedPartials(spark, path, st, None)
-      .repartition(col("p_date"))
-      .sortWithinPartitions(col("p_date"), col("window_start"), col("symbol"))
-      .write.partitionBy("p_date")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"${dataPath(path)}/ver=$next")
-    writeState(spark, path, next,
-      st.dates.keys.map(_ -> next).toMap, st.applied)
-    retire(spark, path, next, retainGenerations)
-  }
-
-  /** File-count policy form of [[compactCandleStore]]: compact only
-    * when the live tree spans more than `maxVersions` owning `ver=`
-    * dirs (the quantity that grows one per update and degrades leaf
-    * listing). Returns whether a compaction ran — the streamed sink's
-    * default-on maintenance hook, same shape as
-    * [[graft.util.Manifest.autoCompactSub]].
-    */
-  def autoCompactCandleStore(spark: org.apache.spark.sql.SparkSession,
-                             path: String, maxVersions: Int,
-                             retainGenerations: Int = 2): Boolean = {
-    require(maxVersions >= 1, s"maxVersions must be ≥ 1, got $maxVersions")
-    liveVersionCount(spark, path) > maxVersions && {
-      compactCandleStore(spark, path, retainGenerations); true
+    val touched = snap.files.filter(f =>
+      dates.exists(d => f.startsWith(s"data/p_date=$d/")))
+    val merged = mergeCandlePartials(
+      readPartials(spark, path, touched, delta).drop("p_date"), delta.drop("p_date"))
+    // baseGen pins the conflict check to the snapshot the touched files
+    // came from: a commit landing in between refuses instead of being
+    // silently overwritten
+    Manifest.rewriteFiles(spark, path, touched.toSet, shardId,
+        retain = retainGenerations, baseGen = Some(snap.gen)) { stage =>
+      withPDate(merged).write.partitionBy("p_date").parquet(s"$stage/data")
     }
   }
 
-  /** Number of DISTINCT `ver=` dirs the current manifest references —
-    * the live-tree width [[autoCompactCandleStore]] bounds (retired
-    * generations' dirs may linger for time travel; they are not live).
+  /** Compact the store into ONE new generation holding one file per
+    * live date ([[Manifest.compactSub]] on `data`, which keeps the
+    * `p_date` dirs). Updates leave each touched date with as many
+    * files as the merge had write tasks; compaction resets that, same
+    * role as [[graft.util.Lake.compact]] for flat dirs. Answers, the
+    * applied-shard ledger and the retained generations' `asOf` reads
+    * survive.
     */
-  def liveVersionCount(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Int =
-    readState(spark, path).dates.values.toSet.size
+  def compactCandleStore(spark: SparkSession, path: String,
+                         retainGenerations: Int = 2): Unit = {
+    Manifest.compactSub(spark, path, "data", retain = retainGenerations); ()
+  }
 
   /** The candle store as a streamed [[graft.util.ShardedStore]] — the
     * incremental-view-maintenance alternative to a stateful streaming
@@ -486,34 +289,23 @@ object Candles {
     * at any moment through a committed generation. Batch 0 initializes
     * ([[buildCandleStore]]); later batches fold in through
     * [[updateCandleStore]] with the batch id as the ledgered shard id.
-    * Compaction bounds the live `ver=` dirs
-    * ([[autoCompactCandleStore]]); the ledger carries through it.
-    *
-    * The store keeps its own manifest dialect (`p_date, ver, shard_id`
-    * rows under `_meta/manifest-N`, the same path
-    * [[graft.util.Manifest]] uses), and its build records no ledger
-    * stamp, so `built` is always false: a resumed replay rebuilds.
+    * Compaction is the file-count policy on `data`
+    * ([[Manifest.autoCompactSub]]); the ledger carries through it.
     */
-  def candleStore(path: String,
-                  windowDur: String = "1 minute"): graft.util.ShardedStore =
-    graft.util.ShardedStore(path,
-      build = buildCandleStore(_, path, windowDur),
-      extend = (b, id) => updateCandleStore(b, path, windowDur, Some(id)),
-      compact = (spark, maxVersions) =>
-        autoCompactCandleStore(spark, path, maxVersions),
-      built = _ => false)
+  def candleStore(path: String, windowDur: String = "1 minute"): ShardedStore =
+    ShardedStore.onManifest(path, "data")(
+      buildCandleStore(_, path, windowDur),
+      (b, id) => updateCandleStore(b, path, windowDur, Some(id)))
 
   /** The store's candles — exactly [[ohlcv]] over everything built +
     * updated in, resolved through one committed manifest generation:
     * the newest, or (`asOf`) any still-retained older one — the Delta
-    * `VERSION AS OF` time-travel analog, for free from the generation
-    * layout. [[storeGenerations]] lists the available points.
+    * `VERSION AS OF` time-travel analog. [[Manifest.generations]] lists
+    * the available points.
     */
-  def candlesFromStore(spark: org.apache.spark.sql.SparkSession,
-                       path: String,
+  def candlesFromStore(spark: SparkSession, path: String,
                        asOf: Option[Int] = None): DataFrame =
-    finalizeCandles(
-      storedPartials(spark, path, readState(spark, path, asOf), None).drop("p_date"))
+    finalizeCandles(Manifest.read(spark, path, "data", asOf).drop("p_date"))
 
   /** Change data feed between two committed store generations — the
     * Delta `table_changes()` analog on the manifest-generation store:
@@ -524,13 +316,13 @@ object Candles {
     * re-reading the table — the incremental-consumption contract CDC
     * exists for.
     *
-    * Plan shape: two generation reads (each partition-pruned by its
+    * Plan shape: two generation reads (each resolved through its
     * manifest), one full-outer join on the candle key, a null-safe
     * field comparison — no window, no collect. Unchanged keys drop
     * out; `fromGen` newer than `toGen` yields the reverse feed
     * (inserts become deletes), which is what a rollback replays.
     */
-  def candleStoreChanges(spark: org.apache.spark.sql.SparkSession,
+  def candleStoreChanges(spark: SparkSession,
                          path: String, fromGen: Int,
                          toGen: Option[Int] = None): DataFrame = {
     val vals = Seq("open", "high", "low", "close", "trade_count", "vwap")
@@ -554,12 +346,12 @@ object Candles {
     * updates. Untouched dates stream map-only through finalize (union
     * branch, no shuffle); only the shard's dates pay the merge agg.
     */
-  def candlesWithShard(spark: org.apache.spark.sql.SparkSession, path: String,
+  def candlesWithShard(spark: SparkSession, path: String,
                        newEvents: DataFrame,
                        windowDur: String = "1 minute"): DataFrame = {
     val delta = withPDate(candlePartials(newEvents, windowDur))
     val dates = delta.select("p_date").distinct()
-    val stored = storedPartials(spark, path, readState(spark, path), None)
+    val stored = Manifest.read(spark, path, "data", schemaFrom = Some(delta))
     val touched = stored.join(broadcast(dates), Seq("p_date"), "left_semi")
     val untouched = stored.join(broadcast(dates), Seq("p_date"), "left_anti")
     finalizeCandles(

@@ -57,36 +57,13 @@ object Medallion {
     * Both sides carry watermarks so the join state is bounded: rows
     * older than watermark + band are evicted, the Spark stream-stream
     * join contract.
-    */
-  def streamSpread(silverA: DataFrame, silverB: DataFrame,
-                   watermarkDelay: String = "10 minutes",
-                   bandSeconds: Int = 60,
-                   joinType: String = "inner"): DataFrame = {
-    // equi-key on the base asset (the part before '-'): stream-stream
-    // joins require an equality predicate — which is also what keeps
-    // the join state partitionable at scale (state shards by base)
-    val a = silverA
-      .withWatermark("trade_timestamp", watermarkDelay)
-      .select(substring_index(col("symbol"), "-", 1).as("base"),
-        col("symbol").as("symbol_a"), col("trade_timestamp").as("ts_a"),
-        col("price").as("price_a"))
-    val b = silverB
-      .withWatermark("trade_timestamp", watermarkDelay)
-      .select(substring_index(col("symbol"), "-", 1).as("base_b"),
-        col("symbol").as("symbol_b"), col("trade_timestamp").as("ts_b"),
-        col("price").as("price_b"))
-    a.join(b, col("base") === col("base_b") && expr(
-      s"ts_b BETWEEN ts_a - INTERVAL $bandSeconds SECONDS AND ts_a"), joinType)
-      .select(col("base"), col("ts_a"), col("symbol_a"), col("price_a"),
-        col("ts_b"), col("symbol_b"), col("price_b"),
-        (col("price_a") - col("price_b")).as("spread"))
-  }
-
-  /** Scale-shaped [[streamSpread]]: identical emitted set, but the
-    * stream-stream equi-key is (base, time bucket) instead of base
-    * alone. With a bare base key, Spark's symmetric-hash join scans a
-    * key's ENTIRE state for every arriving row — O(N²/bases) compares
-    * when bases are few (measured: 33 s vs 3 s at sf0.1 on 3 bases).
+    *
+    * The stream-stream equi-key is (base, time bucket), not base alone
+    * (the plain base-keyed join survives only as the streaming spec's
+    * reference form). With a bare base key, Spark's symmetric-hash
+    * join scans a key's ENTIRE state for every arriving row —
+    * O(N²/bases) compares when bases are few (measured: 33 s vs 3 s at
+    * sf0.1 on 3 bases).
     * Bucketing by `floor(epoch / band)` and exploding the B side into
     * its own and the NEXT bucket makes each lookup touch only ~2 band
     * windows of state, and shards the join state across (base, bucket)

@@ -238,17 +238,17 @@ object StreamedBatch {
     *
     * `resume = true` makes the whole replay idempotent ACROSS
     * invocations, not just across Spark's own micro-batch retries: when
-    * the store proves a previous replay of the same input already
-    * built it ([[graft.util.ShardedStore.built]]), batch 0 skips the
-    * re-init and batches 1+ fall through to their ledgered no-ops.
+    * the store's ledger proves a previous replay of the same input
+    * already built it ([[graft.util.ShardedStore.builtOnManifest]]),
+    * batch 0 skips the re-init and batches 1+ fall through to their
+    * ledgered no-ops.
     * Only valid when the input and chunking are unchanged — the same
     * contract a resumed checkpoint has.
     *
     * `autoCompact > 0` runs the store's compaction policy after every
-    * batch (default on): each extend adds files (or, for the candle
-    * store, one owning version dir), and without a policy the live
-    * tree — and every later read's listing or stats scan — grows
-    * without bound. Compaction preserves answers and the ledger.
+    * batch (default on): each extend adds files, and without a policy
+    * the live tree — and every later read's listing or stats scan —
+    * grows without bound. Compaction preserves answers and the ledger.
     *
     * `killPoint = Some((batch, phase))` crashes the stream with an
     * [[InjectedKill]] there; `workDirOpt` pins the checkpoint dir so a
@@ -277,7 +277,8 @@ object StreamedBatch {
         .foreachBatch { (batch: DataFrame, id: Long) =>
           kill(id, "before")
           if (id > 0) store.extend(batch, ShardedStore.shardId(id))
-          else if (!(resume && store.built(spark))) store.build(batch)
+          else if (!(resume && ShardedStore.builtOnManifest(spark, store.path)))
+            store.build(batch)
           kill(id, "after-apply")
           if (autoCompact > 0) store.compact(spark, autoCompact)
           kill(id, "after-compact")

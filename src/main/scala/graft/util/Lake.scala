@@ -363,60 +363,6 @@ object Lake {
       kids.filter(_.isDirectory).flatMap(listDataFiles)
   }
 
-  // ── applied-shard ledger ──────────────────────────────────────────
-  //
-  // The Delta `txn` action's idempotent-writer dedup on plain parquet:
-  // an append-only index (near-dup sets/buckets, span hashes, ANN
-  // codes) that re-applies a shard after a retry duplicates rows —
-  // which at best wastes space (span hashes) and at worst corrupts
-  // answers (duplicated shingle sets fan out verification joins). A
-  // tiny `_applied/` parquet table under the index path records shard
-  // ids; extends carrying an id skip seen shards. The underscore
-  // prefix keeps the ledger invisible to Spark's file index on the
-  // surrounding data dirs. One row appended per shard — a bounded,
-  // driver-cheap read.
-  //
-  // GUARANTEE SCOPE: the ledger row is appended AFTER a shard's data
-  // appends complete, so it makes RE-DELIVERY of a COMPLETED extend a
-  // no-op (the streaming/driver redelivery case — foreachBatch retries,
-  // at-least-once upstreams). It does NOT make a crash MID-extend
-  // retryable: a failure after some appends but before `recordApplied`
-  // leaves partial shard rows that a blind retry would double. Recovery
-  // from a mid-extend crash is: drop the shard's partial files (parquet
-  // task files are attributable by write time / `_temporary` residue)
-  // or rebuild the store. The candle store ([[graft.operators.Candles]])
-  // closes this window properly — its ledger commits atomically inside
-  // the manifest, the pattern to mirror where mid-write crash coverage
-  // is required.
-
-  private def appliedPath(path: String) = s"$path/_applied"
-
-  /** Shard ids already recorded under `path` (empty when no ledger). */
-  def appliedShards(spark: SparkSession, path: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(appliedPath(path))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else spark.read.parquet(appliedPath(path)).collect().map(_.getString(0)).toSet
-  }
-
-  /** Drop the ledger — a store REBUILD starts a new epoch: the old
-    * ledger's batch/shard ids must not turn the new epoch's extends
-    * into silent no-ops (a replayed stream re-numbers its batches from
-    * 0, and a rebuilt store owes every one of them a write).
-    */
-  def clearApplied(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(appliedPath(path))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
-
-  /** Record one applied shard id (parquet append of one tiny file). */
-  def recordApplied(spark: SparkSession, path: String, shardId: String): Unit = {
-    import spark.implicits._
-    Seq(shardId).toDF("shard_id").coalesce(1)
-      .write.mode(SaveMode.Append).parquet(appliedPath(path))
-  }
-
   /** Persist `df` hash-bucketed (and sorted) by `keyCols` into the
     * session catalog as `tableName`. Joins and aggregations between
     * tables bucketed the same way on the same keys run without an
@@ -1041,8 +987,7 @@ object Lake {
           applyChanges(batch.sparkSession, path, latest(batch), keys, op,
             deleteOp, shardId = Some(shardId))
       },
-      compact = mergeAutoCompact(_, path, keys, _),
-      built = ShardedStore.builtOnManifest(_, path))
+      compact = mergeAutoCompact(_, path, keys, _))
   }
 
   /** [[mergeRead]] restricted to `lo <= keyCol <= hi`, pruning whole

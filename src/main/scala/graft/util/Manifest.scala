@@ -2,13 +2,12 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Generation-manifest commit protocol for persisted index stores —
-  * the candle store's durability model ([[graft.operators.Candles]],
-  * itself the plain-parquet analog of Delta's `_delta_log`, reference
-  * `data/delta/bronze/_delta_log/00000000000000000000.json`)
-  * generalized to ANY store layout, so the ANN / near-dup / vocab /
-  * NB / heavy-hitter / quantile / moment stores share one durability
-  * story instead of each holding only the weaker `_applied` ledger.
+/** Generation-manifest commit protocol for persisted stores — the
+  * plain-parquet analog of Delta's `_delta_log` (reference
+  * `data/delta/bronze/_delta_log/00000000000000000000.json`) for ANY
+  * store layout, so the candle / ANN / near-dup / vocab / NB /
+  * heavy-hitter / quantile / moment stores and the merge table share
+  * one durability story.
   *
   * Layout under a store root `path`:
   *  - data files wherever the store writes them (`path/vocab/`,
@@ -30,9 +29,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - **crash safety** — a crash mid-extend leaves data files no
   *    manifest references; readers never see them, and the blind retry
   *    (same shard id) writes fresh uniquely-named files and commits a
-  *    manifest referencing only those. This CLOSES the mid-write crash
-  *    window the bare ledger documents as out of scope
-  *    ([[Lake.recordApplied]]'s guarantee-scope note);
+  *    manifest referencing only those — a mid-write crash never
+  *    leaves partial shard rows that a retry would double;
   *  - **idempotent re-delivery** — the shard ledger rides inside the
   *    manifest (the Delta `txn` action), committed atomically WITH the
   *    files it covers: there is no state where data landed but the
@@ -196,7 +194,7 @@ object Manifest {
   }
 
   /** Shard ids already committed (empty when the store has no
-    * manifest yet) — the [[Lake.appliedShards]] shape, manifest-backed.
+    * manifest yet).
     */
   def applied(spark: SparkSession, path: String): Set[String] =
     if (!isManaged(spark, path)) Set.empty
@@ -360,7 +358,7 @@ object Manifest {
 
   /** Initialize the store: clear any previous epoch entirely (a
     * surviving higher-numbered manifest or stale ledger would shadow
-    * the rebuild — same rule as the candle store's re-build), run
+    * the rebuild), run
     * `write` (the store's Overwrite-mode artifact writes), and commit
     * everything it produced as generation 0 with `applied` as the
     * ledger (normally empty; a replayed-stream build passes its batch
@@ -779,6 +777,8 @@ object Manifest {
     */
   def compactSub(spark: SparkSession, path: String, sub: String,
                  targetFileMB: Int = 128, retain: Int = 3): (Int, Int) = {
+    require(retain >= 2,
+      "retain must be >= 2 (current + the in-flight-reader grace generation)")
     val prefix = s"$sub/"
     var tries = 0
     while (true) {

@@ -15,13 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    idempotent-sink rule, with the idempotence implemented by the
   *    store's ledger;
   *  - `compact` is the store's own reading of the one auto-compaction
-  *    threshold (live files per appended sub, live version dirs, live
-  *    merge files);
-  *  - `built` is true when a previous replay's batch-0 build is
-  *    provably on disk, so a resumed replay of the same input may skip
-  *    the re-init — which would otherwise clear the ledger and force
-  *    every batch to re-apply. It is asked of the store because the
-  *    stores keep different ledger dialects.
+  *    threshold (live files per appended sub, live merge files).
+  *
+  * Every store commits through [[Manifest]], so whether a previous
+  * replay's batch-0 build is on disk is one question for all of them:
+  * [[ShardedStore.builtOnManifest]].
   *
   * Each store's instance lives next to the build/extend code it wraps,
   * so the subs a store appends are named only in the operator that
@@ -30,8 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class ShardedStore(path: String,
                               build: DataFrame => Unit,
                               extend: (DataFrame, String) => Unit,
-                              compact: (SparkSession, Int) => Unit,
-                              built: SparkSession => Boolean)
+                              compact: (SparkSession, Int) => Unit)
 
 object ShardedStore {
 
@@ -40,21 +37,22 @@ object ShardedStore {
     */
   def shardId(id: Long): String = s"replay-batch-$id"
 
-  /** `built` for a [[Manifest]]-managed store: its ledger carries batch
-    * 0's stamp.
+  /** True when a previous replay's batch-0 build is provably on disk —
+    * the store's ledger carries batch 0's stamp — so a resumed replay
+    * of the same input may skip the re-init, which would otherwise
+    * clear the ledger and force every batch to re-apply.
     */
   def builtOnManifest(spark: SparkSession, path: String): Boolean =
     Manifest.isManaged(spark, path) &&
       Manifest.applied(spark, path).contains(shardId(0))
 
-  /** A [[Manifest]]-managed store whose append-only `subs` grow one
-    * shard at a time. After `init` builds, an empty ledgered commit
-    * stamps batch 0's shard id, so a later replay of the same input
-    * (fresh checkpoint, batch ids reassigned identically by the
-    * deterministic chunking) can prove the build happened. Compaction
-    * is the flat-store file-count policy on each sub
-    * ([[Manifest.autoCompactSub]]; row-preserving, so answers and the
-    * ledger are untouched).
+  /** A [[Manifest]]-managed store whose `subs` change one shard at a
+    * time. After `init` builds, an empty ledgered commit stamps batch
+    * 0's shard id, so a later replay of the same input (fresh
+    * checkpoint, batch ids reassigned identically by the deterministic
+    * chunking) can prove the build happened. Compaction is the
+    * file-count policy on each sub ([[Manifest.autoCompactSub]];
+    * row-preserving, so answers and the ledger are untouched).
     */
   def onManifest(path: String, subs: String*)(init: DataFrame => Unit,
                  append: (DataFrame, String) => Unit): ShardedStore =
@@ -65,6 +63,5 @@ object ShardedStore {
       },
       extend = append,
       compact = (spark, threshold) =>
-        subs.foreach(sub => Manifest.autoCompactSub(spark, path, sub, threshold)),
-      built = builtOnManifest(_, path))
+        subs.foreach(sub => Manifest.autoCompactSub(spark, path, sub, threshold)))
 }

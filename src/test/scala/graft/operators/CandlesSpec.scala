@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 import graft.SparkSuite
+import graft.util.Manifest
 
 class CandlesSpec extends SparkSuite with Matchers {
   import spark.implicits._
@@ -127,20 +128,25 @@ class CandlesSpec extends SparkSuite with Matchers {
     val store = java.nio.file.Files.createTempDirectory("candle-part").toString
     Candles.buildCandleStore((day1 ++ day2)
       .toDF("event_id", "ts", "event_type", "value"), store)
-    // leaf files of a date's owning version dir (generation layout:
-    // data/ver=N/p_date=D); an update must never rewrite an untouched
-    // date's leaf
-    def files(ver: Int, date: String): Set[String] =
-      Option(new java.io.File(s"$store/data/ver=$ver/p_date=$date").listFiles())
-        .getOrElse(Array.empty).map(_.getName).filter(_.endsWith(".parquet")).toSet
-    val day1Before = files(0, "2026-01-01")
+    // a date's live files in the newest committed manifest
+    // (data/p_date=D/...); an update must never rewrite an untouched
+    // date's files
+    def files(date: String): Set[String] =
+      Manifest.snapshot(spark, store).files
+        .filter(_.startsWith(s"data/p_date=$date/")).toSet
+    val day1Before = files("2026-01-01")
+    val day2Before = files("2026-01-02")
     day1Before should not be empty
+    day2Before should not be empty
     // shard touches only day 2
     Candles.updateCandleStore(Seq((5L, ts("2026-01-02 09:00:45"), "BTC", 101.0))
       .toDF("event_id", "ts", "event_type", "value"), store)
-    files(0, "2026-01-01") shouldBe day1Before // untouched leaf intact
-    files(1, "2026-01-02") should not be empty // touched date owned by gen 1
-    files(1, "2026-01-01") shouldBe empty      // untouched date NOT rewritten
+    Manifest.snapshot(spark, store).gen shouldBe 1
+    files("2026-01-01") shouldBe day1Before // untouched date NOT rewritten
+    files("2026-01-02") should not be empty // touched date rewritten...
+    files("2026-01-02") intersect day2Before shouldBe empty // ...replacing its files
+    // the untouched files are the same files on disk, never rewritten
+    day1Before.foreach(f => new java.io.File(s"$store/$f").exists() shouldBe true)
     val d2 = Candles.candlesFromStore(spark, store)
       .filter(col("symbol") === "BTC" && col("window_start") === ts("2026-01-02 09:00:00"))
       .select("open", "close", "trade_count")
@@ -178,21 +184,30 @@ class CandlesSpec extends SparkSuite with Matchers {
       shardId = Some("s2"), retainGenerations = 4)
     Candles.updateCandleStore(ev.filter(t === 3), store,
       shardId = Some("s3"), retainGenerations = 4)
-    def verDirs(): Set[String] =
-      Option(new java.io.File(s"$store/data").listFiles())
-        .getOrElse(Array.empty).map(_.getName).filter(_.startsWith("ver=")).toSet
-    verDirs().size should be >= 4 // one dir accreted per update
+    // one live file set accreted per update: the build and the three
+    // updates are four retained generations with four distinct sets
+    val gensBefore = Manifest.generations(spark, store)
+    gensBefore shouldBe Seq(0, 1, 2, 3)
+    gensBefore.map(g => Manifest.snapshot(spark, store, Some(g)).files.toSet)
+      .distinct.size shouldBe 4
+    // live files per date (`data/p_date=D/...`) in the newest manifest
+    def perDate(): Map[String, Int] = Manifest.snapshot(spark, store).files
+      .groupBy(_.split("/")(1)).view.mapValues(_.size).toMap
+    val datesBefore = perDate()
+    val filesBefore = Manifest.snapshot(spark, store).files.toSet
     val before = Candles.candlesFromStore(spark, store)
       .orderBy("window_start", "symbol").collect()
-    val gensBefore = Candles.storeGenerations(spark, store)
 
     Candles.compactCandleStore(spark, store, retainGenerations = 2)
 
-    // newest generation owns EVERY date in one ver dir...
-    val newest = Candles.storeGenerations(spark, store).max
+    // one new generation holds EVERY live date, exactly one file each,
+    // all of them the compaction's own writes...
+    val newest = Manifest.generations(spark, store).max
     newest shouldBe gensBefore.max + 1
-    val compacted = new java.io.File(s"$store/data/ver=$newest")
-    compacted.listFiles().count(_.getName.startsWith("p_date=")) should be > 0
+    val compacted = perDate()
+    compacted.keySet shouldBe datesBefore.keySet
+    all(compacted.values) shouldBe 1
+    Manifest.snapshot(spark, store).files.toSet intersect filesBefore shouldBe empty
     // ...and answers are unchanged, byte for byte
     Candles.candlesFromStore(spark, store)
       .orderBy("window_start", "symbol").collect() shouldBe before
@@ -253,7 +268,7 @@ class CandlesSpec extends SparkSuite with Matchers {
       retainGenerations = 3)
     Candles.updateCandleStore(shard(3, "2026-01-01 10:00:40", 95.0), store,
       retainGenerations = 3)
-    Candles.storeGenerations(spark, store) shouldBe Seq(0, 1, 2)
+    Manifest.generations(spark, store) shouldBe Seq(0, 1, 2)
     // each retained generation replays its historical answer exactly
     Candles.candlesFromStore(spark, store, asOf = Some(0)).collect() shouldBe gen0
     Candles.candlesFromStore(spark, store, asOf = Some(1))
@@ -262,7 +277,7 @@ class CandlesSpec extends SparkSuite with Matchers {
       .select("trade_count").as[Long].head() shouldBe 3L
     // default retention (2) retires generations beyond the horizon
     Candles.updateCandleStore(shard(4, "2026-01-01 10:00:50", 98.0), store)
-    Candles.storeGenerations(spark, store) shouldBe Seq(2, 3)
+    Manifest.generations(spark, store) shouldBe Seq(2, 3)
     an[IllegalArgumentException] should be thrownBy
       Candles.candlesFromStore(spark, store, asOf = Some(0)).collect()
   }

@@ -19,6 +19,32 @@ class StreamingSpec extends SparkSuite with Matchers {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
+  /** Reference form of [[Medallion.streamSpreadBucketed]]: the same
+    * watermarked band join keyed on the base asset alone, so every
+    * arriving row scans its base's whole join state. The bucketed join
+    * must emit exactly its pairs at a bounded state cost.
+    */
+  private def streamSpread(silverA: DataFrame, silverB: DataFrame,
+                           watermarkDelay: String = "10 minutes",
+                           bandSeconds: Int = 60,
+                           joinType: String = "inner"): DataFrame = {
+    val a = silverA
+      .withWatermark("trade_timestamp", watermarkDelay)
+      .select(substring_index(col("symbol"), "-", 1).as("base"),
+        col("symbol").as("symbol_a"), col("trade_timestamp").as("ts_a"),
+        col("price").as("price_a"))
+    val b = silverB
+      .withWatermark("trade_timestamp", watermarkDelay)
+      .select(substring_index(col("symbol"), "-", 1).as("base_b"),
+        col("symbol").as("symbol_b"), col("trade_timestamp").as("ts_b"),
+        col("price").as("price_b"))
+    a.join(b, col("base") === col("base_b") && expr(
+      s"ts_b BETWEEN ts_a - INTERVAL $bandSeconds SECONDS AND ts_a"), joinType)
+      .select(col("base"), col("ts_a"), col("symbol_a"), col("price_a"),
+        col("ts_b"), col("symbol_b"), col("price_b"),
+        (col("price_a") - col("price_b")).as("spread"))
+  }
+
   private def ticker(symbol: String, price: String, time: String,
                      tradeId: Long, tpe: String = "ticker"): String =
     s"""{"type":"$tpe","product_id":"$symbol","price":"$price","volume_24h":"1",
@@ -147,7 +173,7 @@ class StreamingSpec extends SparkSuite with Matchers {
     val inB = MemoryStream[(Timestamp, String, Double)]
     def silverShaped(m: MemoryStream[(Timestamp, String, Double)]) =
       m.toDF().toDF("trade_timestamp", "symbol", "price")
-    val joined = Medallion.streamSpread(
+    val joined = streamSpread(
       silverShaped(inA), silverShaped(inB), bandSeconds = 60)
     val q = joined.writeStream.format("memory").queryName("spread_test")
       .outputMode("append").start()
@@ -254,7 +280,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       val joined =
         if (bucketed) Medallion.streamSpreadBucketed(shaped(inA), shaped(inB),
           bandSeconds = 60, joinType = "left_outer")
-        else Medallion.streamSpread(shaped(inA), shaped(inB),
+        else streamSpread(shaped(inA), shaped(inB),
           bandSeconds = 60, joinType = "left_outer")
       val name = if (bucketed) "spread_state_b" else "spread_state_p"
       val q = joined.writeStream.format("memory").queryName(name)
@@ -576,6 +602,9 @@ class StreamingSpec extends SparkSuite with Matchers {
     val store = java.nio.file.Files.createTempDirectory("stream-store").toString
     StreamedBatch.replayIntoStore(spark, events, "ts", "event_id",
       Candles.candleStore(store), chunks = 4)
+    // batch 0 built, batches 1..3 folded in through the ledger
+    graft.util.Manifest.applied(spark, store) shouldBe
+      Set("replay-batch-0", "replay-batch-1", "replay-batch-2", "replay-batch-3")
     val served = Candles.candlesFromStore(spark, store)
     val batch = Candles.ohlcv(events, tieCol = Some("event_id"))
     served.exceptAll(batch).count() shouldBe 0
@@ -589,6 +618,32 @@ class StreamingSpec extends SparkSuite with Matchers {
       shardId = Some("replay-batch-1"))
     Candles.candlesFromStore(spark, store)
       .orderBy("window_start", "symbol").collect() shouldBe before
+  }
+
+  test("candle store resume: a second replay of the same input does not " +
+      "rebuild — every batch is a ledgered no-op, same generations, same " +
+      "candles") {
+    // 400 trades over three symbols, one every 10 minutes (~3 dates)
+    val events = spark.range(0, 400).select(col("id").as("event_id"),
+      timestamp_seconds(col("id") * 600).as("ts"),
+      concat(lit("S"), pmod(col("id"), lit(3)).cast("string")).as("event_type"),
+      (pmod(col("id") * 7, lit(31)) + 1).cast("double").as("value"))
+    val store = tmp("stream-candle-resume-")
+    def replay(): Unit = StreamedBatch.replayIntoStore(spark, events,
+      "ts", "event_id", Candles.candleStore(store), chunks = 4,
+      stageKey = Some("candle-resume-spec"), resume = true)
+    replay()
+    val gens1 = graft.util.Manifest.generations(spark, store)
+    // a rebuild would reproduce the generation numbers, but never the
+    // uniquely named files: the whole head snapshot must be unchanged
+    val head1 = graft.util.Manifest.snapshot(spark, store)
+    val candles1 = Candles.candlesFromStore(spark, store).collect().toSet
+    replay()
+    graft.util.Manifest.generations(spark, store) shouldBe gens1
+    graft.util.Manifest.snapshot(spark, store) shouldBe head1
+    Candles.candlesFromStore(spark, store).collect().toSet shouldBe candles1
+    val batch = Candles.ohlcv(events, tieCol = Some("event_id"))
+    candles1 shouldBe batch.collect().toSet
   }
 
   test("replayIntoAnnIndex: streamed build+extends == from-scratch index, " +
@@ -767,12 +822,14 @@ class StreamingSpec extends SparkSuite with Matchers {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val t = 2 // maxFiles per sub
-    // the candle store's live unit is its owning version dirs ("ver"),
-    // every other store's the manifest's live files under a sub
+    // the manifest's live files under a sub
     def live(store: String, sub: String): Int =
-      if (sub == "ver") Candles.liveVersionCount(spark, store)
-      else graft.util.Manifest.snapshot(spark, store).files
+      graft.util.Manifest.snapshot(spark, store).files
         .count(_.startsWith(s"$sub/"))
+    // data/ is p_date-partitioned: the post-compaction floor is one file
+    // per live date, however low the threshold
+    val candleDates = Candles.candlePartials(events)
+      .select(to_date(col("window_start"))).distinct().count().toInt
     case class Family(name: String, store: String => ShardedStore,
                       input: DataFrame, order: String, tie: String,
                       chunks: Int, threshold: Int, subs: Seq[String],
@@ -782,7 +839,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       Family(name, store, docs, "doc_id", "doc_id", 6, t, subs, t)
     val families = Seq(
       Family("candle", Candles.candleStore(_), events, "ts", "event_id",
-        6, 1, Seq("ver"), 1),
+        6, 1, Seq("data"), candleDates),
       // codes/ is cell-partitioned: the post-compaction floor is one
       // file per live cell (nlist = 16 default), not the flat
       // threshold — the policy bounds growth at shards × cells → cells

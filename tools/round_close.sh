@@ -18,7 +18,7 @@ OUT=${1:-target/round_close}
 mkdir -p "$OUT"
 
 echo "== 1/4 correctness at sf0.01 (driver replica)"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} sbt -batch \
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.01 $OUT/verify_sf0.01" \
   > "$OUT/verify_sf0.01.log" 2>&1
 python3 tools/compare.py /root/testdata/sf0.01 "$OUT/verify_sf0.01" \
@@ -26,7 +26,7 @@ python3 tools/compare.py /root/testdata/sf0.01 "$OUT/verify_sf0.01" \
 tail -1 "$OUT/compare_sf0.01.txt"
 
 echo "== 2/4 correctness at sf0.1 (second scale factor)"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} sbt -batch \
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} sbt -batch \
   "runMain graft.Verify /root/testdata/sf0.1 $OUT/verify_sf0.1" \
   > "$OUT/verify_sf0.1.log" 2>&1
 python3 tools/compare_timed.py /root/testdata/sf0.1 "$OUT/verify_sf0.1" \
