@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -24,6 +25,11 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   *  - `stages`: run each gate and print its wall time, executor CPU,
   *    and its top 20 stages by CPU with run time and shuffle bytes
   *    (stage names carry the operator callsite).
+  *
+  * Every mode's `===` line carries the gate's wall time, executor CPU
+  * and its Janino compile count (the `CodegenMetrics` compilation
+  * delta over the run; codegen-cache hits do not count), so a gate
+  * that recompiles its generated code shows at the gate layer.
   *
   * No mode prints an un-executed plan: before execution an AQE plan
   * shows no WholeStageCodegen nodes and placeholder exchanges, a false
@@ -61,11 +67,14 @@ object Profile {
       // logical plan in a NEW QueryExecution, leaving this AQE root
       // un-finalized — its printed tree would be the initial plan
       val plan = df.queryExecution.executedPlan
-      val c0 = cpu.get(); val t0 = System.nanoTime()
+      def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val c0 = cpu.get(); val j0 = compiles; val t0 = System.nanoTime()
       val n = plan.execute().count()
       val wall = (System.nanoTime() - t0) / 1e9
+      val janino = compiles - j0
       Thread.sleep(300) // listener drain
-      println(f"=== $name: $n rows, wall=$wall%.2f s, cpu=${(cpu.get() - c0) / 1e9}%.1f s ===")
+      println(f"=== $name: $n rows, wall=$wall%.2f s, cpu=${(cpu.get() - c0) / 1e9}%.1f s, " +
+        s"compiles=$janino ===")
       mode match {
         case "plan" =>
           println(plan)

@@ -65,8 +65,9 @@ object Bloom {
     */
   def buildBloomStore(dim: DataFrame, keyCol: String, path: String,
                       expectedKeys: Long = 1000000L,
-                      fpp: Double = 0.03): Unit =
-    graft.util.Manifest.init(dim.sparkSession, path) {
+                      fpp: Double = 0.03,
+                      applied: Set[String] = Set.empty): Unit =
+    graft.util.Manifest.init(dim.sparkSession, path, applied) {
       writeShard(dim, keyCol, path, "_base", expectedKeys, fpp,
         SaveMode.Overwrite)
     }
@@ -100,7 +101,7 @@ object Bloom {
                  expectedKeys: Long = 1000000L,
                  fpp: Double = 0.03): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "filter")(
-      buildBloomStore(_, keyCol, path, expectedKeys, fpp),
+      buildBloomStore(_, keyCol, path, expectedKeys, fpp, _),
       (b, id) => extendBloomStore(b, keyCol, path, Some(id)))
 
   /** The merged membership filter of one committed generation: shard

@@ -224,8 +224,9 @@ object Candles {
     * previous store at `path` first, its ledger included).
     */
   def buildCandleStore(events: DataFrame, path: String,
-                       windowDur: String = "1 minute"): Unit =
-    Manifest.init(events.sparkSession, path) {
+                       windowDur: String = "1 minute",
+                       applied: Set[String] = Set.empty): Unit =
+    Manifest.init(events.sparkSession, path, applied) {
       withPDate(candlePartials(events, windowDur))
         .write.partitionBy("p_date").parquet(s"$path/data")
     }
@@ -294,7 +295,7 @@ object Candles {
     */
   def candleStore(path: String, windowDur: String = "1 minute"): ShardedStore =
     ShardedStore.onManifest(path, "data")(
-      buildCandleStore(_, path, windowDur),
+      buildCandleStore(_, path, windowDur, _),
       (b, id) => updateCandleStore(b, path, windowDur, Some(id)))
 
   /** The store's candles — exactly [[ohlcv]] over everything built +

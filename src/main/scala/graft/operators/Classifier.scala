@@ -181,8 +181,9 @@ object Classifier {
     * generation 0 (a previous epoch at `path` is cleared).
     */
   def buildNbModel(labeled: DataFrame, path: String, labelCol: String,
-                   unicode: Boolean = false): Unit =
-    graft.util.Manifest.init(labeled.sparkSession, path) {
+                   unicode: Boolean = false,
+                   applied: Set[String] = Set.empty): Unit =
+    graft.util.Manifest.init(labeled.sparkSession, path, applied) {
       classTokenCounts(labeled, labelCol, unicode)
         .write.mode(SaveMode.Overwrite).parquet(countsPath(path))
       classTotals(labeled, labelCol, unicode)
@@ -222,7 +223,7 @@ object Classifier {
     */
   def nbStore(path: String, labelCol: String): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "counts", "totals")(
-      buildNbModel(_, path, labelCol),
+      (b, stamp) => buildNbModel(b, path, labelCol, applied = stamp),
       (b, id) => extendNbModel(b, path, labelCol, shardId = Some(id)))
 
   /** Classify against the STORED model: old training text is never

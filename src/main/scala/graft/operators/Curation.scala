@@ -539,12 +539,13 @@ object Curation {
 
   /** Initialize the persisted target store at `path`. */
   def buildDsirTarget(target: DataFrame, path: String, n: Int = 2,
-                      buckets: Int = 4096): Unit = {
+                      buckets: Int = 4096,
+                      applied: Set[String] = Set.empty): Unit = {
     require(buckets >= 2 && buckets <= 65536,
       s"buildDsirTarget: buckets must be in [2, 65536], got $buckets")
     val spark = target.sparkSession
     import spark.implicits._
-    graft.util.Manifest.init(spark, path) {
+    graft.util.Manifest.init(spark, path, applied) {
       Seq((n, buckets)).toDF("n", "buckets")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/params")
@@ -582,7 +583,7 @@ object Curation {
   def dsirStore(path: String, n: Int = 2,
                 buckets: Int = 4096): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "counts")(
-      buildDsirTarget(_, path, n, buckets),
+      buildDsirTarget(_, path, n, buckets, _),
       (b, id) => extendDsirTarget(b, path, Some(id)))
 
   /** Score `raw` against the STORED target distribution — equals

@@ -169,9 +169,10 @@ object Dedup {
   /** Initialize the seen-span index on the first tranche and return
     * that tranche deduped (its own internal duplicates elected away).
     */
-  def buildSpanIndex(docs: DataFrame, path: String, spanTokens: Int = 16): DataFrame = {
+  def buildSpanIndex(docs: DataFrame, path: String, spanTokens: Int = 16,
+                     applied: Set[String] = Set.empty): DataFrame = {
     val kept = electFirst(spanRows(docs, spanTokens))
-    graft.util.Manifest.init(docs.sparkSession, path) {
+    graft.util.Manifest.init(docs.sparkSession, path, applied) {
       kept.select(col("h")).distinct()
         .write.mode(SaveMode.Overwrite).parquet(spansPath(path))
     }
@@ -236,7 +237,7 @@ object Dedup {
     */
   def spanStore(path: String, spanTokens: Int = 16): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "spans")(
-      buildSpanIndex(_, path, spanTokens),
+      buildSpanIndex(_, path, spanTokens, _),
       (b, id) => extendSpanIndex(b, path, spanTokens, Some(id)))
 
   /** First-occurrence election: keep each distinct span's earliest
@@ -1928,9 +1929,10 @@ object Dedup {
     */
   def buildNearDupIndex(docs: DataFrame, path: String, n: Int = 2,
                         threshold: Double = 0.5, numHashes: Int = 32,
-                        bands: Int = 16, multiProbe: Boolean = false): DataFrame = {
+                        bands: Int = 16, multiProbe: Boolean = false,
+                        applied: Set[String] = Set.empty): DataFrame = {
     val spark = docs.sparkSession
-    graft.util.Manifest.init(spark, path) {
+    graft.util.Manifest.init(spark, path, applied) {
       val sets = hashedShingles(docs, n)
       sets.write.mode(SaveMode.Overwrite).parquet(setsPath(path))
       // banding reads the PERSISTED sets (one parquet scan) rather than
@@ -2061,7 +2063,8 @@ object Dedup {
   def nearDupStore(path: String, n: Int = 2,
                    threshold: Double = 0.5): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "sets", "buckets", "pairs")(
-      buildNearDupIndex(_, path, n = n, threshold = threshold),
+      (b, stamp) => buildNearDupIndex(b, path, n = n, threshold = threshold,
+        applied = stamp),
       (b, id) => extendIndex(b,
         incrementalPairs(b, path, n = n, threshold = threshold), path,
         n = n, shardId = Some(id)))
@@ -2097,9 +2100,10 @@ object Dedup {
     *   dftab/     (h, df)                the frozen order itself
     */
   def buildContainmentIndex(corpus: DataFrame, path: String,
-                            n: Int = 2): Unit = {
+                            n: Int = 2,
+                            applied: Set[String] = Set.empty): Unit = {
     val spark = corpus.sparkSession
-    graft.util.Manifest.init(spark, path) {
+    graft.util.Manifest.init(spark, path, applied) {
       hashedShingles(corpus, n)
         .write.mode(SaveMode.Overwrite).parquet(s"$path/sets")
       val storedSets = spark.read.parquet(s"$path/sets")
@@ -2238,7 +2242,7 @@ object Dedup {
     */
   def containmentStore(path: String, n: Int = 2): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "sets", "postings")(
-      buildContainmentIndex(_, path, n = n),
+      (b, stamp) => buildContainmentIndex(b, path, n = n, applied = stamp),
       (b, id) => extendContainmentIndex(b, path, n = n, shardId = Some(id)))
 
   // ── persisted edit index ──────────────────────────────────────────
@@ -2255,10 +2259,11 @@ object Dedup {
     * after any number of extends (spec-proven).
     */
   def buildEditIndex(corpus: DataFrame, strCol: String, path: String,
-                     maxDist: Int = 2): Unit = {
+                     maxDist: Int = 2,
+                     applied: Set[String] = Set.empty): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.util.Manifest.init(spark, path) {
+    graft.util.Manifest.init(spark, path, applied) {
       Seq(maxDist).toDF("max_dist")
         .write.mode(SaveMode.Overwrite).parquet(s"$path/params")
       corpus.select(col("doc_id").cast("long").as("doc_id"),
@@ -2301,7 +2306,7 @@ object Dedup {
   def editStore(path: String, strCol: String,
                 maxDist: Int = 2): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "strs", "segs")(
-      buildEditIndex(_, strCol, path, maxDist),
+      buildEditIndex(_, strCol, path, maxDist, _),
       (b, id) => extendEditIndex(b, strCol, path, Some(id)))
 
   /** Cross-set edit join of `probes` against the INDEXED corpus —

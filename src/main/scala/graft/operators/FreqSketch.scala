@@ -165,11 +165,12 @@ object FreqSketch {
     * base summary instead of double-counting it.
     */
   def buildHeavyStore(items: DataFrame, itemCol: String, path: String,
-                      capacity: Int = 768): Unit =
+                      capacity: Int = 768,
+                      applied: Set[String] = Set.empty): Unit =
     // Manifest.init clears the previous epoch wholesale — ledger
     // included, so a replayed stream re-numbering its batches from 0
     // is not silently no-opped by pre-rebuild ids
-    graft.util.Manifest.init(items.sparkSession, path) {
+    graft.util.Manifest.init(items.sparkSession, path, applied) {
       writeShard(items, itemCol, path, "_base", capacity, SaveMode.Overwrite)
     }
 
@@ -205,7 +206,7 @@ object FreqSketch {
     // shard's sketch pass is not one-file-one-task serial
     def grams(docs: DataFrame) = TextOps.ngrams(widenToCores(docs), n)
     graft.util.ShardedStore.onManifest(path, "sketch")(
-      b => buildHeavyStore(grams(b), "ngram", path, capacity),
+      (b, stamp) => buildHeavyStore(grams(b), "ngram", path, capacity, stamp),
       (b, id) => extendHeavyStore(grams(b), "ngram", path, Some(id),
         capacity = capacity))
   }

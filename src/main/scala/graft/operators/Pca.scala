@@ -2056,7 +2056,8 @@ object Pca {
   def buildIvfResidualStore(emb: DataFrame, path: String, nlist: Int = 0,
                             coarseIters: Int = -1,
                             vecCol: String = "embedding",
-                            centsOpt: Option[Similarity.Cents] = None): Unit = {
+                            centsOpt: Option[Similarity.Cents] = None,
+                            applied: Set[String] = Set.empty): Unit = {
     val spark = emb.sparkSession
     val n = emb.count()
     val nlistUse = if (nlist > 0) nlist else Similarity.scaledIvfConfig(n)._1
@@ -2066,7 +2067,7 @@ object Pca {
       Similarity.coarseCentroids(
         emb.select(col("vec_id"), col(vecCol).as("embedding")),
         nlistUse, itersUse))
-    graft.util.Manifest.init(spark, path) {
+    graft.util.Manifest.init(spark, path, applied) {
       writeCents(spark, path, cents)
       writeResidualShard(emb, path, cents, "_base", vecCol,
         org.apache.spark.sql.SaveMode.Overwrite)
@@ -2102,7 +2103,7 @@ object Pca {
     */
   def residualStore(path: String): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "moments")(
-      buildIvfResidualStore(_, path),
+      (b, stamp) => buildIvfResidualStore(b, path, applied = stamp),
       (b, id) => extendIvfResidualStore(b, path, Some(id)))
 
   /** Combined store moments per cell, shard rows summed in shard_id
@@ -2384,10 +2385,11 @@ object Pca {
     * rewrites the base moments instead of double-counting them.
     */
   def buildMomentStore(emb: DataFrame, path: String,
-                       vecCol: String = "embedding"): Unit =
+                       vecCol: String = "embedding",
+                       applied: Set[String] = Set.empty): Unit =
     // Manifest.init clears the previous epoch — ledger included, so
     // the old epoch's batch ids cannot no-op the new epoch's extends
-    graft.util.Manifest.init(emb.sparkSession, path) {
+    graft.util.Manifest.init(emb.sparkSession, path, applied) {
       writeMomentShard(emb, path, "_base", vecCol,
         org.apache.spark.sql.SaveMode.Overwrite)
     }
@@ -2417,7 +2419,8 @@ object Pca {
     */
   def momentStore(path: String): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "moments")(
-      buildMomentStore(_, path), (b, id) => extendMomentStore(b, path, Some(id)))
+      (b, stamp) => buildMomentStore(b, path, applied = stamp),
+      (b, id) => extendMomentStore(b, path, Some(id)))
 
   /** Combined store moments, shard rows summed in shard_id order —
     * deterministic for a given shard SET, independent of append order

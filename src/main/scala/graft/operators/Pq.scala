@@ -452,14 +452,15 @@ object Pq {
                     m: Int = 8, numCentroids: Int = 64, dim: Int = 64,
                     kmeansIters: Int = 0, coarseIters: Int = 0,
                     centsOpt: Option[Similarity.Cents] = None,
-                    booksOpt: Option[Array[Array[Array[Double]]]] = None): Unit = {
+                    booksOpt: Option[Array[Array[Array[Double]]]] = None,
+                    applied: Set[String] = Set.empty): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val cents = centsOpt.getOrElse(
       Similarity.coarseCentroids(embeddings, nlist, coarseIters))
     val books = booksOpt.getOrElse(
       trainedBooks(embeddings, m, numCentroids, dim, kmeansIters))
-    graft.util.Manifest.init(spark, path) {
+    graft.util.Manifest.init(spark, path, applied) {
       Seq((nlist, m, numCentroids, dim, kmeansIters, coarseIters))
         .toDF("nlist", "m", "num_centroids", "dim", "kmeans_iters", "coarse_iters")
         .write.mode(SaveMode.Overwrite).parquet(paramsPath(path))
@@ -576,7 +577,8 @@ object Pq {
     */
   def annStore(path: String): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "codes")(
-      buildAnnIndex(_, path), (b, id) => extendAnnIndex(b, path, Some(id)))
+      (b, stamp) => buildAnnIndex(b, path, applied = stamp),
+      (b, id) => extendAnnIndex(b, path, Some(id)))
 
   /** REBALANCE the stored index — the ANN store's OPTIMIZE: retrain
     * the coarse quantizer on the CURRENT corpus and rewrite the code

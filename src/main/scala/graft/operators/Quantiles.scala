@@ -114,11 +114,12 @@ object Quantiles {
     * rewrites the base summary instead of double-counting it.
     */
   def buildQuantileStore(df: DataFrame, valueCol: String, path: String,
-                         eps: Double = 0.01): Unit =
+                         eps: Double = 0.01,
+                         applied: Set[String] = Set.empty): Unit =
     // Manifest.init clears the previous epoch — ledger included, so
     // the old epoch's batch ids cannot no-op the new epoch's extends
     // (batch ids restart at 0 on a replayed stream)
-    graft.util.Manifest.init(df.sparkSession, path) {
+    graft.util.Manifest.init(df.sparkSession, path, applied) {
       writeShard(df, valueCol, path, "_base", eps, SaveMode.Overwrite)
     }
 
@@ -151,7 +152,7 @@ object Quantiles {
   def quantileStore(path: String, valueCol: String,
                     eps: Double = 0.01): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "summary")(
-      buildQuantileStore(_, valueCol, path, eps),
+      buildQuantileStore(_, valueCol, path, eps, _),
       (b, id) => extendQuantileStore(b, valueCol, path, Some(id), eps = eps))
 
   /** The merged summary, collected and value-sorted — bounded by

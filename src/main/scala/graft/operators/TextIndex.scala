@@ -76,9 +76,10 @@ object TextIndex {
     * manifest generation. `nFiles` bounds the vocabulary slices; at
     * corpus scale set it so one slice's postings fit a ~128 MB file.
     */
-  def buildTextIndex(docs: DataFrame, path: String, nFiles: Int = 8): Unit = {
+  def buildTextIndex(docs: DataFrame, path: String, nFiles: Int = 8,
+                     applied: Set[String] = Set.empty): Unit = {
     val spark = docs.sparkSession
-    graft.util.Manifest.init(spark, path) {
+    graft.util.Manifest.init(spark, path, applied) {
       postings(docs)
         .repartitionByRange(nFiles, col("term"), col("doc_id"))
         .sortWithinPartitions(col("term"), col("doc_id"))
@@ -160,7 +161,8 @@ object TextIndex {
     */
   def indexStore(path: String): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path)(
-      buildTextIndex(_, path), (b, id) => extendTextIndex(b, path, Some(id)))
+      (b, stamp) => buildTextIndex(b, path, applied = stamp),
+      (b, id) => extendTextIndex(b, path, Some(id)))
       .copy(compact = (spark, threshold) =>
         autoCompactIndex(spark, path, threshold))
 

@@ -182,10 +182,11 @@ object TextOps {
     * generation 0; `n` is pinned in `params` — probes score with the
     * stored geometry.
     */
-  def buildGramStore(docs: DataFrame, path: String, n: Int = 2): Unit = {
+  def buildGramStore(docs: DataFrame, path: String, n: Int = 2,
+                     applied: Set[String] = Set.empty): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Manifest.init(spark, path) {
+    graft.util.Manifest.init(spark, path, applied) {
       Seq(n).toDF("n")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$path/params")
@@ -228,7 +229,7 @@ object TextOps {
     */
   def gramStore(path: String, n: Int = 2): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "grams")(
-      buildGramStore(_, path, n), (b, id) => extendGramStore(b, path, Some(id)))
+      buildGramStore(_, path, n, _), (b, id) => extendGramStore(b, path, Some(id)))
 
   /** Score docs' novelty against the STORED reference — the serving
     * side of the loop: old reference text is never re-shingled, the
@@ -271,8 +272,9 @@ object TextOps {
     * generation 0 (any previous epoch at `path` is cleared — its
     * ledger must not no-op the new epoch's shards).
     */
-  def buildVocab(docs: DataFrame, path: String, unicode: Boolean = false): Unit =
-    graft.util.Manifest.init(docs.sparkSession, path) {
+  def buildVocab(docs: DataFrame, path: String, unicode: Boolean = false,
+                 applied: Set[String] = Set.empty): Unit =
+    graft.util.Manifest.init(docs.sparkSession, path, applied) {
       tokenCounts(docs, unicode)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(vocabPath(path))
@@ -306,7 +308,8 @@ object TextOps {
     */
   def vocabStore(path: String): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "vocab")(
-      buildVocab(_, path), (b, id) => extendVocab(b, path, shardId = Some(id)))
+      (b, stamp) => buildVocab(b, path, applied = stamp),
+      (b, id) => extendVocab(b, path, shardId = Some(id)))
 
   /** The store's merged vocabulary: `(w, c)` summed across the shard
     * files of one committed generation (the newest when `asOf` is

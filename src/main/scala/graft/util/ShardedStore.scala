@@ -47,20 +47,18 @@ object ShardedStore {
       Manifest.applied(spark, path).contains(shardId(0))
 
   /** A [[Manifest]]-managed store whose `subs` change one shard at a
-    * time. After `init` builds, an empty ledgered commit stamps batch
-    * 0's shard id, so a later replay of the same input (fresh
-    * checkpoint, batch ids reassigned identically by the deterministic
-    * chunking) can prove the build happened. Compaction is the
+    * time. `init` builds the store from batch 0 and commits it as
+    * generation 0 with the given ledger — batch 0's shard id — so a
+    * later replay of the same input (fresh checkpoint, batch ids
+    * reassigned identically by the deterministic chunking) can prove
+    * the build happened, at the cost of one commit. Compaction is the
     * file-count policy on each sub ([[Manifest.autoCompactSub]];
     * row-preserving, so answers and the ledger are untouched).
     */
-  def onManifest(path: String, subs: String*)(init: DataFrame => Unit,
+  def onManifest(path: String, subs: String*)(init: (DataFrame, Set[String]) => Unit,
                  append: (DataFrame, String) => Unit): ShardedStore =
     ShardedStore(path,
-      build = { batch =>
-        init(batch)
-        Manifest.extend(batch.sparkSession, path, Some(shardId(0))) {}
-      },
+      build = init(_, Set(shardId(0))),
       extend = append,
       compact = (spark, threshold) =>
         subs.foreach(sub => Manifest.autoCompactSub(spark, path, sub, threshold)))

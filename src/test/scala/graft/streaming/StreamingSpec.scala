@@ -2,13 +2,14 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.matchers.should.Matchers
 import graft.SparkSuite
-import graft.operators.{Candles, TextOps}
+import graft.operators.{Candles, Silver, TextOps}
 
 /** Streaming-semantics tests (SURVEY.md §5.2): controlled event-time
   * advancement through MemoryStream — no wall-clock dependence.
@@ -646,6 +647,32 @@ class StreamingSpec extends SparkSuite with Matchers {
     candles1 shouldBe batch.collect().toSet
   }
 
+  test("a streamed store's build is one commit: batch 0's stamp lands in " +
+      "generation 0, and 4 micro-batches with no compaction end at " +
+      "generation 3") {
+    val events = spark.range(0, 400).select(col("id").as("event_id"),
+      timestamp_seconds(col("id") * 600).as("ts"),
+      concat(lit("S"), pmod(col("id"), lit(3)).cast("string")).as("event_type"),
+      (pmod(col("id") * 7, lit(31)) + 1).cast("double").as("value"))
+    def replay(store: String, killPoint: Option[(Long, String)]): Unit =
+      StreamedBatch.replayIntoStore(spark, events, "ts", "event_id",
+        Candles.candleStore(store), chunks = 4, autoCompact = 0,
+        killPoint = killPoint)
+    // stopped before batch 1: only the build is on disk
+    val built = tmp("stream-candle-build-")
+    intercept[Exception](replay(built, Some((1L, "before"))))
+    graft.util.Manifest.generations(spark, built) shouldBe Seq(0)
+    graft.util.Manifest.applied(spark, built) shouldBe Set("replay-batch-0")
+    graft.util.ShardedStore.builtOnManifest(spark, built) shouldBe true
+    val full = tmp("stream-candle-commits-")
+    replay(full, None)
+    graft.util.Manifest.snapshot(spark, full).gen shouldBe 3
+    graft.util.Manifest.applied(spark, full) shouldBe
+      (0 to 3).map(i => s"replay-batch-$i").toSet
+    Candles.candlesFromStore(spark, full).collect().toSet shouldBe
+      Candles.ohlcv(events, tieCol = Some("event_id")).collect().toSet
+  }
+
   test("replayIntoAnnIndex: streamed build+extends == from-scratch index, " +
       "and a re-delivered batch is a ledgered no-op") {
     import graft.operators.Pq
@@ -775,6 +802,103 @@ class StreamingSpec extends SparkSuite with Matchers {
     } finally {
       bq.stop(); sq.stop(); gq.stop()
     }
+  }
+
+  /** `n` kafka-shaped JSON-lines files of 3 tickers each: one
+    * micro-batch per file under `maxFilesPerTrigger = 1`.
+    */
+  private def kafkaFiles(n: Int): String = {
+    val dir = tmp("graft-kafka-files-")
+    for (i <- 0 until n) {
+      val lines = (0 until 3).map { r =>
+        val v = ticker("BTC-USD", s"${100 + r}", f"2026-01-01T10:$i%02d:$r%02d.000000Z",
+          (3 * i + r).toLong)
+        s"""{"key":"coinbase","value":"${v.replace("\"", "\\\"")}",""" +
+          s""""timestamp":"2026-01-01T10:31:00.000Z"}"""
+      }
+      Files.write(java.nio.file.Paths.get(dir, f"part-$i%03d.json"),
+        lines.mkString("\n").getBytes("UTF-8"))
+    }
+    dir
+  }
+
+  /** The medallion's bronze query, one input file per micro-batch, run
+    * to completion from a fresh checkpoint; returns its table path.
+    */
+  private def bronzeRun(rawDir: String): String = {
+    val root = tmp("graft-bronze-run-")
+    StreamJobs.parquetAppend(Medallion.bronzeEnvelope(StreamJobs.jsonLinesStream(
+      spark, rawDir, Schemas.kafkaShaped, maxFilesPerTrigger = Some(1))),
+      s"$root/table", s"$root/ckpt").awaitTermination()
+    s"$root/table"
+  }
+
+  /** The medallion's silver query (no dedup) over a bronze table, one
+    * bronze file per micro-batch, from a fresh checkpoint.
+    */
+  private def silverRun(bronzeTable: String): String = {
+    val root = tmp("graft-silver-run-")
+    StreamJobs.parquetAppend(Medallion.silverTrades(StreamJobs.parquetStream(
+      spark, bronzeTable, Schemas.bronze, maxFilesPerTrigger = Some(1))),
+      s"$root/table", s"$root/ckpt").awaitTermination()
+    s"$root/table"
+  }
+
+  private def batchesIn(table: String): Long =
+    graft.util.Inspect.history(spark, table).select("batch_id").distinct().count()
+
+  test("processing-time stamps stay out of generated code: bronze and " +
+      "silver queries compile as often over 8 one-file micro-batches as " +
+      "over 2") {
+    def compiling[T](body: => T): (T, Long) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = body
+      (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
+    // a one-batch run of each query fills the codegen cache, so the
+    // counted runs see only what each micro-batch itself compiles
+    silverRun(bronzeRun(kafkaFiles(1)))
+    val (raw2, raw8) = (kafkaFiles(2), kafkaFiles(8))
+    val (bronze2, bronzeC2) = compiling(bronzeRun(raw2))
+    val (bronze8, bronzeC8) = compiling(bronzeRun(raw8))
+    val (silver2, silverC2) = compiling(silverRun(bronze2))
+    val (silver8, silverC8) = compiling(silverRun(bronze8))
+    Seq(bronze2, silver2).map(batchesIn) shouldBe Seq(2L, 2L)
+    Seq(bronze8, silver8).map(batchesIn) shouldBe Seq(8L, 8L)
+    withClue("bronze compiles, 8 vs 2 batches: ") { bronzeC8 shouldBe bronzeC2 }
+    withClue("silver compiles, 8 vs 2 batches: ") { silverC8 shouldBe silverC2 }
+  }
+
+  test("processing-time stamps: rows of one committed micro-batch share " +
+      "one value, values never go down across batches, and a batch-mode " +
+      "query stamps one value") {
+    val bronze = bronzeRun(kafkaFiles(4))
+    val silver = silverRun(bronze)
+    for ((table, stamp) <- Seq(bronze -> "ingest_ts", silver -> "silver_processed_at")) {
+      val files = graft.util.Inspect.history(spark, table).select(col("batch_id"),
+        element_at(split(col("path"), "/"), -1).as("file"), col("commit_ts"))
+      val perBatch = spark.read.parquet(table)
+        .select(col(stamp), col("_metadata.file_name").as("file"))
+        .join(files, "file")
+        .groupBy("batch_id")
+        .agg(count_distinct(col(stamp)).as("values"), min(col(stamp)).as("ts"),
+          min(col("commit_ts")).as("commit_ts"))
+        .orderBy("batch_id").collect()
+      withClue(s"$stamp per batch: ${perBatch.mkString(", ")}: ") {
+        perBatch.length shouldBe 4
+        perBatch.map(_.getAs[Long]("values")).toSeq shouldBe Seq.fill(4)(1L)
+        val ts = perBatch.map(_.getAs[Timestamp]("ts"))
+        ts.zip(ts.tail).foreach { case (a, b) => a.after(b) shouldBe false }
+        // stamped when the batch started, so never after its files exist
+        perBatch.foreach(r => r.getAs[Timestamp]("ts").after(
+          r.getAs[Timestamp]("commit_ts")) shouldBe false)
+      }
+    }
+    // batch mode: one value for the whole query, across partitions
+    val batchSilver = Silver.parseTickers(
+      spark.read.schema(Schemas.bronze).parquet(bronze).repartition(4))
+    batchSilver.select(count_distinct(col("silver_processed_at"))).head().getLong(0) shouldBe 1L
+    batchSilver.count() shouldBe 12
   }
 
   test("exactly-once file sink: restart from checkpoint does not duplicate") {
