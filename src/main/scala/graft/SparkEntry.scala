@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators._
+import graft.util.Scratch.{memo, memoized}
 import graft.util.Tables
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -38,37 +39,6 @@ object SparkEntry {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** One lazily built value per key, behind [[memo]]. */
-  private final class Cell { @volatile var value: Option[Any] = None }
-  private val cells = new java.util.concurrent.ConcurrentHashMap[String, Cell]()
-
-  /** Per-JVM memo of gate fixtures and trained models (quantizers, PCA
-    * fits, calibrated probe budgets). Each `build` is a deterministic
-    * function of its key, so memoizing changes no gate's bytes; it only
-    * moves fixture builds and training off the timed path of every
-    * repeat call (Bench runs each gate twice, Verify and PlanAudit once
-    * more). The first caller of `key` runs `build`, concurrent callers
-    * wait for it, and later callers get its value. A `build` that
-    * throws leaves the key unbuilt, so the next call retries.
-    *
-    * The map only hands out cells; `build` runs outside its
-    * `computeIfAbsent`, under the cell's own lock. Builds nest (the
-    * wide corpus reads the clustered one, the ANN indexes read the
-    * trained quantizers), and a mapping function that updates its own
-    * map throws `IllegalStateException("Recursive update")`.
-    */
-  private[graft] def memo[T](key: String)(build: => T): T = {
-    val cell = cells.computeIfAbsent(key, _ => new Cell)
-    cell.synchronized {
-      if (cell.value.isEmpty) cell.value = Some(build)
-      cell.value.get.asInstanceOf[T]
-    }
-  }
-
-  /** `key`'s memoized value if this JVM has built it; never builds. */
-  private def memoized[T](key: String): Option[T] =
-    Option(cells.get(key)).flatMap(_.value).map(_.asInstanceOf[T])
 
   /** A memoized gate fixture: on the first call per (`name`, sfDir
     * `dir`), `build` fills a fresh [[graft.util.Scratch]] dir; every
@@ -281,20 +251,24 @@ object SparkEntry {
       Candles.updateCandleStore(ev.filter(pmod(col("event_id"), lit(3)) === 2), store)
     }
 
-  /** Per-(JVM, sfDir) memo of the `lake_zorder_roundtrip` gate's table:
-    * a 3-column slice of events rewritten by
-    * [[graft.util.Lake.compactClustered]] along the (user_id, value)
-    * Z-curve. The gate reads it back — hash equality against the plain
-    * SELECT proves the layout rewrite is lossless; the clustering
-    * QUALITY claims (narrow per-file min/max boxes, file skipping)
-    * are spec-asserted in LakeSpec where file-level stats are visible.
+  /** Per-(JVM, sfDir) memo of the table behind `lake_zorder_roundtrip`
+    * and `lake_stats_skipping`: a 3-column slice of events as a merge
+    * table keyed by `event_id`, then OPTIMIZE'd by
+    * [[graft.util.Lake.mergeCompact]] along the (user_id, value)
+    * Z-curve into ~1 MB files, their per-file stats committed with
+    * them. The round-trip gate reads it back (the layout rewrite is
+    * lossless); the skipping gate reads a value range through the
+    * stats. The clustering QUALITY claims (narrow per-file min/max
+    * boxes, files skipped) are spec-asserted in LakeSpec where file
+    * counts are visible.
     */
-  private def zorderGateTable(s: SparkSession, dir: String): String =
-    fixture("graft-zorder", dir) { t =>
-      Tables.events(s, dir).select("event_id", "user_id", "value")
-        .write.mode("overwrite").parquet(t)
-      graft.util.Lake.compactClustered(s, t, Seq("user_id", "value"),
-        targetFileMB = 1)
+  private def layoutGateTable(s: SparkSession, dir: String): String =
+    fixture("graft-zorder", dir) { path =>
+      graft.util.Lake.mergeInit(s, path,
+        Tables.events(s, dir).select("event_id", "user_id", "value"),
+        Seq("event_id"))
+      graft.util.Lake.mergeCompact(s, path, targetFileMB = 1,
+        clusterBy = Seq("user_id", "value"))
     }
 
   /** Per-(JVM, sfDir) memo of the `dedup_spans_incremental` gate's
@@ -668,11 +642,10 @@ object SparkEntry {
         Seq("o_orderkey"))
       graft.util.Lake.deleteWhere(s, path,
         col("o_orderstatus") === "F" && col("o_totalprice") < 100000,
-        Seq("o_orderkey"), shardId = Some("d1"))
+        shardId = Some("d1"))
       graft.util.Lake.updateWhere(s, path,
         col("o_totalprice") > 400000,
-        Map("o_orderpriority" -> lit("1-URGENT-XL")),
-        Seq("o_orderkey"), shardId = Some("u1"))
+        Map("o_orderpriority" -> lit("1-URGENT-XL")), shardId = Some("u1"))
     }
 
   /** Per-(JVM, sfDir) memo of the `mm_binary_source` gate's image-file
@@ -704,7 +677,7 @@ object SparkEntry {
             .withColumn("o_orderpriority", lit("OPT")),
           Seq("o_orderkey"), shardId = Some(s"opt-$m"))
       val (before, after) = graft.util.Lake.mergeCompact(s, path,
-        Seq("o_orderkey"), clusterBy = Seq("o_orderkey"))
+        clusterBy = Seq("o_orderkey"))
       require(after < before,
         s"mergeCompact must shrink the file count ($before -> $after)")
     }
@@ -757,11 +730,11 @@ object SparkEntry {
         Tables.orders(s, dir).repartitionByRange(8, col("o_orderkey")),
         Seq("o_orderkey"))
       graft.util.Lake.deleteWhere(s, path, col("o_totalprice") < 250000,
-        Seq("o_orderkey"), shardId = Some("oops"))
+        shardId = Some("oops"))
       graft.util.Manifest.restore(s, path, gen = 0)
       // the rewound table still remembers the shard id
       val replay = graft.util.Lake.deleteWhere(s, path, lit(true),
-        Seq("o_orderkey"), shardId = Some("oops"))
+        shardId = Some("oops"))
       require(!replay.applied, "restore must not reset the shard ledger")
     }
 
@@ -794,23 +767,6 @@ object SparkEntry {
     fixture(s"graft-$fmt", dir) { t =>
       Tables.events(s, dir).select("event_id", "user_id", "event_type", "value")
         .write.format(fmt).option("header", "true").mode("overwrite").save(t)
-    }
-
-  /** Per-(JVM, sfDir) memo of the `lake_stats_skipping` gate's table:
-    * the Z-ordered events slice (same layout as `lake_zorder_roundtrip`
-    * — clustering is what makes per-file ranges narrow) plus its
-    * [[graft.util.Lake.buildFileStats]] manifest on (user_id, value).
-    * The gate reads a value range THROUGH the manifest — hash equality
-    * against the plain SQL filter proves skipping drops no rows; the
-    * file-pruning claim itself is spec-asserted in LakeSpec.
-    */
-  private def statsSkipGateTable(s: SparkSession, dir: String): String =
-    fixture("graft-statsskip", dir) { t =>
-      Tables.events(s, dir).select("event_id", "user_id", "value")
-        .write.mode("overwrite").parquet(t)
-      graft.util.Lake.compactClustered(s, t, Seq("user_id", "value"),
-        targetFileMB = 1)
-      graft.util.Lake.buildFileStats(s, t, Seq("user_id", "value"))
     }
 
   /** Per-(JVM, sfDir) memo of the `q_distinct_store` gate's HLL
@@ -1313,18 +1269,19 @@ object SparkEntry {
             .withColumn("spread", round(col("spread"), 6))
         }, stageKey = Some(s"$dir:spread-sentinels"))
     }),
-    // ── lakehouse physical layout (SURVEY §2.9 / Lake): Z-order
-    // clustered rewrite must be invisible in the answer — the table
-    // reads back exactly as the unclustered original
+    // ── lakehouse physical layout (SURVEY §2.9 / Lake): the Z-order
+    // OPTIMIZE of a merge table must be invisible in the answer — the
+    // table reads back exactly as the unclustered original
     "lake_zorder_roundtrip" -> ((s, dir) =>
-      s.read.parquet(zorderGateTable(s, dir))),
-    // file-level data skipping (the Delta stats-pruning analogue):
-    // a value-range read THROUGH the _filestats manifest must equal
-    // the plain filter — files are pruned, rows are not. The manifest
-    // actually pruning files (not just passing them all) is
-    // spec-asserted in LakeSpec where file counts are visible.
+      graft.util.Lake.mergeRead(s, layoutGateTable(s, dir))),
+    // data skipping (Delta's stats pruning) on a non-key column of the
+    // same table: a value-range read through the per-file stats
+    // committed with the compaction must equal the plain filter —
+    // files are pruned, rows are not. The stats actually pruning files
+    // (not just passing them all) is spec-asserted in LakeSpec where
+    // file counts are visible.
     "lake_stats_skipping" -> ((s, dir) =>
-      graft.util.Lake.readSkipping(s, statsSkipGateTable(s, dir),
+      graft.util.Lake.mergeReadRange(s, layoutGateTable(s, dir),
         "value", lit(30.0), lit(40.0))),
     // incremental HLL distinct-count store: per-key estimates served
     // from sketches (build + 2 ledgered extends + a re-delivered

@@ -274,9 +274,9 @@ object Candles {
     * live date ([[Manifest.compactSub]] on `data`, which keeps the
     * `p_date` dirs). Updates leave each touched date with as many
     * files as the merge had write tasks; compaction resets that, same
-    * role as [[graft.util.Lake.compact]] for flat dirs. Answers, the
-    * applied-shard ledger and the retained generations' `asOf` reads
-    * survive.
+    * role as [[graft.util.Lake.mergeCompact]] for merge tables.
+    * Answers, the applied-shard ledger and the retained generations'
+    * `asOf` reads survive.
     */
   def compactCandleStore(spark: SparkSession, path: String,
                          retainGenerations: Int = 2): Unit = {

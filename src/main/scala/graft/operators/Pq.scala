@@ -479,8 +479,9 @@ object Pq {
     * explicit repartition by cell clusters each cell's rows into one
     * task before the dynamic write — without it every input task emits
     * one file per cell it touches (tasks × nlist small files in the
-    * bulk artifact, exactly the fragmentation [[graft.util.Lake.compact]]
-    * exists to undo); with it a build lands ~one file per cell.
+    * bulk artifact, exactly the fragmentation [[graft.util.Manifest
+    * .compactSub]] exists to undo); with it a build lands ~one file per
+    * cell.
     */
   private def writeCodes(embeddings: DataFrame,
                          cents: Array[(Int, Array[Float], Double)],

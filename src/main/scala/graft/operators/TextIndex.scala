@@ -86,7 +86,7 @@ object TextIndex {
         .write.mode(SaveMode.Overwrite).parquet(dataPath(path))
       docLengths(docs).write.mode(SaveMode.Overwrite).parquet(lenPath(path))
       graft.util.Lake.mergeStatsFor(spark, path,
-          graft.util.Lake.dataFileNames(spark, path), Seq("term"))
+          graft.util.Lake.dataFileNames(spark, path))
         .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/$StatsSub")
     }
   }
@@ -114,7 +114,7 @@ object TextIndex {
       docLengths(newDocs).write.mode(SaveMode.Append).parquet(lenPath(path))
       val fresh = graft.util.Lake.dataFileNames(spark, path) -- before
       if (fresh.nonEmpty)
-        graft.util.Lake.mergeStatsFor(spark, path, fresh, Seq("term"))
+        graft.util.Lake.mergeStatsFor(spark, path, fresh)
           .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/$StatsSub")
     }
     ()
@@ -131,7 +131,7 @@ object TextIndex {
     */
   def compactIndex(spark: SparkSession, path: String,
                    targetFileMB: Int = 128): (Int, Int) =
-    graft.util.Lake.mergeCompact(spark, path, Seq("term"), targetFileMB,
+    graft.util.Lake.mergeCompact(spark, path, targetFileMB,
       clusterBy = Seq("term"))
 
   /** Threshold-triggered [[compactIndex]] — the [[graft.util.Lake

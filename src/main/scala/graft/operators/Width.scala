@@ -35,10 +35,9 @@ private[operators] object Width {
     * d = 64 embeddings — a few hundred ms per task under the heaviest
     * per-row kernels (residual moments: ~100k FLOPs/row), so narrow
     * frames cannot straggle while per-task overhead stays amortized.
-    * @volatile var so probes/specs can pin widths; production clusters
-    * keep the default — any real corpus saturates the conf cap.
+    * Any real corpus saturates the conf cap.
     */
-  @volatile var targetBytesPerTask: Long = 256L * 1024
+  val targetBytesPerTask: Long = 256L * 1024
 
   /** min(conf, max(1, ceil(sizeInBytes / targetBytesPerTask))). Falls
     * back to the full conf width when the optimizer has no usable size
@@ -58,23 +57,7 @@ private[operators] object Width {
     val bytes =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-    // GRAFT_WIDTH_TARGET overrides every call site — the plan-dump /
-    // A-B knob (=1 reproduces the pre-r16 full-width plans); the
-    // parameterisation requested for scale-dependent settings.
-    // Malformed or non-positive values fall back to the call-site
-    // target (r16 ADVICE: a bad env var must not fail every query in
-    // the session, and zero/negative widths are rejected, not clamped).
-    val eff = effectiveTarget(sys.env.get("GRAFT_WIDTH_TARGET"), target)
-    val t = BigInt(math.max(eff, 1L))
+    val t = BigInt(math.max(target, 1L))
     ((bytes + t - 1) / t).min(BigInt(conf)).max(BigInt(1)).toInt
   }
-
-  /** Env-override resolution, factored out so the malformed-value
-    * contract is unit-testable (the JVM cannot mutate its environment).
-    */
-  private[operators] def effectiveTarget(env: Option[String],
-                                         fallback: Long): Long =
-    env.flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .filter(_ > 0)
-      .getOrElse(fallback)
 }

@@ -64,23 +64,22 @@ object StreamedBatch {
   }
 
   /** The staged `in/` dir for a replay input — memoized per `stageKey`
-    * when one is given (the [[graft.SparkEntry]] gate memos' pattern):
-    * several gates replay the SAME chronological chunks, and Verify +
-    * Bench's double runs re-stage identically, so the range-exchange +
-    * write + rename staging pays once per (JVM, key). Only the INPUT is
-    * shared — every replay still gets a fresh checkpoint/output dir, so
-    * the streaming execution (the operation the gates time and check)
-    * runs in full on every call. The staged chunks are immutable once
-    * built (the file source only ever reads them).
+    * when one is given ([[graft.util.Scratch.memo]], the gate fixtures'
+    * memo): several gates replay the SAME chronological chunks, and
+    * Verify + Bench's double runs re-stage identically, so the
+    * range-exchange + write + rename staging pays once per (JVM, key).
+    * Only the INPUT is shared — every replay still gets a fresh
+    * checkpoint/output dir, so the streaming execution (the operation
+    * the gates time and check) runs in full on every call. The staged
+    * chunks are immutable once built (the file source only ever reads
+    * them).
     */
-  private val stagedInputs = new java.util.concurrent.ConcurrentHashMap[String, File]()
   private def stagedIn(input: DataFrame, tsCol: String, tieCol: String,
-                       chunks: Int, stageKey: Option[String]): File =
-    stageKey match {
-      case None => new File(stageChunks(input, tsCol, tieCol, chunks), "in")
-      case Some(k) => stagedInputs.computeIfAbsent(s"$k#$tsCol#$tieCol#$chunks",
-        _ => new File(stageChunks(input, tsCol, tieCol, chunks), "in"))
-    }
+                       chunks: Int, stageKey: Option[String]): File = {
+    def stage() = new File(stageChunks(input, tsCol, tieCol, chunks), "in")
+    stageKey.fold(stage())(k =>
+      Scratch.memo(s"staged-in#$k#$tsCol#$tieCol#$chunks")(stage()))
+  }
 
   /** The file-stream source over a staged `in/` dir: one chunk per
     * micro-batch, oldest first — the watermark advances batch by batch
@@ -168,8 +167,9 @@ object StreamedBatch {
     * micro-batch's updated groups append to a parquet change log
     * stamped with the batch id (`foreachBatch`); reading the log back,
     * the latest stamp per `keyCols` wins — exactly how a CDC/upsert
-    * table resolves, and at 100 TB the log compacts with
-    * [[graft.util.Lake.compact]] on the same contract.
+    * table resolves. At 100 TB the log would be a [[graft.util.Lake]]
+    * merge table instead, compacted by [[graft.util.Lake.mergeCompact]]
+    * through the manifest.
     *
     * Determinism: a group updates at most once per micro-batch, so
     * (key → max batch id) picks exactly one row; the final resolved

@@ -2,18 +2,24 @@ package graft.util
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Physical-layout utilities for lakehouse tables at scale: date
-  * partitioning (partition pruning at scan time) and hash bucketing
+  * partitioning (partition pruning at scan time), hash bucketing
   * (co-located, shuffle-free joins and aggregations on the bucket
-  * key).
+  * key), and the merge table — the one layout that compacts,
+  * Z-orders and skips files, all through [[Manifest]] commits.
   *
-  * At 100 TB these two layouts are what keep the medallion tables
+  * At 100 TB these layouts are what keep the medallion tables
   * queryable: gold/silver partitioned by event date means a dashboard
   * range query reads only its days (`PartitionFilters` in the scan,
   * not a full-table scan); bucketing the fact tables by their join key
   * means the recurring symbol/orderkey joins and aggregations skip the
-  * exchange entirely — the shuffle was paid once at write time.
+  * exchange entirely — the shuffle was paid once at write time. The
+  * merge table is Delta's layout: every generation commits its data
+  * files together with their per-file min/max stats, so
+  * [[mergeCompact]] (OPTIMIZE / ZORDER BY) and [[mergeReadRange]]
+  * (data skipping) never see stats older than the files.
   */
 object Lake {
 
@@ -59,310 +65,6 @@ object Lake {
   def readMerged(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
 
-  /** Compact a parquet table directory to approximately
-    * `targetFileMB`-sized files — the small-files maintenance pass a
-    * batch lakehouse needs: repeated appends accrete one file per
-    * (job × partition), and at 100 TB a scan over millions of KB-sized
-    * files dies on open/seek overhead and driver-side listing long
-    * before it reads any data. Delta's OPTIMIZE is this operation; on
-    * plain parquet it is a read → repartition → swap rewrite.
-    *
-    * Supported layouts:
-    *  - flat batch dirs (parquet files at the top level);
-    *  - Hive-partitioned dirs (`k=v` subdirectories, nested OK) — the
-    *    rewrite preserves the partition columns and directory layout,
-    *    so partition pruning keeps working, with rows hash-clustered by
-    *    partition key so each partition value lands in ~one file. A
-    *    partition value larger than `targetFileMB` stays a single file
-    *    (the MB target is honored at whole-table granularity).
-    *
-    * REFUSED (throws `IllegalArgumentException`, table untouched):
-    * dirs containing a `_spark_metadata` streaming-sink manifest.
-    * Rewriting such a dir is silent data loss waiting to happen — the
-    * rewrite would drop the sink manifest, and a stream resuming on its
-    * old checkpoint recreates `_spark_metadata` listing only post-resume
-    * files, at which point every compacted row becomes invisible to
-    * `spark.read.parquet` (manifest-listed dirs ignore foreign files).
-    * To compact a retired streaming sink, read it and write a NEW table
-    * (`spark.read.parquet(sink).repartition(n).write.parquet(other)`),
-    * leaving the sink dir and its manifest intact.
-    *
-    * Concurrency contract: callers must ensure no writer is active and
-    * no reader starts a scan during the swap — the rewrite lands in a
-    * temp sibling dir first, but the swap is two renames, and between
-    * them the table path briefly does not exist (a concurrent reader
-    * would throw PATH_NOT_FOUND; none can ever see a half-written
-    * table). Returns (filesBefore, filesAfter).
-    */
-  def compact(spark: SparkSession, path: String, targetFileMB: Int = 128): (Int, Int) =
-    rewriteTable(spark, path, targetFileMB) { (df, nFiles, partCols) =>
-      if (partCols.isEmpty) df.repartition(nFiles)
-      // hash-cluster by partition key: every row of one partition value
-      // lands in one task, so the dynamic write emits ~one file per
-      // partition dir instead of (tasks × partitions)
-      else df.repartition(nFiles, partCols.map(col): _*)
-    }
-
-  /** [[compact]] plus multi-dimensional data CLUSTERING — Delta's
-    * `OPTIMIZE ... ZORDER BY` on plain parquet. Rows are ordered along
-    * a Z-order (Morton) curve over `clusterCols` before the rewrite, so
-    * each output file covers a small hyper-rectangle of the cluster-key
-    * space and its parquet footer min/max stats are NARROW on every
-    * clustered column at once. A scan filtering on any of them then
-    * skips most files (row-group stats pruning) — at 100 TB this is the
-    * difference between reading a table and reading a few files, for
-    * predicates on columns the partition layout doesn't cover.
-    *
-    * Mechanics (all distributed, codegen'd — no UDF, no driver loop):
-    * each cluster column is rank-bucketed to `zBits` bits against its
-    * own approx-quantile boundaries (a bounded driver-side array, the
-    * only collect), the per-column buckets are bit-interleaved into one
-    * Z-value expression, and the rewrite range-partitions + sorts by
-    * it. Quantile bucketing (not min/max scaling) keeps the curve
-    * balanced under skew: every bucket holds ~1/2^zBits of the rows.
-    *
-    * Same refusals, swap, and concurrency contract as [[compact]]; in a
-    * Hive-partitioned layout rows cluster within each partition.
-    */
-  def compactClustered(spark: SparkSession, path: String,
-                       clusterCols: Seq[String], targetFileMB: Int = 128,
-                       zBits: Int = 8): (Int, Int) = {
-    require(clusterCols.nonEmpty, "compactClustered: no cluster columns")
-    rewriteTable(spark, path, targetFileMB) { (df, nFiles, partCols) =>
-      val z = zValue(df, clusterCols, zBits)
-      val keys = partCols.map(col) :+ z
-      df.repartitionByRange(nFiles, keys: _*)
-        .sortWithinPartitions(keys: _*)
-    }
-  }
-
-  /** The Z-order (Morton) key of `clusterCols` as one codegen'd column:
-    * per column, `size(filter(boundaries, b -> b <= x))` ranks `x`
-    * into its quantile bucket (boundaries are an array LITERAL — the
-    * 2^zBits-point quantile sketch is the only driver-side data); the
-    * bucket bits then interleave across columns, column `j` owning bit
-    * positions `i*n + j`. NULLs rank into bucket 0 (they sort first,
-    * as in an ORDER BY).
-    */
-  private def zValue(df: DataFrame, clusterCols: Seq[String], zBits: Int): Column = {
-    val n = clusterCols.length
-    // interleaved key width must fit a signed long (shift past bit 62
-    // would alias mod-64 and silently scramble the curve)
-    require(zBits * n <= 62,
-      s"compactClustered: zBits=$zBits × ${n} columns needs ${zBits * n} " +
-        "interleaved bits; reduce zBits to fit 62")
-    val nBuckets = 1 << zBits
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    // ONE sketch pass for all cluster columns (the per-column overload
-    // would rescan the table per column)
-    val allBounds = df.stat.approxQuantile(clusterCols.toArray, probs, 0.001)
-    val buckets = clusterCols.zip(allBounds).map { case (c, bs) =>
-      val arr = array(bs.distinct.sorted.map(lit): _*)
-      when(col(c).isNull, lit(0L))
-        .otherwise(size(filter(arr, b => b <= col(c).cast("double"))).cast("long"))
-    }
-    val terms = for {
-      i <- 0 until zBits
-      (b, j) <- buckets.zipWithIndex
-    } yield shiftleft(shiftright(b, i).bitwiseAND(1L), i * n + j)
-    terms.reduce(_.bitwiseOR(_)).as("__zorder")
-  }
-
-  /** Shared rewrite-and-swap skeleton of [[compact]] /
-    * [[compactClustered]]: layout detection, streaming-sink refusal,
-    * temp-dir rewrite, atomic two-rename swap, recursive backup delete.
-    */
-  private def rewriteTable(spark: SparkSession, path: String, targetFileMB: Int)
-                          (shape: (DataFrame, Int, Seq[String]) => DataFrame): (Int, Int) = {
-    import java.io.File
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    // visible children only: dot/underscore names (_SUCCESS, .crc) are
-    // metadata to Spark's file index and to us
-    def visible(d: File): Array[File] =
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-    def parquetFiles(d: File): Array[File] = {
-      val kids = visible(d)
-      kids.filter(f => f.isFile && f.getName.endsWith(".parquet")) ++
-        kids.filter(_.isDirectory).flatMap(parquetFiles)
-    }
-    def deleteRecursively(f: File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-      f.delete()
-    }
-    val dir = new File(path)
-    require(dir.isDirectory, s"compact: not a table directory: $path")
-    // a manifest-managed store references its data files BY NAME in
-    // committed generations; rewriting them in place severs every
-    // manifest (readers hit PATH_NOT_FOUND) — that maintenance pass is
-    // Manifest.compactSub, which appends the rewrite and swaps the
-    // file list in a new commit instead
-    // walk EVERY ancestor: a nested sub-path (codes/cell=3, ...) of a
-    // managed store must be refused too, not just the store root's
-    // immediate children
-    val managedAncestor = Iterator.iterate(Option(dir))(_.flatMap(d =>
-        Option(d.getParentFile)))
-      .takeWhile(_.isDefined).flatten
-      .exists(d => new File(d, "_meta").exists())
-    require(!managedAncestor,
-      s"compact: $path belongs to a manifest-managed store (_meta " +
-        "present on an ancestor); use graft.util.Manifest.compactSub, " +
-        "which compacts through a generation commit instead of " +
-        "rewriting referenced files in place")
-    require(!new File(dir, "_spark_metadata").exists(),
-      s"compact: $path is a streaming file-sink table (_spark_metadata " +
-        "present); compacting it would drop the sink manifest and a " +
-        "resumed stream would make every compacted row invisible to " +
-        "readers. Stop the stream for good and rewrite to a NEW path " +
-        "instead.")
-    // partition columns: walk the first chain of k=v subdirectories
-    // (Hive layout nests one level per partition column)
-    val partCols = Iterator.iterate(Option(dir)) {
-      _.flatMap(d => visible(d).find(f => f.isDirectory && f.getName.contains("=")))
-    }.drop(1).takeWhile(_.isDefined).flatten
-      .map(_.getName.split("=", 2)(0)).toSeq
-    val before = parquetFiles(dir)
-    val totalMB = math.max(before.map(_.length()).sum / (1024.0 * 1024.0), 0.001)
-    val nFiles = math.max(1, math.ceil(totalMB / targetFileMB).toInt)
-    val tmp = new File(dir.getParentFile, dir.getName + ".compact-tmp")
-    val df = spark.read.parquet(path)
-    val w = shape(df, nFiles, partCols).write.mode(SaveMode.Overwrite)
-    (if (partCols.isEmpty) w else w.partitionBy(partCols: _*))
-      .parquet(tmp.getAbsolutePath)
-    val bak = new File(dir.getParentFile, dir.getName + ".compact-old")
-    Files.move(Paths.get(path), bak.toPath, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp.toPath, Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(bak)
-    (before.length, parquetFiles(new File(path)).length)
-  }
-
-  // ── file-level stats index (data skipping) ────────────────────────
-  //
-  // Delta/Iceberg keep per-file column min/max in their transaction
-  // log and prune FILES from a scan before any footer is opened —
-  // "data skipping". Plain parquet only prunes ROW GROUPS, and only
-  // after paying an open+footer-read per file; at 100 TB with
-  // millions of files the opens dominate a selective query. This is
-  // the same observation behind Z-ordering ([[compactClustered]]):
-  // clustering makes per-file ranges NARROW, the stats index is what
-  // lets the planner USE those ranges without touching the files.
-  //
-  // The manifest is one tiny parquet table under `path/_filestats`
-  // (underscore → invisible to Spark's file index on the data dir):
-  // one row per data file with min/max per indexed column. One scan
-  // builds it (a groupBy on `_metadata.file_path` — Spark's file
-  // source exposes provenance without any UDF), and the skipping
-  // reader collects only the manifest (bounded by FILE COUNT, the
-  // same cardinality every Delta reader holds) to compute the
-  // surviving file list.
-
-  private def statsPath(path: String) = s"$path/_filestats"
-
-  /** Build (or rebuild) the per-file min/max manifest for `statsCols`
-    * over the parquet table at `path`. One distributed scan; the
-    * manifest is ~one row per data file. Returns the file count.
-    *
-    * Staleness contract: the manifest describes the files present at
-    * build time. [[readSkipping]] re-checks the live listing and
-    * REFUSES (throws) if data files exist that the manifest does not
-    * cover — an append without a rebuild fails loudly instead of
-    * silently dropping rows. (Delta avoids the race by committing
-    * stats and files in one log entry; on plain parquet rebuild-after-
-    * append is the contract, and the guard is what makes forgetting it
-    * an error rather than wrong answers.)
-    */
-  def buildFileStats(spark: SparkSession, path: String,
-                     statsCols: Seq[String]): Long = {
-    require(statsCols.nonEmpty, "buildFileStats: no stats columns")
-    val df = spark.read.parquet(path)
-    val aggs = statsCols.flatMap { c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))
-    }
-    val stats = df
-      .groupBy(col("_metadata.file_path").as("file_path"))
-      .agg(aggs.head, aggs.tail: _*)
-    stats.coalesce(1).write.mode(SaveMode.Overwrite).parquet(statsPath(path))
-    spark.read.parquet(statsPath(path)).count()
-  }
-
-  /** Read `path` restricted to `lo <= predCol <= hi`, pruning whole
-    * FILES via the [[buildFileStats]] manifest before the scan: a file
-    * whose `[min, max]` range misses `[lo, hi]` is never opened. The
-    * residual predicate is still applied row-level (file ranges
-    * overlap the bounds, they don't prove membership). Files whose
-    * min/max are NULL (every row's `predCol` is NULL) are pruned —
-    * range predicates never match NULL.
-    *
-    * Throws if the manifest is missing or stale (live data files not
-    * covered by the manifest — see the staleness contract above).
-    *
-    * Scope: flat table layouts (the [[compactClustered]] target).
-    * Hive-partitioned layouts skip at the directory level through
-    * `PartitionFilters` already; per-file skipping composes with that
-    * by running this reader per partition directory.
-    */
-  def readSkipping(spark: SparkSession, path: String, predCol: String,
-                   lo: Column, hi: Column): DataFrame =
-    readPruned(spark, path,
-      keep = !(col(s"max_$predCol") < lo || col(s"min_$predCol") > hi),
-      pred = col(predCol) >= lo && col(predCol) <= hi)
-
-  /** [[readSkipping]] for a VALUE SET: keep files whose `[min, max]`
-    * range covers at least one probed value — the posting-list /
-    * point-lookup shape (`predCol IN (...)`). With values range-laid-
-    * out ([[compactClustered]] or a range-partitioned write), the
-    * surviving files track the probe's selectivity, not the table.
-    */
-  def readSkippingIn(spark: SparkSession, path: String, predCol: String,
-                     values: Seq[Any]): DataFrame = {
-    require(values.nonEmpty, "readSkippingIn: no probe values")
-    val vs = values.distinct
-    readPruned(spark, path,
-      keep = vs.map(v =>
-        col(s"min_$predCol") <= lit(v) && lit(v) <= col(s"max_$predCol"))
-        .reduce(_ || _),
-      pred = col(predCol).isin(vs: _*))
-  }
-
-  /** Shared skipping core: evaluate `keep` over the manifest, verify
-    * coverage of the live listing (staleness guard), scan only
-    * surviving files, apply the residual row predicate. Driver state
-    * is one (path, boolean) per data file — the same cardinality any
-    * parquet scan's file index already holds for the listing.
-    */
-  private def readPruned(spark: SparkSession, path: String,
-                         keep: Column, pred: Column): DataFrame = {
-    val sp = new org.apache.hadoop.fs.Path(statsPath(path))
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(sp),
-      s"readSkipping: no _filestats manifest at $path; run buildFileStats first")
-    val files = spark.read.parquet(statsPath(path))
-      .select(col("file_path"), keep.as("keep"))
-      .collect().map(r => (r.getString(0), !r.isNullAt(1) && r.getBoolean(1)))
-    val covered = files.map(_._1.replaceFirst("^file:", "")).toSet
-    val live = listDataFiles(new java.io.File(path))
-    val stale = live.filterNot(f => covered.contains(f.getAbsolutePath))
-    require(stale.isEmpty,
-      s"readSkipping: manifest at $path is STALE — ${stale.length} data " +
-        s"file(s) not covered (e.g. ${stale.head.getName}); rebuild with " +
-        "buildFileStats after appends")
-    val keepFiles = files.collect { case (f, true) => f }
-    if (keepFiles.isEmpty)
-      spark.read.parquet(path).filter(pred).filter(lit(false))
-    else
-      spark.read.parquet(keepFiles: _*).filter(pred)
-  }
-
-  /** Visible `.parquet` files under `dir`, recursively (shared with
-    * the compaction file census; dot/underscore names are metadata).
-    */
-  private def listDataFiles(dir: java.io.File): Array[java.io.File] = {
-    val kids = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-    kids.filter(f => f.isFile && f.getName.endsWith(".parquet")) ++
-      kids.filter(_.isDirectory).flatMap(listDataFiles)
-  }
-
   /** Persist `df` hash-bucketed (and sorted) by `keyCols` into the
     * session catalog as `tableName`. Joins and aggregations between
     * tables bucketed the same way on the same keys run without an
@@ -390,9 +92,9 @@ object Lake {
   // atomic [[Manifest]] generation (snapshot isolation + time travel
   // included). Matched-file discovery is two-stage, exactly the
   // data-skipping shape a 100 TB merge needs:
-  //  1. per-file key min/max stats (committed WITH the data in the
-  //     same generation — no stale-stats window) prune to candidate
-  //     files whose range overlaps the updates' key range;
+  //  1. per-file min/max stats (committed WITH the data in the same
+  //     generation — no stale-stats window) prune to candidate files
+  //     whose key range overlaps the updates' key range;
   //  2. an exact key semi-join, column-pruned to the key columns,
   //     over ONLY the candidate files yields the touched set.
   // A merge whose updates land in a narrow key range therefore scans
@@ -414,33 +116,76 @@ object Lake {
                          filesLive: Int, deleted: Long = 0L,
                          applied: Boolean)
 
-  /** Per-file key min/max stats for EXACTLY `names` (data-sub file
-    * names): the explicit list left-joins the aggregated mins/maxes,
-    * so a ZERO-ROW file (an empty write partition — skewed
-    * repartitions produce them) still gets a covering row with null
-    * stats. Null stats are correct: the overlap predicate evaluates
-    * null → the file is never a candidate (no key can match), yet the
-    * coverage guard holds.
-    */
-  /** `dataDir` overrides where the named files are READ from (the
+  /** Per-file min/max stats (`min_c`, `max_c`) for EXACTLY `names`
+    * (data-sub file names), on every top-level column of an atomic
+    * type — numeric, decimal, string, boolean, date, timestamp;
+    * Delta's default data-skipping rule. Nested, array, map and UDT
+    * columns get none. The explicit name list left-joins the
+    * aggregated mins/maxes, so a ZERO-ROW file (an empty write
+    * partition — skewed repartitions produce them) still gets a
+    * covering row with null stats. Null stats are correct: a range
+    * test evaluates null → the file is never a candidate (no row can
+    * match), yet the coverage guard holds.
+    *
+    * `dataDir` overrides where the named files are READ from (the
     * transaction-staging dir during a rewrite — file NAMES are stable
     * across the staging move, so stats computed pre-publish stay
     * valid); default is the table's live data sub.
     */
   private[graft] def mergeStatsFor(spark: SparkSession, path: String,
-                            names: Set[String], keys: Seq[String],
-                            dataDir: Option[String] = None): DataFrame = {
+                                   names: Set[String],
+                                   dataDir: Option[String] = None): DataFrame = {
     import spark.implicits._
     val dir = dataDir.getOrElse(s"$path/$MergeDataSub")
-    val aggs = keys.flatMap { k =>
-      Seq(min(col(k)).as(s"min_$k"), max(col(k)).as(s"max_$k"))
-    }
-    val agg = spark.read.option("basePath", dir)
+    val files = spark.read.option("basePath", dir)
       .parquet(names.toSeq.map(n => s"$dir/$n"): _*)
-      .groupBy(col("_metadata.file_name").as("file_name"))
+    val aggs = statsColumns(files.schema).flatMap { c =>
+      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))
+    }
+    val agg = files.groupBy(col("_metadata.file_name").as("file_name"))
       .agg(aggs.head, aggs.tail: _*)
     names.toSeq.toDF("file_name").join(agg, Seq("file_name"), "left")
   }
+
+  /** The top-level columns that carry per-file stats (see
+    * [[mergeStatsFor]]).
+    */
+  private def statsColumns(schema: StructType): Seq[String] =
+    schema.fields.toSeq.filter(_.dataType match {
+      case _: NumericType | _: StringType | BooleanType | DateType |
+           TimestampType | TimestampNTZType => true
+      case _ => false
+    }).map(_.name)
+
+  /** Stage the stats file of the generation being written under
+    * `stage`: the committed stats rows of every live data file the
+    * commit keeps (all but `dropped`) plus fresh stats over the files
+    * just staged under `stage`. Kept rows that predate an additive
+    * evolution lack the new columns' stats and carry NULL there; no
+    * range test passes NULL, which matches the NULLs those rows read
+    * as. Returns the number of staged data files.
+    */
+  private def stageStats(spark: SparkSession, path: String, stage: String,
+                         dropped: Set[String]): Int = {
+    val fresh = fileNamesIn(spark, s"$stage/$MergeDataSub")
+    val kept = Manifest.read(spark, path, MergeStatsSub)
+      .filter(!col("file_name").isin(dropped.toSeq: _*))
+    val all =
+      if (fresh.isEmpty) kept
+      else kept.unionByName(mergeStatsFor(spark, path, fresh,
+        dataDir = Some(s"$stage/$MergeDataSub")), allowMissingColumns = true)
+    all.coalesce(1).write.mode(SaveMode.Append).parquet(s"$stage/$MergeStatsSub")
+    fresh.size
+  }
+
+  /** The named live data files (`data/...` relative paths), footers
+    * merged: a file set may straddle an additive evolution.
+    */
+  private def readData(spark: SparkSession, path: String,
+                       rel: Seq[String]): DataFrame =
+    spark.read.option("basePath", s"$path/$MergeDataSub")
+      .option("mergeSchema", "true")
+      .parquet(rel.map(f => s"$path/$f"): _*)
 
   private[graft] def dataFileNames(spark: SparkSession, path: String): Set[String] =
     fileNamesIn(spark, s"$path/$MergeDataSub")
@@ -455,20 +200,22 @@ object Lake {
   }
 
   /** Create the merge-managed table at `path` from `df` (generation 0:
-    * data + its per-file key stats in one commit). `df` should be
+    * data + its per-file stats in one commit). `df` should be
     * key-unique on `keys` — merges preserve that invariant, they don't
-    * create it. `shardId` lands in generation 0's ledger, so a
-    * replayed build (e.g. a streaming sink's batch 0 re-run after the
-    * table already exists) can prove itself already-applied instead of
-    * re-clearing the table.
+    * create it. Keys must be top-level atomic columns: merge pruning
+    * reads their per-file stats. `shardId` lands in generation 0's
+    * ledger, so a replayed build (e.g. a streaming sink's batch 0
+    * re-run after the table already exists) can prove itself
+    * already-applied instead of re-clearing the table.
     */
   def mergeInit(spark: SparkSession, path: String, df: DataFrame,
                 keys: Seq[String], shardId: Option[String] = None): Unit = {
-    require(keys.nonEmpty && keys.forall(df.columns.contains),
-      s"mergeInit: keys ${keys.mkString(",")} must exist in the frame")
+    require(keys.nonEmpty && keys.forall(statsColumns(df.schema).contains),
+      s"mergeInit: keys ${keys.mkString(",")} must be top-level columns " +
+        "of an atomic type in the frame")
     Manifest.init(spark, path, shardId.toSet) {
       df.write.mode(SaveMode.Overwrite).parquet(s"$path/$MergeDataSub")
-      mergeStatsFor(spark, path, dataFileNames(spark, path), keys)
+      mergeStatsFor(spark, path, dataFileNames(spark, path))
         .coalesce(1).write.mode(SaveMode.Append)
         .parquet(s"$path/$MergeStatsSub")
     }
@@ -620,15 +367,10 @@ object Lake {
       .collect().map(_.getString(0)).toSet
     val candRel = liveData.filter(f => candNames.contains(f.split('/').last))
     // stage 2: exact touch test, column-pruned to the keys, candidate
-    // files only (mergeSchema: touched files may straddle an additive
-    // evolution)
-    def readFiles(rel: Seq[String]): DataFrame =
-      spark.read.option("basePath", s"$path/$MergeDataSub")
-        .option("mergeSchema", "true")
-        .parquet(rel.map(f => s"$path/$f"): _*)
+    // files only
     val touchedNames: Set[String] =
       if (candRel.isEmpty) Set.empty
-      else readFiles(candRel)
+      else readData(spark, path, candRel)
         .select(col("_metadata.file_name").as("__file") +: keys.map(col): _*)
         .join(allKeys, keys, "left_semi")
         .select("__file").distinct()
@@ -640,7 +382,8 @@ object Lake {
       drop = (touchedRel ++ liveStats).toSet, shardId, retain,
       baseGen = Some(snap.gen)) { stage =>
       val touchedRows =
-        if (touchedRel.isEmpty) target.filter(lit(false)) else readFiles(touchedRel)
+        if (touchedRel.isEmpty) target.filter(lit(false))
+        else readData(spark, path, touchedRel)
       matched = touchedRows.join(updKeys, keys, "left_semi").count()
       deleted = delKeysOpt.fold(0L)(d =>
         touchedRows.join(d, keys, "left_semi").count())
@@ -651,18 +394,7 @@ object Lake {
       survivors.unionByName(updates.select(outCols.map(col): _*),
           allowMissingColumns = evolve)
         .write.mode(SaveMode.Append).parquet(s"$stage/$MergeDataSub")
-      // stats for the NEW generation, committed with it: carried-over
-      // rows for untouched files + a fresh pass over just-written ones
-      // (read from the staging dir — file names survive the publish)
-      val freshNames = fileNamesIn(spark, s"$stage/$MergeDataSub")
-      val keptStats = Manifest.read(spark, path, MergeStatsSub)
-        .filter(!col("file_name").isin(touchedNames.toSeq: _*))
-      val freshStats =
-        if (freshNames.isEmpty) keptStats.filter(lit(false))
-        else mergeStatsFor(spark, path, freshNames, keys,
-          dataDir = Some(s"$stage/$MergeDataSub"))
-      keptStats.unionByName(freshStats).coalesce(1)
-        .write.mode(SaveMode.Append).parquet(s"$stage/$MergeStatsSub")
+      stageStats(spark, path, stage, touchedNames)
     }
     MergeResult(matched, nUpd - matched, touchedRel.length,
       candRel.length, liveData.length, deleted, applied = true)
@@ -691,16 +423,23 @@ object Lake {
   }
 
   /** `OPTIMIZE [ZORDER BY]` for a merge-managed table: rewrite the
-    * data sub as ~`targetFileMB` files — range-clustered by
-    * `clusterBy` when given, so each file owns a narrow key band and
-    * [[mergeReadRange]]/[[merge]] stage-1 pruning gets sharper — and
-    * regenerate the per-file stats in the SAME commit (raw
-    * [[Manifest.compactSub]] would orphan them; [[statsCovering]]
-    * refuses such a table). Old files stay until their last
-    * referencing manifest retires, so time travel and in-flight
-    * readers survive. Returns (filesBefore, filesAfter).
+    * data sub as ~`targetFileMB` files and regenerate the per-file
+    * stats in the SAME commit (raw [[Manifest.compactSub]] would orphan
+    * them; [[statsCovering]] refuses such a table). `clusterBy` lays
+    * the rows out so each file owns a narrow band, which sharpens
+    * [[mergeReadRange]] and [[merge]] stage-1 pruning:
+    *  - one column: range-partitioned by it;
+    *  - two or more (numeric) columns: range-partitioned and sorted by
+    *    their Z-order (Morton) key ([[zValue]]), so every file covers
+    *    a small hyper-rectangle and its min/max are NARROW on all the
+    *    columns at once — what a sort on the first column alone cannot
+    *    give the others. (A one-column Morton key is that column's
+    *    quantile order, hence the plain range partitioning.)
+    * Old files stay until their last referencing manifest retires, so
+    * time travel and in-flight readers survive. Returns
+    * (filesBefore, filesAfter).
     */
-  def mergeCompact(spark: SparkSession, path: String, keys: Seq[String],
+  def mergeCompact(spark: SparkSession, path: String,
                    targetFileMB: Int = 128,
                    clusterBy: Seq[String] = Seq.empty,
                    retain: Int = 3): (Int, Int) = {
@@ -715,21 +454,54 @@ object Lake {
       .sum / (1024.0 * 1024.0), 0.001)
     val nFiles = math.max(1, math.ceil(totalMB / targetFileMB).toInt)
     val df = mergeRead(spark, path)
-    val shaped =
-      if (clusterBy.isEmpty) df.repartition(nFiles)
-      else df.repartitionByRange(nFiles, clusterBy.map(col): _*)
+    val shaped = clusterBy match {
+      case Seq() => df.repartition(nFiles)
+      case Seq(c) => df.repartitionByRange(nFiles, col(c))
+      case cs =>
+        val z = zValue(df, cs)
+        df.repartitionByRange(nFiles, z).sortWithinPartitions(z)
+    }
     var after = 0
     Manifest.rewriteFiles(spark, path,
       drop = (liveData ++ liveStats).toSet, retain = retain,
       baseGen = Some(snap.gen)) { stage =>
       shaped.write.mode(SaveMode.Append).parquet(s"$stage/$MergeDataSub")
-      val freshNames = fileNamesIn(spark, s"$stage/$MergeDataSub")
-      after = freshNames.size
-      mergeStatsFor(spark, path, freshNames, keys,
-          dataDir = Some(s"$stage/$MergeDataSub"))
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$stage/$MergeStatsSub")
+      after = stageStats(spark, path, stage,
+        dropped = liveData.map(_.split('/').last).toSet)
     }
     (liveData.length, after)
+  }
+
+  /** The Z-order (Morton) key of `cols` as one codegen'd column: per
+    * column, `size(filter(boundaries, b -> b <= x))` ranks `x` into one
+    * of 2^8 quantile buckets (boundaries are an array LITERAL — one
+    * approx-quantile sketch pass over all columns is the only
+    * driver-side data); the bucket bits then interleave, column `j`
+    * owning bit positions `i*n + j`. Quantile buckets (not min/max
+    * scaling) keep the curve balanced under skew. NULLs rank into
+    * bucket 0 (they sort first, as in an ORDER BY).
+    */
+  private def zValue(df: DataFrame, cols: Seq[String]): Column = {
+    val zBits = 8
+    val n = cols.length
+    // the interleaved key must fit a signed long (a shift past bit 62
+    // would alias mod 64 and scramble the curve)
+    require(zBits * n <= 62,
+      s"mergeCompact: a Z-order over $n columns needs ${zBits * n} bits; " +
+        "at most 7 cluster columns fit a long")
+    val nBuckets = 1 << zBits
+    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
+    val allBounds = df.stat.approxQuantile(cols.toArray, probs, 0.001)
+    val buckets = cols.zip(allBounds).map { case (c, bs) =>
+      val arr = array(bs.distinct.sorted.map(lit): _*)
+      when(col(c).isNull, lit(0L))
+        .otherwise(size(filter(arr, b => b <= col(c).cast("double"))).cast("long"))
+    }
+    val terms = for {
+      i <- 0 until zBits
+      (b, j) <- buckets.zipWithIndex
+    } yield shiftleft(shiftright(b, i).bitwiseAND(1L), i * n + j)
+    terms.reduce(_.bitwiseOR(_)).as("__zorder")
   }
 
   // ── CHECK constraints: Delta's `ALTER TABLE ADD CONSTRAINT` ──────
@@ -934,8 +706,7 @@ object Lake {
       .count(_.startsWith(s"$MergeDataSub/"))
     if (live <= maxFiles) false
     else {
-      mergeCompact(spark, path, keys, targetFileMB, clusterBy = keys,
-        retain = retain)
+      mergeCompact(spark, path, targetFileMB, clusterBy = keys, retain = retain)
       true
     }
   }
@@ -990,29 +761,31 @@ object Lake {
       compact = mergeAutoCompact(_, path, keys, _))
   }
 
-  /** [[mergeRead]] restricted to `lo <= keyCol <= hi`, pruning whole
+  /** [[mergeRead]] restricted to `lo <= column <= hi`, pruning whole
     * files through the stats committed WITH the generation — Delta
     * data skipping on the READ path, with no stale-stats window by
-    * construction (unlike [[readSkipping]]'s rebuild-after-append
-    * contract, the manifest commit is the rebuild). Files whose
-    * `[min, max]` range misses the bounds are never opened; the
+    * construction (the manifest commit is the stats rebuild). Any
+    * top-level atomic column works, not just the merge keys. Files
+    * whose `[min, max]` range misses the bounds are never opened, nor
+    * are files whose `column` is all NULL (their stats are NULL); the
     * residual predicate still applies row-level.
     */
-  def mergeReadRange(spark: SparkSession, path: String, keyCol: String,
+  def mergeReadRange(spark: SparkSession, path: String, column: String,
                      lo: Column, hi: Column,
                      asOf: Option[Int] = None): DataFrame = {
     val snap = Manifest.snapshot(spark, path, asOf)
     val liveData = snap.files.filter(_.startsWith(s"$MergeDataSub/"))
-    val keep = !(col(s"max_$keyCol") < lo || col(s"min_$keyCol") > hi)
-    val candNames = statsCovering(spark, path, liveData, asOf)
-      .filter(keep).select("file_name")
+    val stats = statsCovering(spark, path, liveData, asOf)
+    require(stats.columns.contains(s"min_$column"),
+      s"mergeReadRange: no per-file stats on $column at $path (stats " +
+        "cover top-level columns of an atomic type)")
+    val keep = !(col(s"max_$column") < lo || col(s"min_$column") > hi)
+    val candNames = stats.filter(keep).select("file_name")
       .collect().map(_.getString(0)).toSet
     val cand = liveData.filter(f => candNames.contains(f.split('/').last))
-    val pred = col(keyCol) >= lo && col(keyCol) <= hi
+    val pred = col(column) >= lo && col(column) <= hi
     if (cand.isEmpty) mergeRead(spark, path, asOf).filter(pred).filter(lit(false))
-    else spark.read.option("basePath", s"$path/$MergeDataSub")
-      .option("mergeSchema", "true")
-      .parquet(cand.map(f => s"$path/$f"): _*).filter(pred)
+    else readData(spark, path, cand).filter(pred)
   }
 
   /** Change data feed between two generations of a merge-managed
@@ -1094,15 +867,13 @@ object Lake {
                        applied: Boolean)
 
   /** Delete every row matching `predicate` from the merge-managed
-    * table at `path` (Delta `DELETE FROM ... WHERE`). `keys` are the
-    * table's stats columns (as at [[mergeInit]]) so the rewritten
-    * files' stats regenerate consistently.
+    * table at `path` (Delta `DELETE FROM ... WHERE`).
     */
   def deleteWhere(spark: SparkSession, path: String, predicate: Column,
-                  keys: Seq[String], shardId: Option[String] = None,
+                  shardId: Option[String] = None,
                   retain: Int = 3): DmlResult =
     // enforce = false: removing rows cannot violate a row-level CHECK
-    dmlRewrite(spark, path, predicate, keys, shardId, retain,
+    dmlRewrite(spark, path, predicate, shardId, retain,
       enforce = false)(
       touched => touched.filter(!coalesce(predicate, lit(false))))
 
@@ -1111,7 +882,7 @@ object Lake {
     * are rewritten byte-identical, untouched files not at all.
     */
   def updateWhere(spark: SparkSession, path: String, predicate: Column,
-                  set: Map[String, Column], keys: Seq[String],
+                  set: Map[String, Column],
                   shardId: Option[String] = None,
                   retain: Int = 3): DmlResult = {
     // type-check every SET expression against the target schema BEFORE
@@ -1132,7 +903,7 @@ object Lake {
           "type-drifted rewrite would poison later multi-file reads)")
     }
     val cond = coalesce(predicate, lit(false))
-    dmlRewrite(spark, path, predicate, keys, shardId, retain,
+    dmlRewrite(spark, path, predicate, shardId, retain,
       enforce = true)(touched =>
       touched.select(touched.columns.map { c =>
         set.get(c).map(v => when(cond, v).otherwise(col(c)).as(c))
@@ -1144,7 +915,7 @@ object Lake {
     * rows to their rewritten form.
     */
   private def dmlRewrite(spark: SparkSession, path: String,
-                         predicate: Column, keys: Seq[String],
+                         predicate: Column,
                          shardId: Option[String], retain: Int,
                          enforce: Boolean = false)
                         (transform: DataFrame => DataFrame): DmlResult = {
@@ -1154,15 +925,11 @@ object Lake {
         snap.files.count(_.startsWith(s"$MergeDataSub/")), applied = false)
     val liveData = snap.files.filter(_.startsWith(s"$MergeDataSub/"))
     val liveStats = snap.files.filter(_.startsWith(s"$MergeStatsSub/"))
-    def readFiles(rel: Seq[String]): DataFrame =
-      spark.read.option("basePath", s"$path/$MergeDataSub")
-        .option("mergeSchema", "true")
-        .parquet(rel.map(f => s"$path/$f"): _*)
     // touched files: any predicate-matching row (scan reads only the
     // predicate's columns + the file name)
     val touchedNames: Set[String] =
       if (liveData.isEmpty) Set.empty
-      else readFiles(liveData).filter(predicate)
+      else readData(spark, path, liveData).filter(predicate)
         .select(col("_metadata.file_name").as("__file")).distinct()
         .collect().map(_.getString(0)).toSet
     val touchedRel = liveData.filter(f => touchedNames.contains(f.split('/').last))
@@ -1172,22 +939,15 @@ object Lake {
       baseGen = Some(snap.gen)) { stage =>
       val target = mergeRead(spark, path)
       val touchedRows =
-        if (touchedRel.isEmpty) target.filter(lit(false)) else readFiles(touchedRel)
+        if (touchedRel.isEmpty) target.filter(lit(false))
+        else readData(spark, path, touchedRel)
       affected = touchedRows.filter(predicate).count()
       val out = transform(touchedRows.select(target.columns.map(col): _*))
       // CHECK constraints gate the SET results pre-commit: throwing
       // here aborts before any staged file publishes
       if (enforce) enforceConstraints(spark, path, out, "updateWhere")
       out.write.mode(SaveMode.Append).parquet(s"$stage/$MergeDataSub")
-      val freshNames = fileNamesIn(spark, s"$stage/$MergeDataSub")
-      val keptStats = Manifest.read(spark, path, MergeStatsSub)
-        .filter(!col("file_name").isin(touchedNames.toSeq: _*))
-      val freshStats =
-        if (freshNames.isEmpty) keptStats.filter(lit(false))
-        else mergeStatsFor(spark, path, freshNames, keys,
-          dataDir = Some(s"$stage/$MergeDataSub"))
-      keptStats.unionByName(freshStats).coalesce(1)
-        .write.mode(SaveMode.Append).parquet(s"$stage/$MergeStatsSub")
+      stageStats(spark, path, stage, touchedNames)
     }
     DmlResult(affected, touchedRel.length, liveData.length, applied = true)
   }

@@ -758,10 +758,10 @@ object Manifest {
   }
 
   /** Small-files maintenance for a manifest-managed store — Delta's
-    * `OPTIMIZE` against this protocol, replacing [[Lake.compact]]
-    * (which rewrites files in place and would sever every manifest
-    * that references them; it REFUSES manifest-managed dirs for that
-    * reason). The live rows under `path/sub` are read generation-
+    * `OPTIMIZE` against this protocol (an in-place rewrite would sever
+    * every manifest that references the old files; the merge table's
+    * stats-aware form is [[Lake.mergeCompact]]). The live rows under
+    * `path/sub` are read generation-
     * pinned, rewritten as ~`targetFileMB` files APPENDED next to the
     * old ones (parquet part names are unique — no collision), and the
     * commit swaps the sub's file list to the fresh set. Old files stay

@@ -66,7 +66,7 @@ class SparkEntrySpec extends AnyFunSuite with Matchers {
       val calls = (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[Int] {
         def call(): Int = {
           start.await()
-          SparkEntry.memo("spec-memo#concurrent") {
+          graft.util.Scratch.memo("spec-memo#concurrent") {
             Thread.sleep(100)
             builds.incrementAndGet()
           }
@@ -83,29 +83,29 @@ class SparkEntrySpec extends AnyFunSuite with Matchers {
     // run inside ConcurrentHashMap.computeIfAbsent throws
     // IllegalStateException("Recursive update") once a nested key lands
     // in the outer key's bin or grows the table, so nest many keys
-    val outer = SparkEntry.memo("spec-memo#outer") {
-      (0 until 512).map(i => SparkEntry.memo(s"spec-memo#inner-$i")(i)).sum
+    val outer = graft.util.Scratch.memo("spec-memo#outer") {
+      (0 until 512).map(i => graft.util.Scratch.memo(s"spec-memo#inner-$i")(i)).sum
     }
     outer shouldBe (0 until 512).sum
-    SparkEntry.memo[Int]("spec-memo#inner-7")(fail("inner rebuilt")) shouldBe 7
+    graft.util.Scratch.memo[Int]("spec-memo#inner-7")(fail("inner rebuilt")) shouldBe 7
   }
 
   test("memo: a throwing build is not cached; the next call rebuilds") {
     val builds = new java.util.concurrent.atomic.AtomicInteger()
     an[IllegalStateException] should be thrownBy
-      SparkEntry.memo[Int]("spec-memo#throws") {
+      graft.util.Scratch.memo[Int]("spec-memo#throws") {
         builds.incrementAndGet()
         throw new IllegalStateException("build failed")
       }
-    SparkEntry.memo("spec-memo#throws") { builds.incrementAndGet(); 7 } shouldBe 7
-    SparkEntry.memo[Int]("spec-memo#throws")(fail("rebuilt after success")) shouldBe 7
+    graft.util.Scratch.memo("spec-memo#throws") { builds.incrementAndGet(); 7 } shouldBe 7
+    graft.util.Scratch.memo[Int]("spec-memo#throws")(fail("rebuilt after success")) shouldBe 7
     builds.get shouldBe 2
   }
 
   test("memo: distinct keys build separately") {
-    SparkEntry.memo("spec-memo#a")("a") shouldBe "a"
-    SparkEntry.memo("spec-memo#b")("b") shouldBe "b"
-    SparkEntry.memo("spec-memo#a")("b") shouldBe "a"
+    graft.util.Scratch.memo("spec-memo#a")("a") shouldBe "a"
+    graft.util.Scratch.memo("spec-memo#b")("b") shouldBe "b"
+    graft.util.Scratch.memo("spec-memo#a")("b") shouldBe "a"
   }
 
   test("fixture: builds once per (name, dir) into a fresh scratch dir") {

@@ -99,11 +99,7 @@ class QuantilesSpec extends SparkSuite with Matchers {
     def liveFiles() = graft.util.Manifest.snapshot(spark, store)
       .files.count(_.startsWith("summary/"))
     liveFiles() should be >= 3 // one file per shard accretes
-    // daily-cadence maintenance: the manifest-aware compaction (the
-    // in-place Lake.compact now REFUSES manifest-managed stores)
-    intercept[IllegalArgumentException] {
-      graft.util.Lake.compact(spark, s"$store/summary", targetFileMB = 128)
-    }
+    // daily-cadence maintenance: the manifest-aware compaction
     graft.util.Manifest.compactSub(spark, store, "summary", targetFileMB = 128)
     liveFiles() shouldBe 1
     served() shouldBe before

@@ -53,17 +53,4 @@ class WidthSpec extends SparkSuite with Matchers {
       BigInt(Long.MaxValue)
     Width.partsFor(opaque) shouldBe conf
   }
-
-  test("GRAFT_WIDTH_TARGET parse: malformed or non-positive values " +
-      "fall back to the call-site target") {
-    Width.effectiveTarget(None, 42L) shouldBe 42L
-    Width.effectiveTarget(Some("1024"), 42L) shouldBe 1024L
-    Width.effectiveTarget(Some(" 7 "), 42L) shouldBe 7L
-    // malformed: must not throw, must not narrow
-    Width.effectiveTarget(Some("256k"), 42L) shouldBe 42L
-    Width.effectiveTarget(Some(""), 42L) shouldBe 42L
-    // zero/negative are rejected, not clamped to 1
-    Width.effectiveTarget(Some("0"), 42L) shouldBe 42L
-    Width.effectiveTarget(Some("-8"), 42L) shouldBe 42L
-  }
 }

@@ -51,216 +51,110 @@ class LakeSpec extends SparkSuite with Matchers {
       .as[Double].collect() shouldBe Array(40.0)
   }
 
-  test("compact merges a many-small-files table, preserving rows and schema") {
-    val path = Files.createTempDirectory("lake-compact-").toFile.getAbsolutePath + "/t"
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    // simulate the streaming-append small-files problem
-    ev.repartition(37).write.parquet(path)
-    val rowsBefore = spark.read.parquet(path).count()
+  // ── layout on the merge table: Z-order and file skipping ─────────
 
-    val (before, after) = Lake.compact(spark, path, targetFileMB = 128)
-    before shouldBe 37
-    after should be < 5
-    val compacted = spark.read.parquet(path)
-    compacted.count() shouldBe rowsBefore
-    compacted.columns.sorted shouldBe ev.columns.sorted
-    // content identical, not just counts
-    compacted.exceptAll(ev).count() shouldBe 0
+  /** A merge table keyed by `df`'s unique `id`, written as `files`
+    * unclustered files.
+    */
+  private def layoutTable(df: org.apache.spark.sql.DataFrame, files: Int): String = {
+    val path = Files.createTempDirectory("lake-layout-").toFile.getAbsolutePath
+    Lake.mergeInit(spark, path, df.repartition(files), Seq("id"))
+    path
   }
 
-  test("compact refuses a streaming-sink dir and leaves every row readable") {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamJobs
-    val root = Files.createTempDirectory("lake-sink-").toFile.getAbsolutePath
-    val inDir = Files.createTempDirectory("lake-sink-in-").toFile.getAbsolutePath
-    // many tiny appends -> a real file-sink dir with _spark_metadata
-    (1 to 3).foreach { i =>
-      Seq(s"a$i", s"b$i").toDF("v").coalesce(1).write.mode("append").json(inDir)
-      val q = StreamJobs.parquetAppend(
-        StreamJobs.jsonLinesStream(spark, inDir,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("v",
-              org.apache.spark.sql.types.StringType)))),
-        s"$root/out", s"$root/ckpt", Trigger.AvailableNow())
-      q.awaitTermination()
-    }
-    spark.read.parquet(s"$root/out").count() shouldBe 6
-    // compacting would drop the sink manifest -> silent data loss on
-    // stream resume; the call must refuse and touch nothing
-    val ex = intercept[IllegalArgumentException] {
-      Lake.compact(spark, s"$root/out")
-    }
-    ex.getMessage should include("_spark_metadata")
-    new java.io.File(s"$root/out/_spark_metadata").exists() shouldBe true
-    spark.read.parquet(s"$root/out").count() shouldBe 6
-    // no half-finished rewrite artifacts either
-    new java.io.File(s"$root/out.compact-tmp").exists() shouldBe false
-    new java.io.File(s"$root/out.compact-old").exists() shouldBe false
-  }
+  /** The head generation's committed per-file stats. */
+  private def fileStats(path: String) = Manifest.read(spark, path, "stats")
 
-  test("compact preserves a date-partitioned layout: dirs, pruning, content") {
-    val path = Files.createTempDirectory("lake-compact-part-").toFile.getAbsolutePath + "/t"
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    // partitioned AND fragmented: many files per partition dir
-    ev.withColumn("p_date", to_date(col("ts"))).repartition(11)
-      .write.partitionBy("p_date").parquet(path)
-    val expected = spark.read.parquet(path)
-      .select("event_id", "p_date").collect().toSet
-
-    val (before, after) = Lake.compact(spark, path, targetFileMB = 128)
-    after should be < before
-    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("p_date="))
-    dirs.length should be > 2 // partition layout survived
-    // pruning still works: a one-day read lists only that day's files
-    val oneDay = spark.read.parquet(path).filter(col("p_date") === "2024-01-02")
-    oneDay.queryExecution.executedPlan.toString should include("PartitionFilters")
-    // content identical, including the partition column's values
-    spark.read.parquet(path).select("event_id", "p_date")
-      .collect().toSet shouldBe expected
-    // backup fully removed even though it contained nested partition dirs
-    new java.io.File(path + ".compact-old").exists() shouldBe false
-  }
-
-  test("compactClustered narrows per-file min/max spans on every cluster column") {
+  test("mergeCompact Z-order narrows per-file min/max on both cluster columns") {
     // 1.2M rows, two independent uniform dims: an unclustered write
     // leaves every file spanning ~the full domain of both columns.
     // Enough rows for ~10 output files at the 1 MB target — with only
     // 4-5 files the per-file z-curve coverage is lumpy and the width
     // assertion gets sensitive to RangePartitioner's sampled boundaries
-    val n = 1200000L
-    val df = spark.range(n).select(
+    val df = spark.range(1200000L).select(
       col("id"),
       pmod(hash(col("id")), lit(100000)).cast("long").as("a"),
       pmod(hash(col("id") + 7), lit(100000)).cast("long").as("b"))
-    val dir = java.nio.file.Files.createTempDirectory("lake-zorder").toString
-    df.repartition(6).write.mode("overwrite").parquet(dir)
-
-    def avgWidth(c: String): Double = {
-      import spark.implicits._
-      spark.read.parquet(dir)
-        .groupBy(input_file_name())
-        .agg((max(col(c)) - min(col(c))).cast("double").as("w"))
-        .agg(avg("w")).as[Double].head()
-    }
+    val path = layoutTable(df, files = 6)
+    def avgWidth(c: String): Double = fileStats(path)
+      .agg(avg((col(s"max_$c") - col(s"min_$c")).cast("double"))).as[Double].head()
     val (wa0, wb0) = (avgWidth("a"), avgWidth("b"))
 
-    val (_, after) = Lake.compactClustered(spark, dir, Seq("a", "b"), targetFileMB = 1)
+    val (_, after) = Lake.mergeCompact(spark, path, targetFileMB = 1,
+      clusterBy = Seq("a", "b"))
     after should be > 1 // multiple files, else "narrow" is vacuous
-    // rows survive the rewrite byte-for-byte
-    spark.read.parquet(dir).agg(count(lit(1)), sum("a"), sum("b"))
+    Lake.mergeRead(spark, path).agg(count(lit(1)), sum("a"), sum("b"))
       .collect() shouldBe df.agg(count(lit(1)), sum("a"), sum("b")).collect()
     // each file now covers a small rectangle of (a, b) space: both
-    // widths shrink together — the property one-column sorting can't give
+    // widths shrink together — the property a lexicographic range
+    // layout on (a, b) cannot give b
     avgWidth("a") should be < wa0 * 0.7
     avgWidth("b") should be < wb0 * 0.7
   }
 
-  test("compactClustered skips most files for a point-range predicate") {
-    val n = 600000L
-    val df = spark.range(n).select(
+  test("mergeCompact Z-order: a 2-D range leaves < half the files as candidates") {
+    val df = spark.range(600000L).select(
+      col("id"),
       pmod(hash(col("id")), lit(10000)).cast("long").as("a"),
       pmod(hash(col("id") + 3), lit(10000)).cast("long").as("b"),
       hash(col("id") + 11).cast("long").as("payload"))
-    val dir = java.nio.file.Files.createTempDirectory("lake-zskip").toString
-    df.write.mode("overwrite").parquet(dir)
-    Lake.compactClustered(spark, dir, Seq("a", "b"), targetFileMB = 1)
-    // footer-stats pruning: only files whose [min,max] box straddles
-    // the predicate rectangle can contain matches — count candidate
-    // files by the same min/max rule parquet row-group skipping
-    // applies. The 2-D rectangle (a AND b bounded) is the query shape
-    // z-ordering exists for: a sort on `a` alone would leave every
-    // file's b-range full-width and prune nothing on b.
-    val stats = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("a").as("a_lo"), max("a").as("a_hi"),
-        min("b").as("b_lo"), max("b").as("b_hi"))
+    val path = layoutTable(df, files = 4)
+    Lake.mergeCompact(spark, path, targetFileMB = 1, clusterBy = Seq("a", "b"))
+    // candidates by the committed stats: only files whose [min, max]
+    // box straddles the predicate rectangle can hold matches
+    val stats = fileStats(path)
     val nFiles = stats.count()
     nFiles should be > 1L
     val candidates = stats.filter(
-      col("a_lo") <= 100 && col("a_hi") >= 0 &&
-        col("b_lo") <= 100 && col("b_hi") >= 0).count()
+      col("min_a") <= 100 && col("max_a") >= 0 &&
+        col("min_b") <= 100 && col("max_b") >= 0).count()
     candidates.toDouble / nFiles should be < 0.5
   }
 
-  test("file-stats skipping: correct rows AND whole files pruned from the scan") {
-    val n = 600000L
-    val df = spark.range(n).select(
-      pmod(hash(col("id")), lit(10000)).cast("long").as("a"),
-      hash(col("id") + 11).cast("long").as("payload"))
-    val dir = java.nio.file.Files.createTempDirectory("lake-fstats").toString
-    df.write.mode("overwrite").parquet(dir)
-    Lake.compactClustered(spark, dir, Seq("a"), targetFileMB = 1)
-    val nFiles = Lake.buildFileStats(spark, dir, Seq("a"))
-    nFiles should be > 1L
-    val got = Lake.readSkipping(spark, dir, "a", lit(0L), lit(100L))
-    // answer equality vs the plain filter
-    val want = spark.read.parquet(dir).filter(col("a") >= 0 && col("a") <= 100)
-    got.count() shouldBe want.count()
-    got.agg(sum("a"), sum("payload")).collect() shouldBe
-      want.agg(sum("a"), sum("payload")).collect()
-    // the skipping reader's plan scans FEWER files than the table has:
-    // provenance of the surviving scan shows only covering files
-    import spark.implicits._
-    val scanned = got.select(col("_metadata.file_path")).distinct().count()
-    // relation file count, not distinct-in-result: read the plan's input
-    val inputFiles = got.inputFiles.length.toLong
-    inputFiles should be < nFiles
-    scanned should be <= inputFiles
-  }
-
-  test("file-stats skipping: empty survivor set still answers (zero rows)") {
-    val dir = java.nio.file.Files.createTempDirectory("lake-fstats-empty").toString
-    spark.range(1000).select(col("id").as("a"))
-      .write.mode("overwrite").parquet(dir)
-    Lake.buildFileStats(spark, dir, Seq("a"))
-    Lake.readSkipping(spark, dir, "a", lit(5000L), lit(6000L)).count() shouldBe 0L
-  }
-
-  test("file-stats skipping refuses a stale manifest after an append") {
-    val dir = java.nio.file.Files.createTempDirectory("lake-fstats-stale").toString
-    spark.range(1000).select(col("id").as("a"))
-      .write.mode("overwrite").parquet(dir)
-    Lake.buildFileStats(spark, dir, Seq("a"))
-    // an append the manifest does not know about must fail LOUDLY, not
-    // silently drop the appended rows from range reads
-    spark.range(1000, 2000).select(col("id").as("a"))
-      .write.mode("append").parquet(dir)
-    val e = intercept[IllegalArgumentException] {
-      Lake.readSkipping(spark, dir, "a", lit(0L), lit(5000L)).count()
-    }
-    e.getMessage should include("STALE")
-    // rebuild heals it and the appended rows are served
-    Lake.buildFileStats(spark, dir, Seq("a"))
-    Lake.readSkipping(spark, dir, "a", lit(0L), lit(5000L)).count() shouldBe 2000L
-  }
-
-  test("file-stats skipping prunes all-null files; null rows never match ranges") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lake-fstats-null").toString
-    // file 1: real values; file 2: all-null stats column
-    Seq(1L, 2L, 3L).toDF("a").coalesce(1).write.mode("overwrite").parquet(dir)
-    Seq.fill(3)(null.asInstanceOf[java.lang.Long]).toDF("a")
-      .coalesce(1).write.mode("append").parquet(dir)
-    Lake.buildFileStats(spark, dir, Seq("a"))
-    val got = Lake.readSkipping(spark, dir, "a", lit(1L), lit(10L))
-    got.count() shouldBe 3L
-    got.inputFiles.length shouldBe 1 // the all-null file never opens
-  }
-
-  test("compactClustered tolerates null and constant cluster columns") {
+  test("mergeCompact Z-order tolerates null and constant cluster columns") {
     val df = spark.range(10000).select(
       col("id"),
       when(pmod(col("id"), lit(3)) === 0, lit(null).cast("long"))
         .otherwise(pmod(hash(col("id")), lit(1000)).cast("long")).as("a"),
       lit(7L).as("b")) // constant: quantile boundaries collapse to one value
-    val dir = java.nio.file.Files.createTempDirectory("lake-zedge").toString
-    df.write.mode("overwrite").parquet(dir)
-    Lake.compactClustered(spark, dir, Seq("a", "b"), targetFileMB = 1)
-    val back = spark.read.parquet(dir)
+    val path = layoutTable(df, files = 3)
+    Lake.mergeCompact(spark, path, targetFileMB = 1, clusterBy = Seq("a", "b"))
+    val back = Lake.mergeRead(spark, path)
     back.count() shouldBe 10000L
     back.filter(col("a").isNull).count() shouldBe df.filter(col("a").isNull).count()
     back.agg(sum("a"), sum("b")).collect() shouldBe df.agg(sum("a"), sum("b")).collect()
+  }
+
+  test("file-stats skipping: correct rows AND whole files pruned from the scan") {
+    // `a` is not the merge key: its stats are committed all the same
+    val df = spark.range(600000L).select(
+      col("id"),
+      pmod(hash(col("id")), lit(10000)).cast("long").as("a"),
+      hash(col("id") + 11).cast("long").as("payload"))
+    val path = layoutTable(df, files = 4)
+    Lake.mergeCompact(spark, path, targetFileMB = 1, clusterBy = Seq("a"))
+    val nFiles = Manifest.snapshot(spark, path).files.count(_.startsWith("data/"))
+    nFiles should be > 1
+    val got = Lake.mergeReadRange(spark, path, "a", lit(0L), lit(100L))
+    val want = Lake.mergeRead(spark, path).filter(col("a").between(0L, 100L))
+    got.count() shouldBe want.count()
+    got.exceptAll(want).count() shouldBe 0L
+    got.inputFiles.length should be < nFiles
+  }
+
+  test("file-stats skipping prunes all-null files; null rows never match ranges") {
+    val path = Files.createTempDirectory("lake-null-").toFile.getAbsolutePath
+    // file 1: values plus one null row; file 2: `a` all null
+    Lake.mergeInit(spark, path,
+      Seq((1L, Some(1L)), (2L, Some(2L)), (3L, Some(3L)), (4L, None))
+        .toDF("id", "a").coalesce(1), Seq("id"))
+    Lake.merge(spark, path,
+      Seq((5L, Option.empty[Long]), (6L, None)).toDF("id", "a").coalesce(1),
+      Seq("id"))
+    Manifest.snapshot(spark, path).files.count(_.startsWith("data/")) shouldBe 2
+    val got = Lake.mergeReadRange(spark, path, "a", lit(1L), lit(10L))
+    got.count() shouldBe 3L
+    got.inputFiles.length shouldBe 1 // the all-null file never opens
   }
 
   test("bucketed tables join and aggregate without an exchange on the bucket key") {
@@ -395,15 +289,14 @@ class LakeSpec extends SparkSuite with Matchers {
         .toDF("k", "v", "tag"), Seq("k")).applied shouldBe true
     // updateWhere SET results are gated too
     an[IllegalArgumentException] should be thrownBy
-      Lake.updateWhere(spark, path, col("k") === 7L,
-        Map("v" -> lit(-5L)), Seq("k"))
+      Lake.updateWhere(spark, path, col("k") === 7L, Map("v" -> lit(-5L)))
     // deleteWhere cannot violate and stays open
-    Lake.deleteWhere(spark, path, col("k") === 8L, Seq("k")).affected shouldBe 1L
+    Lake.deleteWhere(spark, path, col("k") === 8L).affected shouldBe 1L
     // adding a constraint the CURRENT data violates is refused
     an[IllegalArgumentException] should be thrownBy
       Lake.addCheckConstraint(spark, path, "no_nulls", "v IS NOT NULL AND v < 10")
     // constraints survive OPTIMIZE (they ride the manifest, not files)
-    Lake.mergeCompact(spark, path, Seq("k"))
+    Lake.mergeCompact(spark, path)
     Lake.checkConstraints(spark, path).count() shouldBe 1L
     an[IllegalArgumentException] should be thrownBy
       Lake.merge(spark, path, Seq((9L, -2L, "bad")).toDF("k", "v", "tag"), Seq("k"))
@@ -423,8 +316,7 @@ class LakeSpec extends SparkSuite with Matchers {
       Lake.addGeneratedColumn(spark, path, "nope", "v * 2")
     // make tag derivable, declare it generated
     Lake.updateWhere(spark, path, lit(true),
-      Map("tag" -> concat(lit("t"), pmod(col("k"), lit(3)).cast("string"))),
-      Seq("k"))
+      Map("tag" -> concat(lit("t"), pmod(col("k"), lit(3)).cast("string"))))
     an[IllegalArgumentException] should be thrownBy
       Lake.addGeneratedColumn(spark, path, "tag", "'x' || CAST(k AS STRING)")
     Lake.addGeneratedColumn(spark, path, "tag",
@@ -449,7 +341,7 @@ class LakeSpec extends SparkSuite with Matchers {
       Seq((6L, -60L, "t0")).toDF("k", "v", "tag"), Seq("k"))
       .matched shouldBe 1L
     // rules ride the manifest: survive OPTIMIZE, drop re-allows
-    Lake.mergeCompact(spark, path, Seq("k"))
+    Lake.mergeCompact(spark, path)
     Lake.generatedColumns(spark, path).count() shouldBe 1L
     an[IllegalArgumentException] should be thrownBy
       Lake.merge(spark, path,
@@ -508,11 +400,11 @@ class LakeSpec extends SparkSuite with Matchers {
     // drifted type next to untouched originals
     an[IllegalArgumentException] should be thrownBy
       Lake.updateWhere(spark, path, col("k") >= 700,
-        Map("v" -> lit("x")), Seq("k"))
+        Map("v" -> lit("x")))
     // unknown SET column is refused too
     an[IllegalArgumentException] should be thrownBy
       Lake.updateWhere(spark, path, col("k") >= 700,
-        Map("nope" -> lit(1L)), Seq("k"))
+        Map("nope" -> lit(1L)))
     Lake.mergeRead(spark, path).collect().toSet shouldBe before
   }
 
@@ -521,15 +413,14 @@ class LakeSpec extends SparkSuite with Matchers {
     val (path, _) = mergeFixture()
     // delete a narrow key band: only its range file(s) rewrite
     val del = Lake.deleteWhere(spark, path,
-      col("k") >= 10 && col("k") < 20, Seq("k"), shardId = Some("d1"))
+      col("k") >= 10 && col("k") < 20, shardId = Some("d1"))
     del.affected shouldBe 10L
     del.filesRewritten should be >= 1
     del.filesRewritten should be < del.filesLive
     Lake.mergeRead(spark, path).count() shouldBe 790L
     // update a disjoint band; deleted rows must not resurrect
     val upd = Lake.updateWhere(spark, path, col("k") >= 700,
-      Map("tag" -> lit("hot"), "v" -> (col("v") + 1)), Seq("k"),
-      shardId = Some("u1"))
+      Map("tag" -> lit("hot"), "v" -> (col("v") + 1)), shardId = Some("u1"))
     upd.affected shouldBe 100L
     upd.filesRewritten should be < upd.filesLive
     val head = Lake.mergeRead(spark, path)
@@ -543,7 +434,7 @@ class LakeSpec extends SparkSuite with Matchers {
     Lake.mergeRead(spark, path, asOf = Some(1))
       .filter(col("tag") === "hot").count() shouldBe 0L
     // re-delivery is a manifest no-op
-    Lake.deleteWhere(spark, path, lit(true), Seq("k"), shardId = Some("d1"))
+    Lake.deleteWhere(spark, path, lit(true), shardId = Some("d1"))
       .applied shouldBe false
     Lake.mergeRead(spark, path).count() shouldBe 790L
     // a merge AFTER dml still prunes through the regenerated stats
@@ -577,7 +468,7 @@ class LakeSpec extends SparkSuite with Matchers {
     val (path, _) = mergeFixture()                       // gen 0
     Lake.merge(spark, path,                              // gen 1: 1 update + 1 insert
       Seq((5L, -1L, "upd"), (900L, -2L, "new")).toDF("k", "v", "tag"), Seq("k"))
-    Lake.deleteWhere(spark, path, col("k") === 7L, Seq("k"))  // gen 2: 1 delete
+    Lake.deleteWhere(spark, path, col("k") === 7L)  // gen 2: 1 delete
     val feed = Lake.mergeChanges(spark, path, Seq("k"), fromGen = 0)
       .select("k", "change_type", "before_tag", "after_tag")
       .as[(Long, String, String, String)].collect().sortBy(_._1)
@@ -594,14 +485,13 @@ class LakeSpec extends SparkSuite with Matchers {
   test("Manifest.restore: rollback to a retained generation re-reads the " +
       "original; the shard ledger survives the rewind") {
     val (path, _) = mergeFixture()
-    Lake.deleteWhere(spark, path, col("k") < 400L, Seq("k"),
-      shardId = Some("bad-batch"))
+    Lake.deleteWhere(spark, path, col("k") < 400L, shardId = Some("bad-batch"))
     Lake.mergeRead(spark, path).count() shouldBe 400L
     val newHead = Manifest.restore(spark, path, gen = 0)
     newHead shouldBe 2
     Lake.mergeRead(spark, path).count() shouldBe 800L
     // data rewound, idempotency history not: the id still no-ops
-    Lake.deleteWhere(spark, path, lit(true), Seq("k"),
+    Lake.deleteWhere(spark, path, lit(true),
       shardId = Some("bad-batch")).applied shouldBe false
     // and the rollback itself is time-travelable: gen 1 still shows
     // the deleted state
@@ -616,7 +506,7 @@ class LakeSpec extends SparkSuite with Matchers {
     for (k <- Seq(900L, 901L, 902L))
       Lake.merge(spark, path, Seq((k, -k, "new")).toDF("k", "v", "tag"), Seq("k"))
     val genBefore = Manifest.snapshot(spark, path).gen
-    val (before, after) = Lake.mergeCompact(spark, path, Seq("k"),
+    val (before, after) = Lake.mergeCompact(spark, path,
       targetFileMB = 128, clusterBy = Seq("k"))
     before shouldBe 11          // 8 range files + 3 merge appends
     after should be < before
