@@ -598,10 +598,11 @@ object ScaleProbe {
       val store = graft.util.Scratch.dir("dsir-probe-").toString
       val t = pmod(col("doc_id"), lit(3))
       timed("dsir_store_lifecycle") {
-        Curation.buildDsirTarget(target.filter(t === 0), store)
-        Curation.extendDsirTarget(target.filter(t === 1), store, Some("t1"))
-        Curation.extendDsirTarget(target.filter(t === 2), store, Some("t2"))
-        Curation.extendDsirTarget(target.filter(t === 1), store, Some("t1"))
+        val dsir = Curation.dsirStore(store)
+        dsir.build(target.filter(t === 0))
+        dsir.extend(target.filter(t === 1), Some("t1"))
+        dsir.extend(target.filter(t === 2), Some("t2"))
+        dsir.extend(target.filter(t === 1), Some("t1"))
       }
       val viaStore = timed("dsir_against_store")(
         graft.operators.Dedup.materialize(

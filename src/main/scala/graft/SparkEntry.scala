@@ -154,6 +154,17 @@ object SparkEntry {
     s.read.parquet(s"$p/pairs")
   }
 
+  /** The store fixtures' one shape: build `store` from `base`, then
+    * extend it with each `(tranche, shard id)` in order under its
+    * ledgered id — a repeated id is a re-delivery the ledger must turn
+    * into a no-op.
+    */
+  private def fold(store: graft.util.ShardedStore, base: DataFrame,
+                   shards: (DataFrame, String)*): Unit = {
+    store.build(base)
+    shards.foreach { case (tranche, id) => store.extend(tranche, Some(id)) }
+  }
+
   /** Per-(JVM, sfDir) memo of the `cur_dsir_store` gate's persisted
     * DSIR target store: bucket counts of the target slice built on its
     * first doc_id tercile, extended with the other two as ledgered
@@ -164,9 +175,8 @@ object SparkEntry {
     fixture("graft-dsir-store", dir) { store =>
       val tgt = Tables.documents(s, dir).filter(col("doc_id") % 7 === 0)
       val t = pmod(col("doc_id"), lit(3))
-      Curation.buildDsirTarget(tgt.filter(t === 0), store)
-      Curation.extendDsirTarget(tgt.filter(t === 1), store, Some("t1"))
-      Curation.extendDsirTarget(tgt.filter(t === 2), store, Some("t2"))
+      fold(Curation.dsirStore(store), tgt.filter(t === 0),
+        tgt.filter(t === 1) -> "t1", tgt.filter(t === 2) -> "t2")
     }
 
   /** Per-(JVM, sfDir) memo of the persisted reference-GRAM store the
@@ -348,9 +358,8 @@ object SparkEntry {
     fixture("graft-vocab", dir) { idx =>
       val docs = Tables.documents(s, dir)
       val t = pmod(col("doc_id"), lit(3))
-      TextOps.buildVocab(docs.filter(t === 0), idx)
-      TextOps.extendVocab(docs.filter(t === 1), idx, shardId = Some("t1"))
-      TextOps.extendVocab(docs.filter(t === 2), idx, shardId = Some("t2"))
+      fold(TextOps.vocabStore(idx), docs.filter(t === 0),
+        docs.filter(t === 1) -> "t1", docs.filter(t === 2) -> "t2")
       // simulate a crash MID-extend: count rows (with wildly inflated
       // counts, so any leak would flip every score) land in vocab/
       // with no manifest commit. Readers must keep resolving the last
@@ -375,11 +384,9 @@ object SparkEntry {
     fixture("graft-nb-model", dir) { idx =>
       val d = Tables.documents(s, dir)
       val t = pmod(col("doc_id"), lit(5))
-      Classifier.buildNbModel(d.filter(t === 1), idx, "lang")
-      Classifier.extendNbModel(d.filter(t === 2), idx, "lang", shardId = Some("s2"))
-      Classifier.extendNbModel(d.filter(t === 3 || t === 4), idx, "lang",
-        shardId = Some("s34"))
-      Classifier.extendNbModel(d.filter(t === 2), idx, "lang", shardId = Some("s2"))
+      fold(Classifier.nbStore(idx, "lang"), d.filter(t === 1),
+        d.filter(t === 2) -> "s2", d.filter(t === 3 || t === 4) -> "s34",
+        d.filter(t === 2) -> "s2")
     }
 
   /** Per-(JVM, sfDir) memo of the `text_bpe_*` gates' trained BPE
@@ -413,10 +420,9 @@ object SparkEntry {
     fixture("graft-pca-store", dir) { store =>
       val emb = Tables.embeddings(s, dir)
       val t = pmod(col("vec_id"), lit(3))
-      Pca.buildMomentStore(emb.filter(t === 0), store)
-      Pca.extendMomentStore(emb.filter(t === 1), store, Some("t1"))
-      Pca.extendMomentStore(emb.filter(t === 2), store, Some("t2"))
-      Pca.extendMomentStore(emb.filter(t === 1), store, Some("t1"))
+      fold(Pca.momentStore(store), emb.filter(t === 0),
+        emb.filter(t === 1) -> "t1", emb.filter(t === 2) -> "t2",
+        emb.filter(t === 1) -> "t1")
     }
 
   /** Per-(JVM, sfDir) memo of the `sim_ann_rproj_store` gate's
@@ -431,10 +437,9 @@ object SparkEntry {
     fixture("graft-rproj-store", dir) { store =>
       val emb = Tables.embeddings(s, dir)
       val t = pmod(col("vec_id"), lit(3))
-      Pca.buildIvfResidualStore(emb.filter(t === 0), store)
-      Pca.extendIvfResidualStore(emb.filter(t === 1), store, Some("t1"))
-      Pca.extendIvfResidualStore(emb.filter(t === 2), store, Some("t2"))
-      Pca.extendIvfResidualStore(emb.filter(t === 1), store, Some("t1"))
+      fold(Pca.residualStore(store), emb.filter(t === 0),
+        emb.filter(t === 1) -> "t1", emb.filter(t === 2) -> "t2",
+        emb.filter(t === 1) -> "t1")
     }
 
   /** Per-(JVM, sfDir) memo of the `text_heavy_store` gate's
@@ -455,10 +460,8 @@ object SparkEntry {
       val cap = FreqSketch.capacityFor(TextOps.ngrams(docs, 2).count())
       val t = pmod(col("doc_id"), lit(3))
       def grams(tr: Int) = TextOps.ngrams(docs.filter(t === tr), 2)
-      FreqSketch.buildHeavyStore(grams(0), "ngram", store, cap)
-      FreqSketch.extendHeavyStore(grams(1), "ngram", store, Some("t1"), cap)
-      FreqSketch.extendHeavyStore(grams(2), "ngram", store, Some("t2"), cap)
-      FreqSketch.extendHeavyStore(grams(1), "ngram", store, Some("t1"), cap)
+      fold(FreqSketch.heavyStore(store, capacity = cap, itemCol = Some("ngram")),
+        grams(0), grams(1) -> "t1", grams(2) -> "t2", grams(1) -> "t1")
     }
 
   /** Per-(JVM, sfDir) memo of the `q_bloom_store` gate's membership
@@ -476,11 +479,9 @@ object SparkEntry {
       val dim = Tables.customer(s, dir)
         .filter(col("c_mktsegment") === "BUILDING")
       val t = pmod(col("c_custkey"), lit(3))
-      Bloom.buildBloomStore(dim.filter(t === 0), "c_custkey", store,
-        expectedKeys = 100000L)
-      Bloom.extendBloomStore(dim.filter(t === 1), "c_custkey", store, Some("t1"))
-      Bloom.extendBloomStore(dim.filter(t === 2), "c_custkey", store, Some("t2"))
-      Bloom.extendBloomStore(dim.filter(t === 1), "c_custkey", store, Some("t1"))
+      fold(Bloom.bloomStore(store, "c_custkey", expectedKeys = 100000L),
+        dim.filter(t === 0), dim.filter(t === 1) -> "t1",
+        dim.filter(t === 2) -> "t2", dim.filter(t === 1) -> "t1")
     }
 
   /** Stable per-(JVM, sfDir, family) store PATHS for the streaming
@@ -751,10 +752,9 @@ object SparkEntry {
     fixture("graft-quantile-store", dir) { store =>
       val ev = Tables.events(s, dir)
       val t = pmod(col("event_id"), lit(3))
-      Quantiles.buildQuantileStore(ev.filter(t === 0), "value", store)
-      Quantiles.extendQuantileStore(ev.filter(t === 1), "value", store, Some("t1"))
-      Quantiles.extendQuantileStore(ev.filter(t === 2), "value", store, Some("t2"))
-      Quantiles.extendQuantileStore(ev.filter(t === 1), "value", store, Some("t1"))
+      fold(Quantiles.quantileStore(store, "value"), ev.filter(t === 0),
+        ev.filter(t === 1) -> "t1", ev.filter(t === 2) -> "t2",
+        ev.filter(t === 1) -> "t1")
     }
 
   /** Per-(JVM, sfDir) memo of the `lake_orc_roundtrip` /
@@ -782,13 +782,9 @@ object SparkEntry {
     fixture("graft-hll-store", dir) { store =>
       val ev = Tables.events(s, dir)
       val t = pmod(col("event_id"), lit(3))
-      Hll.buildDistinctStore(ev.filter(t === 0), Seq("event_type"), "user_id", store)
-      Hll.extendDistinctStore(ev.filter(t === 1), Seq("event_type"), "user_id",
-        store, shardId = Some("t1"))
-      Hll.extendDistinctStore(ev.filter(t === 2), Seq("event_type"), "user_id",
-        store, shardId = Some("t2"))
-      Hll.extendDistinctStore(ev.filter(t === 1), Seq("event_type"), "user_id",
-        store, shardId = Some("t1"))
+      fold(Hll.distinctStore(store, Seq("event_type"), "user_id"), ev.filter(t === 0),
+        ev.filter(t === 1) -> "t1", ev.filter(t === 2) -> "t2",
+        ev.filter(t === 1) -> "t1")
     }
 
   /** Per-(JVM, sfDir) memo of the `text_search_*` gates' inverted

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.ShardedStore
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Persisted Bloom-filter MEMBERSHIP store — the semi-join reduction
@@ -44,8 +45,7 @@ object Bloom {
   private def filterPath(p: String) = s"$p/filter"
 
   private def writeShard(dim: DataFrame, keyCol: String, path: String,
-                         shardId: String, expected: Long, fpp: Double,
-                         mode: SaveMode): Unit = {
+                         shardId: String, expected: Long, fpp: Double): Unit = {
     val spark = dim.sparkSession
     import spark.implicits._
     val nKeys = dim.select(col(keyCol)).filter(col(keyCol).isNotNull).count()
@@ -55,54 +55,37 @@ object Bloom {
     Seq((shardId, nKeys, expected, fpp, bos.toByteArray))
       .toDF("shard_id", "n_keys", "expected", "fpp", "bits")
       .coalesce(1)
-      .write.mode(mode).parquet(filterPath(path))
+      .write.mode("append").parquet(filterPath(path))
   }
 
-  /** Initialize the store over the first key tranche as generation 0.
-    * `expectedKeys` fixes the filter geometry for the store's whole
-    * life — size it for the EVENTUAL key volume, not the first shard
-    * (a too-small capacity only raises fpp, never breaks exactness).
-    */
-  def buildBloomStore(dim: DataFrame, keyCol: String, path: String,
-                      expectedKeys: Long = 1000000L,
-                      fpp: Double = 0.03,
-                      applied: Set[String] = Set.empty): Unit =
-    graft.util.Manifest.init(dim.sparkSession, path, applied) {
-      writeShard(dim, keyCol, path, "_base", expectedKeys, fpp,
-        SaveMode.Overwrite)
-    }
-
-  /** Fold a new key shard in — one filter build over the SHARD only,
-    * at the geometry read back from the store's base row, committed as
-    * the next manifest generation (re-delivered `shardId` = no-op; a
-    * doubled shard would not change the OR-union, but it doubles the
-    * stored rows and read-side merge work for nothing).
-    */
-  def extendBloomStore(shard: DataFrame, keyCol: String, path: String,
-                       shardId: Option[String] = None): Unit = {
-    val spark = shard.sparkSession
-    graft.util.Manifest.extend(spark, path, shardId) {
-      val base = graft.util.Manifest.read(spark, path, "filter")
-        .select("expected", "fpp").head()
-      writeShard(shard, keyCol, path, shardId.getOrElse("_anon"),
-        base.getLong(0), base.getDouble(1), SaveMode.Append)
-    }
-    ()
-  }
-
-  /** The membership store as a streamed [[graft.util.ShardedStore]] over
-    * a dimension stream — allow-list/dimension-key maintenance: batch 0
-    * fixes the filter geometry and builds, later batches append their
-    * own (ledgered) shard filters. Bloom union is an OR over fixed
-    * geometry, so the streamed store's merged filter equals a one-shot
-    * build over everything streamed, whatever the file layout.
+  /** The membership store as a [[graft.util.ShardedStore]] — allow-list
+    * / dimension-key maintenance, batch or streamed: the build fixes the
+    * filter geometry (`expectedKeys`, `fpp`) for the store's whole life
+    * — size it for the EVENTUAL key volume, not the first shard (a
+    * too-small capacity only raises fpp, never breaks exactness) — and
+    * every extend builds one filter over its SHARD only, at the
+    * geometry read back from the committed base row. A re-delivered
+    * ledgered shard is a no-op (a doubled shard would not change the
+    * OR-union, but it doubles the stored rows and read-side merge
+    * work). Bloom union is an OR over fixed geometry, so the merged
+    * filter equals a one-shot build over everything folded in,
+    * whatever the file layout.
     */
   def bloomStore(path: String, keyCol: String,
                  expectedKeys: Long = 1000000L,
-                 fpp: Double = 0.03): graft.util.ShardedStore =
-    graft.util.ShardedStore.onManifest(path, "filter")(
-      buildBloomStore(_, keyCol, path, expectedKeys, fpp, _),
-      (b, id) => extendBloomStore(b, keyCol, path, Some(id)))
+                 fpp: Double = 0.03): ShardedStore = {
+    val geometry = ShardedStore.Pin[(Long, Double)](
+      fit = _ => (expectedKeys, fpp),
+      save = (_, _) => (),
+      load = { spark =>
+        val base = graft.util.Manifest.read(spark, path, "filter")
+          .select("expected", "fpp").head()
+        (base.getLong(0), base.getDouble(1))
+      })
+    ShardedStore.additive(path, "filter")(geometry) { case (dim, tag, (expected, p)) =>
+      writeShard(dim, keyCol, path, tag, expected, p)
+    }
+  }
 
   /** The merged membership filter of one committed generation: shard
     * filters OR-merged in shard_id order (the union is commutative —

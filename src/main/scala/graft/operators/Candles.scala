@@ -296,7 +296,7 @@ object Candles {
   def candleStore(path: String, windowDur: String = "1 minute"): ShardedStore =
     ShardedStore.onManifest(path, "data")(
       buildCandleStore(_, path, windowDur, _),
-      (b, id) => updateCandleStore(b, path, windowDur, Some(id)))
+      updateCandleStore(_, path, windowDur, _))
 
   /** The store's candles — exactly [[ohlcv]] over everything built +
     * updated in, resolved through one committed manifest generation:

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.ShardedStore
 
 /** Trained multinomial Naive Bayes text classification — the
   * fastText-style model-based filter every production LLM-data
@@ -29,8 +30,7 @@ import org.apache.spark.sql.functions._
   * The model is ADDITIVE (token counts, class doc/token totals), so it
   * maintains incrementally exactly like the vocabulary store: build on
   * day one, fold each shard's counts in with a ledgered append, score
-  * read-only forever ([[buildNbModel]]/[[extendNbModel]]/
-  * [[classifyWithModel]]).
+  * read-only forever ([[nbStore]]/[[classifyWithModel]]).
   */
 object Classifier {
 
@@ -177,54 +177,27 @@ object Classifier {
   private def countsPath(path: String) = s"$path/counts"
   private def totalsPath(path: String) = s"$path/totals"
 
-  /** Initialize the model store with `labeled`'s counts as manifest
-    * generation 0 (a previous epoch at `path` is cleared).
+  /** The Naive Bayes model as a [[graft.util.ShardedStore]] —
+    * continuous model training, batch or streamed: the build writes the
+    * first tranche's per-class counts and totals, every extend appends
+    * a shard's own rows, and ONE manifest generation covers both subs'
+    * writes, so readers never see a shard's counts without its totals.
+    * A re-delivered ledgered shard is a no-op (doubled count rows would
+    * bias every later prediction toward the shard's classes), and a
+    * crash between the appends and the commit leaves only unreferenced
+    * files the blind retry supersedes. Counts are additive, so
+    * classifying against the store equals from-scratch [[naiveBayes]]
+    * over everything folded in. Compaction bounds both subs.
     */
-  def buildNbModel(labeled: DataFrame, path: String, labelCol: String,
-                   unicode: Boolean = false,
-                   applied: Set[String] = Set.empty): Unit =
-    graft.util.Manifest.init(labeled.sparkSession, path, applied) {
-      classTokenCounts(labeled, labelCol, unicode)
-        .write.mode(SaveMode.Overwrite).parquet(countsPath(path))
-      classTotals(labeled, labelCol, unicode)
-        .write.mode(SaveMode.Overwrite).parquet(totalsPath(path))
+  def nbStore(path: String, labelCol: String,
+              unicode: Boolean = false): ShardedStore =
+    ShardedStore.additive(path, "counts", "totals")(ShardedStore.Pin.none) {
+      (labeled, _, _) =>
+        classTokenCounts(labeled, labelCol, unicode)
+          .write.mode("append").parquet(countsPath(path))
+        classTotals(labeled, labelCol, unicode)
+          .write.mode("append").parquet(totalsPath(path))
     }
-
-  /** Fold a labeled shard into the model — append-only, committed as
-    * one manifest generation covering BOTH the counts and totals
-    * appends: the two writes become one atomic commit (readers can
-    * never see a shard's counts without its totals), a re-delivered
-    * `shardId` is a no-op (doubled count rows would bias every later
-    * prediction toward the shard's classes), and a crash between the
-    * appends and the commit leaves only unreferenced files the blind
-    * retry supersedes.
-    */
-  def extendNbModel(labeled: DataFrame, path: String, labelCol: String,
-                    unicode: Boolean = false,
-                    shardId: Option[String] = None): Unit = {
-    graft.util.Manifest.extend(labeled.sparkSession, path, shardId) {
-      classTokenCounts(labeled, labelCol, unicode)
-        .write.mode(SaveMode.Append).parquet(countsPath(path))
-      classTotals(labeled, labelCol, unicode)
-        .write.mode(SaveMode.Append).parquet(totalsPath(path))
-    }
-    ()
-  }
-
-  /** The Naive Bayes model as a streamed [[graft.util.ShardedStore]] —
-    * continuous model training as a live stream: batch 0 initializes,
-    * later batches append their own per-class count rows
-    * ([[extendNbModel]] under the ledgered batch id, so a Spark retry is
-    * a no-op instead of doubled counts biasing every later prediction
-    * toward the re-run shard's classes). Counts are additive, so
-    * classifying against the streamed store equals from-scratch
-    * [[naiveBayes]] over everything streamed. Compaction bounds both
-    * additive-count subs.
-    */
-  def nbStore(path: String, labelCol: String): graft.util.ShardedStore =
-    graft.util.ShardedStore.onManifest(path, "counts", "totals")(
-      (b, stamp) => buildNbModel(b, path, labelCol, applied = stamp),
-      (b, id) => extendNbModel(b, path, labelCol, shardId = Some(id)))
 
   /** Classify against the STORED model: old training text is never
     * re-tokenized; shard count rows merge by summation on read

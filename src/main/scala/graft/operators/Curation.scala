@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
+import graft.util.ShardedStore
 
 /** Corpus-curation operators for LLM training-data pipelines, beyond
   * dedup/similarity: benchmark decontamination, deterministic
@@ -537,54 +538,32 @@ object Curation {
   // the feature space. After build + k extends, scoring equals
   // [[dsirLogWeights]] against everything folded in — exactly.
 
-  /** Initialize the persisted target store at `path`. */
-  def buildDsirTarget(target: DataFrame, path: String, n: Int = 2,
-                      buckets: Int = 4096,
-                      applied: Set[String] = Set.empty): Unit = {
-    require(buckets >= 2 && buckets <= 65536,
-      s"buildDsirTarget: buckets must be in [2, 65536], got $buckets")
-    val spark = target.sparkSession
-    import spark.implicits._
-    graft.util.Manifest.init(spark, path, applied) {
-      Seq((n, buckets)).toDF("n", "buckets")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/params")
-      bucketCounts(target, n, buckets, "c")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/counts")
-    }
-    ()
-  }
-
-  /** Fold a new target shard in — the shard's OWN count rows append
-    * under the ledgered `shardId` (a retry is a no-op); the stored
-    * feature space (n, buckets) is pinned by params.
-    */
-  def extendDsirTarget(newTarget: DataFrame, path: String,
-                       shardId: Option[String] = None): Unit = {
-    val spark = newTarget.sparkSession
-    val p = graft.util.Manifest.read(spark, path, "params").head()
-    val (n, buckets) = (p.getInt(0), p.getInt(1))
-    graft.util.Manifest.extend(spark, path, shardId) {
-      bucketCounts(newTarget, n, buckets, "c")
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(s"$path/counts")
-    }
-    ()
-  }
-
-  /** The DSIR target as a streamed [[graft.util.ShardedStore]] — the
-    * importance-resampling reference maintained as a live stream:
-    * batch 0 builds (pinning the (n, buckets) feature space), later
-    * batches append their own ledgered count rows. Counts sum on read,
-    * so scoring any raw corpus against the streamed store equals
-    * from-scratch [[dsirLogWeights]] over everything streamed.
+  /** The DSIR target as a [[graft.util.ShardedStore]] — the
+    * importance-resampling reference, batch or streamed: the build pins
+    * the (n, buckets) feature space in `params` and writes the first
+    * tranche's bucket counts, every extend appends a shard's OWN count
+    * rows in the pinned space under its ledgered shard id (a retry is a
+    * no-op). Counts sum on read, so scoring any raw corpus against the
+    * store equals from-scratch [[dsirLogWeights]] over everything
+    * folded in.
     */
   def dsirStore(path: String, n: Int = 2,
-                buckets: Int = 4096): graft.util.ShardedStore =
-    graft.util.ShardedStore.onManifest(path, "counts")(
-      buildDsirTarget(_, path, n, buckets, _),
-      (b, id) => extendDsirTarget(b, path, Some(id)))
+                buckets: Int = 4096): ShardedStore = {
+    require(buckets >= 2 && buckets <= 65536,
+      s"dsirStore: buckets must be in [2, 65536], got $buckets")
+    val pin = ShardedStore.Pin[(Int, Int)](
+      fit = _ => (n, buckets),
+      save = (spark, p) =>
+        spark.createDataFrame(Seq(p)).toDF("n", "buckets").write.parquet(s"$path/params"),
+      load = { spark =>
+        val p = graft.util.Manifest.read(spark, path, "params").head()
+        (p.getInt(0), p.getInt(1))
+      })
+    ShardedStore.additive(path, "counts")(pin) { case (target, _, (pinnedN, pinnedBuckets)) =>
+      bucketCounts(target, pinnedN, pinnedBuckets, "c")
+        .write.mode("append").parquet(s"$path/counts")
+    }
+  }
 
   /** Score `raw` against the STORED target distribution — equals
     * [[dsirLogWeights]](raw, everything folded into the store)

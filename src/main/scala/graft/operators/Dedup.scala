@@ -238,7 +238,7 @@ object Dedup {
   def spanStore(path: String, spanTokens: Int = 16): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "spans")(
       buildSpanIndex(_, path, spanTokens, _),
-      (b, id) => extendSpanIndex(b, path, spanTokens, Some(id)))
+      extendSpanIndex(_, path, spanTokens, _))
 
   /** First-occurrence election: keep each distinct span's earliest
     * (doc_id, pos) row; the window partitions on the precomputed span
@@ -2067,7 +2067,7 @@ object Dedup {
         applied = stamp),
       (b, id) => extendIndex(b,
         incrementalPairs(b, path, n = n, threshold = threshold), path,
-        n = n, shardId = Some(id)))
+        n = n, shardId = id))
 
   /** All verified near-dup pairs the index knows (`pairs/`): after
     * build + k extends, exactly the from-scratch [[minhashLsh]] pair
@@ -2243,7 +2243,7 @@ object Dedup {
   def containmentStore(path: String, n: Int = 2): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "sets", "postings")(
       (b, stamp) => buildContainmentIndex(b, path, n = n, applied = stamp),
-      (b, id) => extendContainmentIndex(b, path, n = n, shardId = Some(id)))
+      (b, id) => extendContainmentIndex(b, path, n = n, shardId = id))
 
   // ── persisted edit index ──────────────────────────────────────────
 
@@ -2307,7 +2307,7 @@ object Dedup {
                 maxDist: Int = 2): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "strs", "segs")(
       buildEditIndex(_, strCol, path, maxDist, _),
-      (b, id) => extendEditIndex(b, strCol, path, Some(id)))
+      extendEditIndex(_, strCol, path, _))
 
   /** Cross-set edit join of `probes` against the INDEXED corpus —
     * [[editDistanceJoinAcross]]'s exact answer (spec-proven equal)

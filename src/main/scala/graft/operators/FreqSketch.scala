@@ -85,8 +85,9 @@ object FreqSketch {
   //   <path>/_meta/     generation manifests (graft.util.Manifest):
   //                     atomic shard commits + ledger + time travel
 
-  import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+  import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
+  import graft.util.ShardedStore
 
   private def sketchPath(p: String) = s"$p/sketch"
 
@@ -141,8 +142,7 @@ object FreqSketch {
   }
 
   private def writeShard(items: DataFrame, itemCol: String, path: String,
-                         shardId: String, capacity: Int,
-                         mode: SaveMode): Unit = {
+                         shardId: String, capacity: Int): Unit = {
     val spark = items.sparkSession
     import spark.implicits._
     val mg = udaf(new MisraGries(capacity))
@@ -157,59 +157,35 @@ object FreqSketch {
       .map { case (item, c) => (shardId, uid, item, c, n, capacity) }
       .toDF("shard_id", "shard_uid", "item", "cnt", "shard_n", "capacity")
       .coalesce(1)
-      .write.mode(mode).parquet(sketchPath(path))
+      .write.mode("append").parquet(sketchPath(path))
   }
 
-  /** Initialize the store from the first shard's items. OVERWRITE
-    * semantics: a re-run build (streaming batch-0 retry) rewrites the
-    * base summary instead of double-counting it.
+  /** The heavy-hitter store as a [[graft.util.ShardedStore]] —
+    * continuous dominant-phrase tracking, batch or streamed: the build
+    * and every extend run one Misra-Gries sketch pass over their
+    * tranche only and append the shard's own summary rows. A
+    * re-delivered ledgered shard is a no-op (doubled sketch counts
+    * would promote the re-run shard's items), a racing reader keeps the
+    * previous generation, and a crash before the commit leaves only
+    * unreferenced files. Summaries merge with the error-additive MG
+    * rule (file-layout-blind), so exact serving from the store carries
+    * the completeness condition of [[heavyTopKExact]].
+    *
+    * By default a tranche is a documents frame and its items are the
+    * word `n`-grams (the doc batch is widened before the explode — a
+    * narrow shuffle — so the sketch pass is not one-file-one-task
+    * serial). `itemCol = Some(c)` takes tranches whose column `c`
+    * already holds the items.
     */
-  def buildHeavyStore(items: DataFrame, itemCol: String, path: String,
-                      capacity: Int = 768,
-                      applied: Set[String] = Set.empty): Unit =
-    // Manifest.init clears the previous epoch wholesale — ledger
-    // included, so a replayed stream re-numbering its batches from 0
-    // is not silently no-opped by pre-rebuild ids
-    graft.util.Manifest.init(items.sparkSession, path, applied) {
-      writeShard(items, itemCol, path, "_base", capacity, SaveMode.Overwrite)
+  def heavyStore(path: String, n: Int = 2, capacity: Int = 768,
+                 itemCol: Option[String] = None): ShardedStore =
+    ShardedStore.additive(path, "sketch")(ShardedStore.Pin.none) {
+      (df, tag, _) => itemCol match {
+        case Some(c) => writeShard(df, c, path, tag, capacity)
+        case None =>
+          writeShard(TextOps.ngrams(widenToCores(df), n), "ngram", path, tag, capacity)
+      }
     }
-
-  /** Fold a new shard's summary in — one sketch pass over the SHARD
-    * only, committed as the next manifest generation: a re-delivered
-    * `shardId` is a no-op (doubled sketch counts would promote the
-    * re-run shard's items), a racing reader keeps the previous
-    * generation, and a crash before the commit leaves only
-    * unreferenced files.
-    */
-  def extendHeavyStore(items: DataFrame, itemCol: String, path: String,
-                       shardId: Option[String] = None,
-                       capacity: Int = 768): Unit = {
-    graft.util.Manifest.extend(items.sparkSession, path, shardId) {
-      writeShard(items, itemCol, path, shardId.getOrElse("_anon"), capacity,
-        SaveMode.Append)
-    }
-    ()
-  }
-
-  /** The n-gram heavy-hitter store as a streamed
-    * [[graft.util.ShardedStore]] over a documents stream — continuous
-    * dominant-phrase tracking: batch 0 initializes, later batches
-    * append their own (ledgered) Misra-Gries summary rows, so a Spark
-    * retry is a no-op instead of doubled counts promoting the re-run
-    * shard's items. Summaries merge with the error-additive MG rule
-    * (file-layout-blind), so exact serving from the streamed store
-    * carries the same completeness condition as the batch lifecycle.
-    */
-  def heavyStore(path: String, n: Int = 2,
-                 capacity: Int = 768): graft.util.ShardedStore = {
-    // widen the doc batch before the explode (narrow shuffle) so the
-    // shard's sketch pass is not one-file-one-task serial
-    def grams(docs: DataFrame) = TextOps.ngrams(widenToCores(docs), n)
-    graft.util.ShardedStore.onManifest(path, "sketch")(
-      (b, stamp) => buildHeavyStore(grams(b), "ngram", path, capacity, stamp),
-      (b, id) => extendHeavyStore(grams(b), "ngram", path, Some(id),
-        capacity = capacity))
-  }
 
   /** The merged store summary: shard maps folded with the MG merge rule
     * in shard-uid order (deterministic for a shard set; the rule

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.ShardedStore
 
 /** Incremental distinct-count store on HyperLogLog sketches — the
   * "distinct users per segment, updated daily" loop a lakehouse serves
@@ -24,7 +25,7 @@ import org.apache.spark.sql.functions._
   * UDF anywhere.
   *
   * Store layout mirrors the unigram vocab store
-  * ([[TextOps.extendVocab]]): `data/` parquet rows
+  * ([[TextOps.vocabStore]]): `data/` parquet rows
   * `(key..., hll binary)`, one row per (shard × key); commits ride
   * [[graft.util.Manifest]] generations (atomic visibility, crash-safe
   * retries, re-delivered extends are no-ops, time travel). Reference analogy: the dashboard's per-symbol distinct
@@ -44,30 +45,20 @@ object Hll {
     df.groupBy(keyCols.map(col): _*)
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("hll"))
 
-  /** Initialize the store from a first corpus tranche. */
-  def buildDistinctStore(df: DataFrame, keyCols: Seq[String], valueCol: String,
-                         path: String, lgK: Int = 12): Unit =
-    graft.util.Manifest.init(df.sparkSession, path) {
-      keySketches(df, keyCols, valueCol, lgK)
-        .write.mode(SaveMode.Overwrite).parquet(dataPath(path))
-    }
-
-  /** Fold a shard in: append the SHARD'S sketches (nothing existing is
-    * rewritten). `shardId` dedups re-delivery via the ledger — a
-    * doubled shard would not change the UNION (idempotent), but it
-    * would double the store's row count and the read-side merge work,
-    * so the ledger keeps extends exactly-once like every other index.
+  /** The distinct-count store as a [[graft.util.ShardedStore]]: the
+    * build and every extend append their tranche's per-key sketches
+    * (nothing existing is rewritten). A ledgered `shardId` dedups
+    * re-delivery — a doubled shard would not change the UNION
+    * (idempotent), but it would double the store's row count and the
+    * read-side merge work, so extends stay exactly-once like every
+    * other store's.
     */
-  def extendDistinctStore(shard: DataFrame, keyCols: Seq[String],
-                          valueCol: String, path: String,
-                          shardId: Option[String] = None,
-                          lgK: Int = 12): Unit = {
-    graft.util.Manifest.extend(shard.sparkSession, path, shardId) {
-      keySketches(shard, keyCols, valueCol, lgK)
-        .write.mode(SaveMode.Append).parquet(dataPath(path))
+  def distinctStore(path: String, keyCols: Seq[String], valueCol: String,
+                    lgK: Int = 12): ShardedStore =
+    ShardedStore.additive(path, "data")(ShardedStore.Pin.none) {
+      (df, _, _) =>
+        keySketches(df, keyCols, valueCol, lgK).write.mode("append").parquet(dataPath(path))
     }
-    ()
-  }
 
   /** Serve per-key distinct estimates from the store: union the
     * sketches per key (shards × keys rows in, |keys| out), estimate.

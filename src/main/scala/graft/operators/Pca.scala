@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.ShardedStore
 
 /** Distributed principal-component analysis over an embedding column —
   * the dimensionality-reduction stage a 100 TB embedding pipeline runs
@@ -819,7 +820,7 @@ object Pca {
     * Scale shape vs the banded arm: [[Similarity.crossMatches]] signs
     * the WHOLE corpus on every call (n · planes), while this path
     * probes `nprobe / nlist` of a corpus whose model is fit once and
-    * extended incrementally ([[buildIvfResidualStore]]) — the r14
+    * extended incrementally ([[residualStore]]) — the r14
     * two-arm measurements show the banded arm losing past ~5e5 on
     * clustered corpora, which is what [[crossDispatch]] prices.
     */
@@ -2019,15 +2020,14 @@ object Pca {
 
   private def writeResidualShard(emb: DataFrame, path: String,
                                  cents: Similarity.Cents, shardId: String,
-                                 vecCol: String,
-                                 mode: org.apache.spark.sql.SaveMode): Unit = {
+                                 vecCol: String): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
     residualMoments(emb, cents, vecCol).toSeq
       .map { case (cell, acc) => (shardId, cell, acc.toSeq) }
       .toDF("shard_id", "cell", "acc")
       .coalesce(1)
-      .write.mode(mode).parquet(s"$path/moments")
+      .write.mode("append").parquet(s"$path/moments")
   }
 
   private def writeCents(spark: SparkSession, path: String,
@@ -2036,8 +2036,7 @@ object Pca {
     cents.toSeq.map { case (cid, v, _) => (cid, v.toSeq) }
       .toDF("cid", "vec")
       .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/cents")
+      .write.parquet(s"$path/cents")
   }
 
   private def readCents(spark: SparkSession, path: String,
@@ -2049,62 +2048,32 @@ object Pca {
         (cid, v, math.sqrt(v.map(x => x.toDouble * x.toDouble).sum))
       }
 
-  /** Initialize the residual store: train (or adopt) the coarse
-    * layout, freeze it, and write the first tranche's per-cell
-    * moments. OVERWRITE semantics like every store build.
-    */
-  def buildIvfResidualStore(emb: DataFrame, path: String, nlist: Int = 0,
-                            coarseIters: Int = -1,
-                            vecCol: String = "embedding",
-                            centsOpt: Option[Similarity.Cents] = None,
-                            applied: Set[String] = Set.empty): Unit = {
-    val spark = emb.sparkSession
-    val n = emb.count()
-    val nlistUse = if (nlist > 0) nlist else Similarity.scaledIvfConfig(n)._1
-    val itersUse = if (coarseIters >= 0) coarseIters
-                   else Similarity.scaledIvfIters(nlistUse)
-    val cents = centsOpt.getOrElse(
-      Similarity.coarseCentroids(
-        emb.select(col("vec_id"), col(vecCol).as("embedding")),
-        nlistUse, itersUse))
-    graft.util.Manifest.init(spark, path, applied) {
-      writeCents(spark, path, cents)
-      writeResidualShard(emb, path, cents, "_base", vecCol,
-        org.apache.spark.sql.SaveMode.Overwrite)
-    }
-  }
-
-  /** Fold a new tranche's moments in — one scan of the TRANCHE only,
-    * assigned against the frozen layout; `shardId` makes a retried
-    * re-application a ledgered no-op instead of double-counted moments
-    * silently rotating every cell's axes.
-    */
-  def extendIvfResidualStore(emb: DataFrame, path: String,
-                             shardId: Option[String] = None,
-                             vecCol: String = "embedding"): Unit = {
-    val spark = emb.sparkSession
-    val cents = readCents(spark, path, None)
-    graft.util.Manifest.extend(spark, path, shardId) {
-      writeResidualShard(emb, path, cents, shardId.getOrElse("_anon"), vecCol,
-        org.apache.spark.sql.SaveMode.Append)
-    }
-    ()
-  }
-
-  /** The IVF residual model as a streamed [[graft.util.ShardedStore]] —
-    * continuous ANN ranking-model maintenance: batch 0 trains and
-    * FREEZES the coarse layout and writes the base moments, later
-    * batches assign against the frozen cells and append their own
-    * (ledgered) per-cell moment rows, so a Spark retry is a no-op
-    * instead of double-counted moments rotating every cell's axes.
-    * Moments are additive per cell, so refitting from the streamed
+  /** The IVF residual model as a [[graft.util.ShardedStore]] —
+    * continuous ANN ranking-model maintenance, batch or streamed: the
+    * build trains the coarse layout on its tranche (scaled to the
+    * tranche size), FREEZES it in `cents` and writes the tranche's
+    * per-cell moments; every extend scans its TRANCHE only, assigned
+    * against the frozen cells read back from the committed head, and
+    * appends its own per-cell moment rows. A re-delivered ledgered
+    * shard is a no-op instead of double-counted moments rotating every
+    * cell's axes. Moments are additive per cell, so refitting from the
     * store solves the same per-cell eigenproblems as a one-shot fit
-    * over everything streamed ([[ivfResidualStoreCheck]]).
+    * over everything folded in ([[ivfResidualStoreCheck]]).
     */
-  def residualStore(path: String): graft.util.ShardedStore =
-    graft.util.ShardedStore.onManifest(path, "moments")(
-      (b, stamp) => buildIvfResidualStore(b, path, applied = stamp),
-      (b, id) => extendIvfResidualStore(b, path, Some(id)))
+  def residualStore(path: String, vecCol: String = "embedding"): ShardedStore = {
+    val layout = ShardedStore.Pin[Similarity.Cents](
+      fit = { emb =>
+        val nlist = Similarity.scaledIvfConfig(emb.count())._1
+        Similarity.coarseCentroids(
+          emb.select(col("vec_id"), col(vecCol).as("embedding")),
+          nlist, Similarity.scaledIvfIters(nlist))
+      },
+      save = writeCents(_, path, _),
+      load = readCents(_, path, None))
+    ShardedStore.additive(path, "moments")(layout) { (emb, tag, cents) =>
+      writeResidualShard(emb, path, cents, tag, vecCol)
+    }
+  }
 
   /** Combined store moments per cell, shard rows summed in shard_id
     * order — deterministic for a given shard SET, independent of
@@ -2368,59 +2337,28 @@ object Pca {
   private def momentsPath(p: String) = s"$p/moments"
 
   private def writeMomentShard(emb: DataFrame, path: String, shardId: String,
-                               vecCol: String,
-                               mode: org.apache.spark.sql.SaveMode): Unit = {
+                               vecCol: String): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
     val (n, d, acc) = rawMoments(emb, vecCol)
     Seq((shardId, n, d, acc.toSeq)).toDF("shard_id", "n", "d", "acc")
       .coalesce(1)
-      .write.mode(mode).parquet(momentsPath(path))
+      .write.mode("append").parquet(momentsPath(path))
   }
 
-  /** Initialize the moment store from the first corpus tranche.
-    * OVERWRITE semantics (the idiom every other store build uses): a
-    * re-run — a Structured Streaming batch-0 retry of [[momentStore]]
-    * in [[graft.streaming.StreamedBatch.replayIntoStore]] —
-    * rewrites the base moments instead of double-counting them.
+  /** The moment store as a [[graft.util.ShardedStore]] — continuous
+    * dimensionality-reduction maintenance, batch or streamed: the build
+    * and every extend scan their tranche only (the indexed corpus is
+    * never re-read) and append ONE moment row. A re-delivered ledgered
+    * shard is a no-op instead of double-counted moments silently
+    * rotating every axis. Moments are additive, so refitting from the
+    * store solves the same eigenproblem as a one-shot fit over
+    * everything folded in ([[incrementalCheck]]).
     */
-  def buildMomentStore(emb: DataFrame, path: String,
-                       vecCol: String = "embedding",
-                       applied: Set[String] = Set.empty): Unit =
-    // Manifest.init clears the previous epoch — ledger included, so
-    // the old epoch's batch ids cannot no-op the new epoch's extends
-    graft.util.Manifest.init(emb.sparkSession, path, applied) {
-      writeMomentShard(emb, path, "_base", vecCol,
-        org.apache.spark.sql.SaveMode.Overwrite)
+  def momentStore(path: String, vecCol: String = "embedding"): ShardedStore =
+    ShardedStore.additive(path, "moments")(ShardedStore.Pin.none) { (emb, tag, _) =>
+      writeMomentShard(emb, path, tag, vecCol)
     }
-
-  /** Fold a new shard's moments into the store — one scan of the SHARD
-    * only (the indexed corpus is never re-read), one appended row.
-    * `shardId` makes a retried re-application a no-op instead of
-    * double-counted moments silently rotating every axis.
-    */
-  def extendMomentStore(emb: DataFrame, path: String,
-                        shardId: Option[String] = None,
-                        vecCol: String = "embedding"): Unit = {
-    graft.util.Manifest.extend(emb.sparkSession, path, shardId) {
-      writeMomentShard(emb, path, shardId.getOrElse("_anon"), vecCol,
-        org.apache.spark.sql.SaveMode.Append)
-    }
-    ()
-  }
-
-  /** The moment store as a streamed [[graft.util.ShardedStore]] —
-    * continuous dimensionality-reduction maintenance: batch 0
-    * initializes, later batches append their own (ledgered) moment
-    * rows, so a Spark retry is a no-op instead of double-counted
-    * moments rotating every axis. Moments are additive, so refitting
-    * from the streamed store solves the same eigenproblem as a one-shot
-    * fit over everything streamed ([[incrementalCheck]]).
-    */
-  def momentStore(path: String): graft.util.ShardedStore =
-    graft.util.ShardedStore.onManifest(path, "moments")(
-      (b, stamp) => buildMomentStore(b, path, applied = stamp),
-      (b, id) => extendMomentStore(b, path, Some(id)))
 
   /** Combined store moments, shard rows summed in shard_id order —
     * deterministic for a given shard SET, independent of append order

@@ -579,7 +579,7 @@ object Pq {
   def annStore(path: String): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path, "codes")(
       (b, stamp) => buildAnnIndex(b, path, applied = stamp),
-      (b, id) => extendAnnIndex(b, path, Some(id)))
+      extendAnnIndex(_, path, _))
 
   /** REBALANCE the stored index — the ANN store's OPTIMIZE: retrain
     * the coarse quantizer on the CURRENT corpus and rewrite the code

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.ShardedStore
 
 /** Mergeable ε-approximate quantile summaries over a numeric column —
   * the percentile-serving path for a 100 TB corpus: each data shard
@@ -87,7 +88,7 @@ object Quantiles {
   }
 
   private def writeShard(df: DataFrame, valueCol: String, path: String,
-                         shardId: String, eps: Double, mode: SaveMode): Unit = {
+                         shardId: String, eps: Double): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
     // empty shard (a streaming micro-batch with no non-null values):
@@ -104,56 +105,25 @@ object Quantiles {
     rows.toSeq.map { case (v, w) => (shardId, uid, v, w, n, r) }
       .toDF("shard_id", "shard_uid", "value", "weight", "shard_n", "r")
       .coalesce(1)
-      .write.mode(mode).parquet(summaryPath(path))
+      .write.mode("append").parquet(summaryPath(path))
   }
 
-  /** Initialize the store from the first corpus tranche. OVERWRITE
-    * semantics (the idiom every other store build uses): re-running the
-    * build — a Structured Streaming batch-0 retry of [[quantileStore]]
-    * in [[graft.streaming.StreamedBatch.replayIntoStore]] —
-    * rewrites the base summary instead of double-counting it.
-    */
-  def buildQuantileStore(df: DataFrame, valueCol: String, path: String,
-                         eps: Double = 0.01,
-                         applied: Set[String] = Set.empty): Unit =
-    // Manifest.init clears the previous epoch — ledger included, so
-    // the old epoch's batch ids cannot no-op the new epoch's extends
-    // (batch ids restart at 0 on a replayed stream)
-    graft.util.Manifest.init(df.sparkSession, path, applied) {
-      writeShard(df, valueCol, path, "_base", eps, SaveMode.Overwrite)
-    }
-
-  /** Fold a new shard's summary into the store — one sort of the SHARD
-    * only; the indexed corpus is never re-read. Committed as the next
-    * manifest generation: a re-delivered `shardId` is a no-op (doubled
-    * summary weight would shift every served rank by a whole shard), a
-    * racing reader keeps the previous generation, and an EMPTY shard
-    * commits its ledger id without contributing rows.
-    */
-  def extendQuantileStore(df: DataFrame, valueCol: String, path: String,
-                          shardId: Option[String] = None,
-                          eps: Double = 0.01): Unit = {
-    graft.util.Manifest.extend(df.sparkSession, path, shardId) {
-      writeShard(df, valueCol, path, shardId.getOrElse("_anon"), eps,
-        SaveMode.Append)
-    }
-    ()
-  }
-
-  /** The quantile-summary store as a streamed
-    * [[graft.util.ShardedStore]] — continuous percentile maintenance:
-    * batch 0 initializes, later batches append their own (ledgered)
-    * summary rows, so a Spark retry is a no-op instead of doubled
-    * weight shifting every served rank. Summaries merge by union, so
-    * serving from the streamed store (and from a row-preserving
-    * compaction of it) carries the same Σrᵢ rank-error contract as the
-    * batch lifecycle ([[quantileCheck]]).
+  /** The quantile-summary store as a [[graft.util.ShardedStore]] —
+    * continuous percentile maintenance, batch or streamed: the build
+    * summarizes the first tranche, every extend sorts only its SHARD
+    * (the indexed corpus is never re-read) and appends the shard's own
+    * summary rows. A re-delivered ledgered shard is a no-op (doubled
+    * weight would shift every served rank by a whole shard), a racing
+    * reader keeps the previous generation, and an EMPTY shard commits
+    * its ledger id without contributing rows. Summaries merge by union,
+    * so serving from the store (and from a row-preserving compaction
+    * of it) carries the Σrᵢ rank-error contract ([[quantileCheck]]).
     */
   def quantileStore(path: String, valueCol: String,
-                    eps: Double = 0.01): graft.util.ShardedStore =
-    graft.util.ShardedStore.onManifest(path, "summary")(
-      buildQuantileStore(_, valueCol, path, eps, _),
-      (b, id) => extendQuantileStore(b, valueCol, path, Some(id), eps = eps))
+                    eps: Double = 0.01): ShardedStore =
+    ShardedStore.additive(path, "summary")(ShardedStore.Pin.none) {
+      (df, tag, _) => writeShard(df, valueCol, path, tag, eps)
+    }
 
   /** The merged summary, collected and value-sorted — bounded by
     * construction at Σᵢ (1/eps + 1) rows, independent of corpus size.

@@ -162,7 +162,7 @@ object TextIndex {
   def indexStore(path: String): graft.util.ShardedStore =
     graft.util.ShardedStore.onManifest(path)(
       (b, stamp) => buildTextIndex(b, path, applied = stamp),
-      (b, id) => extendTextIndex(b, path, Some(id)))
+      extendTextIndex(_, path, _))
       .copy(compact = (spark, threshold) =>
         autoCompactIndex(spark, path, threshold))
 

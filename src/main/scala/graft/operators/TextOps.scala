@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.ShardedStore
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token statistics, quality scoring, language ID, and document
@@ -227,9 +228,9 @@ object TextOps {
     * re-delivery). Scoring against the streamed store equals
     * from-scratch [[noveltyScore]] over everything streamed.
     */
-  def gramStore(path: String, n: Int = 2): graft.util.ShardedStore =
-    graft.util.ShardedStore.onManifest(path, "grams")(
-      buildGramStore(_, path, n, _), (b, id) => extendGramStore(b, path, Some(id)))
+  def gramStore(path: String, n: Int = 2): ShardedStore =
+    ShardedStore.onManifest(path, "grams")(
+      buildGramStore(_, path, n, _), extendGramStore(_, path, _))
 
   /** Score docs' novelty against the STORED reference — the serving
     * side of the loop: old reference text is never re-shingled, the
@@ -268,48 +269,19 @@ object TextOps {
   private def tokenCounts(docs: DataFrame, unicode: Boolean): DataFrame =
     docTokens(docs, unicode).groupBy(col("w")).agg(count(lit(1)).as("c"))
 
-  /** Initialize the vocabulary store with `docs`' token counts as
-    * generation 0 (any previous epoch at `path` is cleared — its
-    * ledger must not no-op the new epoch's shards).
+  /** The vocabulary as a [[graft.util.ShardedStore]] — the corpus-LM
+    * maintenance loop, batch or streamed: the build writes the first
+    * tranche's token counts, every extend APPENDS a shard's own count
+    * rows (readers merge by summation, so nothing existing is
+    * rewritten). A re-delivered ledgered shard is a no-op — doubled
+    * count rows would silently skew every later score. Scoring against
+    * the store equals from-scratch [[unigramLogprob]] over everything
+    * folded in, and a row-preserving compaction cannot move any score.
     */
-  def buildVocab(docs: DataFrame, path: String, unicode: Boolean = false,
-                 applied: Set[String] = Set.empty): Unit =
-    graft.util.Manifest.init(docs.sparkSession, path, applied) {
-      tokenCounts(docs, unicode)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(vocabPath(path))
+  def vocabStore(path: String, unicode: Boolean = false): ShardedStore =
+    ShardedStore.additive(path, "vocab")(ShardedStore.Pin.none) { (docs, _, _) =>
+      tokenCounts(docs, unicode).write.mode("append").parquet(vocabPath(path))
     }
-
-  /** Fold a shard's token counts into the store — a parquet APPEND of
-    * the shard's own count rows (readers merge by summation, so
-    * nothing existing is rewritten), committed as the next manifest
-    * generation: readers racing the extend keep resolving the previous
-    * generation, a crash mid-append leaves only unreferenced files,
-    * and a `shardId` already in the ledger makes the whole call a
-    * no-op — doubled count rows would silently skew every later score.
-    */
-  def extendVocab(newDocs: DataFrame, path: String, unicode: Boolean = false,
-                  shardId: Option[String] = None): Unit = {
-    graft.util.Manifest.extend(newDocs.sparkSession, path, shardId) {
-      tokenCounts(newDocs, unicode)
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(vocabPath(path))
-    }
-    ()
-  }
-
-  /** The vocabulary as a streamed [[graft.util.ShardedStore]] — the
-    * corpus-LM maintenance loop as a live stream: batch 0 initializes,
-    * later batches append their own count rows ([[extendVocab]] under
-    * the ledgered batch id, so a Spark retry is a no-op instead of
-    * doubled counts skewing every later score). Counts merge by
-    * summation, so scoring against the streamed store equals
-    * from-scratch [[unigramLogprob]] over everything streamed, and a
-    * row-preserving compaction cannot move any score.
-    */
-  def vocabStore(path: String): graft.util.ShardedStore =
-    graft.util.ShardedStore.onManifest(path, "vocab")(
-      (b, stamp) => buildVocab(b, path, applied = stamp),
-      (b, id) => extendVocab(b, path, shardId = Some(id)))
 
   /** The store's merged vocabulary: `(w, c)` summed across the shard
     * files of one committed generation (the newest when `asOf` is

@@ -228,11 +228,12 @@ object StreamedBatch {
     * every store family (candles, ANN, near-dup, containment, edit,
     * search index, vocabulary, seen spans, reference grams, DSIR
     * target, NB model, PCA moments, residual moments, quantile
-    * summaries, heavy hitters, Bloom filters, the merge table).
+    * summaries, heavy hitters, Bloom filters, HLL sketches, the merge
+    * table).
     *
     * Exactly-once end to end on plain parquet: batch 0 builds the
-    * store, every later batch extends it under its batch id as the
-    * ledgered shard id, and Structured Streaming re-runs a failed
+    * store with its own shard id as the ledger, every later batch
+    * extends it under its batch id as the ledgered shard id, and Structured Streaming re-runs a failed
     * micro-batch with the SAME batch id — so the re-application is a
     * ledger no-op (the foreachBatch idempotent-sink contract).
     *
@@ -276,9 +277,9 @@ object StreamedBatch {
         .option("checkpointLocation", new File(work, "ckpt").getAbsolutePath)
         .foreachBatch { (batch: DataFrame, id: Long) =>
           kill(id, "before")
-          if (id > 0) store.extend(batch, ShardedStore.shardId(id))
+          if (id > 0) store.extend(batch, Some(ShardedStore.shardId(id)))
           else if (!(resume && ShardedStore.builtOnManifest(spark, store.path)))
-            store.build(batch)
+            store.build(batch, Set(ShardedStore.shardId(0)))
           kill(id, "after-apply")
           if (autoCompact > 0) store.compact(spark, autoCompact)
           kill(id, "after-compact")

@@ -203,17 +203,17 @@ object Lake {
     * data + its per-file stats in one commit). `df` should be
     * key-unique on `keys` — merges preserve that invariant, they don't
     * create it. Keys must be top-level atomic columns: merge pruning
-    * reads their per-file stats. `shardId` lands in generation 0's
-    * ledger, so a replayed build (e.g. a streaming sink's batch 0
+    * reads their per-file stats. `applied` is generation 0's ledger,
+    * so a replayed build (e.g. a streaming sink's batch 0
     * re-run after the table already exists) can prove itself
     * already-applied instead of re-clearing the table.
     */
   def mergeInit(spark: SparkSession, path: String, df: DataFrame,
-                keys: Seq[String], shardId: Option[String] = None): Unit = {
+                keys: Seq[String], applied: Set[String] = Set.empty): Unit = {
     require(keys.nonEmpty && keys.forall(statsColumns(df.schema).contains),
       s"mergeInit: keys ${keys.mkString(",")} must be top-level columns " +
         "of an atomic type in the frame")
-    Manifest.init(spark, path, shardId.toSet) {
+    Manifest.init(spark, path, applied) {
       df.write.mode(SaveMode.Overwrite).parquet(s"$path/$MergeDataSub")
       mergeStatsFor(spark, path, dataFileNames(spark, path))
         .coalesce(1).write.mode(SaveMode.Append)
@@ -742,21 +742,20 @@ object Lake {
         .filter(col("__rn") === 1).drop("__rn")
     }
     ShardedStore(path,
-      build = { batch =>
+      init = { (batch, applied) =>
         val live = opCol.fold(latest(batch))(op =>
           latest(batch).filter(col(op) =!= deleteOp).drop(op))
         mergeInit(batch.sparkSession, path,
-          live.repartitionByRange(4, keys.map(col): _*), keys,
-          shardId = Some(ShardedStore.shardId(0)))
+          live.repartitionByRange(4, keys.map(col): _*), keys, applied)
       },
-      extend = (batch, shardId) => opCol match {
+      append = (batch, shardId) => opCol match {
         case None =>
-          merge(batch.sparkSession, path, latest(batch), keys, Some(shardId))
+          merge(batch.sparkSession, path, latest(batch), keys, shardId)
         case Some(op) =>
           // latest-per-key resolution guarantees one operation per key
           // per batch — applyChanges' contract
           applyChanges(batch.sparkSession, path, latest(batch), keys, op,
-            deleteOp, shardId = Some(shardId))
+            deleteOp, shardId = shardId)
       },
       compact = mergeAutoCompact(_, path, keys, _))
   }

@@ -260,8 +260,7 @@ class AnnDispatchSpec extends SparkSuite with Matchers {
     val cents = Similarity.coarseCentroids(
       Pca.project(clustered, model, projCol = "embedding"), 16, iters = 3)
     val rmodel = Pca.fitIvfResidual(clustered, kDims = 16, nlist = 16)
-    val path = java.nio.file.Files.createTempDirectory("graft-disp-spec")
-      .toString
+    val path = graft.util.Scratch.dir("graft-disp-spec").toString
     val built = Pca.buildAnnDispatchStore(clustered, path, model, cents,
       rmodel)
     built.n shouldBe clustered.count()

@@ -9,7 +9,7 @@ class BloomSpec extends SparkSuite with Matchers {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("bloom-spec").toString
+    graft.util.Scratch.dir("bloom-spec").toString
 
   // dim keys 0,3,6,...,297 (100 keys); fact keys 0..999 — the
   // non-member fraction is large enough that pruning must bite
@@ -20,12 +20,13 @@ class BloomSpec extends SparkSuite with Matchers {
 
   test("store lifecycle: build + extends == one-shot filter; join bit-identical") {
     val store = tmp()
-    Bloom.buildBloomStore(dim.filter($"k" < 100), "k", store, expectedKeys = 1000)
-    Bloom.extendBloomStore(dim.filter($"k" >= 100 && $"k" < 200), "k", store, Some("t1"))
-    Bloom.extendBloomStore(dim.filter($"k" >= 200), "k", store, Some("t2"))
+    val bloom = Bloom.bloomStore(store, "k", expectedKeys = 1000)
+    bloom.build(dim.filter($"k" < 100))
+    bloom.extend(dim.filter($"k" >= 100 && $"k" < 200), Some("t1"))
+    bloom.extend(dim.filter($"k" >= 200), Some("t2"))
     // re-delivery: ledgered no-op, row count unchanged
     val rows = graft.util.Manifest.read(spark, store, "filter").count()
-    Bloom.extendBloomStore(dim.filter($"k" >= 100 && $"k" < 200), "k", store, Some("t1"))
+    bloom.extend(dim.filter($"k" >= 100 && $"k" < 200), Some("t1"))
     graft.util.Manifest.read(spark, store, "filter").count() shouldBe rows
     // no false negatives: every dim key passes the merged filter
     val merged = Bloom.mergedFilter(spark, store)
@@ -42,7 +43,7 @@ class BloomSpec extends SparkSuite with Matchers {
 
   test("semiFilter prunes: survivors are a small superset of true members") {
     val store = tmp()
-    Bloom.buildBloomStore(dim, "k", store, expectedKeys = 1000, fpp = 0.01)
+    Bloom.bloomStore(store, "k", expectedKeys = 1000, fpp = 0.01).build(dim)
     val kept = Bloom.semiFilter(fact, "fk", store).count()
     val members = fact.join(dim, $"fk" === $"k").count()
     // one-sided: every member survives ...
@@ -55,8 +56,9 @@ class BloomSpec extends SparkSuite with Matchers {
 
   test("filter geometry is fixed by the build and shards stay mergeable") {
     val store = tmp()
-    Bloom.buildBloomStore(dim.limit(10), "k", store, expectedKeys = 512, fpp = 0.02)
-    Bloom.extendBloomStore(dim, "k", store, Some("s1"))
+    val bloom = Bloom.bloomStore(store, "k", expectedKeys = 512, fpp = 0.02)
+    bloom.build(dim.limit(10))
+    bloom.extend(dim, Some("s1"))
     val f = graft.util.Manifest.read(spark, store, "filter")
       .select("expected", "fpp").distinct().collect()
     f.length shouldBe 1
@@ -70,9 +72,9 @@ class BloomSpec extends SparkSuite with Matchers {
 
   test("asOf time travel: generation 0 does not know later shards' keys") {
     val store = tmp()
-    Bloom.buildBloomStore(dim.filter($"k" < 100), "k", store,
-      expectedKeys = 1000, fpp = 0.001)
-    Bloom.extendBloomStore(dim.filter($"k" >= 100), "k", store, Some("t1"))
+    val bloom = Bloom.bloomStore(store, "k", expectedKeys = 1000, fpp = 0.001)
+    bloom.build(dim.filter($"k" < 100))
+    bloom.extend(dim.filter($"k" >= 100), Some("t1"))
     val g0 = Bloom.mergedFilter(spark, store, asOf = Some(0))
     // keys from the later shard: overwhelmingly absent at fpp 0.1%
     val lateKeys = dim.filter($"k" >= 100).select("k").as[Long].collect()

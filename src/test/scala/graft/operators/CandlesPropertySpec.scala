@@ -100,7 +100,7 @@ class CandlesPropertySpec extends SparkSuite with Matchers {
       val df = trades.toDF("event_id", "ts", "event_type", "units")
         .withColumn("value", (col("units") / lit(100000000L)).cast("decimal(18,8)"))
         .drop("units")
-      val store = java.nio.file.Files.createTempDirectory("candle-dec").toString
+      val store = graft.util.Scratch.dir("candle-dec").toString
       // build plus two ledgered updates: shard = event_id mod 3
       def shard(i: Int) = df.filter(pmod(col("event_id"), lit(3)) === i)
       Candles.buildCandleStore(shard(0), store)

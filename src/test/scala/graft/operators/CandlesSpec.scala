@@ -106,7 +106,7 @@ class CandlesSpec extends SparkSuite with Matchers {
 
   test("store lifecycle: build + in-place update equals full recompute") {
     val ev = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
-    val store = java.nio.file.Files.createTempDirectory("candle-store").toString
+    val store = graft.util.Scratch.dir("candle-store").toString
     Candles.buildCandleStore(ev.filter(pmod(col("event_id"), lit(3)) === 1), store)
     Candles.updateCandleStore(ev.filter(pmod(col("event_id"), lit(3)) === 2), store)
     val t12 = ev.filter(pmod(col("event_id"), lit(3)) =!= 0)
@@ -125,7 +125,7 @@ class CandlesSpec extends SparkSuite with Matchers {
     val day2 = Seq(
       (3L, ts("2026-01-02 09:00:00"), "BTC", 99.0),
       (4L, ts("2026-01-02 09:00:30"), "ETH", 10.0))
-    val store = java.nio.file.Files.createTempDirectory("candle-part").toString
+    val store = graft.util.Scratch.dir("candle-part").toString
     Candles.buildCandleStore((day1 ++ day2)
       .toDF("event_id", "ts", "event_type", "value"), store)
     // a date's live files in the newest committed manifest
@@ -155,7 +155,7 @@ class CandlesSpec extends SparkSuite with Matchers {
   }
 
   test("updateCandleStore with a shardId is idempotent under re-application") {
-    val store = java.nio.file.Files.createTempDirectory("candle-ledger").toString
+    val store = graft.util.Scratch.dir("candle-ledger").toString
     Candles.buildCandleStore(Seq(
       (1L, ts("2026-01-01 10:00:05"), "BTC", 100.0))
       .toDF("event_id", "ts", "event_type", "value"), store)
@@ -175,7 +175,7 @@ class CandlesSpec extends SparkSuite with Matchers {
   test("compactCandleStore: N update generations collapse to one; answers, " +
       "time travel, and the shard ledger survive") {
     val ev = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
-    val store = java.nio.file.Files.createTempDirectory("candle-compact").toString
+    val store = graft.util.Scratch.dir("candle-compact").toString
     val t = pmod(col("event_id"), lit(4))
     Candles.buildCandleStore(ev.filter(t === 0), store)
     Candles.updateCandleStore(ev.filter(t === 1), store,
@@ -222,7 +222,7 @@ class CandlesSpec extends SparkSuite with Matchers {
   }
 
   test("updateCandleStore with an empty shard is a no-op") {
-    val store = java.nio.file.Files.createTempDirectory("candle-empty").toString
+    val store = graft.util.Scratch.dir("candle-empty").toString
     Candles.buildCandleStore(Seq(
       (1L, ts("2026-01-01 10:00:05"), "BTC", 100.0))
       .toDF("event_id", "ts", "event_type", "value"), store)
@@ -235,7 +235,7 @@ class CandlesSpec extends SparkSuite with Matchers {
 
   test("readers resolve a committed generation: a snapshot taken before " +
       "an update still reads consistently after it commits") {
-    val store = java.nio.file.Files.createTempDirectory("candle-snap").toString
+    val store = graft.util.Scratch.dir("candle-snap").toString
     Candles.buildCandleStore(Seq(
       (1L, ts("2026-01-01 10:00:05"), "BTC", 100.0),
       (2L, ts("2026-01-02 09:00:00"), "BTC", 99.0))
@@ -259,7 +259,7 @@ class CandlesSpec extends SparkSuite with Matchers {
 
   test("candlesFromStore asOf reads retained generations (time travel) " +
       "and the retention horizon bounds it") {
-    val store = java.nio.file.Files.createTempDirectory("candle-tt").toString
+    val store = graft.util.Scratch.dir("candle-tt").toString
     def shard(id: Long, t: String, price: Double) =
       Seq((id, ts(t), "BTC", price)).toDF("event_id", "ts", "event_type", "value")
     Candles.buildCandleStore(shard(1, "2026-01-01 10:00:05", 100.0), store)
@@ -284,7 +284,7 @@ class CandlesSpec extends SparkSuite with Matchers {
 
   test("candleStoreChanges: typed insert/update feed between generations; " +
       "reverse diff flips inserts to deletes; unchanged keys drop out") {
-    val store = java.nio.file.Files.createTempDirectory("candle-cdf").toString
+    val store = graft.util.Scratch.dir("candle-cdf").toString
     def shard(rows: (Long, String, String, Double)*) =
       rows.map { case (id, t, sym, p) => (id, ts(t), sym, p) }
         .toDF("event_id", "ts", "event_type", "value")

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 import graft.SparkSuite
@@ -92,15 +90,16 @@ class ClassifierSpec extends SparkSuite with Matchers {
 
   test("stored model: build + extends == from-scratch; re-delivered " +
       "shard is a ledgered no-op") {
-    val path = Files.createTempDirectory("graft-nb-spec").toString
+    val path = graft.util.Scratch.dir("graft-nb-spec").toString
     val s1 = labeled.filter(col("doc_id") <= 11)  // all "code"
     val s2 = labeled.filter(col("doc_id") === 12)
     val s3 = labeled.filter(col("doc_id") === 13)
-    Classifier.buildNbModel(s1, path, "lang")
-    Classifier.extendNbModel(s2, path, "lang", shardId = Some("s2"))
-    Classifier.extendNbModel(s3, path, "lang", shardId = Some("s3"))
+    val model = Classifier.nbStore(path, "lang")
+    model.build(s1)
+    model.extend(s2, Some("s2"))
+    model.extend(s3, Some("s3"))
     // re-delivery: must not double s2's counts
-    Classifier.extendNbModel(s2, path, "lang", shardId = Some("s2"))
+    model.extend(s2, Some("s2"))
     val stored = Classifier.classifyWithModel(unlabeled, path)
       .orderBy("doc_id").collect()
     val scratch = Classifier.naiveBayes(unlabeled, labeled, "lang")

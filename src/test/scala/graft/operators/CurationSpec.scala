@@ -523,14 +523,15 @@ class CurationSpec extends SparkSuite with Matchers {
     val sf = "/root/testdata/sf0.001"
     val d = spark.read.parquet(s"$sf/documents.parquet")
     val tgt = d.filter(col("doc_id") % 7 === 0)
-    val store = java.nio.file.Files.createTempDirectory("dsir-store-").toString
+    val store = graft.util.Scratch.dir("dsir-store-").toString
     val t = pmod(col("doc_id"), lit(3))
-    Curation.buildDsirTarget(tgt.filter(t === 0), store)
-    Curation.extendDsirTarget(tgt.filter(t === 1), store, Some("t1"))
-    Curation.extendDsirTarget(tgt.filter(t === 2), store, Some("t2"))
+    val dsir = Curation.dsirStore(store)
+    dsir.build(tgt.filter(t === 0))
+    dsir.extend(tgt.filter(t === 1), Some("t1"))
+    dsir.extend(tgt.filter(t === 2), Some("t2"))
     // re-delivery: counts must not double (doubled target mass would
     // shift every weight)
-    Curation.extendDsirTarget(tgt.filter(t === 1), store, Some("t1"))
+    dsir.extend(tgt.filter(t === 1), Some("t1"))
     val viaStore = Curation.dsirAgainstStore(d, store)
       .as[(Long, Double)].collect().toMap
     val scratch = Curation.dsirLogWeights(d, tgt)

@@ -360,7 +360,7 @@ class DedupSpec extends SparkSuite with Matchers {
     val corpus0 = docs.filter(col("doc_id") % 3 === 0)
     val corpus1 = docs.filter(col("doc_id") % 3 === 1)
     val probes = docs.filter(col("doc_id") % 3 === 2)
-    val path = java.nio.file.Files.createTempDirectory("cont-idx").toString
+    val path = graft.util.Scratch.dir("cont-idx").toString
     Dedup.buildContainmentIndex(corpus0, path)
     // the indexed probe has the same dense-regime path choice as the
     // from-scratch form — assert equality on BOTH branches (this dense
@@ -441,7 +441,7 @@ class DedupSpec extends SparkSuite with Matchers {
   }
 
   test("incremental index: build + incrementalPairs == from-scratch minhashLsh") {
-    val path = java.nio.file.Files.createTempDirectory("dedup-idx").toString
+    val path = graft.util.Scratch.dir("dedup-idx").toString
     val old = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
     val fresh = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
     val oldPairs = Dedup.buildNearDupIndex(old, path, n = 2, threshold = 0.5)
@@ -528,7 +528,7 @@ class DedupSpec extends SparkSuite with Matchers {
     // the whole build→increment→extend loop at the multi-probe
     // recall/cost point (quarter hash budget): stored ∪ incremental
     // pairs must equal the from-scratch multi-probe operator
-    val path = java.nio.file.Files.createTempDirectory("dedup-idx-mp").toString
+    val path = graft.util.Scratch.dir("dedup-idx-mp").toString
     val s0 = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
     val s1 = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
     val s2 = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
@@ -563,7 +563,7 @@ class DedupSpec extends SparkSuite with Matchers {
   }
 
   test("span-index lifecycle: build/increment/extend equals from-scratch per tranche") {
-    val path = java.nio.file.Files.createTempDirectory("span-idx").toString
+    val path = graft.util.Scratch.dir("span-idx").toString
     val mx = docs.agg(max("doc_id")).head().getLong(0)
     val t1 = docs.filter(col("doc_id") <= mx / 3)
     val t2 = docs.filter(col("doc_id") > mx / 3 && col("doc_id") <= mx * 2 / 3)
@@ -585,7 +585,7 @@ class DedupSpec extends SparkSuite with Matchers {
   }
 
   test("extendIndex folds a shard in; second increment still equals from-scratch") {
-    val path = java.nio.file.Files.createTempDirectory("dedup-idx2").toString
+    val path = graft.util.Scratch.dir("dedup-idx2").toString
     // three daily shards by doc_id mod 3
     val s0 = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
     val s1 = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
@@ -602,7 +602,7 @@ class DedupSpec extends SparkSuite with Matchers {
 
   test("extendIndex and extendSpanIndex with a shardId are idempotent " +
       "under re-application") {
-    val path = java.nio.file.Files.createTempDirectory("dedup-ledger").toString
+    val path = graft.util.Scratch.dir("dedup-ledger").toString
     val t = pmod(col("doc_id"), lit(3))
     Dedup.buildNearDupIndex(docs.filter(t === 1), path, n = 2, threshold = 0.5)
     val shard = docs.filter(t === 2)
@@ -616,7 +616,7 @@ class DedupSpec extends SparkSuite with Matchers {
     spark.read.parquet(s"$path/sets").count() shouldBe sets
     Dedup.indexedPairs(spark, path).count() shouldBe pairs
 
-    val spath = java.nio.file.Files.createTempDirectory("span-ledger").toString
+    val spath = graft.util.Scratch.dir("span-ledger").toString
     Dedup.buildSpanIndex(docs.filter(t === 1), spath)
     Dedup.extendSpanIndex(shard, spath, shardId = Some("day-2"))
     val spans = spark.read.parquet(s"$spath/spans").count()
@@ -625,7 +625,7 @@ class DedupSpec extends SparkSuite with Matchers {
   }
 
   test("extendComponents merges existing components through new bridge pairs") {
-    val path = java.nio.file.Files.createTempDirectory("comp-idx").toString
+    val path = graft.util.Scratch.dir("comp-idx").toString
     // two disjoint components {1,2} and {3,4}
     Dedup.buildComponents(Seq((1L, 2L), (3L, 4L)).toDF("doc_a", "doc_b"), path)
     Dedup.indexedComponents(spark, path).orderBy("doc_id")
@@ -644,7 +644,7 @@ class DedupSpec extends SparkSuite with Matchers {
   }
 
   test("incremental components: build + extend + merged view == from-scratch closure") {
-    val path = java.nio.file.Files.createTempDirectory("comp-idx2").toString
+    val path = graft.util.Scratch.dir("comp-idx2").toString
     val pairs = Dedup.ngramJaccard(docs, n = 2, threshold = 0.5)
     val t = pmod(col("doc_a") + col("doc_b"), lit(3))
     Dedup.buildComponents(pairs.filter(t === 0), path)
@@ -760,7 +760,7 @@ class DedupSpec extends SparkSuite with Matchers {
     val corpus0 = keyed.filter(col("doc_id") % 3 === 0)
     val corpus1 = keyed.filter(col("doc_id") % 3 === 1)
     val probes = keyed.filter(col("doc_id") % 3 === 2)
-    val path = java.nio.file.Files.createTempDirectory("edit-idx").toString
+    val path = graft.util.Scratch.dir("edit-idx").toString
     Dedup.buildEditIndex(corpus0, "k", path, maxDist = 2)
     def probe() = Dedup.editAcrossIndexed(probes, "k", path)
       .orderBy("doc_id", "probe_id").collect()

@@ -49,8 +49,8 @@ class FreqSketchSpec extends SparkSuite with Matchers {
     // the completeness condition can never be proven
     val items = (0 until 30).flatMap(i => Seq.fill(2)(f"w$i%02d"))
       .toDF("item")
-    val store = java.nio.file.Files.createTempDirectory("heavy-guard-").toString
-    FreqSketch.buildHeavyStore(items, "item", store, capacity = 2)
+    val store = graft.util.Scratch.dir("heavy-guard-").toString
+    FreqSketch.heavyStore(store, capacity = 2, itemCol = Some("item")).build(items)
     // default: loud refusal, never an implicit corpus-sized GROUP BY
     val ex = intercept[IllegalArgumentException] {
       FreqSketch.heavyTopKExact(items, "item", store, k = 5)

@@ -15,11 +15,12 @@ class HllSpec extends SparkSuite with Matchers {
 
   test("store after build + extends serves the one-shot sketch estimates exactly") {
     val df = corpus(30000, 3, 5000)
-    val store = java.nio.file.Files.createTempDirectory("hll-store").toString
+    val store = graft.util.Scratch.dir("hll-store").toString
     val t = pmod(hash(col("v") + 1), lit(3))
-    Hll.buildDistinctStore(df.filter(t === 0), Seq("k"), "v", store)
-    Hll.extendDistinctStore(df.filter(t === 1), Seq("k"), "v", store, Some("s1"))
-    Hll.extendDistinctStore(df.filter(t === 2), Seq("k"), "v", store, Some("s2"))
+    val hll = Hll.distinctStore(store, Seq("k"), "v")
+    hll.build(df.filter(t === 0))
+    hll.extend(df.filter(t === 1), Some("s1"))
+    hll.extend(df.filter(t === 2), Some("s2"))
     val fromStore = Hll.distinctCounts(spark, store, Seq("k"))
       .orderBy("k").as[(String, Long)].collect()
     val oneShot = Hll.distinctOneShot(df, Seq("k"), "v")
@@ -42,14 +43,15 @@ class HllSpec extends SparkSuite with Matchers {
 
   test("a re-delivered shard is a no-op: store rows and estimates unchanged") {
     val df = corpus(10000, 2, 2000)
-    val store = java.nio.file.Files.createTempDirectory("hll-retry").toString
+    val store = graft.util.Scratch.dir("hll-retry").toString
     val t = pmod(hash(col("v") + 1), lit(2))
-    Hll.buildDistinctStore(df.filter(t === 0), Seq("k"), "v", store)
-    Hll.extendDistinctStore(df.filter(t === 1), Seq("k"), "v", store, Some("day1"))
+    val hll = Hll.distinctStore(store, Seq("k"), "v")
+    hll.build(df.filter(t === 0))
+    hll.extend(df.filter(t === 1), Some("day1"))
     val rows = spark.read.parquet(s"$store/data").count()
     val before = Hll.distinctCounts(spark, store, Seq("k"))
       .orderBy("k").as[(String, Long)].collect()
-    Hll.extendDistinctStore(df.filter(t === 1), Seq("k"), "v", store, Some("day1"))
+    hll.extend(df.filter(t === 1), Some("day1"))
     spark.read.parquet(s"$store/data").count() shouldBe rows
     Hll.distinctCounts(spark, store, Seq("k"))
       .orderBy("k").as[(String, Long)].collect() shouldBe before
@@ -57,11 +59,12 @@ class HllSpec extends SparkSuite with Matchers {
 
   test("store size is sketch-bounded: rows = shards x keys, independent of corpus") {
     val df = corpus(50000, 4, 10000)
-    val store = java.nio.file.Files.createTempDirectory("hll-size").toString
+    val store = graft.util.Scratch.dir("hll-size").toString
     val t = pmod(hash(col("v") + 1), lit(3))
-    Hll.buildDistinctStore(df.filter(t === 0), Seq("k"), "v", store)
-    Hll.extendDistinctStore(df.filter(t === 1), Seq("k"), "v", store, Some("a"))
-    Hll.extendDistinctStore(df.filter(t === 2), Seq("k"), "v", store, Some("b"))
+    val hll = Hll.distinctStore(store, Seq("k"), "v")
+    hll.build(df.filter(t === 0))
+    hll.extend(df.filter(t === 1), Some("a"))
+    hll.extend(df.filter(t === 2), Some("b"))
     spark.read.parquet(s"$store/data").count() shouldBe 12L // 3 shards x 4 keys
   }
 }

@@ -76,7 +76,7 @@ class MultimodalSpec extends SparkSuite with Matchers {
   }
 
   test("image files round-trip the binaryFile source byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("mm-binfiles").toString
+    val dir = graft.util.Scratch.dir("mm-binfiles").toString
     val imgTable = Multimodal.asImageTable(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60))
     val n = Multimodal.writeImageFiles(imgTable, dir)
@@ -91,7 +91,7 @@ class MultimodalSpec extends SparkSuite with Matchers {
 
   test("writeImageFiles on an image-free input returns 0 and leaves an " +
       "empty (but present) directory") {
-    val dir = java.nio.file.Files.createTempDirectory("mm-binfiles-empty").toString
+    val dir = graft.util.Scratch.dir("mm-binfiles-empty").toString
     val imgTable = Multimodal.asImageTable(
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60))
     val none = imgTable.filter(col("meta.media_type") === "nothing-matches")

@@ -168,12 +168,13 @@ class PcaSpec extends SparkSuite with Matchers {
 
   test("ivfResidual store: lifecycle contract + ledger no-op") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val store = java.nio.file.Files.createTempDirectory("rproj-spec-").toString
+    val store = graft.util.Scratch.dir("rproj-spec-").toString
     val t = pmod(col("vec_id"), lit(3))
-    Pca.buildIvfResidualStore(emb.filter(t === 0), store)
-    Pca.extendIvfResidualStore(emb.filter(t === 1), store, Some("t1"))
-    Pca.extendIvfResidualStore(emb.filter(t === 2), store, Some("t2"))
-    Pca.extendIvfResidualStore(emb.filter(t === 1), store, Some("t1")) // no-op
+    val residual = Pca.residualStore(store)
+    residual.build(emb.filter(t === 0))
+    residual.extend(emb.filter(t === 1), Some("t1"))
+    residual.extend(emb.filter(t === 2), Some("t2"))
+    residual.extend(emb.filter(t === 1), Some("t1")) // no-op
     val row = Pca.ivfResidualStoreCheck(emb, store, kDims = 8,
       expectShards = 3).head()
     for (i <- 0 until 4) withClue(s"flag $i:") {
@@ -198,11 +199,12 @@ class PcaSpec extends SparkSuite with Matchers {
   test("ivfResidual store: non-vacuous — an unledgered double apply " +
       "breaks moments_match") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val store = java.nio.file.Files.createTempDirectory("rproj-spec-").toString
+    val store = graft.util.Scratch.dir("rproj-spec-").toString
     val t = pmod(col("vec_id"), lit(2))
-    Pca.buildIvfResidualStore(emb.filter(t === 0), store)
-    Pca.extendIvfResidualStore(emb.filter(t === 1), store)
-    Pca.extendIvfResidualStore(emb.filter(t === 1), store)
+    val residual = Pca.residualStore(store)
+    residual.build(emb.filter(t === 0))
+    residual.extend(emb.filter(t === 1), None)
+    residual.extend(emb.filter(t === 1), None)
     val row = Pca.ivfResidualStoreCheck(emb, store, kDims = 8,
       expectShards = 3).head()
     row.getBoolean(0) shouldBe false // moments_match
@@ -210,15 +212,16 @@ class PcaSpec extends SparkSuite with Matchers {
 
   test("incremental moment store: lifecycle contract + ledger no-op") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val store = java.nio.file.Files.createTempDirectory("pca-spec-").toString
+    val store = graft.util.Scratch.dir("pca-spec-").toString
     val t = pmod(col("vec_id"), lit(3))
-    Pca.buildMomentStore(emb.filter(t === 0), store)
+    val moments = Pca.momentStore(store)
+    moments.build(emb.filter(t === 0))
     // a re-run build (streaming batch-0 retry) overwrites, never
     // double-counts
-    Pca.buildMomentStore(emb.filter(t === 0), store)
-    Pca.extendMomentStore(emb.filter(t === 1), store, Some("t1"))
-    Pca.extendMomentStore(emb.filter(t === 2), store, Some("t2"))
-    Pca.extendMomentStore(emb.filter(t === 1), store, Some("t1")) // ledgered no-op
+    moments.build(emb.filter(t === 0))
+    moments.extend(emb.filter(t === 1), Some("t1"))
+    moments.extend(emb.filter(t === 2), Some("t2"))
+    moments.extend(emb.filter(t === 1), Some("t1")) // ledgered no-op
     val row = Pca.incrementalCheck(emb, store, k = 16, expectShards = 3).head()
     for (i <- 0 until 4) withClue(s"flag $i:") {
       row.getBoolean(i) shouldBe true
@@ -235,13 +238,14 @@ class PcaSpec extends SparkSuite with Matchers {
 
   test("incremental store: non-vacuous — an unledgered double apply breaks the contract") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val store = java.nio.file.Files.createTempDirectory("pca-spec-").toString
+    val store = graft.util.Scratch.dir("pca-spec-").toString
     val t = pmod(col("vec_id"), lit(2))
-    Pca.buildMomentStore(emb.filter(t === 0), store)
+    val moments = Pca.momentStore(store)
+    moments.build(emb.filter(t === 0))
     // a retry that BYPASSES the ledger double-counts the shard's
     // moments — weight reconciliation must catch it
-    Pca.extendMomentStore(emb.filter(t === 1), store)
-    Pca.extendMomentStore(emb.filter(t === 1), store)
+    moments.extend(emb.filter(t === 1), None)
+    moments.extend(emb.filter(t === 1), None)
     val row = Pca.incrementalCheck(emb, store, k = 4, expectShards = 3).head()
     row.getBoolean(0) shouldBe false // moments_match
   }

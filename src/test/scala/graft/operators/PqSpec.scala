@@ -162,7 +162,7 @@ class PqSpec extends SparkSuite with Matchers {
   }
 
   test("persisted ANN index: stored search == recompute, scan pruned to probed cells") {
-    val path = java.nio.file.Files.createTempDirectory("ann-idx").toString
+    val path = graft.util.Scratch.dir("ann-idx").toString
     val queries = emb.filter(col("vec_id") < 5)
     Pq.buildAnnIndex(emb, path, kmeansIters = 2)
     val stored = Pq.annTopK(emb, queries, path, k = 10, nprobe = 4)
@@ -186,8 +186,8 @@ class PqSpec extends SparkSuite with Matchers {
   }
 
   test("extendAnnIndex: build 2/3 + append 1/3 == from-scratch build over all") {
-    val partial = java.nio.file.Files.createTempDirectory("ann-ext").toString
-    val full = java.nio.file.Files.createTempDirectory("ann-full").toString
+    val partial = graft.util.Scratch.dir("ann-ext").toString
+    val full = graft.util.Scratch.dir("ann-full").toString
     val queries = emb.filter(col("vec_id") < 5)
     val cut = emb.agg(max("vec_id")).head.getLong(0) * 2 / 3
     // frozen quantizers: the deterministic lowest-vec_id samples lie in
@@ -224,7 +224,7 @@ class PqSpec extends SparkSuite with Matchers {
         (if (d == 1) 10f else 0f) +
           (if (d == 2 + i % 4) 5f else 0f) + noise(i, d))))
     val drifted = (a ++ b).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("ann-rebal").toString
+    val path = graft.util.Scratch.dir("ann-rebal").toString
     Pq.buildAnnIndex(a.toDF("vec_id", "embedding"), path, nlist = 8)
     Pq.extendAnnIndex(b.toDF("vec_id", "embedding"), path)
     def maxCell(asOf: Option[Int] = None): Long =
@@ -270,7 +270,7 @@ class PqSpec extends SparkSuite with Matchers {
   }
 
   test("extendAnnIndex with a shardId is idempotent under re-application") {
-    val path = java.nio.file.Files.createTempDirectory("ann-ledger").toString
+    val path = graft.util.Scratch.dir("ann-ledger").toString
     val queries = emb.filter(col("vec_id") < 5)
     val cut = emb.agg(max("vec_id")).head.getLong(0) * 2 / 3
     Pq.buildAnnIndex(emb.filter(col("vec_id") <= cut), path)
@@ -293,7 +293,7 @@ class PqSpec extends SparkSuite with Matchers {
     // the live file list — in-flight readers and time travel survive),
     // and search must be bit-identical across it (cells are a partition
     // column, codes are data — the rewrite preserves both)
-    val path = java.nio.file.Files.createTempDirectory("ann-cmp").toString
+    val path = graft.util.Scratch.dir("ann-cmp").toString
     val queries = emb.filter(col("vec_id") < 5)
     val mx = emb.agg(max("vec_id")).head.getLong(0)
     Pq.buildAnnIndex(emb.filter(col("vec_id") <= mx / 2), path)
@@ -315,7 +315,7 @@ class PqSpec extends SparkSuite with Matchers {
   }
 
   test("annTopK at a different probe budget still matches recompute") {
-    val path = java.nio.file.Files.createTempDirectory("ann-idx2").toString
+    val path = graft.util.Scratch.dir("ann-idx2").toString
     val queries = emb.filter(col("vec_id") < 5)
     // un-refined books exercise the kmeansIters=0 round-trip
     Pq.buildAnnIndex(emb, path)

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.scalatest.matchers.should.Matchers
 
@@ -11,7 +9,7 @@ class QuantilesSpec extends SparkSuite with Matchers {
   import spark.implicits._
 
   private def tempStore(): String =
-    Files.createTempDirectory("quantiles-spec-").toString
+    graft.util.Scratch.dir("quantiles-spec-").toString
 
   /** A deterministic, deliberately non-uniform multiset: squares mod a
     * prime, so values cluster and repeat — ties straddle rank
@@ -30,14 +28,15 @@ class QuantilesSpec extends SparkSuite with Matchers {
   test("store lifecycle: build + extends + re-delivery, contract row all-true") {
     val df = corpus(3000)
     val store = tempStore()
-    Quantiles.buildQuantileStore(df.filter($"id" % 3 === 0), "value", store)
+    val summary = Quantiles.quantileStore(store, "value")
+    summary.build(df.filter($"id" % 3 === 0))
     // a re-run build (streaming batch-0 retry) overwrites, never
     // double-counts — the same idempotency idiom as the other stores
-    Quantiles.buildQuantileStore(df.filter($"id" % 3 === 0), "value", store)
-    Quantiles.extendQuantileStore(df.filter($"id" % 3 === 1), "value", store, Some("t1"))
-    Quantiles.extendQuantileStore(df.filter($"id" % 3 === 2), "value", store, Some("t2"))
+    summary.build(df.filter($"id" % 3 === 0))
+    summary.extend(df.filter($"id" % 3 === 1), Some("t1"))
+    summary.extend(df.filter($"id" % 3 === 2), Some("t2"))
     // ledgered no-op: the re-delivered shard must append nothing
-    Quantiles.extendQuantileStore(df.filter($"id" % 3 === 1), "value", store, Some("t1"))
+    summary.extend(df.filter($"id" % 3 === 1), Some("t1"))
     val row = Quantiles.quantileCheck(df, "value", store,
       qs = Seq(0.01, 0.25, 0.5, 0.75, 0.99), expectShards = 3).head()
     (0 until 4).foreach(i => assert(row.getBoolean(i), s"flag $i"))
@@ -49,7 +48,7 @@ class QuantilesSpec extends SparkSuite with Matchers {
     // eps small enough that r = max(1, ceil(n·eps)) = 1: the summary
     // IS the sorted multiset, so serving must equal the exact
     // lower-quantile order statistic
-    Quantiles.buildQuantileStore(df, "value", store, eps = 1e-9)
+    Quantiles.quantileStore(store, "value", eps = 1e-9).build(df)
     val vals = df.select($"value").as[Double].collect().toSeq
     val served = Quantiles.quantilesFromStore(spark, store, Seq(0.1, 0.5, 0.9))
       .select($"q", $"value").as[(Double, Double)].collect().toMap
@@ -61,8 +60,8 @@ class QuantilesSpec extends SparkSuite with Matchers {
   test("summary is deterministic across partitioning layouts") {
     val df = corpus(2000)
     val a = tempStore(); val b = tempStore()
-    Quantiles.buildQuantileStore(df.repartition(7), "value", a)
-    Quantiles.buildQuantileStore(df.repartition(3, $"id"), "value", b)
+    Quantiles.quantileStore(a, "value").build(df.repartition(7))
+    Quantiles.quantileStore(b, "value").build(df.repartition(3, $"id"))
     def rows(p: String) = spark.read.parquet(s"$p/summary")
       .select("value", "weight", "shard_n", "r")
       .as[(Double, Long, Long, Long)].collect().sorted.toSeq
@@ -72,12 +71,13 @@ class QuantilesSpec extends SparkSuite with Matchers {
   test("non-vacuous: a double-applied shard without the ledger fails the contract") {
     val df = corpus(1200)
     val store = tempStore()
-    Quantiles.buildQuantileStore(df.filter($"id" % 2 === 0), "value", store)
+    val summary = Quantiles.quantileStore(store, "value")
+    summary.build(df.filter($"id" % 2 === 0))
     // simulate a retry that BYPASSES the ledger (no shard id): the
     // duplicate summary weight must break weight reconciliation — the
     // failure mode the ledger exists to prevent
-    Quantiles.extendQuantileStore(df.filter($"id" % 2 === 1), "value", store)
-    Quantiles.extendQuantileStore(df.filter($"id" % 2 === 1), "value", store)
+    summary.extend(df.filter($"id" % 2 === 1), None)
+    summary.extend(df.filter($"id" % 2 === 1), None)
     val row = Quantiles.quantileCheck(df, "value", store,
       qs = Seq(0.5), expectShards = 3).head()
     assert(!row.getBoolean(0), "weights_ok must fail on doubled weight")
@@ -90,9 +90,10 @@ class QuantilesSpec extends SparkSuite with Matchers {
       "files, answers and ledger unchanged") {
     val df = corpus(3000)
     val store = tempStore()
-    Quantiles.buildQuantileStore(df.filter($"id" % 3 === 0), "value", store)
-    Quantiles.extendQuantileStore(df.filter($"id" % 3 === 1), "value", store, Some("t1"))
-    Quantiles.extendQuantileStore(df.filter($"id" % 3 === 2), "value", store, Some("t2"))
+    val summary = Quantiles.quantileStore(store, "value")
+    summary.build(df.filter($"id" % 3 === 0))
+    summary.extend(df.filter($"id" % 3 === 1), Some("t1"))
+    summary.extend(df.filter($"id" % 3 === 2), Some("t2"))
     def served() = Quantiles.quantilesFromStore(spark, store, Seq(0.25, 0.5, 0.75))
       .select($"q", $"value").as[(Double, Double)].collect().toMap
     val before = served()
@@ -107,7 +108,7 @@ class QuantilesSpec extends SparkSuite with Matchers {
       qs = Seq(0.01, 0.5, 0.99), expectShards = 3).head()
     (0 until 4).foreach(i => assert(row.getBoolean(i), s"flag $i"))
     // the ledger survives compaction: a re-delivered shard is still a no-op
-    Quantiles.extendQuantileStore(df.filter($"id" % 3 === 1), "value", store, Some("t1"))
+    summary.extend(df.filter($"id" % 3 === 1), Some("t1"))
     Quantiles.quantileCheck(df, "value", store, qs = Seq(0.5), expectShards = 3)
       .head().getBoolean(0) shouldBe true
   }
@@ -115,7 +116,7 @@ class QuantilesSpec extends SparkSuite with Matchers {
   test("summary size is bounded by ~1/eps per shard, not by rows") {
     val df = corpus(4000)
     val store = tempStore()
-    Quantiles.buildQuantileStore(df, "value", store, eps = 0.02)
+    Quantiles.quantileStore(store, "value", eps = 0.02).build(df)
     val kept = spark.read.parquet(s"$store/summary").count()
     // n·eps = 80 ⇒ r = 80 ⇒ ⌊n/r⌋ (+1 remainder row) summary rows
     kept should be <= (4000L / 80L + 1L)

@@ -17,7 +17,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
       .select(col("doc_id")).as[Long].collect().toSet
 
   test("searchAll == brute-force membership over the corpus") {
-    val idx = java.nio.file.Files.createTempDirectory("tidx-all").toString
+    val idx = graft.util.Scratch.dir("tidx-all").toString
     TextIndex.buildTextIndex(docs, idx)
     val terms = Seq("vector", "spark", "window")
     TextIndex.searchAll(spark, idx, terms)
@@ -25,7 +25,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
   }
 
   test("searchAny == brute-force union; duplicate probe terms collapse") {
-    val idx = java.nio.file.Files.createTempDirectory("tidx-any").toString
+    val idx = graft.util.Scratch.dir("tidx-any").toString
     TextIndex.buildTextIndex(docs, idx)
     val want = docs.filter(
         array_contains(split(col("text"), " "), "vector") ||
@@ -39,7 +39,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
   }
 
   test("build + ledgered extends == from-scratch index; re-delivery is a no-op") {
-    val idx = java.nio.file.Files.createTempDirectory("tidx-ext").toString
+    val idx = graft.util.Scratch.dir("tidx-ext").toString
     val t = pmod(col("doc_id"), lit(3))
     TextIndex.buildTextIndex(docs.filter(t === 0), idx)
     TextIndex.extendTextIndex(docs.filter(t === 1), idx, Some("s1"))
@@ -53,7 +53,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
   }
 
   test("a term probe opens only the files whose term range covers it") {
-    val idx = java.nio.file.Files.createTempDirectory("tidx-prune").toString
+    val idx = graft.util.Scratch.dir("tidx-prune").toString
     TextIndex.buildTextIndex(docs, idx, nFiles = 8)
     val total = spark.read.parquet(s"$idx/data").inputFiles.length
     total should be >= 4 // multiple vocabulary slices, else vacuous
@@ -72,7 +72,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
       (2L, "cat fish"),
       (3L, "dog bird fish")
     ).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("tidx-bm25").toString
+    val idx = graft.util.Scratch.dir("tidx-bm25").toString
     TextIndex.buildTextIndex(tiny, idx)
     val got = TextIndex.bm25TopK(spark, idx, Seq("cat"), k = 3)
       .as[(Long, Double)].collect()
@@ -84,9 +84,9 @@ class TextIndexSpec extends SparkSuite with Matchers {
     got(0)._2 shouldBe s(2, 4) +- 1e-9
     got(1)._2 shouldBe s(1, 2) +- 1e-9
     // lifecycle invariance on the real corpus: build+extends == one-shot
-    val once = java.nio.file.Files.createTempDirectory("tidx-bm25-a").toString
+    val once = graft.util.Scratch.dir("tidx-bm25-a").toString
     TextIndex.buildTextIndex(docs, once)
-    val inc = java.nio.file.Files.createTempDirectory("tidx-bm25-b").toString
+    val inc = graft.util.Scratch.dir("tidx-bm25-b").toString
     val t = pmod(col("doc_id"), lit(3))
     TextIndex.buildTextIndex(docs.filter(t === 0), inc)
     TextIndex.extendTextIndex(docs.filter(t === 1), inc, Some("s1"))
@@ -98,7 +98,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
 
   test("hybridRrfTopK fuses the two rank lists with 1/(c+rank); a doc on " +
       "both lists outranks equal singles") {
-    val idx = java.nio.file.Files.createTempDirectory("tidx-rrf").toString
+    val idx = graft.util.Scratch.dir("tidx-rrf").toString
     TextIndex.buildTextIndex(docs, idx)
     val terms = Seq("vector", "spark", "merge")
     val bm = TextIndex.bm25TopK(spark, idx, terms, 50)
@@ -116,7 +116,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
 
   test("compactIndex re-narrows overlapping shard ranges: fewer files, " +
       "sharper pruning, identical answers") {
-    val idx = java.nio.file.Files.createTempDirectory("tidx-compact").toString
+    val idx = graft.util.Scratch.dir("tidx-compact").toString
     val t = pmod(col("doc_id"), lit(4))
     // build + 3 extends: each shard's 2 files span the WHOLE alphabet,
     // so any single-term probe must open a file from every shard
@@ -142,7 +142,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
 
   test("streamed index auto-compaction bounds the live posting file " +
       "count across micro-batches; BM25 equals the one-shot build") {
-    val base = java.nio.file.Files.createTempDirectory("tidx-autoc")
+    val base = graft.util.Scratch.dir("tidx-autoc")
     val plain = s"$base/plain"
     val auto = s"$base/auto"
     // 5 chronological chunks, no policy: every shard's files accrete
@@ -158,7 +158,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
     liveData(auto) should be <= 4
     // ranking served from the compacted streamed index is unchanged
     val terms = Seq("vector", "spark", "merge")
-    val once = java.nio.file.Files.createTempDirectory("tidx-autoc-ref").toString
+    val once = graft.util.Scratch.dir("tidx-autoc-ref").toString
     TextIndex.buildTextIndex(docs, once)
     TextIndex.bm25TopK(spark, auto, terms, 10).collect().toSeq shouldBe
       TextIndex.bm25TopK(spark, once, terms, 10).collect().toSeq
@@ -168,7 +168,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
 
   test("crashed-extend orphans are invisible: uncommitted posting/doclen " +
       "files never reach membership or BM25 answers") {
-    val idx = java.nio.file.Files.createTempDirectory("tidx-orphan").toString
+    val idx = graft.util.Scratch.dir("tidx-orphan").toString
     TextIndex.buildTextIndex(docs, idx)
     val terms = Seq("vector", "spark", "merge")
     val before = TextIndex.bm25TopK(spark, idx, terms, 10).collect().toSeq
@@ -186,7 +186,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
     // unadopted and the ranking equals a clean one-shot over the union
     TextIndex.extendTextIndex(docs.limit(50)
       .withColumn("doc_id", col("doc_id") + 1000000L), idx, Some("retry"))
-    val clean = java.nio.file.Files.createTempDirectory("tidx-clean").toString
+    val clean = graft.util.Scratch.dir("tidx-clean").toString
     TextIndex.buildTextIndex(docs.unionByName(docs.limit(50)
       .withColumn("doc_id", col("doc_id") + 1000000L)), clean)
     TextIndex.bm25TopK(spark, idx, terms, 10).collect().toSeq shouldBe
@@ -194,7 +194,7 @@ class TextIndexSpec extends SparkSuite with Matchers {
   }
 
   test("empty postings for unknown terms answer zero rows, zero matches") {
-    val idx = java.nio.file.Files.createTempDirectory("tidx-miss").toString
+    val idx = graft.util.Scratch.dir("tidx-miss").toString
     TextIndex.buildTextIndex(docs, idx)
     TextIndex.searchAny(spark, idx, Seq("zzz_not_a_word")).count() shouldBe 0L
     TextIndex.searchAll(spark, idx, Seq("spark", "zzz_not_a_word"))

@@ -110,16 +110,17 @@ class TextOpsSpec extends SparkSuite with Matchers {
   test("vocabulary store: build + extend == from-scratch scoring, and " +
       "a re-applied shard is a ledgered no-op") {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val path = java.nio.file.Files.createTempDirectory("vocab-store").toString
+    val path = graft.util.Scratch.dir("vocab-store").toString
     val t = pmod(col("doc_id"), lit(3))
-    TextOps.buildVocab(corpus.filter(t === 0), path)
-    TextOps.extendVocab(corpus.filter(t === 1), path, shardId = Some("t1"))
-    TextOps.extendVocab(corpus.filter(t === 2), path, shardId = Some("t2"))
+    val vocab = TextOps.vocabStore(path)
+    vocab.build(corpus.filter(t === 0))
+    vocab.extend(corpus.filter(t === 1), Some("t1"))
+    vocab.extend(corpus.filter(t === 2), Some("t2"))
     val stored = TextOps.scoreAgainstVocab(corpus, path)
     val scratch = TextOps.unigramLogprob(corpus)
     stored.orderBy("doc_id").collect() shouldBe scratch.orderBy("doc_id").collect()
     // retry: doubled count rows would skew every probability
-    TextOps.extendVocab(corpus.filter(t === 2), path, shardId = Some("t2"))
+    vocab.extend(corpus.filter(t === 2), Some("t2"))
     TextOps.scoreAgainstVocab(corpus, path).orderBy("doc_id").collect() shouldBe
       scratch.orderBy("doc_id").collect()
   }
@@ -248,7 +249,7 @@ class TextOpsSpec extends SparkSuite with Matchers {
   }
 
   private def tmpModelDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-bpe-spec").toString
+    graft.util.Scratch.dir("graft-bpe-spec").toString
 
   test("trainBpe equals the sequential reference (merges, counts, final segmentation)") {
     val texts = Seq(
@@ -307,15 +308,16 @@ class TextOpsSpec extends SparkSuite with Matchers {
   test("heavy-hitter store: tercile lifecycle + ledger no-op serves the " +
       "exact one-shot answer, and the merged completeness bound holds") {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val store = java.nio.file.Files.createTempDirectory("heavy-spec-").toString
+    val store = graft.util.Scratch.dir("heavy-spec-").toString
     val t = pmod(col("doc_id"), lit(3))
     def grams(tr: Int) = TextOps.ngrams(corpus.filter(t === tr), 2)
-    FreqSketch.buildHeavyStore(grams(0), "ngram", store)
+    val heavy = FreqSketch.heavyStore(store, itemCol = Some("ngram"))
+    heavy.build(grams(0))
     // build retry: overwrite, never double-count
-    FreqSketch.buildHeavyStore(grams(0), "ngram", store)
-    FreqSketch.extendHeavyStore(grams(1), "ngram", store, Some("t1"))
-    FreqSketch.extendHeavyStore(grams(2), "ngram", store, Some("t2"))
-    FreqSketch.extendHeavyStore(grams(1), "ngram", store, Some("t1")) // no-op
+    heavy.build(grams(0))
+    heavy.extend(grams(1), Some("t1"))
+    heavy.extend(grams(2), Some("t2"))
+    heavy.extend(grams(1), Some("t1")) // no-op
     val all = TextOps.ngrams(corpus, 2)
     val got = FreqSketch.heavyTopKExact(all, "ngram", store, k = 20)
       .as[(String, Long)].collect().toSeq
@@ -545,7 +547,7 @@ class TextOpsSpec extends SparkSuite with Matchers {
     val refA = Seq((10L, "a b c d")).toDF("doc_id", "text")
     val refB = Seq((11L, "c d e")).toDF("doc_id", "text")
     val tgt = Seq((1L, "a b c"), (2L, "d e f"), (3L, "x y")).toDF("doc_id", "text")
-    val store = java.nio.file.Files.createTempDirectory("gram-store").toString
+    val store = graft.util.Scratch.dir("gram-store").toString
     TextOps.buildGramStore(refA, store, n = 2)
     TextOps.extendGramStore(refB, store, shardId = Some("s1"))
     val got = TextOps.noveltyAgainstStore(tgt, store).orderBy("doc_id").collect()

@@ -134,8 +134,7 @@ class WideResidualSpec extends SparkSuite with Matchers {
     val wmodel = Pca.fitIvfResidualWide(clustered, kDims = 8, dRed = 16,
       nlist = 16)
     val disp = Pca.annDispatchWide(clustered, model, cents, wmodel)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-wide-disp").toString
+    val store = graft.util.Scratch.dir("graft-wide-disp").toString
     Pca.buildAnnDispatchStoreFrom(spark, store, disp)
     val back = Pca.annDispatchFromStore(spark, store)
     back shouldBe disp

@@ -18,7 +18,7 @@ class StreamingSpec extends SparkSuite with Matchers {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
+    graft.util.Scratch.dir(prefix).getAbsolutePath
 
   /** Reference form of [[Medallion.streamSpreadBucketed]]: the same
     * watermarked band join keyed on the base asset alone, so every
@@ -346,7 +346,7 @@ class StreamingSpec extends SparkSuite with Matchers {
   test("replayIntoMergeTable: streamed CDC upsert == global latest row per key, " +
       "and the manifest tracked one generation per micro-batch") {
     val events = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
-    val store = java.nio.file.Files.createTempDirectory("stream-merge").toString
+    val store = graft.util.Scratch.dir("stream-merge").toString
     StreamedBatch.replayIntoStore(spark, events, "ts", "event_id",
       graft.util.Lake.mergeStore(store, Seq("user_id"), Seq("ts", "event_id")),
       chunks = 4)
@@ -370,7 +370,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       "re-delivers every batch into ledgered no-ops (same table, same " +
       "generation), and auto-OPTIMIZE bounds the sink's live file count") {
     val events = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
-    val store = java.nio.file.Files.createTempDirectory("stream-merge-resume").toString
+    val store = graft.util.Scratch.dir("stream-merge-resume").toString
     def replay(): Unit = StreamedBatch.replayIntoStore(spark, events,
       "ts", "event_id",
       graft.util.Lake.mergeStore(store, Seq("user_id"), Seq("ts", "event_id")),
@@ -404,7 +404,7 @@ class StreamingSpec extends SparkSuite with Matchers {
   test("generalized store resume: a second replayIntoVocab of the same " +
       "input is all ledgered no-ops — same generation, same scores") {
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
-    val store = java.nio.file.Files.createTempDirectory("stream-vocab-resume").toString
+    val store = graft.util.Scratch.dir("stream-vocab-resume").toString
     def replay(): Unit = StreamedBatch.replayIntoStore(spark, docs,
       "doc_id", "doc_id", TextOps.vocabStore(store), chunks = 4,
       stageKey = Some("vocab-resume-spec"), resume = true)
@@ -418,8 +418,8 @@ class StreamingSpec extends SparkSuite with Matchers {
     graft.util.Manifest.snapshot(spark, store).gen shouldBe gen1
     TextOps.scoreAgainstVocab(docs, store).collect().toSet shouldBe scores1
     // and the streamed store still equals from-scratch training
-    val oneShot = java.nio.file.Files.createTempDirectory("vocab-oneshot").toString
-    TextOps.buildVocab(docs, oneShot)
+    val oneShot = graft.util.Scratch.dir("vocab-oneshot").toString
+    TextOps.vocabStore(oneShot).build(docs)
     TextOps.scoreAgainstVocab(docs, oneShot).collect().toSet shouldBe scores1
   }
 
@@ -429,7 +429,7 @@ class StreamingSpec extends SparkSuite with Matchers {
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val corpus = docs.filter(col("doc_id") % 3 =!= 0)
     val probes = docs.filter(col("doc_id") % 3 === 0)
-    val store = java.nio.file.Files.createTempDirectory("stream-cont-resume").toString
+    val store = graft.util.Scratch.dir("stream-cont-resume").toString
     def replay(): Unit = StreamedBatch.replayIntoStore(spark,
       corpus, "doc_id", "doc_id", graft.operators.Dedup.containmentStore(store),
       chunks = 4,
@@ -456,7 +456,7 @@ class StreamingSpec extends SparkSuite with Matchers {
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val reference = docs.filter(col("doc_id") % 3 =!= 0)
     val target = docs.filter(col("doc_id") % 3 === 0)
-    val store = java.nio.file.Files.createTempDirectory("stream-gram-compact").toString
+    val store = graft.util.Scratch.dir("stream-gram-compact").toString
     StreamedBatch.replayIntoStore(spark, reference, "doc_id", "doc_id",
       TextOps.gramStore(store, n = 2), chunks = 6,
       stageKey = Some("gram-compact-spec"), autoCompact = 2)
@@ -488,7 +488,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       .select(col("doc_id"), substring(col("text"), 1, 32).as("k"))
     val corpus = keyed.filter(col("doc_id") % 3 =!= 0)
     val probes = keyed.filter(col("doc_id") % 3 === 0)
-    val store = java.nio.file.Files.createTempDirectory("stream-edit-compact").toString
+    val store = graft.util.Scratch.dir("stream-edit-compact").toString
     StreamedBatch.replayIntoStore(spark, corpus, "doc_id", "doc_id",
       graft.operators.Dedup.editStore(store, "k"), chunks = 6,
       stageKey = Some("edit-compact-spec"), autoCompact = 2)
@@ -509,7 +509,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       .head().getLong(0)
     val ref = docs.filter(col("doc_id") <= mx * 2 / 3)
     val tranche = docs.filter(col("doc_id") > mx * 2 / 3)
-    val store = java.nio.file.Files.createTempDirectory("stream-span-resume").toString
+    val store = graft.util.Scratch.dir("stream-span-resume").toString
     def replay(): Unit = StreamedBatch.replayIntoStore(spark,
       ref, "doc_id", "doc_id", graft.operators.Dedup.spanStore(store), chunks = 4,
       stageKey = Some("span-resume-spec"), resume = true)
@@ -535,7 +535,7 @@ class StreamingSpec extends SparkSuite with Matchers {
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val reference = docs.filter(col("doc_id") % 3 =!= 0)
     val target = docs.filter(col("doc_id") % 3 === 0)
-    val store = java.nio.file.Files.createTempDirectory("stream-gram-resume").toString
+    val store = graft.util.Scratch.dir("stream-gram-resume").toString
     def replay(): Unit = StreamedBatch.replayIntoStore(spark,
       reference, "doc_id", "doc_id", TextOps.gramStore(store, n = 2), chunks = 4,
       stageKey = Some("gram-resume-spec"), resume = true)
@@ -561,7 +561,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       .select(col("doc_id"), substring(col("text"), 1, 32).as("k"))
     val corpus = keyed.filter(col("doc_id") % 3 =!= 0)
     val probes = keyed.filter(col("doc_id") % 3 === 0)
-    val store = java.nio.file.Files.createTempDirectory("stream-edit-resume").toString
+    val store = graft.util.Scratch.dir("stream-edit-resume").toString
     def replay(): Unit = StreamedBatch.replayIntoStore(spark,
       corpus, "doc_id", "doc_id", graft.operators.Dedup.editStore(store, "k"),
       chunks = 4,
@@ -600,7 +600,7 @@ class StreamingSpec extends SparkSuite with Matchers {
   test("replayIntoCandleStore: per-batch store maintenance == batch agg, " +
       "and a re-delivered batch is a ledgered no-op") {
     val events = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
-    val store = java.nio.file.Files.createTempDirectory("stream-store").toString
+    val store = graft.util.Scratch.dir("stream-store").toString
     StreamedBatch.replayIntoStore(spark, events, "ts", "event_id",
       Candles.candleStore(store), chunks = 4)
     // batch 0 built, batches 1..3 folded in through the ledger
@@ -677,7 +677,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       "and a re-delivered batch is a ledgered no-op") {
     import graft.operators.Pq
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("stream-ann").toString
+    val idx = graft.util.Scratch.dir("stream-ann").toString
     StreamedBatch.replayIntoStore(spark, emb, "vec_id", "vec_id",
       Pq.annStore(idx), chunks = 4)
     // batch 0 built, batches 1..3 appended through the ledger
@@ -698,7 +698,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       "minhashLsh, and a re-delivered batch is a ledgered no-op") {
     import graft.operators.Dedup
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
-    val idx = java.nio.file.Files.createTempDirectory("stream-neardup").toString
+    val idx = graft.util.Scratch.dir("stream-neardup").toString
     StreamedBatch.replayIntoStore(spark, docs, "doc_id", "doc_id",
       Dedup.nearDupStore(idx), chunks = 4)
     graft.util.Manifest.applied(spark, idx) shouldBe
@@ -721,7 +721,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       "unigramLogprob, and a re-delivered batch is a ledgered no-op") {
     import graft.operators.TextOps
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
-    val store = java.nio.file.Files.createTempDirectory("stream-vocab").toString
+    val store = graft.util.Scratch.dir("stream-vocab").toString
     StreamedBatch.replayIntoStore(spark, docs, "doc_id", "doc_id",
       TextOps.vocabStore(store), chunks = 4)
     graft.util.Manifest.applied(spark, store) shouldBe
@@ -733,7 +733,7 @@ class StreamingSpec extends SparkSuite with Matchers {
     scratch.exceptAll(served).count() shouldBe 0
     // retry contract: re-applying a batch under its shard id is a no-op
     val rowsBefore = spark.read.parquet(s"$store/vocab").count()
-    TextOps.extendVocab(docs.limit(20), store, shardId = Some("replay-batch-3"))
+    TextOps.vocabStore(store).extend(docs.limit(20), Some("replay-batch-3"))
     spark.read.parquet(s"$store/vocab").count() shouldBe rowsBefore
   }
 
@@ -743,7 +743,7 @@ class StreamingSpec extends SparkSuite with Matchers {
     val docs = graft.util.Tables.documents(spark, "/root/testdata/sf0.001")
     val train = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     val test = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-    val store = java.nio.file.Files.createTempDirectory("stream-nb").toString
+    val store = graft.util.Scratch.dir("stream-nb").toString
     StreamedBatch.replayIntoStore(spark, train, "doc_id", "doc_id",
       Classifier.nbStore(store, "lang"), chunks = 4)
     graft.util.Manifest.applied(spark, store) shouldBe
@@ -755,8 +755,7 @@ class StreamingSpec extends SparkSuite with Matchers {
     scratch.exceptAll(served).count() shouldBe 0
     // retry contract: a re-run micro-batch must not double its counts
     val rowsBefore = spark.read.parquet(s"$store/counts").count()
-    Classifier.extendNbModel(train.limit(20), store, "lang",
-      shardId = Some("replay-batch-2"))
+    Classifier.nbStore(store, "lang").extend(train.limit(20), Some("replay-batch-2"))
     spark.read.parquet(s"$store/counts").count() shouldBe rowsBefore
   }
 
@@ -975,11 +974,11 @@ class StreamingSpec extends SparkSuite with Matchers {
         docs.select(col("doc_id"), substring(col("text"), 1, 24).as("k")),
         "doc_id", "doc_id", 6, t, Seq("strs", "segs"), t),
       byDoc("tidx", TextIndex.indexStore, "data"),
-      byDoc("vocab", TextOps.vocabStore, "vocab"),
+      byDoc("vocab", TextOps.vocabStore(_), "vocab"),
       byDoc("span", Dedup.spanStore(_), "spans"),
       byDoc("gram", TextOps.gramStore(_), "grams"),
       byDoc("nb", Classifier.nbStore(_, "lang"), "counts", "totals"),
-      Family("mom", Pca.momentStore, emb, "vec_id", "vec_id", 6, t,
+      Family("mom", Pca.momentStore(_), emb, "vec_id", "vec_id", 6, t,
         Seq("moments"), t),
       Family("q", Quantiles.quantileStore(_, "value"), events, "ts",
         "event_id", 6, t, Seq("summary"), t),
@@ -1031,23 +1030,57 @@ class StreamingSpec extends SparkSuite with Matchers {
   test("kill-point matrix: a store replay crashed before the apply, after " +
       "the apply, or after the compaction resumes to the uninterrupted " +
       "store — candle store, a Manifest store, the merge table") {
+    import graft.operators._
+    import graft.util.Manifest
     val sf = "/root/testdata/sf0.001"
     val events = graft.util.Tables.events(spark, sf)
     val docs = graft.util.Tables.documents(spark, sf)
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     def injected(e: Throwable): Boolean =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
         .exists(_.isInstanceOf[StreamedBatch.InjectedKill])
-    // (family, store, replay input, order/tie column, what a reader sees)
+    val allPoints = Seq((1L, "before"), (1L, "after-apply"), (2L, "after-compact"))
+    // the additive stores' one point: batch 1 has landed and committed
+    // but the micro-batch has not, so its re-delivery must be a ledger
+    // no-op. Each reader shows what a doubled shard would change.
+    val applied = Seq((1L, "after-apply"))
+    // (family, store, replay input, order/tie column, what a reader
+    // sees, kill points)
     val families = Seq[(String, String => graft.util.ShardedStore, DataFrame,
-        String, String, String => DataFrame)](
+        String, String, String => DataFrame, Seq[(Long, String)])](
       ("candle", Candles.candleStore(_), events, "ts", "event_id",
-        Candles.candlesFromStore(spark, _)),
-      ("vocab", TextOps.vocabStore, docs, "doc_id", "doc_id",
-        TextOps.scoreAgainstVocab(docs, _)),
+        Candles.candlesFromStore(spark, _), allPoints),
+      ("vocab", TextOps.vocabStore(_), docs, "doc_id", "doc_id",
+        TextOps.scoreAgainstVocab(docs, _), allPoints),
       ("merge", graft.util.Lake.mergeStore(_, Seq("user_id"),
           Seq("ts", "event_id")), events, "ts", "event_id",
-        graft.util.Lake.mergeRead(spark, _)))
-    families.foreach { case (name, store, input, order, tie, read) =>
+        graft.util.Lake.mergeRead(spark, _), allPoints),
+      ("nb", Classifier.nbStore(_, "lang"), docs, "doc_id", "doc_id",
+        Classifier.classifyWithModel(docs, _), applied),
+      ("dsir", Curation.dsirStore(_), docs, "doc_id", "doc_id",
+        Curation.dsirAgainstStore(docs, _), applied),
+      ("quantile", Quantiles.quantileStore(_, "value"), events, "ts",
+        "event_id", Quantiles.quantilesFromStore(spark, _, Seq(0.1, 0.5, 0.9)),
+        applied),
+      ("heavy", FreqSketch.heavyStore(_), docs, "doc_id", "doc_id",
+        Manifest.read(spark, _, "sketch").groupBy("shard_id")
+          .agg(count(lit(1)), sum("cnt"), first("shard_n")), applied),
+      ("bloom", Bloom.bloomStore(_, "user_id"),
+        events.select(col("user_id")).distinct(), "user_id", "user_id",
+        Manifest.read(spark, _, "filter")
+          .select(col("shard_id"), col("n_keys"), sha2(col("bits"), 256)),
+        applied),
+      ("moment", Pca.momentStore(_), emb, "vec_id", "vec_id",
+        Manifest.read(spark, _, "moments").select("shard_id", "n", "d"),
+        applied),
+      ("residual", Pca.residualStore(_), emb, "vec_id", "vec_id",
+        Manifest.read(spark, _, "moments").select("shard_id", "cell"),
+        applied),
+      ("hll", Hll.distinctStore(_, Seq("event_type"), "user_id"), events,
+        "ts", "event_id",
+        Manifest.read(spark, _, "data").groupBy("event_type").count(),
+        applied))
+    families.foreach { case (name, store, input, order, tie, read, points) =>
       def rows(path: String) = read(path).collect().map(_.toString).sorted
       // a crashed run and its resume MUST share one staged input — the
       // file-source checkpoint tracks input files by path
@@ -1061,8 +1094,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       replay(uninterrupted, new java.io.File(tmp("kill-work-")), 64, None)
       val want = rows(uninterrupted)
       want.length should be > 0
-      for ((batch, phase) <- Seq((1L, "before"), (1L, "after-apply"),
-          (2L, "after-compact"))) withClue(s"$name ($batch, $phase): ") {
+      for ((batch, phase) <- points) withClue(s"$name ($batch, $phase): ") {
         // the after-compact point must crash after a compaction that
         // actually rewrote the tree — threshold 1 forces one every batch
         val threshold = if (phase == "after-compact") 1 else 64

@@ -1,6 +1,5 @@
 package graft.util
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 import graft.SparkSuite
@@ -9,7 +8,7 @@ class LakeSpec extends SparkSuite with Matchers {
   import spark.implicits._
 
   test("date-partitioned write prunes partitions at scan time") {
-    val path = Files.createTempDirectory("lake-part-").toFile.getAbsolutePath
+    val path = graft.util.Scratch.dir("lake-part-").getAbsolutePath
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     Lake.writeDatePartitioned(ev, "ts", path)
 
@@ -28,7 +27,7 @@ class LakeSpec extends SparkSuite with Matchers {
   }
 
   test("schema evolution: appended columns merge on read, old rows read as NULL") {
-    val path = Files.createTempDirectory("lake-evolve-").toFile.getAbsolutePath
+    val path = graft.util.Scratch.dir("lake-evolve-").getAbsolutePath
     // v1 schema: (event_id, value)
     Lake.appendEvolving(
       Seq((1L, 10.0), (2L, 20.0)).toDF("event_id", "value"), path)
@@ -57,7 +56,7 @@ class LakeSpec extends SparkSuite with Matchers {
     * unclustered files.
     */
   private def layoutTable(df: org.apache.spark.sql.DataFrame, files: Int): String = {
-    val path = Files.createTempDirectory("lake-layout-").toFile.getAbsolutePath
+    val path = graft.util.Scratch.dir("lake-layout-").getAbsolutePath
     Lake.mergeInit(spark, path, df.repartition(files), Seq("id"))
     path
   }
@@ -143,7 +142,7 @@ class LakeSpec extends SparkSuite with Matchers {
   }
 
   test("file-stats skipping prunes all-null files; null rows never match ranges") {
-    val path = Files.createTempDirectory("lake-null-").toFile.getAbsolutePath
+    val path = graft.util.Scratch.dir("lake-null-").getAbsolutePath
     // file 1: values plus one null row; file 2: `a` all null
     Lake.mergeInit(spark, path,
       Seq((1L, Some(1L)), (2L, Some(2L)), (3L, Some(3L)), (4L, None))
@@ -189,7 +188,7 @@ class LakeSpec extends SparkSuite with Matchers {
   // ── MERGE INTO (keyed upsert) ─────────────────────────────────────
 
   private def mergeFixture(): (String, org.apache.spark.sql.DataFrame) = {
-    val path = Files.createTempDirectory("lake-merge-").toFile.getAbsolutePath
+    val path = graft.util.Scratch.dir("lake-merge-").getAbsolutePath
     // range-laid-out by key: each of the 8 files owns a narrow key
     // band, so a narrow update range CAN prune files (hash layout
     // scatters every key everywhere and nothing could prune)

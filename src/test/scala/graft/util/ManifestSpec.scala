@@ -8,7 +8,7 @@ class ManifestSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-manifest").toFile
+    val d = graft.util.Scratch.dir("graft-manifest")
     d.delete()
     d.getAbsolutePath
   }
