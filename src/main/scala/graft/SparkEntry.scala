@@ -66,9 +66,7 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       val t1 = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
       val t2 = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
-      Dedup.buildNearDupIndex(t1, idx, n = 2, threshold = 0.5)
-      val p2 = Dedup.incrementalPairs(t2, idx, n = 2, threshold = 0.5)
-      Dedup.extendIndex(t2, p2, idx, n = 2)
+      fold(Dedup.nearDupStore(idx, n = 2, threshold = 0.5), t1, t2 -> "t2")
     }
 
   /** Per-(JVM, sfDir) memo of the `cur_decon_containment_indexed`
@@ -81,9 +79,8 @@ object SparkEntry {
   private def containmentGateIndex(s: SparkSession, dir: String): String =
     fixture("graft-cont-index", dir) { idx =>
       val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
-      Dedup.buildContainmentIndex(corpus.filter(col("doc_id") % 3 =!= 1), idx)
-      Dedup.extendContainmentIndex(corpus.filter(col("doc_id") % 3 === 1),
-        idx, shardId = Some("g1"))
+      fold(Dedup.containmentStore(idx), corpus.filter(col("doc_id") % 3 =!= 1),
+        corpus.filter(col("doc_id") % 3 === 1) -> "g1")
     }
 
   /** Per-(JVM, sfDir) memo of the `sim_ann_rebalance` gate's index:
@@ -98,8 +95,8 @@ object SparkEntry {
     fixture("graft-ann-rebalance", dir) { idx =>
       val emb = Tables.embeddings(s, dir)
       val cut = emb.agg(max("vec_id")).head().getLong(0) / 2
-      Pq.buildAnnIndex(emb.filter(col("vec_id") <= cut), idx)
-      Pq.extendAnnIndex(emb.filter(col("vec_id") > cut), idx)
+      fold(Pq.annStore(idx), emb.filter(col("vec_id") <= cut),
+        emb.filter(col("vec_id") > cut) -> "drift")
       Pq.rebalanceAnnIndex(emb, idx, coarseIters = 0,
         centsOpt = Some(memo(s"$dir#flat16x0")(
           Similarity.coarseCentroids(emb, nlist = 16, iters = 0))))
@@ -186,9 +183,8 @@ object SparkEntry {
   private def gramStoreIndex(s: SparkSession, dir: String): String =
     fixture("graft-gram-store", dir) { idx =>
       val ref = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
-      TextOps.buildGramStore(ref.filter(col("doc_id") % 3 =!= 1), idx, n = 2)
-      TextOps.extendGramStore(ref.filter(col("doc_id") % 3 === 1),
-        idx, shardId = Some("g1"))
+      fold(TextOps.gramStore(idx, n = 2), ref.filter(col("doc_id") % 3 =!= 1),
+        ref.filter(col("doc_id") % 3 === 1) -> "g1")
     }
 
   /** Per-(JVM, sfDir) memo of the persisted EDIT index the
@@ -202,10 +198,9 @@ object SparkEntry {
       val corpus = Tables.documents(s, dir)
         .withColumn("k", substring(col("text"), 1, 32))
         .filter(col("doc_id") % 10 =!= 0)
-      Dedup.buildEditIndex(corpus.filter(col("doc_id") % 3 =!= 1), "k", idx,
-        maxDist = 2)
-      Dedup.extendEditIndex(corpus.filter(col("doc_id") % 3 === 1), "k",
-        idx, shardId = Some("g1"))
+      fold(Dedup.editStore(idx, "k", maxDist = 2),
+        corpus.filter(col("doc_id") % 3 =!= 1),
+        corpus.filter(col("doc_id") % 3 === 1) -> "g1")
     }
 
   /** Per-(JVM, sfDir) memo of the `sim_topk_ann_index` gate's persisted
@@ -223,15 +218,16 @@ object SparkEntry {
       // stored index is byte-identical to an in-build training and the
       // Lloyd rounds are paid once per JVM, not per gate invocation
       val emb = Tables.embeddings(s, dir)
-      Pq.buildAnnIndex(emb, idx, kmeansIters = 2, coarseIters = 1,
+      fold(Pq.annStore(idx, kmeansIters = 2, coarseIters = 1,
         centsOpt = Some(memo(s"$dir#flat16x1")(
           Similarity.coarseCentroids(emb, nlist = 16, iters = 1))),
-        booksOpt = Some(memo(s"$dir#books8x64x2")(Pq.trainedBooks(emb, kmeansIters = 2))))
+        booksOpt = Some(memo(s"$dir#books8x64x2")(Pq.trainedBooks(emb, kmeansIters = 2)))),
+        emb)
     }
 
   /** Per-(JVM, sfDir) memo of the `sim_topk_ann_extend` gate's index:
     * built on the first 2/3 of vec_ids, then the remaining shard folded
-    * in via [[Pq.extendAnnIndex]]. Unrefined books (kmeansIters=0) by
+    * in as a ledgered [[Pq.annStore]] extend. Unrefined books (kmeansIters=0) by
     * design — the frozen-quantizer append is bit-identical to a
     * from-scratch unrefined build over the whole corpus (the
     * deterministic lowest-vec_id samples lie in tranche 1), which is
@@ -241,8 +237,8 @@ object SparkEntry {
     fixture("graft-ann-extend", dir) { idx =>
       val emb = Tables.embeddings(s, dir)
       val cut = emb.agg(max("vec_id")).head().getLong(0) * 2 / 3
-      Pq.buildAnnIndex(emb.filter(col("vec_id") <= cut), idx)
-      Pq.extendAnnIndex(emb.filter(col("vec_id") > cut), idx)
+      fold(Pq.annStore(idx), emb.filter(col("vec_id") <= cut),
+        emb.filter(col("vec_id") > cut) -> "t2")
     }
 
   /** Per-(JVM, sfDir) memo of the `gold_candles_incremental` gate's
@@ -295,9 +291,8 @@ object SparkEntry {
     val mx = memo(s"$dir#max-doc-id")(docs.agg(max("doc_id")).head().getLong(0))
     val (cut1, cut2) = (mx / 3, mx * 2 / 3)
     (fixture("graft-span-index", dir) { idx =>
-      Dedup.buildSpanIndex(docs.filter(col("doc_id") <= cut1), idx)
-      Dedup.extendSpanIndex(
-        docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2), idx)
+      fold(Dedup.spanStore(idx), docs.filter(col("doc_id") <= cut1),
+        docs.filter(col("doc_id") > cut1 && col("doc_id") <= cut2) -> "t2")
     }, cut2)
   }
 
@@ -796,9 +791,8 @@ object SparkEntry {
     fixture("graft-text-index", dir) { idx =>
       val docs = Tables.documents(s, dir)
       val t = pmod(col("doc_id"), lit(3))
-      TextIndex.buildTextIndex(docs.filter(t === 0), idx)
-      TextIndex.extendTextIndex(docs.filter(t === 1), idx, shardId = Some("t1"))
-      TextIndex.extendTextIndex(docs.filter(t === 2), idx, shardId = Some("t2"))
+      fold(TextIndex.indexStore(idx), docs.filter(t === 0),
+        docs.filter(t === 1) -> "t1", docs.filter(t === 2) -> "t2")
     }
 
   /** The `cur_semantic_prototypes` gate's trained centroids, per
@@ -960,7 +954,7 @@ object SparkEntry {
     // streaming ingestion INTO the persisted ANN index: batch 0 builds
     // (quantizer sample = lowest vec_ids, all in the first
     // chronological-by-id chunk), later micro-batches append via
-    // extendAnnIndex keyed by batch id (a Spark retry is a ledgered
+    // the store's extend keyed by batch id (a Spark retry is a ledgered
     // no-op), and searching the streamed index must equal a
     // from-scratch recompute over the whole corpus — the
     // frozen-quantizer equivalence, now reached through the streaming
@@ -2748,8 +2742,8 @@ object SparkEntry {
       // both calibration ladders are training-class work, calibrated
       // ONCE per (JVM, sfDir) into a manifest-ledgered dispatch store
       val store = fixture("graft-ann-dispatch", dir) { p =>
-        Pca.buildAnnDispatchStore(emb, p, model, cents, rmodel,
-          floor = math.max(8, npRaw))
+        Pca.buildAnnDispatchStore(s, p, Pca.annDispatch(emb, model, cents,
+          rmodel, floor = math.max(8, npRaw)))
       }
       // the serving path reads the decision FROM THE STORE on every
       // invocation (r15 VERDICT task 3): a fresh session pays three

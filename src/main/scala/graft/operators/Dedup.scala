@@ -1948,16 +1948,6 @@ object Dedup {
     graft.util.Manifest.read(spark, path, "pairs")
   }
 
-  /** Read a stored buckets table, tolerating the pre-probe schema
-    * (doc_id, band, bucket only): a missing `is_base` column means the
-    * index was built single-probe, where every row is a base row.
-    */
-  private def storedBuckets(spark: org.apache.spark.sql.SparkSession,
-                            path: String): DataFrame = {
-    val b = graft.util.Manifest.read(spark, path, "buckets")
-    if (b.columns.contains("is_base")) b else b.withColumn("is_base", lit(true))
-  }
-
   /** Every near-dup pair INVOLVING a new-shard doc — new-vs-index plus
     * new-vs-new — verified with exact Jaccard, without touching old
     * text. Together with the index's stored `pairs/`, this is the
@@ -1987,7 +1977,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     val newSets = hashedShingles(newDocs, n)
     val newExt = kernelBuckets(newSets, numHashes, bands, probes = multiProbe)
-    val oldExt = storedBuckets(spark, path)
+    val oldExt = graft.util.Manifest.read(spark, path, "buckets")
     // refuse a probe-mode mismatch instead of silently losing recall:
     // an index built multiProbe=true stores probe rows whose matches a
     // single-probe increment would skip, and a multi-probe increment
@@ -2247,67 +2237,41 @@ object Dedup {
 
   // ── persisted edit index ──────────────────────────────────────────
 
-  /** Build the persisted edit-distance index of a keyed corpus at
-    * `path`: raw strings (`strs/`: doc_id, s, len — the verification
-    * side) and their Pass-Join segments for the build-time `maxDist`
-    * (`segs/`; `params/` pins d — probes use the stored geometry).
+  /** The persisted edit-distance index of a keyed corpus as an
+    * additive [[graft.util.ShardedStore]]: raw strings (`strs/`:
+    * doc_id, s, len — the verification side) and their Pass-Join
+    * segments for the build-time `maxDist` (`segs/`; the build pins d
+    * in `params/` — probes and extends use the stored geometry).
     * Unlike the containment index there is NO global order to freeze:
-    * a segment is a per-string-LOCAL artifact, so exactness across
-    * extends is structural — stored rows of old strings are exactly
-    * what a from-scratch run would recompute, and
+    * a segment is a per-string-LOCAL artifact, so every shard writes
+    * only its own strings' rows, stored rows of old strings are
+    * exactly what a from-scratch run would recompute, and
     * [[editAcrossIndexed]] == [[editDistanceJoinAcross]] verbatim
-    * after any number of extends (spec-proven).
-    */
-  def buildEditIndex(corpus: DataFrame, strCol: String, path: String,
-                     maxDist: Int = 2,
-                     applied: Set[String] = Set.empty): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    graft.util.Manifest.init(spark, path, applied) {
-      Seq(maxDist).toDF("max_dist")
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/params")
-      corpus.select(col("doc_id").cast("long").as("doc_id"),
-          coalesce(col(strCol), lit("")).as("s"))
-        .withColumn("len", length(col("s")))
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/strs")
-      editSegments(spark.read.parquet(s"$path/strs"), maxDist)
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/segs")
-    }
-    ()
-  }
-
-  /** Fold a new corpus shard into the edit index — append-only (new
-    * strings' rows + segments; old rows untouched), ledgered by
-    * `shardId` so a re-delivered shard is a no-op.
-    */
-  def extendEditIndex(newCorpus: DataFrame, strCol: String, path: String,
-                      shardId: Option[String] = None): Unit = {
-    val spark = newCorpus.sparkSession
-    val d = graft.util.Manifest.read(spark, path, "params")
-      .head().getInt(0)
-    graft.util.Manifest.extend(spark, path, shardId) {
-      val strs = newCorpus.select(col("doc_id").cast("long").as("doc_id"),
-          coalesce(col(strCol), lit("")).as("s"))
-        .withColumn("len", length(col("s")))
-      strs.write.mode(SaveMode.Append).parquet(s"$path/strs")
-      editSegments(strs, d)
-        .write.mode(SaveMode.Append).parquet(s"$path/segs")
-    }
-    ()
-  }
-
-  /** The edit-distance index as a streamed [[graft.util.ShardedStore]]:
-    * batch 0 builds (strings + Pass-Join segments + params), later
-    * batches append their shard under the ledgered batch id. Segments
-    * are per-string-local, so the streamed store's probe answer equals
-    * the from-scratch cross join over everything streamed, and a
-    * row-preserving compaction of either sub cannot change it.
+    * after any number of extends (spec-proven), whatever the shard
+    * boundaries were — streamed or batch. A ledgered shard id makes a
+    * re-delivered shard a no-op, and a row-preserving compaction of
+    * either sub cannot change the answer.
     */
   def editStore(path: String, strCol: String,
-                maxDist: Int = 2): graft.util.ShardedStore =
-    graft.util.ShardedStore.onManifest(path, "strs", "segs")(
-      buildEditIndex(_, strCol, path, maxDist, _),
-      extendEditIndex(_, strCol, path, _))
+                maxDist: Int = 2): graft.util.ShardedStore = {
+    val geometry = graft.util.ShardedStore.Pin[Int](
+      fit = _ => maxDist,
+      save = (spark, d) => {
+        import spark.implicits._
+        Seq(d).toDF("max_dist")
+          .write.mode(SaveMode.Append).parquet(s"$path/params")
+      },
+      load = graft.util.Manifest.read(_, path, "params").head().getInt(0))
+    graft.util.ShardedStore.additive(path, "strs", "segs")(geometry) {
+      (corpus, _, d) =>
+        val strs = corpus.select(col("doc_id").cast("long").as("doc_id"),
+            coalesce(col(strCol), lit("")).as("s"))
+          .withColumn("len", length(col("s")))
+        strs.write.mode(SaveMode.Append).parquet(s"$path/strs")
+        editSegments(strs, d)
+          .write.mode(SaveMode.Append).parquet(s"$path/segs")
+    }
+  }
 
   /** Cross-set edit join of `probes` against the INDEXED corpus —
     * [[editDistanceJoinAcross]]'s exact answer (spec-proven equal)

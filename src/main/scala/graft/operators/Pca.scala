@@ -2030,24 +2030,6 @@ object Pca {
       .write.mode("append").parquet(s"$path/moments")
   }
 
-  private def writeCents(spark: SparkSession, path: String,
-                         cents: Similarity.Cents): Unit = {
-    import spark.implicits._
-    cents.toSeq.map { case (cid, v, _) => (cid, v.toSeq) }
-      .toDF("cid", "vec")
-      .coalesce(1)
-      .write.parquet(s"$path/cents")
-  }
-
-  private def readCents(spark: SparkSession, path: String,
-                        asOf: Option[Int]): Similarity.Cents =
-    graft.util.Manifest.read(spark, path, "cents", asOf).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-      .map { case (cid, v) =>
-        (cid, v, math.sqrt(v.map(x => x.toDouble * x.toDouble).sum))
-      }
-
   /** The IVF residual model as a [[graft.util.ShardedStore]] —
     * continuous ANN ranking-model maintenance, batch or streamed: the
     * build trains the coarse layout on its tranche (scaled to the
@@ -2068,8 +2050,8 @@ object Pca {
           emb.select(col("vec_id"), col(vecCol).as("embedding")),
           nlist, Similarity.scaledIvfIters(nlist))
       },
-      save = writeCents(_, path, _),
-      load = readCents(_, path, None))
+      save = (spark, cents) => Similarity.writeCents(spark, cents, s"$path/cents"),
+      load = Similarity.readCents(_, path))
     ShardedStore.additive(path, "moments")(layout) { (emb, tag, cents) =>
       writeResidualShard(emb, path, cents, tag, vecCol)
     }
@@ -2104,7 +2086,7 @@ object Pca {
   def ivfResidualFromStore(spark: SparkSession, path: String,
                            kDims: Int = 16,
                            asOf: Option[Int] = None): IvfResidualModel = {
-    val cents = readCents(spark, path, asOf)
+    val cents = Similarity.readCents(spark, path, asOf)
     val (_, combined) = loadResidualMoments(spark, path, asOf)
     residualModelFrom(cents, combined, kDims)
   }
@@ -2131,7 +2113,7 @@ object Pca {
                             expectShards: Int,
                             vecCol: String = "embedding"): DataFrame = {
     val spark = emb.sparkSession
-    val cents = readCents(spark, path, None)
+    val cents = Similarity.readCents(spark, path)
     val (nShards, stored) = loadResidualMoments(spark, path, None)
     val fresh = residualMoments(emb, cents, vecCol)
     def rel(a: Double, b: Double) =
@@ -2200,7 +2182,7 @@ object Pca {
   //   <path>/_meta/    generation manifests
   //
   // Lifecycle semantics (the frozen-quantizer convention of
-  // [[Pq.extendAnnIndex]] / [[Pq.rebalanceAnnIndex]]):
+  // [[Pq.annStore]] / [[Pq.rebalanceAnnIndex]]):
   //  - EXTEND KEEPS the decision: an append under frozen quantizers
   //    changes no ranking geometry; only n moves, and n is additive —
   //    the ledgered extents row carries the delta (a re-delivered
@@ -2226,29 +2208,16 @@ object Pca {
       .coalesce(1).write.mode(mode).parquet(dir)
   }
 
-  /** Calibrate both arms on `emb` and persist the measured verdict at
-    * `path` (OVERWRITE build semantics). Returns the decision so the
-    * building session can serve immediately.
-    */
-  def buildAnnDispatchStore(emb: DataFrame, path: String, model: PcaModel,
-                            cents: Similarity.Cents,
-                            rmodel: IvfResidualModel,
-                            k: Int = 10, bar: Double = 0.9,
-                            epsTies: Double = 1e-3, mult: Int = 8,
-                            sample: Int = 32, floor: Int = 8): AnnDispatch =
-    buildAnnDispatchStoreFrom(emb.sparkSession, path,
-      annDispatch(emb, model, cents, rmodel, k, bar, epsTies, mult,
-        sample, floor))
-
-  /** Persist a dispatch already measured by the caller — the
+  /** Persist a measured dispatch at `path` (OVERWRITE build semantics)
+    * and return it, so the building session can serve immediately. The
     * [[AnnDispatch]] row is arm-agnostic (budgets + the chosen arm),
     * so a WIDE verdict ([[annDispatchWide]]) persists and serves
-    * through the same store as a plain one; the caller re-pairs it
-    * with the matching models at serve time, exactly as with the
-    * live-calibrated path.
+    * through the same store as a plain one ([[annDispatch]]); the
+    * caller re-pairs it with the matching models at serve time,
+    * exactly as with the live-calibrated path.
     */
-  def buildAnnDispatchStoreFrom(spark: SparkSession, path: String,
-                                d: AnnDispatch): AnnDispatch = {
+  def buildAnnDispatchStore(spark: SparkSession, path: String,
+                            d: AnnDispatch): AnnDispatch = {
     graft.util.Manifest.init(spark, path) {
       writeDecision(spark, decisionPath(path), d,
         org.apache.spark.sql.SaveMode.Overwrite)
@@ -2273,22 +2242,13 @@ object Pca {
     ()
   }
 
-  /** Re-measure both arms on the CURRENT corpus and commit the fresh
-    * verdict as one generation (the rebalance analogue): the old
-    * decision and its extents retire together — the new n is the
-    * recalibration corpus's own count.
+  /** Commit a dispatch re-measured on the CURRENT corpus as one
+    * generation (the rebalance analogue): the old decision and its
+    * extents retire together — the new n is the recalibration corpus's
+    * own count.
     */
-  def recalibrateAnnDispatchStore(emb: DataFrame, path: String,
-                                  model: PcaModel,
-                                  cents: Similarity.Cents,
-                                  rmodel: IvfResidualModel,
-                                  k: Int = 10, bar: Double = 0.9,
-                                  epsTies: Double = 1e-3, mult: Int = 8,
-                                  sample: Int = 32,
-                                  floor: Int = 8): AnnDispatch = {
-    val spark = emb.sparkSession
-    val d = annDispatch(emb, model, cents, rmodel, k, bar, epsTies, mult,
-      sample, floor)
+  def recalibrateAnnDispatchStore(spark: SparkSession, path: String,
+                                  d: AnnDispatch): AnnDispatch = {
     val snap = graft.util.Manifest.snapshot(spark, path)
     val old = snap.files.filter(f =>
       f.startsWith("decision/") || f.startsWith("extents/")).toSet

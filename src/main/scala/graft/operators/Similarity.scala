@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,6 +29,37 @@ object Similarity {
 
   /** Coarse-centroid triples: (cell id, components, L2 norm). */
   type Cents = Array[(Int, Array[Float], Double)]
+
+  /** Persist frozen centroids as one `(cid, vec)` parquet table at
+    * `dir` — the `cents/` sub of every store that pins a cell layout
+    * (the ANN index, the IVF residual model). Float components
+    * round-trip exactly; the norm is not stored ([[readCents]]
+    * recomputes it).
+    */
+  def writeCents(spark: SparkSession, cents: Cents, dir: String): Unit = {
+    import spark.implicits._
+    cents.toSeq.map { case (cid, v, _) => (cid, v.toSeq) }
+      .toDF("cid", "vec")
+      .coalesce(1)
+      .write.mode(SaveMode.Append).parquet(dir)
+  }
+
+  /** The `cents/` sub of the [[graft.util.Manifest]] store at `path`,
+    * read back in [[coarseCentroids]] form — the norm is recomputed
+    * with the identical expression, so cell assignment and probe
+    * ranking are bit-equal to the frozen layout's. Manifest-resolved,
+    * not a raw directory scan: a rewrite of `cents/` leaves the
+    * superseded files on disk for the retention window, and `asOf`
+    * must see that generation's own layout.
+    */
+  def readCents(spark: SparkSession, path: String,
+                asOf: Option[Int] = None): Cents =
+    graft.util.Manifest.read(spark, path, "cents", asOf).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      .sortBy(_._1)
+      .map { case (cid, v) =>
+        (cid, v, math.sqrt(v.map(x => x.toDouble * x.toDouble).sum))
+      }
 
   /** Cosine similarity of two numeric array columns (double result). */
   def cosine(a: Column, b: Column): Column = VectorFunctions.cosine(a, b)

@@ -31,17 +31,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    build and extend are the same shard write under `Manifest.init`
   *    or `Manifest.extend`. The vocabulary, the NB model, the DSIR
   *    target, the quantile summaries, the heavy-hitter sketches, the
-  *    Bloom filters, the PCA and IVF-residual moments and the HLL
-  *    sketches are additive.
+  *    Bloom filters, the PCA and IVF-residual moments, the HLL
+  *    sketches, the ANN index (codes appended against its pinned
+  *    quantizers) and the edit index (strings and segments under its
+  *    pinned distance) are additive.
   *  - Stores whose build and extend differ in kind
   *    ([[ShardedStore.onManifest]] and the merge table) keep their own
-  *    code: the gram, span, near-dup, containment and edit stores
-  *    anti-join a shard against what is stored, the candle store
-  *    re-merges the dates a batch touches, the merge table upserts,
-  *    the text index lists the files its shard landed to commit their
-  *    term-range stats, and the ANN index, which appends codes against
-  *    its frozen quantizer, adopts caller-trained quantizers at build
-  *    and rewrites its codes on rebalance.
+  *    code: the gram, span and near-dup stores read what is stored to
+  *    shape a shard (anti-join or pair verification against it), the
+  *    containment index derives its frozen `(df, h)` order from the
+  *    build's own shingle pass (pinning it before the commit would
+  *    shingle the build tranche twice), the candle store re-merges the
+  *    dates a batch touches, the merge table upserts, and the text
+  *    index lists the files its shard landed to commit their
+  *    term-range stats.
   *
   * Each store's instance lives next to the shard code it wraps, so the
   * subs a store appends are named only in the operator that writes

@@ -261,8 +261,8 @@ class AnnDispatchSpec extends SparkSuite with Matchers {
       Pca.project(clustered, model, projCol = "embedding"), 16, iters = 3)
     val rmodel = Pca.fitIvfResidual(clustered, kDims = 16, nlist = 16)
     val path = graft.util.Scratch.dir("graft-disp-spec").toString
-    val built = Pca.buildAnnDispatchStore(clustered, path, model, cents,
-      rmodel)
+    val built = Pca.buildAnnDispatchStore(spark, path,
+      Pca.annDispatch(clustered, model, cents, rmodel))
     built.n shouldBe clustered.count()
     // exact round-trip: the stored verdict IS the live one (doubles
     // round-trip bit-exactly in parquet)
@@ -288,8 +288,8 @@ class AnnDispatchSpec extends SparkSuite with Matchers {
     // recalibrate = one rewrite generation: fresh verdict, extents
     // retired (its n is the recalibration corpus's own count); asOf
     // still serves the pre-rebalance verdict
-    val rec = Pca.recalibrateAnnDispatchStore(clustered, path, model,
-      cents, rmodel)
+    val rec = Pca.recalibrateAnnDispatchStore(spark, path,
+      Pca.annDispatch(clustered, model, cents, rmodel))
     val now = Pca.annDispatchFromStore(spark, path)
     now shouldBe rec
     now.n shouldBe built.n

@@ -761,19 +761,20 @@ class DedupSpec extends SparkSuite with Matchers {
     val corpus1 = keyed.filter(col("doc_id") % 3 === 1)
     val probes = keyed.filter(col("doc_id") % 3 === 2)
     val path = graft.util.Scratch.dir("edit-idx").toString
-    Dedup.buildEditIndex(corpus0, "k", path, maxDist = 2)
+    val edit = Dedup.editStore(path, "k", maxDist = 2)
+    edit.build(corpus0)
     def probe() = Dedup.editAcrossIndexed(probes, "k", path)
       .orderBy("doc_id", "probe_id").collect()
     def scratch(c: DataFrame) = Dedup.editDistanceJoinAcross(c, probes, "k", 2)
       .orderBy("doc_id", "probe_id").collect()
     val got0 = probe()
     got0 shouldBe scratch(corpus0)
-    Dedup.extendEditIndex(corpus1, "k", path, shardId = Some("s1"))
+    edit.extend(corpus1, Some("s1"))
     val got1 = probe()
     got1 shouldBe scratch(corpus0.unionByName(corpus1))
     got1.length should be > 0
     // idempotent re-application through the manifest ledger
-    Dedup.extendEditIndex(corpus1, "k", path, shardId = Some("s1"))
+    edit.extend(corpus1, Some("s1"))
     probe() shouldBe got1
   }
 

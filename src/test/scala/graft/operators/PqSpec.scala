@@ -164,7 +164,7 @@ class PqSpec extends SparkSuite with Matchers {
   test("persisted ANN index: stored search == recompute, scan pruned to probed cells") {
     val path = graft.util.Scratch.dir("ann-idx").toString
     val queries = emb.filter(col("vec_id") < 5)
-    Pq.buildAnnIndex(emb, path, kmeansIters = 2)
+    Pq.annStore(path, kmeansIters = 2).build(emb)
     val stored = Pq.annTopK(emb, queries, path, k = 10, nprobe = 4)
     val fresh = Pq.ivfPqTopK(emb, queries, k = 10, nlist = 16, nprobe = 4,
       kmeansIters = 2)
@@ -192,9 +192,10 @@ class PqSpec extends SparkSuite with Matchers {
     val cut = emb.agg(max("vec_id")).head.getLong(0) * 2 / 3
     // frozen quantizers: the deterministic lowest-vec_id samples lie in
     // tranche 1, so the appended index is bit-identical to a full build
-    Pq.buildAnnIndex(emb.filter(col("vec_id") <= cut), partial)
-    Pq.extendAnnIndex(emb.filter(col("vec_id") > cut), partial)
-    Pq.buildAnnIndex(emb, full)
+    val ann = Pq.annStore(partial)
+    ann.build(emb.filter(col("vec_id") <= cut))
+    ann.extend(emb.filter(col("vec_id") > cut), None)
+    Pq.annStore(full).build(emb)
     val extended = Pq.annTopK(emb, queries, partial, k = 10, nprobe = 4)
     val scratch = Pq.annTopK(emb, queries, full, k = 10, nprobe = 4)
     extended.orderBy("query_id", "rank").collect() shouldBe
@@ -225,8 +226,9 @@ class PqSpec extends SparkSuite with Matchers {
           (if (d == 2 + i % 4) 5f else 0f) + noise(i, d))))
     val drifted = (a ++ b).toDF("vec_id", "embedding")
     val path = graft.util.Scratch.dir("ann-rebal").toString
-    Pq.buildAnnIndex(a.toDF("vec_id", "embedding"), path, nlist = 8)
-    Pq.extendAnnIndex(b.toDF("vec_id", "embedding"), path)
+    val ann = Pq.annStore(path, nlist = 8)
+    ann.build(a.toDF("vec_id", "embedding"))
+    ann.extend(b.toDF("vec_id", "embedding"), None)
     def maxCell(asOf: Option[Int] = None): Long =
       graft.util.Manifest.read(spark, path, "codes", asOf)
         .groupBy("cell").count().agg(max("count")).head().getLong(0)
@@ -273,15 +275,16 @@ class PqSpec extends SparkSuite with Matchers {
     val path = graft.util.Scratch.dir("ann-ledger").toString
     val queries = emb.filter(col("vec_id") < 5)
     val cut = emb.agg(max("vec_id")).head.getLong(0) * 2 / 3
-    Pq.buildAnnIndex(emb.filter(col("vec_id") <= cut), path)
+    val ann = Pq.annStore(path)
+    ann.build(emb.filter(col("vec_id") <= cut))
     val shard = emb.filter(col("vec_id") > cut)
-    Pq.extendAnnIndex(shard, path, shardId = Some("day-2"))
+    ann.extend(shard, Some("day-2"))
     val once = Pq.annTopK(emb, queries, path, k = 10, nprobe = 4)
       .orderBy("query_id", "rank").collect()
     val codes = spark.read.parquet(s"$path/codes").count()
     // a retry re-delivers the shard: without the ledger the duplicate
     // code rows get ADC-scored twice and pollute the rerank candidates
-    Pq.extendAnnIndex(shard, path, shardId = Some("day-2"))
+    ann.extend(shard, Some("day-2"))
     spark.read.parquet(s"$path/codes").count() shouldBe codes
     Pq.annTopK(emb, queries, path, k = 10, nprobe = 4)
       .orderBy("query_id", "rank").collect() shouldBe once
@@ -296,9 +299,10 @@ class PqSpec extends SparkSuite with Matchers {
     val path = graft.util.Scratch.dir("ann-cmp").toString
     val queries = emb.filter(col("vec_id") < 5)
     val mx = emb.agg(max("vec_id")).head.getLong(0)
-    Pq.buildAnnIndex(emb.filter(col("vec_id") <= mx / 2), path)
-    Pq.extendAnnIndex(emb.filter(col("vec_id") > mx / 2 && col("vec_id") <= mx * 3 / 4), path)
-    Pq.extendAnnIndex(emb.filter(col("vec_id") > mx * 3 / 4), path)
+    val ann = Pq.annStore(path)
+    ann.build(emb.filter(col("vec_id") <= mx / 2))
+    ann.extend(emb.filter(col("vec_id") > mx / 2 && col("vec_id") <= mx * 3 / 4), None)
+    ann.extend(emb.filter(col("vec_id") > mx * 3 / 4), None)
     val before = Pq.annTopK(emb, queries, path, k = 10, nprobe = 4)
       .orderBy("query_id", "rank").collect()
     val (nBefore, nAfter) =
@@ -318,7 +322,7 @@ class PqSpec extends SparkSuite with Matchers {
     val path = graft.util.Scratch.dir("ann-idx2").toString
     val queries = emb.filter(col("vec_id") < 5)
     // un-refined books exercise the kmeansIters=0 round-trip
-    Pq.buildAnnIndex(emb, path)
+    Pq.annStore(path).build(emb)
     val stored = Pq.annTopK(emb, queries, path, k = 5, nprobe = 2)
     val fresh = Pq.ivfPqTopK(emb, queries, k = 5, nlist = 16, nprobe = 2)
     stored.orderBy("query_id", "rank").collect() shouldBe

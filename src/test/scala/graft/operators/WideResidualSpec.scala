@@ -135,7 +135,7 @@ class WideResidualSpec extends SparkSuite with Matchers {
       nlist = 16)
     val disp = Pca.annDispatchWide(clustered, model, cents, wmodel)
     val store = graft.util.Scratch.dir("graft-wide-disp").toString
-    Pca.buildAnnDispatchStoreFrom(spark, store, disp)
+    Pca.buildAnnDispatchStore(spark, store, disp)
     val back = Pca.annDispatchFromStore(spark, store)
     back shouldBe disp
     val queries = clustered.filter(col("vec_id") < 20)

@@ -690,7 +690,7 @@ class StreamingSpec extends SparkSuite with Matchers {
     // the foreachBatch retry contract: re-applying a batch's embeddings
     // under its recorded shard id must not change the code table
     val codesBefore = spark.read.parquet(s"$idx/codes").count()
-    Pq.extendAnnIndex(emb.limit(50), idx, shardId = Some("replay-batch-1"))
+    Pq.annStore(idx).extend(emb.limit(50), Some("replay-batch-1"))
     spark.read.parquet(s"$idx/codes").count() shouldBe codesBefore
   }
 
@@ -966,7 +966,7 @@ class StreamingSpec extends SparkSuite with Matchers {
       // codes/ is cell-partitioned: the post-compaction floor is one
       // file per live cell (nlist = 16 default), not the flat
       // threshold — the policy bounds growth at shards × cells → cells
-      Family("ann", Pq.annStore, emb, "vec_id", "vec_id", 3, t,
+      Family("ann", Pq.annStore(_), emb, "vec_id", "vec_id", 3, t,
         Seq("codes"), 16),
       byDoc("ndup", Dedup.nearDupStore(_), "sets", "buckets", "pairs"),
       byDoc("cont", Dedup.containmentStore(_), "sets", "postings"),
@@ -1040,10 +1040,13 @@ class StreamingSpec extends SparkSuite with Matchers {
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
         .exists(_.isInstanceOf[StreamedBatch.InjectedKill])
     val allPoints = Seq((1L, "before"), (1L, "after-apply"), (2L, "after-compact"))
-    // the additive stores' one point: batch 1 has landed and committed
+    // every other store's one point: batch 1 has landed and committed
     // but the micro-batch has not, so its re-delivery must be a ledger
     // no-op. Each reader shows what a doubled shard would change.
     val applied = Seq((1L, "after-apply"))
+    // rows per key of one appended sub: a doubled shard doubles counts
+    def perKey(sub: String, key: String)(path: String): DataFrame =
+      Manifest.read(spark, path, sub).groupBy(key).count()
     // (family, store, replay input, order/tie column, what a reader
     // sees, kill points)
     val families = Seq[(String, String => graft.util.ShardedStore, DataFrame,
@@ -1077,9 +1080,22 @@ class StreamingSpec extends SparkSuite with Matchers {
         Manifest.read(spark, _, "moments").select("shard_id", "cell"),
         applied),
       ("hll", Hll.distinctStore(_, Seq("event_type"), "user_id"), events,
-        "ts", "event_id",
-        Manifest.read(spark, _, "data").groupBy("event_type").count(),
-        applied))
+        "ts", "event_id", perKey("data", "event_type"), applied),
+      ("ann", Pq.annStore(_), emb, "vec_id", "vec_id",
+        perKey("codes", "cell"), applied),
+      ("edit", Dedup.editStore(_, "k"),
+        docs.select(col("doc_id"), substring(col("text"), 1, 24).as("k")),
+        "doc_id", "doc_id", perKey("strs", "doc_id"), applied),
+      ("ndup", Dedup.nearDupStore(_), docs, "doc_id", "doc_id",
+        perKey("sets", "doc_id"), applied),
+      ("cont", Dedup.containmentStore(_), docs, "doc_id", "doc_id",
+        perKey("sets", "doc_id"), applied),
+      ("span", Dedup.spanStore(_), docs, "doc_id", "doc_id",
+        perKey("spans", "h"), applied),
+      ("gram", TextOps.gramStore(_), docs, "doc_id", "doc_id",
+        perKey("grams", "g"), applied),
+      ("tidx", TextIndex.indexStore, docs, "doc_id", "doc_id",
+        perKey("doclen", "doc_id"), applied))
     families.foreach { case (name, store, input, order, tie, read, points) =>
       def rows(path: String) = read(path).collect().map(_.toString).sorted
       // a crashed run and its resume MUST share one staged input — the
