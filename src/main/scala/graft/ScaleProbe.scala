@@ -191,14 +191,13 @@ object ScaleProbe {
         Similarity.coarseCentroids(proj, nl, iters = iters,
           trainSample = trainSample))
       // BOTH arms grade on the SAME deterministic spread slice (the
-      // residue-13 sample ivfResidualCheck uses, disjoint from the
-      // residue-7 calibration slice) — the r14 comparison graded the
+      // sample ivfResidualCheck uses, disjoint from the residue-7
+      // calibration slice) — the r14 comparison graded the
       // global arm on the consecutive-low-id slice its own PR
       // documents as a pessimistic blob-fringe artifact, so its
       // red/green verdicts were not measured on a population
       // comparable with the residual arm's (r14 ADVICE item).
-      val gradedQ = cemb.filter(pmod(col("vec_id"), lit(101)) === 13)
-        .orderBy("vec_id").limit(32)
+      val gradedQ = Similarity.spreadSample(cemb)
       val check = timed("ivf_pca_check")(
         Pca.pcaIvfCheck(cemb, coarseIters = iters, modelOpt = Some(model),
           centsOpt = Some(cents), queriesOpt = Some(gradedQ)).head())
@@ -265,12 +264,13 @@ object ScaleProbe {
 
       // r15: CROSS-SET serving at the residual geometry (the
       // semantic-decon / label-propagation workhorse) — a disjoint
-      // spread query split (residue 13) probing the frozen rest-of-
-      // corpus, contract-checked vs the exact cross reference. One
-      // model fit on the corpus split; calibration inside the check.
+      // spread query split (`Similarity.inSpreadSlice`) probing the
+      // frozen rest-of-corpus, contract-checked vs the exact cross
+      // reference. One model fit on the corpus split; calibration
+      // inside the check.
       val rcorpus = graft.operators.Dedup.materialize(
-        cemb.filter(pmod(col("vec_id"), lit(101)) =!= 13))
-      val rqueries = cemb.filter(pmod(col("vec_id"), lit(101)) === 13)
+        cemb.filter(!Similarity.inSpreadSlice))
+      val rqueries = cemb.filter(Similarity.inSpreadSlice)
       val xmodel = timed("ivf_cross_fit")(
         Pca.fitIvfResidual(rcorpus, kDims = 16, trainSample = trainSample))
       val xidx = timed("ivf_cross_index")(
@@ -317,8 +317,7 @@ object ScaleProbe {
       val rcheck = timed("ivfbig_check")(
         Pca.ivfResidualCheck(cemb, nprobe = rnp,
           modelOpt = Some(rmodel), indexOpt = Some(ridx)).head())
-      val gradedQ = cemb.filter(pmod(col("vec_id"), lit(101)) === 13)
-        .orderBy("vec_id").limit(32)
+      val gradedQ = Similarity.spreadSample(cemb)
       val nq = math.max(gradedQ.count(), 1L)
       val rcand = Similarity.probedCandidateCount(cemb, gradedQ,
         rmodel.cents, rnp)
@@ -328,7 +327,7 @@ object ScaleProbe {
       // pass the probe run can defer when the box budget is tight)
       if (sections("ivfbigx")) {
         val rcorpus = graft.operators.Dedup.materialize(
-          cemb.filter(pmod(col("vec_id"), lit(101)) =!= 13))
+          cemb.filter(!Similarity.inSpreadSlice))
         val xmodel = timed("ivfbig_cross_fit")(
           Pca.fitIvfResidual(rcorpus, kDims = 16, trainSample = ts))
         val xidx = timed("ivfbig_cross_index")(
@@ -339,7 +338,7 @@ object ScaleProbe {
             floor = math.max(8, np), indexOpt = Some(xidx)))
         val xcheck = timed("ivfbig_cross_check")(
           Pca.ivfResidualCrossCheck(rcorpus,
-            cemb.filter(pmod(col("vec_id"), lit(101)) === 13),
+            cemb.filter(Similarity.inSpreadSlice),
             nprobe = xbudget.nprobe, modelOpt = Some(xmodel),
             indexOpt = Some(xidx)).head())
         println(s"""{"probe":"ivf_rproj_cross","n":$n,"nlist":${xmodel.nlist},"nprobe":${xbudget.nprobe},"recall_ok":${xcheck.getBoolean(0)},"cosines_exact":${xcheck.getBoolean(1)}}""")
@@ -396,22 +395,22 @@ object ScaleProbe {
       val cd = Pca.crossDispatch(wide, nQueries = 32L,
         rmodelOpt = Some(rmodel), budgetOpt = Some(budget))
       println(s"""{"probe":"dwidth_dispatch","n":$n,"d":${rmodel.d},"cost_banded":${cd.analyticBanded},"cost_residual":${cd.analyticResidual},"arm":"${if (cd.residual) "residual" else "banded"}"}""")
-      // r16: the WIDE arm on the same corpus — in-engine width
+      // r16: the REDUCED layout on the same corpus — in-engine width
       // reduction (d = 256 → dRed = 32, half the true rank, genuinely
       // lossy) with candidates in reduced space and full-width exact
-      // rerank; budget from the measured wide ladder, contract graded
+      // rerank; budget from the measured ladder, contract graded
       // vs the full-width exact reference. Compares directly against
-      // the plain-residual rows above: same corpus, same bar.
+      // the full-width rows above: same corpus, same bar.
       val wmodel = timed(s"dwidth_wide_fit_${nl}x$iters")(
-        Pca.fitIvfResidualWide(wide, kDims = 16, dRed = 32, nlist = nl,
-          coarseIters = iters))
+        Pca.fitIvfResidual(wide, kDims = 16, nlist = nl,
+          coarseIters = iters, dRed = 32))
       val wbudget = timed("dwidth_wide_calibrate")(
-        Pca.calibrateWideResidualBudget(wide, wmodel,
+        Pca.calibrateResidualBudget(wide, wmodel,
           floor = math.max(8, np)))
       val wrow = timed("dwidth_wide_check")(
-        Pca.ivfResidualWideCheck(wide, nprobe = wbudget.nprobe,
-          wmodelOpt = Some(wmodel)).head())
-      println(s"""{"probe":"dwidth_wide","n":$n,"d":${wmodel.d},"d_red":${wmodel.dRed},"nlist":$nl,"nprobe":${wbudget.nprobe},"budget_ok":${wbudget.ok},"recall_ok":${wrow.getBoolean(0)},"cosines_exact":${wrow.getBoolean(1)}}""")
+        Pca.ivfResidualCheck(wide, nprobe = wbudget.nprobe,
+          modelOpt = Some(wmodel)).head())
+      println(s"""{"probe":"dwidth_wide","n":$n,"d":${wmodel.reducer.get.d},"d_red":${wmodel.d},"nlist":$nl,"nprobe":${wbudget.nprobe},"budget_ok":${wbudget.ok},"recall_ok":${wrow.getBoolean(0)},"cosines_exact":${wrow.getBoolean(1)}}""")
     }
 
     if (sections("dwidth768")) {
@@ -419,10 +418,10 @@ object ScaleProbe {
       // occupancy-scaled nlist, where the plain residual fit's
       // worst-case per-task accumulator provably exceeds the moment
       // budget (the plan-time refusal demonstrated in the specs), so
-      // ONLY the wide arm exists. Widen 12× cosine-preserving and run
-      // the wide family end-to-end: the line that turns "the refusal
-      // names a workaround" into "the workaround holds its contract
-      // at n = 5e5".
+      // ONLY the reduced layout exists. Widen 12× cosine-preserving and
+      // run the reduced residual family end-to-end: the line that turns
+      // "the refusal names a workaround" into "the workaround holds its
+      // contract at n = 5e5".
       import graft.operators.Pca
       val dense = denseIds(emb)
       val wide = graft.operators.Dedup.materialize(
@@ -435,15 +434,15 @@ object ScaleProbe {
       println(s"""{"probe":"dwidth768_refusal","nlist":$nl,"plain_moment_bytes":$refusedBytes,"budget":${Pca.maxMomentTaskBytes},"plain_refused":${refusedBytes > Pca.maxMomentTaskBytes}}""")
       val iters = Similarity.scaledIvfIters(nl)
       val wmodel = timed(s"dwidth768_wide_fit_${nl}x$iters")(
-        Pca.fitIvfResidualWide(wide, kDims = 16, dRed = 32, nlist = nl,
-          coarseIters = iters))
+        Pca.fitIvfResidual(wide, kDims = 16, nlist = nl,
+          coarseIters = iters, dRed = 32))
       val wbudget = timed("dwidth768_wide_calibrate")(
-        Pca.calibrateWideResidualBudget(wide, wmodel,
+        Pca.calibrateResidualBudget(wide, wmodel,
           floor = math.max(8, np)))
       val wrow = timed("dwidth768_wide_check")(
-        Pca.ivfResidualWideCheck(wide, nprobe = wbudget.nprobe,
-          wmodelOpt = Some(wmodel)).head())
-      println(s"""{"probe":"dwidth768_wide","n":$n,"d":${wmodel.d},"d_red":${wmodel.dRed},"nlist":$nl,"nprobe":${wbudget.nprobe},"budget_ok":${wbudget.ok},"recall_ok":${wrow.getBoolean(0)},"cosines_exact":${wrow.getBoolean(1)}}""")
+        Pca.ivfResidualCheck(wide, nprobe = wbudget.nprobe,
+          modelOpt = Some(wmodel)).head())
+      println(s"""{"probe":"dwidth768_wide","n":$n,"d":${wmodel.reducer.get.d},"d_red":${wmodel.d},"nlist":$nl,"nprobe":${wbudget.nprobe},"budget_ok":${wbudget.ok},"recall_ok":${wrow.getBoolean(0)},"cosines_exact":${wrow.getBoolean(1)}}""")
     }
 
     if (sections("alerts")) {

@@ -2099,7 +2099,7 @@ object SparkEntry {
       val model = memo(s"$dir#rproj16-decon")(Pca.fitIvfResidual(corpus, kDims = 16))
       val np = memo(s"$dir#rproj16-decon-np") {
         val (_, npFloor) = Similarity.scaledIvfConfig(corpus.count())
-        Pca.calibrateThresholdNprobe(corpus, model.cents, bench, 0.45,
+        Pca.calibrateThresholdNprobe(corpus, model, bench, 0.45,
           floor = math.max(8, npFloor))
       }
       Curation.semanticDeconResidualCheck(corpus, bench, 0.45,
@@ -2717,8 +2717,8 @@ object SparkEntry {
       // the gate times the SEARCH the calibrated budget serves
       val np = memo(s"$dir#rproj16-np") {
         val (_, npFloor) = Similarity.scaledIvfConfig(emb.count())
-        Pca.calibrateResidualNprobe(emb, model,
-          floor = math.max(8, npFloor))
+        Pca.calibrateResidualBudget(emb, model,
+          floor = math.max(8, npFloor)).nprobe
       }
       Pca.ivfResidualCheck(emb, nprobe = np, modelOpt = Some(model))
     }),
@@ -2754,23 +2754,23 @@ object SparkEntry {
     // WIDE-EMBEDDING ANN serving (r16): the residual family off its
     // d = 64 design point through the in-engine width reduction —
     // gate corpus is the clustered corpus widened 4× cosine-preserving
-    // (d = 256, true rank 64), the wide arm reduces to dRed = 32
+    // (d = 256, true rank 64), the residual layout reduces to dRed = 32
     // (GENUINELY lossy: half the true rank), candidates rank in the
     // reduced space, the exact rerank runs at full width, and the
     // contract row grades ε-recall against the FULL-width exact
     // reference on the spread sample. The budget comes from the
-    // measured wide ladder (memoized — training class), so the gate
-    // prices the projection loss the way serving would.
+    // measured ladder (memoized — training class), so the gate prices
+    // the projection loss the way serving would.
     "sim_topk_wide" -> ((s, dir) => {
       val emb = s.read.parquet(wideGateCorpus(s, dir))
-      val wmodel = memo(s"$dir#wide256to32")(
-        Pca.fitIvfResidualWide(emb, kDims = 16, dRed = 32))
+      val model = memo(s"$dir#wide256to32")(
+        Pca.fitIvfResidual(emb, kDims = 16, dRed = 32))
       val np = memo(s"$dir#wide256to32-np") {
         val (_, npFloor) = Similarity.scaledIvfConfig(emb.count())
-        Pca.calibrateWideResidualBudget(emb, wmodel,
+        Pca.calibrateResidualBudget(emb, model,
           floor = math.max(8, npFloor)).nprobe
       }
-      Pca.ivfResidualWideCheck(emb, nprobe = np, wmodelOpt = Some(wmodel))
+      Pca.ivfResidualCheck(emb, nprobe = np, modelOpt = Some(model))
     }),
     // cross-set kNN at the RESIDUAL geometry (r14 VERDICT task 4): the
     // semantic-decon/label-propagation workhorse shape — a query split
@@ -2786,8 +2786,8 @@ object SparkEntry {
       val model = memo(s"$dir#rproj16-cross")(Pca.fitIvfResidual(corpus, kDims = 16))
       val np = memo(s"$dir#rproj16-cross-np") {
         val (_, npFloor) = Similarity.scaledIvfConfig(corpus.count())
-        Pca.calibrateResidualNprobe(corpus, model,
-          floor = math.max(8, npFloor))
+        Pca.calibrateResidualBudget(corpus, model,
+          floor = math.max(8, npFloor)).nprobe
       }
       Pca.ivfResidualCrossCheck(corpus, queries, nprobe = np,
         modelOpt = Some(model))

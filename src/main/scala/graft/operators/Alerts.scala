@@ -153,20 +153,24 @@ object Alerts {
   // divergence is rare on real data because most slices either can't
   // alert against any nearby reference or alert first at the same row.
 
-  private case class SliceSummary(symbol: String, slice: Int,
-                                  firstPrice: Double, refOut: Double,
-                                  sMax: Double, sMin: Double,
-                                  preMax: Double, preMin: Double,
-                                  pJf: Double, hasFresh: Boolean)
+  // Both row classes are public: declared `private`, the generated Java
+  // of their encoders fails to compile ("No applicable constructor/
+  // method found for zero actual parameters; candidates are: public int
+  // graft.operators.Alerts$P1.kind()") and those stages run interpreted.
+  case class SliceSummary(symbol: String, slice: Int,
+                          firstPrice: Double, refOut: Double,
+                          sMax: Double, sMin: Double,
+                          preMax: Double, preMin: Double,
+                          pJf: Double, hasFresh: Boolean)
 
   /** Phase-1 row: kind 0 = fresh alert, kind 1 = group summary. */
-  private case class P1(kind: Int, symbol: String, slice: Int,
-                        ts: Timestamp, tie: Long, price: Double,
-                        ref_price: Double, move: Double, alert_idx: Long,
-                        first_price: Double, ref_out: Double,
-                        s_max: Double, s_min: Double,
-                        pre_max: Double, pre_min: Double,
-                        p_jf: Double, has_fresh: Boolean)
+  case class P1(kind: Int, symbol: String, slice: Int,
+                ts: Timestamp, tie: Long, price: Double,
+                ref_price: Double, move: Double, alert_idx: Long,
+                first_price: Double, ref_out: Double,
+                s_max: Double, s_min: Double,
+                pre_max: Double, pre_min: Double,
+                p_jf: Double, has_fresh: Boolean)
 
   /** Scan one (symbol, slice) group. `refIn` = None → fresh semantics
     * (first row seeds, emits nothing); Some(r) → the row stream is a

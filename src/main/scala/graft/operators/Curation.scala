@@ -842,20 +842,14 @@ object Curation {
         case Some(true) =>
           val cd = Pca.crossDispatch(corpusVecs, benchVecs.count(),
             bar = bar, kDims = kDims, threshold = threshold)
-          if (cd.rmodel.isDefined || cd.wmodel.isDefined)
-            cd.copy(residual = true)
+          if (cd.rmodel.isDefined) cd.copy(residual = true)
           else {
             val n = corpusVecs.count()
             val (nlist, _) = Similarity.scaledIvfConfig(n)
             val dWidth = corpusVecs.select(col("embedding"))
               .head.getSeq[Float](0).length
-            if (Pca.widthRequiresReduction(nlist, dWidth))
-              cd.copy(residual = true, wmodel = Some(Pca.fitIvfResidualWide(
-                corpusVecs, kDims, dRed = math.min(64, dWidth - 1),
-                nlist = nlist)))
-            else
-              cd.copy(residual = true,
-                rmodel = Some(Pca.fitIvfResidual(corpusVecs, kDims, nlist)))
+            cd.copy(residual = true, rmodel = Some(
+              Pca.fitCrossResidual(corpusVecs, kDims, nlist, dWidth)))
           }
         case None =>
           Pca.crossDispatch(corpusVecs, benchVecs.count(), bar = bar,
@@ -872,23 +866,14 @@ object Curation {
       // kNN one the generic dispatch priced — see
       // semanticDeconResidualCheck for the measured divergence
       val (_, npFloor) = Similarity.scaledIvfConfig(corpusVecs.count())
-      val dirty = d.wmodel match {
-        case Some(wm) =>
-          // wide corpus (r16): the cell layout prunes in reduced
-          // space, every probed candidate and the coverage
-          // calibration count kills at FULL width
-          val np = Pca.calibrateThresholdNprobe(corpusVecs,
-            wm.rmodel.cents, benchVecs, threshold, bar,
-            floor = math.max(8, npFloor), reducerOpt = Some(wm.reducer))
-          Pca.residualThresholdCrossWide(corpusVecs, benchVecs, wm, np,
-            threshold)
-        case None =>
-          val rm = d.rmodel.get
-          val np = Pca.calibrateThresholdNprobe(corpusVecs, rm.cents,
-            benchVecs, threshold, bar, floor = math.max(8, npFloor))
-          Pca.residualThresholdCross(corpusVecs, benchVecs, rm, np,
-            threshold)
-      }
+      // a reduced layout (wide corpus) prunes in the reduced space; the
+      // coverage calibration and every probed candidate count kills at
+      // FULL width either way
+      val rm = d.rmodel.get
+      val np = Pca.calibrateThresholdNprobe(corpusVecs, rm, benchVecs,
+        threshold, bar, floor = math.max(8, npFloor))
+      val dirty = Pca.residualThresholdCross(corpusVecs, benchVecs, rm, np,
+        threshold)
       docs.join(dirty.select(col("id_a").as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
     } else {
@@ -934,7 +919,7 @@ object Curation {
     // budget under-covering kills — coverage 0.9-bar missed)
     val np = math.min(model.nlist,
       if (nprobe > 0) nprobe
-      else Pca.calibrateThresholdNprobe(corpusVecs, model.cents, benchVecs,
+      else Pca.calibrateThresholdNprobe(corpusVecs, model, benchVecs,
         threshold, minRecall, floor = math.max(8, npFloor)))
     // r16: the three contract counts below are separate actions — the
     // probed kill set was re-derived twice and the exact broadcast

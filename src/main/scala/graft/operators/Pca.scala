@@ -197,8 +197,8 @@ object Pca {
     * `projCol` as an Array[Float] of width `model.k`.
     */
   /** Row kernel of [[project]]: one vector through the component
-    * matrix — shared by the map-only projection and the wide-arm
-    * assignment kernels so every reduction is bit-identical.
+    * matrix — shared by the map-only projection and the reduced
+    * residual layout's kernels so every reduction is bit-identical.
     */
   private def projectKernel(vec: Array[Float], m: PcaModel): Array[Float] = {
     val out = new Array[Float](m.k)
@@ -378,36 +378,28 @@ object Pca {
                   centsOpt: Option[Similarity.Cents] = None,
                   epsTies: Double = 1e-3,
                   queriesOpt: Option[DataFrame] = None): DataFrame = {
-    val spark = emb.sparkSession
     val queries = queriesOpt.getOrElse(emb.filter(col("vec_id") < 5))
     val model = modelOpt.getOrElse(fit(emb, kDims))
     val n = emb.count()
     val (nl, np) = Similarity.scaledIvfConfig(n)
     val nlistUse = if (nlist > 0) nlist else nl
     val nprobeUse = math.min(nlistUse, if (nprobe > 0) nprobe else math.max(8, np))
-    // r16: the three contract aggregates below are separate actions —
-    // without a materialization each re-evaluates its whole subtree
-    // (the exact reference ran 3x, the approx path 2x per gate run).
-    // Both frames are <= 32*k rows; snapshot once, aggregate scans.
-    val approx = Dedup.materialize(
+    gradeExact(emb, queries, k, minRecall, Some(epsTies),
       pcaIvfTopK(emb, queries, model, k, nlistUse, nprobeUse,
         coarseIters, probedMassMult(n, nlistUse, nprobeUse, k, mult), centsOpt))
-    val exact = Dedup.materialize(Similarity.bruteForceTopK(emb, queries, k))
-    val total = exact.count()
-    val kth = exact.groupBy(col("query_id")).agg(min(col("cos")).as("kth"))
-    val hits = approx.join(kth, "query_id")
-      .filter(col("cos") >= col("kth") - epsTies).count()
-    val mismatches = approx.select(col("query_id"), col("neighbor_id"), col("cos"))
-      .join(exact.select(col("query_id"), col("neighbor_id"),
-          col("cos").as("ref_cos")),
-        Seq("query_id", "neighbor_id"))
-      .filter(col("cos") =!= col("ref_cos")).count()
-    spark.createDataFrame(
-      java.util.List.of(Row(hits.toDouble >= minRecall * total, mismatches == 0L)),
-      StructType(Seq(
-        StructField("recall_ok", BooleanType, nullable = false),
-        StructField("cosines_exact", BooleanType, nullable = false))))
   }
+
+  /** [[Similarity.gradeTopK]] of `approx` against the exact top-k of
+    * `queries` over `emb`. The exact reference is a broadcast
+    * nested-loop scan; it is snapshotted ([[Dedup.materialize]]) so it
+    * runs once and stays out of the graded plan.
+    */
+  private def gradeExact(emb: DataFrame, queries: DataFrame, k: Int,
+                         minRecall: Double, epsTies: Option[Double],
+                         approx: DataFrame): DataFrame =
+    Similarity.gradeTopK(approx,
+      Dedup.materialize(Similarity.bruteForceTopK(emb, queries, k)),
+      minRecall, epsTies)
 
   /** Search-quality contract of [[pcaTopK]] as ONE invariant row:
     * `recall_ok` — recall@k against the exact full-space reference is
@@ -433,27 +425,10 @@ object Pca {
   def pcaSearchCheck(emb: DataFrame, k: Int = 10, kDims: Int = 16,
                      mult: Int = 8, minRecall: Double = 0.9,
                      modelOpt: Option[PcaModel] = None): DataFrame = {
-    val spark = emb.sparkSession
     val queries = emb.filter(col("vec_id") < 5)
     val model = modelOpt.getOrElse(fit(emb, kDims))
-    // r16: materialize once — see pcaIvfCheck
-    val approx = Dedup.materialize(pcaTopK(emb, queries, model, k,
-      adaptiveMult(emb.count(), mult)))
-    val exact = Dedup.materialize(Similarity.bruteForceTopK(emb, queries, k))
-    val total = exact.count()
-    val hits = exact.select(col("query_id"), col("neighbor_id"))
-      .join(approx.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id")).count()
-    val mismatches = approx.select(col("query_id"), col("neighbor_id"), col("cos"))
-      .join(exact.select(col("query_id"), col("neighbor_id"),
-          col("cos").as("ref_cos")),
-        Seq("query_id", "neighbor_id"))
-      .filter(col("cos") =!= col("ref_cos")).count()
-    spark.createDataFrame(
-      java.util.List.of(Row(hits.toDouble >= minRecall * total, mismatches == 0L)),
-      StructType(Seq(
-        StructField("recall_ok", BooleanType, nullable = false),
-        StructField("cosines_exact", BooleanType, nullable = false))))
+    gradeExact(emb, queries, k, minRecall, None,
+      pcaTopK(emb, queries, model, k, adaptiveMult(emb.count(), mult)))
   }
 
   /** The verification surface: ONE invariant row asserting the eigen
@@ -563,15 +538,58 @@ object Pca {
   /** Per-cell residual projection model: `centers(c) = ĉ_c + μ_c`
     * (the effective per-cell offset the exact term scores against) and
     * `axes(c)` = kDims orthonormal residual axes, both indexed by cell
-    * id; `cents` is the full-space coarse layout shared with every IVF
-    * entry point.
+    * id; `cents` is the coarse layout shared with every IVF entry
+    * point. `d` is the width the layout lives at.
+    *
+    * `reducer` is the width reduction for wide embeddings. With `None`
+    * the layout lives at the corpus width. With `Some(r)` it lives in
+    * r's `d = r.k`-dim projected space: every entry point projects the
+    * corpus and the queries through `r` before assignment and ranking,
+    * and still reranks and verifies by exact cosine at the full width
+    * `r.d`. The reduction exists because [[residualMoments]]' per-task
+    * accumulator is nlist · d²/2 doubles, which [[maxMomentTaskBytes]]
+    * refuses at embedding widths (~10.6 GB per task at d = 768 under the
+    * n = 2e7 scaled geometry). One global PCA fit is width-quadratic
+    * but nlist-free (~2.4 MB per task at d = 768), and in the projected
+    * space the per-cell moments are back at the design point. The
+    * projection loss only moves the candidate set, and the measured
+    * calibration ladder prices it like every other loss: recall is
+    * always graded against the full-width exact reference.
     */
   case class IvfResidualModel(cents: Similarity.Cents,
                               centers: Array[Array[Double]],
                               axes: Array[Array[Array[Double]]],
-                              d: Int, kDims: Int) {
+                              d: Int, kDims: Int,
+                              reducer: Option[PcaModel] = None) {
     def nlist: Int = cents.length
   }
+
+  /** `(vec_id, embedding)` rows in the model's layout space: projected
+    * through the reducer when the model has one, `df` itself otherwise.
+    */
+  private def inLayout(df: DataFrame, model: IvfResidualModel): DataFrame =
+    model.reducer.fold(df)(r => project(df, r, projCol = "embedding"))
+
+  /** `(vec_id, embedding, full)` rows: the vector in the model's layout
+    * space under `embedding` (what cell assignment and probing read)
+    * and at full width under `full` (what exact scoring reads) — one
+    * map-only pass.
+    */
+  private def withFullWidth(df: DataFrame, model: IvfResidualModel): DataFrame =
+    model.reducer match {
+      case None => df.select(col("vec_id"), col("embedding"),
+        col("embedding").as("full"))
+      case Some(r) =>
+        val spark = df.sparkSession
+        import spark.implicits._
+        val bc = spark.sparkContext.broadcast(r)
+        df.select(col("vec_id").cast("long"), col("embedding"))
+          .as[(Long, Array[Float])]
+          .mapPartitions { it =>
+            val m = bc.value
+            it.map { case (id, v) => (id, projectKernel(v, m), v) }
+          }.toDF("vec_id", "embedding", "full")
+    }
 
   /** Unit-direction of one centroid (zero-norm guarded like the PQ
     * kernels: a zero centroid must not NaN every residual).
@@ -596,11 +614,30 @@ object Pca {
     * `max(2·kDims, 8)` members) fall back to the GLOBAL residual axes
     * (the summed moments — free), so a starved cell ranks no worse
     * than the global-projection baseline.
+    *
+    * `dRed > 0` fits the reduced layout ([[IvfResidualModel]]'s
+    * `reducer`): a global PCA to `dRed` dims first, then the same fit
+    * on the projected corpus (`centsOpt` is then a projected-space
+    * layout). Two corpus passes more than the full-width fit: the
+    * global moments and the projection.
     */
   def fitIvfResidual(emb: DataFrame, kDims: Int = 16, nlist: Int = 0,
                      coarseIters: Int = -1, vecCol: String = "embedding",
                      centsOpt: Option[Similarity.Cents] = None,
-                     trainSample: Long = 0): IvfResidualModel = {
+                     trainSample: Long = 0, dRed: Int = 0): IvfResidualModel = {
+    if (dRed > 0) {
+      val d = emb.select(size(col(vecCol))).head().getInt(0)
+      require(dRed < d,
+        s"fitIvfResidual(dRed = $dRed) reduces $d -> $dRed; at dRed >= d " +
+          "leave dRed = 0 (no reduction to pay for)")
+      require(kDims <= dRed, s"kDims ($kDims) must fit in dRed ($dRed)")
+      val reducer = fit(emb, dRed, vecCol)
+      val red = Dedup.materialize(project(emb, reducer, vecCol = vecCol,
+        projCol = "embedding"))
+      return fitIvfResidual(red, kDims, nlist, coarseIters,
+          centsOpt = centsOpt, trainSample = trainSample)
+        .copy(reducer = Some(reducer))
+    }
     val spark = emb.sparkSession
     import spark.implicits._
     val n = emb.count()
@@ -695,9 +732,9 @@ object Pca {
               s"residualMoments: worst-case per-task accumulator " +
                 s"nlist=${cs.length} x (1+$d+$d($d+1)/2) x 8B = $need bytes " +
                 s"exceeds the $momentBudget-byte budget (quadratic in " +
-                "embedding width) — reduce nlist, use the wide arm " +
-                "(Pca.fitIvfResidualWide: global PCA pre-reduction, " +
-                "nlist-free moments at full width), or raise " +
+                "embedding width) — reduce nlist, fit the reduced " +
+                "layout (Pca.fitIvfResidual(dRed = …): global PCA " +
+                "pre-reduction, nlist-free moments at full width), or raise " +
                 "Pca.maxMomentTaskBytes on executors sized for it")
           }
           require(v.length == d, s"ragged embedding width: ${v.length} vs $d")
@@ -845,18 +882,19 @@ object Pca {
     * [[ivfResidualTopKCross]] — the build-once/serve-many shape every
     * persisted index here follows. Materialize it (e.g.
     * [[Dedup.materialize]]) before reuse, or each consumer re-runs the
-    * lazy plan.
+    * lazy plan. A reduced model indexes the projected corpus.
     */
   def buildResidualIndex(emb: DataFrame,
                          model: IvfResidualModel): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
-    emb.select(col("vec_id").cast("long"), col("embedding"))
+    val src = inLayout(emb, model)
+    src.select(col("vec_id").cast("long"), col("embedding"))
       // r16: scale-adaptive width (see [[Width]]) — the per-row kernel
       // is nlist·d MACs; a small tranche no longer pays full-box task
       // overhead, an at-scale corpus still saturates the conf cap
-      .repartition(Width.partsFor(emb))
+      .repartition(Width.partsFor(src))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val m = bc.value
@@ -879,28 +917,16 @@ object Pca {
       }.toDF("neighbor_id", "cell", "rproj")
   }
 
+  /** Probe → residual rank → top `pool` candidates per query, all in
+    * the model's layout space, then the exact full-width rerank.
+    */
   private def residualTopKImpl(emb: DataFrame, queries: DataFrame,
                                model: IvfResidualModel, k: Int, nprobe: Int,
                                pool: Int, excludeSelf: Boolean,
                                indexOpt: Option[DataFrame] = None): DataFrame = {
     require(pool >= k, "rerank pool must cover k")
-    val indexed = indexOpt.getOrElse(buildResidualIndex(emb, model))
-    val top = residualCandidates(indexed, queries, model, nprobe, pool,
-      excludeSelf)
-    rerankExact(top, emb, queries, k)
-  }
-
-  /** Candidate stage of the residual family alone — probe → residual
-    * rank → top `pool` (query_id, neighbor_id) per query, NO rerank —
-    * so a caller whose ranking space differs from its scoring space
-    * (the wide arm: candidates in the reduced space, exact cosines in
-    * the full one) can graft its own [[rerankExact]] tail on. The
-    * query side must be the SAME width as `model.d`.
-    */
-  private def residualCandidates(indexed: DataFrame, queries: DataFrame,
-                                 model: IvfResidualModel, nprobe: Int,
-                                 pool: Int, excludeSelf: Boolean): DataFrame = {
     require(nprobe >= 1 && nprobe <= model.nlist)
+    val indexed = indexOpt.getOrElse(buildResidualIndex(emb, model))
     val spark = queries.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -908,7 +934,8 @@ object Pca {
     // query side: explode into probed cells, then per (query, cell)
     // the exact offset term and the projected query — tiny, broadcast
     val q = Similarity.withProbeCells(
-        queries.select(col("vec_id").cast("long").as("query_id"), col("embedding")),
+        inLayout(queries, model)
+          .select(col("vec_id").cast("long").as("query_id"), col("embedding")),
         model.cents, nprobe)
       .select(col("query_id"), col("embedding"), col("probe_cell"))
       .as[(Long, Array[Float], Int)]
@@ -942,308 +969,10 @@ object Pca {
         col("base") + VectorFunctions.dot(col("qproj"), col("rproj")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("approx").desc, col("neighbor_id"))
-    cand.withColumn("r", row_number().over(w))
+    val top = cand.withColumn("r", row_number().over(w))
       .filter(col("r") <= pool)
       .select(col("query_id"), col("neighbor_id"))
-  }
-
-  // ── wide-embedding residual arm (r16) ───────────────────────────────
-  //
-  // [[residualMoments]]' per-task accumulator is nlist · d²/2 doubles —
-  // at d = 768 under the n = 2e7 scaled geometry that is ~10.6 GB per
-  // task, which [[maxMomentTaskBytes]] refuses at plan time. Until now
-  // the documented workaround ("a PCA pre-reduction") was advice; this
-  // family makes it in-engine: ONE global PCA fit (a single packed
-  // d(d+1)/2 moment accumulator per task — ~2.4 MB at d = 768, width-
-  // quadratic but nlist-FREE — plus a driver Jacobi, seconds at
-  // embedding widths), then the whole residual machinery runs in the
-  // dRed-dimensional projected space where the per-cell moments are
-  // back at the design point (nlist · dRed²/2). Serving follows the
-  // family contract: candidates rank in reduced space, the top `pool`
-  // rerank by EXACT full-width cosine ([[rerankExact]] — the shared
-  // tail), so emitted cosines are exact and only the candidate SET
-  // stacks one more approximation (global projection loss, priced by
-  // the same measured calibration ladder as every other arm — recall
-  // is graded against the FULL-space exact reference, so a reduction
-  // that loses the neighborhood shows up as a bigger nprobe or a
-  // definitive `ok = false`, never silently).
-
-  /** The two-stage wide model: a global reducer (d → dRed) and the
-    * residual layout fit in the REDUCED space. `rmodel.d == dRed`;
-    * the full width survives only in `reducer.d`.
-    */
-  case class WideResidualModel(reducer: PcaModel, rmodel: IvfResidualModel) {
-    def d: Int = reducer.d
-    def dRed: Int = reducer.k
-    def nlist: Int = rmodel.nlist
-  }
-
-  /** Reduce a full-width corpus to the wide model's serving space —
-    * map-only (broadcast components), output (vec_id, embedding) so
-    * every reduced-space consumer sees the standard column shape.
-    */
-  private def reduceWidth(emb: DataFrame, reducer: PcaModel): DataFrame =
-    project(emb, reducer, projCol = "embedding")
-
-  /** Fit the wide arm: global PCA to `dRed`, then [[fitIvfResidual]]
-    * on the reduced corpus (same geometry defaults — occupancy-scaled
-    * nlist, sampled Lloyd via `trainSample`). Training-class: two
-    * corpus passes (global moments; reduced residual moments) + the
-    * coarse training [[fitIvfResidual]] already does.
-    */
-  def fitIvfResidualWide(emb: DataFrame, kDims: Int = 16, dRed: Int = 64,
-                         nlist: Int = 0, coarseIters: Int = -1,
-                         vecCol: String = "embedding",
-                         trainSample: Long = 0): WideResidualModel = {
-    val d = emb.select(size(col(vecCol))).head().getInt(0)
-    require(dRed < d,
-      s"fitIvfResidualWide reduces $d -> $dRed; at dRed >= d use " +
-        "fitIvfResidual directly (no reduction to pay for)")
-    require(kDims <= dRed, s"kDims ($kDims) must fit in dRed ($dRed)")
-    val reducer = fit(emb, dRed, vecCol)
-    val red = Dedup.materialize(
-      reduceWidth(emb.select(col("vec_id"), col(vecCol).as("embedding")),
-        reducer))
-    val rmodel = fitIvfResidual(red, kDims, nlist, coarseIters,
-      trainSample = trainSample)
-    WideResidualModel(reducer, rmodel)
-  }
-
-  /** The wide arm's serving index: the REDUCED-space residual index
-    * (neighbor_id, cell, W_c ρ) — one reduce + one index pass over the
-    * corpus. Build once and pass through `indexOpt` on every serve /
-    * calibration rung, exactly like [[buildResidualIndex]].
-    */
-  def buildWideResidualIndex(emb: DataFrame,
-                             wmodel: WideResidualModel): DataFrame =
-    buildResidualIndex(reduceWidth(emb, wmodel.reducer), wmodel.rmodel)
-
-  /** Top-k ANN at full width through the wide arm: queries reduce
-    * map-side, candidates come from the reduced-space residual probe
-    * ([[residualCandidates]]), and the top `pool` per query rerank by
-    * exact FULL-width cosine. Output matches
-    * [[Similarity.bruteForceTopK]]: (query_id, neighbor_id, cos, rank)
-    * with exact emitted cosines.
-    */
-  def ivfResidualTopKWide(emb: DataFrame, queries: DataFrame,
-                          wmodel: WideResidualModel, k: Int, nprobe: Int,
-                          pool: Int,
-                          indexOpt: Option[DataFrame] = None): DataFrame = {
-    require(pool >= k, "rerank pool must cover k")
-    val indexed = indexOpt.getOrElse(buildWideResidualIndex(emb, wmodel))
-    val redQ = reduceWidth(
-      queries.select(col("vec_id"), col("embedding")), wmodel.reducer)
-    val top = residualCandidates(indexed, redQ, wmodel.rmodel, nprobe, pool,
-      excludeSelf = true)
     rerankExact(top, emb, queries, k)
-  }
-
-  /** The measured ladder for the wide arm — recall graded against the
-    * FULL-width exact reference (the ladder's own brute-force pass on
-    * `emb`), so the global projection loss is priced into the budget
-    * with everything else. `indexOpt` as everywhere: the ladder
-    * searches the same corpus at several budgets, so at-scale callers
-    * build [[buildWideResidualIndex]] once and pass it through.
-    */
-  def calibrateWideResidualBudget(emb: DataFrame, wmodel: WideResidualModel,
-                                  k: Int = 10, bar: Double = 0.9,
-                                  epsTies: Double = 1e-3, mult: Int = 8,
-                                  sample: Int = 32, floor: Int = 8,
-                                  indexOpt: Option[DataFrame] = None): CalibratedBudget = {
-    val n = emb.count()
-    val seed = math.max(1, math.min(wmodel.nlist, floor))
-    calibrateLadder(emb, k, bar, epsTies, seed, wmodel.nlist, sample) {
-      (qdf, np) =>
-        ivfResidualTopKWide(emb, qdf, wmodel, k, np,
-          probedMassMult(n, wmodel.nlist, np, k, mult) * k,
-          indexOpt = indexOpt)
-    }
-  }
-
-  /** Search-quality contract of the wide arm, one invariant row
-    * mirroring [[ivfResidualCheck]] (same spread residue-13 graded
-    * sample, disjoint from the ladder's residue-7 calibration slice):
-    * ε-recall vs the FULL-width exact reference ≥ `minRecall` AND
-    * emitted-cosine exactness. `nprobe = 0` resolves by the measured
-    * wide ladder.
-    */
-  def ivfResidualWideCheck(emb: DataFrame, k: Int = 10,
-                           nprobe: Int = 0, mult: Int = 8,
-                           minRecall: Double = 0.9,
-                           wmodelOpt: Option[WideResidualModel] = None,
-                           kDims: Int = 16, dRed: Int = 64,
-                           epsTies: Double = 1e-3,
-                           indexOpt: Option[DataFrame] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val spreadQ = emb.filter(pmod(col("vec_id"), lit(101)) === 13)
-      .orderBy("vec_id").limit(32)
-    val queries = if (spreadQ.isEmpty)
-                    emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(32)
-                  else spreadQ
-    val n = emb.count()
-    val wmodel = wmodelOpt.getOrElse(fitIvfResidualWide(emb, kDims, dRed))
-    val (_, np) = Similarity.scaledIvfConfig(n)
-    val nprobeUse = math.min(wmodel.nlist,
-      if (nprobe > 0) nprobe
-      else calibrateWideResidualBudget(emb, wmodel, k, minRecall,
-        epsTies = epsTies, mult = mult, floor = math.max(8, np),
-        indexOpt = indexOpt).nprobe)
-    val pool = probedMassMult(n, wmodel.nlist, nprobeUse, k, mult) * k
-    // r16: materialize once — see pcaIvfCheck
-    val approx = Dedup.materialize(ivfResidualTopKWide(emb, queries, wmodel,
-      k, nprobeUse, pool, indexOpt = indexOpt))
-    val exact = Dedup.materialize(Similarity.bruteForceTopK(emb, queries, k))
-    val total = exact.count()
-    val kth = exact.groupBy(col("query_id")).agg(min(col("cos")).as("kth"))
-    val hits = approx.join(kth, "query_id")
-      .filter(col("cos") >= col("kth") - epsTies).count()
-    val mismatches = approx.select(col("query_id"), col("neighbor_id"), col("cos"))
-      .join(exact.select(col("query_id"), col("neighbor_id"),
-          col("cos").as("ref_cos")),
-        Seq("query_id", "neighbor_id"))
-      .filter(col("cos") =!= col("ref_cos")).count()
-    spark.createDataFrame(
-      java.util.List.of(Row(hits.toDouble >= minRecall * total,
-        mismatches == 0L)),
-      StructType(Seq("recall_ok", "cosines_exact")
-        .map(StructField(_, BooleanType, nullable = false))))
-  }
-
-  /** [[annDispatch]] for a wide corpus: the two serving arms that
-    * exist at width (the global-projection arm works at any d; the
-    * plain residual arm's moments don't) calibrated on the same
-    * measured ladders and compared by [[annDispatchFrom]]'s rules. The
-    * returned dispatch serves through [[annTopKAutoWide]].
-    */
-  def annDispatchWide(emb: DataFrame, model: PcaModel,
-                      cents: Similarity.Cents, wmodel: WideResidualModel,
-                      k: Int = 10, bar: Double = 0.9, epsTies: Double = 1e-3,
-                      mult: Int = 8, sample: Int = 32,
-                      floor: Int = 8): AnnDispatch =
-    annDispatchFrom(
-      calibratePcaIvfBudget(emb, model, cents, k, bar, epsTies, mult,
-        sample, floor),
-      calibrateWideResidualBudget(emb, wmodel, k, bar, epsTies, mult,
-        sample, floor),
-      wmodel.nlist,
-      emb.count())
-
-  /** [[annTopKAuto]] at width: serve through whichever arm the wide
-    * dispatch measured cheaper at the recall bar. Pass the dispatch
-    * back in (or a stored one — [[AnnDispatch]] is arm-agnostic, so
-    * the r15 decision store carries wide verdicts unchanged) to keep
-    * serving calibration-free and scan-free.
-    */
-  def annTopKAutoWide(emb: DataFrame, queries: DataFrame, model: PcaModel,
-                      cents: Similarity.Cents, wmodel: WideResidualModel,
-                      k: Int = 10, mult: Int = 8,
-                      dispatchOpt: Option[AnnDispatch] = None): DataFrame = {
-    val d = dispatchOpt.getOrElse(
-      annDispatchWide(emb, model, cents, wmodel, k))
-    val n = if (d.n >= 0L) d.n else emb.count()
-    if (d.residual)
-      ivfResidualTopKWide(emb, queries, wmodel, k, d.resid.nprobe,
-        probedMassMult(n, wmodel.nlist, d.resid.nprobe, k, mult) * k)
-    else
-      pcaIvfTopK(emb, queries, model, k, cents.length, d.global.nprobe,
-        mult = probedMassMult(n, cents.length, d.global.nprobe, k, mult),
-        centsOpt = Some(cents))
-  }
-
-  /** Full-width rows assigned to the wide model's REDUCED-space cell
-    * layout in ONE map-only pass (reduce + argmin against the
-    * broadcast layout per row — dRed·d + nlist·dRed MACs, no corpus
-    * shuffle, no join): the wide analogue of [[Similarity.cellAssign]]
-    * that keeps the full vector in the row for exact scoring.
-    */
-  private def assignCellsWide(corpus: DataFrame, reducer: PcaModel,
-                              cents: Similarity.Cents): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bcR = spark.sparkContext.broadcast(reducer)
-    val bcC = spark.sparkContext.broadcast(cents)
-    corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val m = bcR.value; val cs = bcC.value
-        it.map { case (id, v) =>
-          (id, v, cellOfKernel(projectKernel(v, m), cs))
-        }
-      }.toDF("vec_id", "embedding", "cell")
-  }
-
-  /** The wide analogue of [[Similarity.withProbeCells]]: each
-    * full-width query reduces map-side and explodes into its `nprobe`
-    * nearest REDUCED-space cells, keeping the full vector in the row
-    * for exact scoring.
-    */
-  private def withProbeCellsWide(queries: DataFrame,
-                                 wmodel: WideResidualModel,
-                                 nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bcR = spark.sparkContext.broadcast(wmodel.reducer)
-    val bcC = spark.sparkContext.broadcast(wmodel.rmodel.cents)
-    queries.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val m = bcR.value; val cs = bcC.value
-        it.flatMap { case (id, v) =>
-          Similarity.probeCellsOf(projectKernel(v, m), cs, nprobe)
-            .map(c => (id, v, c))
-        }
-      }.toDF("vec_id", "embedding", "probe_cell")
-  }
-
-  /** Cross-set kNN through the WIDE arm ([[ivfResidualTopKCross]] at
-    * width): queries reduce map-side and probe the corpus's frozen
-    * reduced-space layout, candidates rank by the reduced residual
-    * decomposition, the top `pool` rerank by exact FULL-width cosine,
-    * rows below `threshold` drop. Same output contract as the plain
-    * cross path: (query_id, neighbor_id, cos).
-    */
-  def ivfResidualTopKCrossWide(corpus: DataFrame, queries: DataFrame,
-                               wmodel: WideResidualModel, k: Int,
-                               nprobe: Int, pool: Int,
-                               threshold: Double = Double.NegativeInfinity,
-                               indexOpt: Option[DataFrame] = None): DataFrame = {
-    require(pool >= k, "rerank pool must cover k")
-    val indexed = indexOpt.getOrElse(buildWideResidualIndex(corpus, wmodel))
-    val redQ = reduceWidth(
-      queries.select(col("vec_id"), col("embedding")), wmodel.reducer)
-    val top = residualCandidates(indexed, redQ, wmodel.rmodel, nprobe, pool,
-      excludeSelf = false)
-    rerankExact(top, corpus, queries, k)
-      .filter(col("cos") >= threshold)
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
-  }
-
-  /** Cross-set THRESHOLD match through the WIDE arm
-    * ([[residualThresholdCross]] at width): the cell layout prunes in
-    * reduced space (map-only assignment both sides — no corpus
-    * shuffle), every probed candidate verifies by EXACT full-width
-    * cosine, so precision is exact at any d and recall is the probed
-    * coverage the calibration prices.
-    */
-  def residualThresholdCrossWide(corpus: DataFrame, queries: DataFrame,
-                                 wmodel: WideResidualModel, nprobe: Int,
-                                 threshold: Double): DataFrame = {
-    import graft.functions.VectorFunctions
-    require(nprobe >= 1 && nprobe <= wmodel.nlist)
-    val assigned = assignCellsWide(corpus, wmodel.reducer,
-        wmodel.rmodel.cents)
-      .select(col("vec_id").as("id_a"), col("embedding"),
-        VectorFunctions.norm(col("embedding")).as("nrm_a"), col("cell"))
-    val q = withProbeCellsWide(queries, wmodel, nprobe)
-      .select(col("vec_id").as("id_b"), col("embedding").as("q_emb"),
-        VectorFunctions.norm(col("embedding")).as("nrm_b"),
-        col("probe_cell"))
-    assigned.join(broadcast(q), col("cell") === col("probe_cell"))
-      .withColumn("cos", round(
-        VectorFunctions.dot(col("embedding"), col("q_emb")) /
-          (col("nrm_a") * col("nrm_b")), 6))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
   }
 
   /** Search-quality contract of [[ivfResidualTopK]], mirroring
@@ -1276,9 +1005,7 @@ object Pca {
     * and whether the measurement cleared the acceptance bar. `ok =
     * false` with `measured = true` is the definitive ranking-bound
     * verdict — no budget up to the cap reaches the bar on this
-    * corpus — and is what [[annDispatch]] votes on; the legacy Int
-    * entry points log it rather than silently serving an unverified
-    * budget.
+    * corpus — and is what [[annDispatch]] votes on.
     */
   case class CalibratedBudget(nprobe: Int, recall: Double,
                               measured: Boolean, ok: Boolean)
@@ -1329,14 +1056,18 @@ object Pca {
     sys.error("unreachable")
   }
 
-  /** [[calibrateResidualNprobe]] returning the full measured evidence
-    * ([[CalibratedBudget]]) — what [[annDispatch]] compares arms on.
-    */
   /** `indexOpt`: a prebuilt MATERIALIZED [[buildResidualIndex]] —
     * without it every ladder rung re-derives the corpus-sized index
     * plan (n·nlist·d MACs per rung), which is immaterial at gate
     * scale but the dominant cost at n ≥ 1e6; the at-scale callers
     * (ScaleProbe, serving loops) build once and pass it through.
+    *
+    * The seed is where the two layouts differ: at full width the
+    * ε-prefix necessary bound; for a reduced model the analytic
+    * `floor`, because its cells live in the projected space, where the
+    * prefix's full-width acceptability accounting doesn't transfer.
+    * Recall is graded at full width either way, so the reduction's
+    * loss is priced into the budget with everything else.
     */
   def calibrateResidualBudget(emb: DataFrame, model: IvfResidualModel,
                               k: Int = 10, bar: Double = 0.9,
@@ -1344,27 +1075,16 @@ object Pca {
                               sample: Int = 32, floor: Int = 8,
                               indexOpt: Option[DataFrame] = None): CalibratedBudget = {
     val n = emb.count()
-    val seed = Similarity.calibratedNprobe(emb, model.cents, k, bar,
-      sample, floor, epsTies)
+    val seed =
+      if (model.reducer.isDefined) floor
+      else Similarity.calibratedNprobe(emb, model.cents, k, bar, sample,
+        floor, epsTies)
     calibrateLadder(emb, k, bar, epsTies, seed, model.nlist, sample) {
       (qdf, np) =>
         ivfResidualTopK(emb, qdf, model, k, np,
           probedMassMult(n, model.nlist, np, k, mult) * k,
           indexOpt = indexOpt)
     }
-  }
-
-  def calibrateResidualNprobe(emb: DataFrame, model: IvfResidualModel,
-                              k: Int = 10, bar: Double = 0.9,
-                              epsTies: Double = 1e-3, mult: Int = 8,
-                              sample: Int = 32, floor: Int = 8): Int = {
-    val b = calibrateResidualBudget(emb, model, k, bar, epsTies, mult,
-      sample, floor)
-    if (!b.ok)
-      println(f"[calibrate] residual ladder exhausted at nprobe=${b.nprobe} " +
-        f"recall=${b.recall}%.3f < bar — serving budget is UNVERIFIED " +
-        "(ranking-bound corpus)")
-    b.nprobe
   }
 
   /** The same measured ladder for the GLOBAL-projection arm
@@ -1391,35 +1111,17 @@ object Pca {
     }
   }
 
-  def calibratePcaIvfNprobe(emb: DataFrame, model: PcaModel,
-                            cents: Similarity.Cents, k: Int = 10,
-                            bar: Double = 0.9, epsTies: Double = 1e-3,
-                            mult: Int = 8, sample: Int = 32,
-                            floor: Int = 8): Int = {
-    val b = calibratePcaIvfBudget(emb, model, cents, k, bar, epsTies,
-      mult, sample, floor)
-    if (!b.ok)
-      println(f"[calibrate] global-arm ladder exhausted at nprobe=${b.nprobe} " +
-        f"recall=${b.recall}%.3f < bar — serving budget is UNVERIFIED " +
-        "(ranking-bound corpus)")
-    b.nprobe
-  }
-
   /** `nprobe = 0` (the default) resolves by the MEASURED end-to-end
     * calibration above, floored at the analytic scaled rule — at the
     * gate scales the floor usually binds (true neighbors concentrate
     * in the top cells), while at n = 505k the calibration lifts the
     * budget to the crossover the analytic rule misses by 4×.
     */
-  /** The graded queries are a SPREAD deterministic sample
-    * (`pmod(vec_id, 101) = 13`, first 32 by id — disjoint from the
-    * calibration's residue 7: budget chosen on one slice, graded on
-    * another, the train/validation split that keeps the measurement
-    * honest). A handful of CONSECUTIVE low ids would grade a single
-    * blob fringe instead of the corpus: measured at n = 505k, the
-    * whole-population ε-recall at nprobe = 38 is ≥ 0.95 while the
-    * 5-query `vec_id < 5` slice reads < 0.9 — a sampling artifact that
-    * would force every budget to the worst 1% of queries.
+  /** The graded queries are [[Similarity.spreadSample]] — disjoint
+    * from the calibration's residue-7 slice: budget chosen on one
+    * slice, graded on another, the train/validation split that keeps
+    * the measurement honest. A reduced model is graded the same way,
+    * against the FULL-width exact reference.
     */
   def ivfResidualCheck(emb: DataFrame, k: Int = 10, kDims: Int = 16,
                        nprobe: Int = 0, mult: Int = 8,
@@ -1427,15 +1129,7 @@ object Pca {
                        modelOpt: Option[IvfResidualModel] = None,
                        epsTies: Double = 1e-3,
                        indexOpt: Option[DataFrame] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val spreadQ = emb.filter(pmod(col("vec_id"), lit(101)) === 13)
-      .orderBy("vec_id").limit(32)
-    // fallback (no residue-13 ids — tiny fixtures): hash-ordered slice,
-    // spread over the id space like the residue sample, not the
-    // r14-retired consecutive-low-id blob fringe
-    val queries = if (spreadQ.isEmpty)
-                    emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(32)
-                  else spreadQ
+    val queries = Similarity.spreadSample(emb)
     val n = emb.count()
     val model = modelOpt.getOrElse(fitIvfResidual(emb, kDims))
     val (_, np) = Similarity.scaledIvfConfig(n)
@@ -1445,24 +1139,9 @@ object Pca {
         epsTies = epsTies, mult = mult, floor = math.max(8, np),
         indexOpt = indexOpt).nprobe)
     val pool = probedMassMult(n, model.nlist, nprobeUse, k, mult) * k
-    // r16: materialize once — see pcaIvfCheck
-    val approx = Dedup.materialize(ivfResidualTopK(emb, queries, model, k,
-      nprobeUse, pool, indexOpt = indexOpt))
-    val exact = Dedup.materialize(Similarity.bruteForceTopK(emb, queries, k))
-    val total = exact.count()
-    val kth = exact.groupBy(col("query_id")).agg(min(col("cos")).as("kth"))
-    val hits = approx.join(kth, "query_id")
-      .filter(col("cos") >= col("kth") - epsTies).count()
-    val mismatches = approx.select(col("query_id"), col("neighbor_id"), col("cos"))
-      .join(exact.select(col("query_id"), col("neighbor_id"),
-          col("cos").as("ref_cos")),
-        Seq("query_id", "neighbor_id"))
-      .filter(col("cos") =!= col("ref_cos")).count()
-    spark.createDataFrame(
-      java.util.List.of(Row(hits.toDouble >= minRecall * total, mismatches == 0L)),
-      StructType(Seq(
-        StructField("recall_ok", BooleanType, nullable = false),
-        StructField("cosines_exact", BooleanType, nullable = false))))
+    gradeExact(emb, queries, k, minRecall, Some(epsTies),
+      ivfResidualTopK(emb, queries, model, k, nprobeUse, pool,
+        indexOpt = indexOpt))
   }
 
   /** Search-quality contract of [[ivfResidualTopKCross]]: for a
@@ -1481,7 +1160,6 @@ object Pca {
                             modelOpt: Option[IvfResidualModel] = None,
                             epsTies: Double = 1e-3,
                             indexOpt: Option[DataFrame] = None): DataFrame = {
-    val spark = corpus.sparkSession
     // SPREAD deterministic sample of the query side: ordering by a
     // residue before the id spreads the 32 graded queries across the
     // whole id space — consecutive low ids grade a single blob fringe
@@ -1500,24 +1178,9 @@ object Pca {
         epsTies = epsTies, mult = mult, floor = math.max(8, np),
         indexOpt = indexOpt).nprobe)
     val pool = probedMassMult(n, model.nlist, nprobeUse, k, mult) * k
-    // r16: materialize once — see pcaIvfCheck
-    val approx = Dedup.materialize(ivfResidualTopKCross(corpus, qs, model, k,
-      nprobeUse, pool, indexOpt = indexOpt))
-    val exact = Dedup.materialize(Similarity.bruteForceTopK(corpus, qs, k))
-    val total = exact.count()
-    val kth = exact.groupBy(col("query_id")).agg(min(col("cos")).as("kth"))
-    val hits = approx.join(kth, "query_id")
-      .filter(col("cos") >= col("kth") - epsTies).count()
-    val mismatches = approx.select(col("query_id"), col("neighbor_id"), col("cos"))
-      .join(exact.select(col("query_id"), col("neighbor_id"),
-          col("cos").as("ref_cos")),
-        Seq("query_id", "neighbor_id"))
-      .filter(col("cos") =!= col("ref_cos")).count()
-    spark.createDataFrame(
-      java.util.List.of(Row(hits.toDouble >= minRecall * total, mismatches == 0L)),
-      StructType(Seq(
-        StructField("recall_ok", BooleanType, nullable = false),
-        StructField("cosines_exact", BooleanType, nullable = false))))
+    gradeExact(corpus, qs, k, minRecall, Some(epsTies),
+      ivfResidualTopKCross(corpus, qs, model, k, nprobeUse, pool,
+        indexOpt = indexOpt))
   }
 
   // ── ANN serving auto-dispatch ───────────────────────────────────────
@@ -1628,33 +1291,9 @@ object Pca {
                    k: Int = 10, mult: Int = 8, minRecall: Double = 0.9,
                    epsTies: Double = 1e-3,
                    dispatchOpt: Option[AnnDispatch] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val spreadQ = emb.filter(pmod(col("vec_id"), lit(101)) === 13)
-      .orderBy("vec_id").limit(32)
-    // fallback (no residue-13 ids — tiny fixtures): hash-ordered slice,
-    // spread over the id space like the residue sample, not the
-    // r14-retired consecutive-low-id blob fringe (r15 VERDICT finding 4)
-    val queries = if (spreadQ.isEmpty)
-                    emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(32)
-                  else spreadQ
-    // r16: materialize once — see pcaIvfCheck
-    val approx = Dedup.materialize(annTopKAuto(emb, queries, model, cents,
-      rmodel, k, mult, dispatchOpt))
-    val exact = Dedup.materialize(Similarity.bruteForceTopK(emb, queries, k))
-    val total = exact.count()
-    val kth = exact.groupBy(col("query_id")).agg(min(col("cos")).as("kth"))
-    val hits = approx.join(kth, "query_id")
-      .filter(col("cos") >= col("kth") - epsTies).count()
-    val mismatches = approx.select(col("query_id"), col("neighbor_id"), col("cos"))
-      .join(exact.select(col("query_id"), col("neighbor_id"),
-          col("cos").as("ref_cos")),
-        Seq("query_id", "neighbor_id"))
-      .filter(col("cos") =!= col("ref_cos")).count()
-    spark.createDataFrame(
-      java.util.List.of(Row(hits.toDouble >= minRecall * total, mismatches == 0L)),
-      StructType(Seq(
-        StructField("recall_ok", BooleanType, nullable = false),
-        StructField("cosines_exact", BooleanType, nullable = false))))
+    val queries = Similarity.spreadSample(emb)
+    gradeExact(emb, queries, k, minRecall, Some(epsTies),
+      annTopKAuto(emb, queries, model, cents, rmodel, k, mult, dispatchOpt))
   }
 
   // ── cross-set arm dispatch ──────────────────────────────────────────
@@ -1685,18 +1324,25 @@ object Pca {
   case class CrossDispatch(residual: Boolean, nlist: Int,
                            analyticBanded: Double, analyticResidual: Double,
                            rmodel: Option[IvfResidualModel],
-                           resid: Option[CalibratedBudget],
-                           wmodel: Option[WideResidualModel] = None)
+                           resid: Option[CalibratedBudget])
 
   /** Worst-case [[residualMoments]] per-task accumulator for a given
-    * (nlist, d) — the arithmetic of the plan-time refusal, exposed so
-    * dispatchers can route WIDE corpora to [[fitIvfResidualWide]]
-    * instead of walking into the refusal.
+    * (nlist, d) — the arithmetic of the plan-time refusal.
     */
   private[graft] def plainMomentBytes(nlist: Int, d: Int): Long =
     nlist.toLong * (1L + d + d.toLong * (d + 1) / 2) * 8L
-  private[operators] def widthRequiresReduction(nlist: Int, d: Int): Boolean =
-    plainMomentBytes(nlist, d) > maxMomentTaskBytes
+
+  /** The cross dispatchers' residual fit on a `d`-wide corpus at
+    * `nlist` cells: full width when the per-cell moments fit
+    * [[maxMomentTaskBytes]], else a reduced layout at
+    * `dRed = min(64, d − 1)` — so the residual arm stays dispatchable at
+    * any width instead of walking into the plan-time refusal.
+    */
+  private[operators] def fitCrossResidual(corpus: DataFrame, kDims: Int,
+                                          nlist: Int, d: Int): IvfResidualModel =
+    fitIvfResidual(corpus, kDims, nlist,
+      dRed = if (plainMomentBytes(nlist, d) > maxMomentTaskBytes) math.min(64, d - 1)
+             else 0)
 
   /** Analytic recall bar the AUTO cross-set banded arm is served (and
     * priced) at — the [[Similarity.scaledLshConfigWideArm]] escalation
@@ -1742,31 +1388,18 @@ object Pca {
     // per-query assignment term, so a budget that ballooned past the
     // analytic floor cannot ride the stage-1 comparison into a
     // dispatch the banded arm now wins (r15 ADVICE finding 1).
-    // A corpus too WIDE for the plain per-cell moments (the plan-time
-    // refusal arithmetic) fits the wide arm instead (r16): reduced-
-    // space layout, full-width exact scoring — the residual family
-    // stays dispatchable at any d instead of crashing the dispatcher.
-    if (rmodelOpt.isEmpty && widthRequiresReduction(nlist, d)) {
-      val wmodel = fitIvfResidualWide(corpus, kDims,
-        dRed = math.min(64, d - 1), nlist = nlist)
-      val budget = budgetOpt.getOrElse(
-        calibrateWideResidualBudget(corpus, wmodel, k, bar,
-          floor = math.max(8, npFloor)))
-      // assignment prices in REDUCED space plus the query reduction
-      // itself (d·dRed MACs per query)
-      val dRed = wmodel.dRed
-      val costCalibrated = nQueries.toDouble * budget.nprobe *
-        (n.toDouble / nlist) * kDims +
-        nQueries.toDouble * (nlist.toDouble * dRed + d.toDouble * dRed)
-      return CrossDispatch(budget.ok && costCalibrated < costBanded, nlist,
-        costBanded, costCalibrated, None, Some(budget), Some(wmodel))
-    }
-    val rmodel = rmodelOpt.getOrElse(fitIvfResidual(corpus, kDims, nlist))
+    val rmodel = rmodelOpt.getOrElse(fitCrossResidual(corpus, kDims, nlist, d))
     val budget = budgetOpt.getOrElse(
       calibrateResidualBudget(corpus, rmodel, k, bar,
         floor = math.max(8, npFloor)))
+    // a reduced layout assigns in the reduced space and pays the query
+    // reduction itself (d·dRed MACs per query)
+    val assignCost = rmodel.reducer match {
+      case None => nQueries.toDouble * nlist * d
+      case Some(r) => nQueries.toDouble * (nlist.toDouble * r.k + d.toDouble * r.k)
+    }
     val costCalibrated = nQueries.toDouble * budget.nprobe *
-      (n.toDouble / nlist) * kDims + nQueries.toDouble * nlist * d
+      (n.toDouble / nlist) * kDims + assignCost
     CrossDispatch(budget.ok && costCalibrated < costBanded, nlist,
       costBanded, costCalibrated, Some(rmodel), Some(budget))
   }
@@ -1796,19 +1429,18 @@ object Pca {
     * exact answer at the un-pruned cost. Real contamination at scale
     * IS the evidence-rich regime, where the calibration prunes.
     */
-  /** `reducerOpt` (r16): on a WIDE corpus the cell layout lives in the
-    * reduced space, so assignment and each query's probe-cell order
-    * run through the reducer — while the partner counting stays at
-    * FULL width (a kill is a full-width cosine ≥ threshold, whatever
-    * space the pruning lives in). Pass `wmodel.reducer` with
-    * `wmodel.rmodel.cents`; the plain path is byte-identical to r15.
+  /** A reduced model's cell layout lives in the reduced space, so
+    * assignment and each query's probe-cell order run through the
+    * reducer — while the partner counting stays at FULL width (a kill
+    * is a full-width cosine ≥ threshold, whatever space the pruning
+    * lives in).
     */
-  def calibrateThresholdNprobe(corpus: DataFrame, cents: Similarity.Cents,
+  def calibrateThresholdNprobe(corpus: DataFrame, model: IvfResidualModel,
                                queries: DataFrame, threshold: Double,
                                bar: Double = 0.9, sample: Int = 32,
-                               floor: Int = 8, minEvidence: Long = 8,
-                               reducerOpt: Option[PcaModel] = None): Int = {
+                               floor: Int = 8, minEvidence: Long = 8): Int = {
     import graft.functions.VectorFunctions
+    val cents = model.cents
     val nlist = cents.length
     val spreadQ = queries.filter(pmod(col("vec_id"), lit(101)) === 7)
       .orderBy("vec_id").limit(sample)
@@ -1821,24 +1453,15 @@ object Pca {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     if (qvecs.isEmpty) return math.min(nlist, math.max(1, floor))
     // probe-order vectors live in the layout's own space
-    val probeVecs: Map[Long, Array[Float]] = reducerOpt match {
-      case Some(red) => qvecs.map { case (id, v) =>
-        id -> projectKernel(v, red) }.toMap
-      case None => qvecs.toMap
-    }
+    val probeVecs: Map[Long, Array[Float]] = qvecs.map { case (id, v) =>
+      id -> model.reducer.fold(v)(projectKernel(v, _)) }.toMap
     val q = qdf.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"),
       VectorFunctions.norm(col("embedding")).as("q_nrm"))
-    val assigned = reducerOpt match {
-      case Some(red) =>
-        assignCellsWide(corpus, red, cents)
-          .select(col("vec_id"), col("embedding"),
-            VectorFunctions.norm(col("embedding")).as("c_nrm"), col("cell"))
-      case None => Similarity.cellAssign(
-        corpus.select(col("vec_id"), col("embedding"),
-          VectorFunctions.norm(col("embedding")).as("c_nrm")),
-        cents, "cell")
-    }
+    val assigned = Similarity.cellAssign(
+      withFullWidth(corpus, model).select(col("vec_id"), col("embedding"),
+        col("full"), VectorFunctions.norm(col("full")).as("c_nrm")),
+      cents, "cell")
     // count the SAME population the serving path must cover: the two
     // sides are distinct tables (the ivfResidualTopKCross contract), so
     // a query_id == vec_id row is a real partner residualThresholdCross
@@ -1846,7 +1469,7 @@ object Pca {
     // undercounted exactly the same-id near-duplicate partners on
     // overlapping id spaces (r15 ADVICE finding 4)
     val counts = assigned.join(broadcast(q), lit(true))
-      .filter(round(VectorFunctions.dot(col("q_emb"), col("embedding")) /
+      .filter(round(VectorFunctions.dot(col("q_emb"), col("full")) /
         (col("q_nrm") * col("c_nrm")), 6) >= threshold)
       .groupBy(col("query_id"), col("cell"))
       .agg(count(lit(1)).as("cnt"))
@@ -1887,7 +1510,9 @@ object Pca {
     * candidate verifies by EXACT cosine. The residual axes are unused
     * here — threshold semantics owe ALL matches, not a ranked pool, so
     * there is nothing for an approximate ranking to prune; the model
-    * contributes its trained cell layout (and its store lifecycle).
+    * contributes its trained cell layout (and its store lifecycle). A
+    * reduced model prunes in the reduced space and still verifies every
+    * candidate at full width, so precision is exact at any d.
     * Precision is exact by construction; recall is the probe-coverage
     * contract the caller's calibrated budget prices — the gates pin it
     * in-engine against the exact kill set. Output matches
@@ -1903,19 +1528,21 @@ object Pca {
     // fixed per-task work × 32) while the wall stayed ~5.3 s — the
     // bottleneck is not this stage's parallelism.
     val assigned = Similarity.cellAssign(
-      corpus.select(col("vec_id").as("id_a"), col("embedding"),
-        VectorFunctions.norm(col("embedding")).as("nrm_a")),
+      withFullWidth(corpus, model).select(col("vec_id").as("id_a"),
+        col("embedding"), col("full"),
+        VectorFunctions.norm(col("full")).as("nrm_a")),
       model.cents, "cell")
-    // withProbeCells requires the vector under `embedding`; rename to
-    // the query-side alias only AFTER the probe expansion
+    // withProbeCells probes the layout-space vector under `embedding`;
+    // only the full-width one is kept past the probe expansion
     val q = Similarity.withProbeCells(
-        queries.select(col("vec_id").as("id_b"), col("embedding"),
-          VectorFunctions.norm(col("embedding")).as("nrm_b")),
+        withFullWidth(queries, model).select(col("vec_id").as("id_b"),
+          col("embedding"), col("full").as("q_emb"),
+          VectorFunctions.norm(col("full")).as("nrm_b")),
         model.cents, nprobe)
-      .withColumnRenamed("embedding", "q_emb")
+      .drop("embedding")
     assigned.join(broadcast(q), col("cell") === col("probe_cell"))
       .withColumn("cos", round(
-        VectorFunctions.dot(col("embedding"), col("q_emb")) /
+        VectorFunctions.dot(col("full"), col("q_emb")) /
           (col("nrm_a") * col("nrm_b")), 6))
       .filter(col("cos") >= threshold)
       // no distinct needed: a corpus row lives in exactly ONE cell and
@@ -1940,27 +1567,18 @@ object Pca {
         case Some(false) => CrossDispatch(residual = false, 0, 0d, 0d, None, None)
         case Some(true) =>
           crossDispatch(right, left.count(), k, bar, kDims, threshold) match {
-            case cd if cd.rmodel.isDefined || cd.wmodel.isDefined =>
-              cd.copy(residual = true)
+            case cd if cd.rmodel.isDefined => cd.copy(residual = true)
             case cd =>
               // stage-1 banded win fit nothing; a forced residual arm
-              // fits here — wide when the plain moments would refuse
+              // fits here — reduced when the plain moments would refuse
               val n = right.count()
               val (nlist, npFloor) = Similarity.scaledIvfConfig(n)
               val dim = right.select(col("embedding"))
                 .head.getSeq[Float](0).length
-              if (widthRequiresReduction(nlist, dim)) {
-                val wm = fitIvfResidualWide(right, kDims,
-                  dRed = math.min(64, dim - 1), nlist = nlist)
-                cd.copy(residual = true, wmodel = Some(wm),
-                  resid = Some(calibrateWideResidualBudget(right, wm, k,
-                    bar, floor = math.max(8, npFloor))))
-              } else {
-                val rm = fitIvfResidual(right, kDims, nlist)
-                cd.copy(residual = true, rmodel = Some(rm),
-                  resid = Some(calibrateResidualBudget(right, rm, k, bar,
-                    floor = math.max(8, npFloor))))
-              }
+              val rm = fitCrossResidual(right, kDims, nlist, dim)
+              cd.copy(residual = true, rmodel = Some(rm),
+                resid = Some(calibrateResidualBudget(right, rm, k, bar,
+                  floor = math.max(8, npFloor))))
           }
         case None => crossDispatch(right, left.count(), k, bar, kDims, threshold)
       }
@@ -1973,15 +1591,9 @@ object Pca {
     if (d.residual) {
       val n = right.count()
       val np = d.resid.get.nprobe
-      d.wmodel match {
-        case Some(wm) =>
-          ivfResidualTopKCrossWide(right, left, wm, k, np,
-            probedMassMult(n, wm.nlist, np, k, mult) * k, threshold)
-        case None =>
-          val rm = d.rmodel.get
-          ivfResidualTopKCross(right, left, rm, k, np,
-            probedMassMult(n, rm.nlist, np, k, mult) * k, threshold)
-      }
+      val rm = d.rmodel.get
+      ivfResidualTopKCross(right, left, rm, k, np,
+        probedMassMult(n, rm.nlist, np, k, mult) * k, threshold)
     } else {
       // serve the banded arm at the geometry the dispatcher PRICED —
       // the occupancy-scaled wide arm at the analytic recall bar, not
@@ -2211,8 +1823,8 @@ object Pca {
   /** Persist a measured dispatch at `path` (OVERWRITE build semantics)
     * and return it, so the building session can serve immediately. The
     * [[AnnDispatch]] row is arm-agnostic (budgets + the chosen arm),
-    * so a WIDE verdict ([[annDispatchWide]]) persists and serves
-    * through the same store as a plain one ([[annDispatch]]); the
+    * so a verdict over a reduced residual model persists and serves
+    * through the same store as a full-width one ([[annDispatch]]); the
     * caller re-pairs it with the matching models at serve time,
     * exactly as with the live-calibrated path.
     */

@@ -279,21 +279,8 @@ object Pq {
     val approx = ivfPqTopK(embeddings, queries, k, nlist, nprobe,
       kmeansIters = kmeansIters, coarseIters = coarseIters,
       centsOpt = centsOpt, booksOpt = booksOpt)
-    val exact = Similarity.ivfTopK(embeddings, queries, k, nlist, nprobe = nlist)
-    // one LEFT join from the exact side, one global aggregation: hit =
-    // pair present on both sides, mismatch = present with a different
-    // cosine, total = exact rows. The sibling self-checks combine three
-    // 1-row aggregates with crossJoins; here that would plan the gate's
-    // only nested-loop join, so the invariants fold into a single pass
-    // (approx-only pairs contribute to no invariant in either shape).
-    exact.select(col("query_id"), col("neighbor_id"), col("cos").as("cos_bf"))
-      .join(approx.select(col("query_id"), col("neighbor_id"), col("cos")),
-        Seq("query_id", "neighbor_id"), "left")
-      .agg(
-        (count(col("cos")).cast("double") / count(lit(1)) >= minRecall)
-          .as("recall_ok"),
-        (count(when(col("cos") =!= col("cos_bf"), 1)) === 0)
-          .as("cosines_exact"))
+    Similarity.gradeTopK(approx,
+      Similarity.ivfTopK(embeddings, queries, k, nlist, nprobe = nlist), minRecall)
   }
 
   // ── residual IVF-PQ ───────────────────────────────────────────────
@@ -409,15 +396,8 @@ object Pq {
       oversample = oversample,
       kmeansIters = kmeansIters, coarseIters = coarseIters,
       centsOpt = centsOpt, booksOpt = booksOpt)
-    val exact = Similarity.ivfTopK(embeddings, queries, k, nlist, nprobe = nlist)
-    exact.select(col("query_id"), col("neighbor_id"), col("cos").as("cos_bf"))
-      .join(approx.select(col("query_id"), col("neighbor_id"), col("cos")),
-        Seq("query_id", "neighbor_id"), "left")
-      .agg(
-        (count(col("cos")).cast("double") / count(lit(1)) >= minRecall)
-          .as("recall_ok"),
-        (count(when(col("cos") =!= col("cos_bf"), 1)) === 0)
-          .as("cosines_exact"))
+    Similarity.gradeTopK(approx,
+      Similarity.ivfTopK(embeddings, queries, k, nlist, nprobe = nlist), minRecall)
   }
 
   // ── persisted ANN index ───────────────────────────────────────────
@@ -693,20 +673,8 @@ object Pq {
     */
   def selfCheck(embeddings: DataFrame, queries: DataFrame, k: Int,
                 kmeansIters: Int = 2): DataFrame = {
-    val pq = Pq.topK(embeddings, queries, k, kmeansIters = kmeansIters)
-    val brute = Similarity.bruteForceTopK(embeddings, queries, k)
-    val hits = pq.select("query_id", "neighbor_id")
-      .join(brute.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hit"))
-    val total = brute.agg(count(lit(1)).as("n_total"))
-    val mismatch = pq.select(col("query_id"), col("neighbor_id"), col("cos"))
-      .join(brute.select(col("query_id"), col("neighbor_id"), col("cos").as("cos_bf")),
-        Seq("query_id", "neighbor_id"))
-      .filter(col("cos") =!= col("cos_bf"))
-      .agg(count(lit(1)).as("n_mismatch"))
-    hits.crossJoin(total).crossJoin(mismatch)
-      .select(
-        (col("n_hit").cast("double") / col("n_total") >= 0.8).as("recall_at_least_80pct"),
-        (col("n_mismatch") === 0).as("cosines_exact"))
+    Similarity.gradeTopK(Pq.topK(embeddings, queries, k, kmeansIters = kmeansIters),
+        Similarity.bruteForceTopK(embeddings, queries, k), minRecall = 0.8)
+      .withColumnRenamed("recall_ok", "recall_at_least_80pct")
   }
 }

@@ -145,6 +145,19 @@ class AlertsSpec extends SparkSuite with Matchers {
     sliced shouldBe base
   }
 
+  test("thresholdAlertsSliced compiles its generated code: the sf0.001 " +
+      "gate recurrence runs with the interpreted fallback switched off") {
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val ev = graft.util.Tables.events(spark, "/root/testdata/sf0.001")
+      Alerts.thresholdAlertsSliced(ev, "event_type", "ts", "event_id",
+          "value", 150.0, slices = 4)
+        .collect().length should be > 0
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("thresholdAlertsSliced refuses past the driver-stitch bound") {
     val df = frame(
       ("BTC", "2026-01-01 10:00:00", 1L, 100.0),

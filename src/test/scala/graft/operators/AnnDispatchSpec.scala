@@ -236,11 +236,11 @@ class AnnDispatchSpec extends SparkSuite with Matchers {
     // at threshold 0.45 this corpus holds a handful of kills — far
     // under minEvidence, so the sample carries no information about
     // where kills live and the honest budget is everything
-    Pca.calibrateThresholdNprobe(corpus, rmodel.cents, bench,
+    Pca.calibrateThresholdNprobe(corpus, rmodel, bench,
       threshold = 0.45) shouldBe rmodel.nlist
     // evidence-rich regime (low threshold): the calibration prunes to
     // a measured prefix within the contract bounds
-    val np = Pca.calibrateThresholdNprobe(corpus, rmodel.cents, bench,
+    val np = Pca.calibrateThresholdNprobe(corpus, rmodel, bench,
       threshold = 0.0, floor = 4)
     np should be >= 4
     np should be <= rmodel.nlist
@@ -326,7 +326,7 @@ class AnnDispatchSpec extends SparkSuite with Matchers {
     // evidence floor drops to 4 — with the r15 predicate the same call
     // saw ZERO evidence at this threshold and refused to prune)
     val rmodel = Pca.fitIvfResidual(emb, kDims = 8)
-    val np = Pca.calibrateThresholdNprobe(emb, rmodel.cents, emb,
+    val np = Pca.calibrateThresholdNprobe(emb, rmodel, emb,
       threshold = 0.999, minEvidence = 4)
     np should be < rmodel.nlist
     np should be >= 8

@@ -142,7 +142,7 @@ class PcaSpec extends SparkSuite with Matchers {
     val model = Pca.fit(clustered, 16)
     val cents = Similarity.coarseCentroids(
       Pca.project(clustered, model, projCol = "embedding"), 16, iters = 3)
-    val np = Pca.calibratePcaIvfNprobe(clustered, model, cents, floor = 8)
+    val np = Pca.calibratePcaIvfBudget(clustered, model, cents, floor = 8).nprobe
     np should be >= 8
     np should be <= 16
     // the calibrated budget serves the check's own contract
@@ -150,7 +150,7 @@ class PcaSpec extends SparkSuite with Matchers {
       modelOpt = Some(model), centsOpt = Some(cents)).head()
     row.getBoolean(0) shouldBe true
     row.getBoolean(1) shouldBe true
-    Pca.calibratePcaIvfNprobe(clustered, model, cents, floor = 16) shouldBe 16
+    Pca.calibratePcaIvfBudget(clustered, model, cents, floor = 16).nprobe shouldBe 16
   }
 
   test("ivfResidual: fit is deterministic for a fixed input layout") {

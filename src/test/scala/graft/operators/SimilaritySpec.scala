@@ -11,6 +11,37 @@ class SimilaritySpec extends SparkSuite with Matchers {
   private lazy val emb: DataFrame =
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
+  test("gradeTopK: a near-tie outside the exact set is a hit under " +
+      "ε-recall only, and one differing emitted cosine flips cosines_exact") {
+    def frame(rows: (Long, Long, Double)*): DataFrame =
+      rows.toDF("query_id", "neighbor_id", "cos")
+    // exact top-2 per query; query 1's k-th exact cosine is 0.8
+    val exact = frame((1L, 10L, 0.9), (1L, 11L, 0.8),
+      (2L, 20L, 0.7), (2L, 21L, 0.6))
+    // query 1 swaps neighbor 11 for 12, a near-tie at 0.7995
+    val approx = frame((1L, 10L, 0.9), (1L, 12L, 0.7995),
+      (2L, 20L, 0.7), (2L, 21L, 0.6))
+    def grade(a: DataFrame, minRecall: Double,
+              eps: Option[Double]): (Boolean, Boolean) = {
+      val rows = Similarity.gradeTopK(a, exact, minRecall, eps).collect()
+      rows.length shouldBe 1
+      (rows.head.getAs[Boolean]("recall_ok"),
+        rows.head.getAs[Boolean]("cosines_exact"))
+    }
+    // strict identity: 3 of 4 exact pairs found
+    grade(approx, 1.0, None) shouldBe ((false, true))
+    grade(approx, 0.75, None) shouldBe ((true, true))
+    // ε-recall: 0.7995 >= 0.8 − 1e-3, so 12 counts; 1e-4 is too tight
+    grade(approx, 1.0, Some(1e-3)) shouldBe ((true, true))
+    grade(approx, 1.0, Some(1e-4)) shouldBe ((false, true))
+    // one emitted cosine that differs from the reference's value
+    val drifted = frame((1L, 10L, 0.9), (1L, 11L, 0.8),
+      (2L, 20L, 0.7000001), (2L, 21L, 0.6))
+    grade(drifted, 1.0, None) shouldBe ((true, false))
+    grade(drifted, 1.0, Some(1e-3)) shouldBe ((true, false))
+    grade(exact, 1.0, None) shouldBe ((true, true))
+  }
+
   test("bruteForceTopK: ranks by cosine desc with id tiebreak, k rows per query") {
     val out = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 3), k = 5)
     out.groupBy("query_id").count().select("count").distinct()

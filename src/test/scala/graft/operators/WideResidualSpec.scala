@@ -4,11 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 import graft.SparkSuite
 
-/** r16: the wide-embedding residual arm — global PCA pre-reduction
-  * making the residual family's moment budget nlist-free at full
-  * width, with candidates in the reduced space and exact full-width
-  * rerank (the momentBudget refusal's documented workaround, now
-  * in-engine).
+/** The residual model's reduced layout (`fitIvfResidual(dRed = …)`)
+  * for wide embeddings — global PCA pre-reduction making the residual
+  * family's moment budget nlist-free at full width, with candidates in
+  * the reduced space and exact full-width rerank (the momentBudget
+  * refusal's documented workaround, in-engine).
   */
 class WideResidualSpec extends SparkSuite with Matchers {
 
@@ -33,13 +33,12 @@ class WideResidualSpec extends SparkSuite with Matchers {
     // with every cell probed and pool = n the candidate set is the
     // whole corpus, so the exact-rerank tail must recover the exact
     // answer regardless of how the reduced space mangles the ranking
-    val wmodel = Pca.fitIvfResidualWide(corpus, kDims = 4, dRed = 8,
-      nlist = 8)
-    wmodel.d shouldBe 64
-    wmodel.dRed shouldBe 8
-    wmodel.rmodel.d shouldBe 8
+    val wmodel = Pca.fitIvfResidual(corpus, kDims = 4, nlist = 8, dRed = 8)
+    wmodel.reducer.map(_.d) shouldBe Some(64)
+    wmodel.reducer.map(_.k) shouldBe Some(8)
+    wmodel.d shouldBe 8
     val queries = corpus.filter(col("vec_id") < 20)
-    val got = Pca.ivfResidualTopKWide(corpus, queries, wmodel, k = 5,
+    val got = Pca.ivfResidualTopK(corpus, queries, wmodel, k = 5,
       nprobe = wmodel.nlist, pool = n)
     val exact = Similarity.bruteForceTopK(corpus, queries, 5)
     got.select("query_id", "neighbor_id", "cos", "rank").except(exact).count() shouldBe 0L
@@ -60,15 +59,15 @@ class WideResidualSpec extends SparkSuite with Matchers {
       val e = intercept[org.apache.spark.SparkException] {
         Pca.fitIvfResidual(wide, kDims = 16, nlist = 16)
       }
-      e.getMessage should include("fitIvfResidualWide")
+      e.getMessage should include("fitIvfResidual(dRed")
       // ...while the wide arm's reduced-space moments at the SAME
       // nlist are 16·(1+64+64·65/2)·8 ≈ 274 KB — under the same
       // budget, and the recall contract is graded at FULL width
-      val wmodel = Pca.fitIvfResidualWide(wide, kDims = 16, dRed = 64,
-        nlist = 16)
-      wmodel.d shouldBe 768
-      val row = Pca.ivfResidualWideCheck(wide, nprobe = wmodel.nlist,
-        wmodelOpt = Some(wmodel)).head()
+      val wmodel = Pca.fitIvfResidual(wide, kDims = 16, nlist = 16,
+        dRed = 64)
+      wmodel.reducer.map(_.d) shouldBe Some(768)
+      val row = Pca.ivfResidualCheck(wide, nprobe = wmodel.nlist,
+        modelOpt = Some(wmodel)).head()
       row.getBoolean(0) shouldBe true
       row.getBoolean(1) shouldBe true
     } finally Pca.maxMomentTaskBytes = prev
@@ -78,13 +77,13 @@ class WideResidualSpec extends SparkSuite with Matchers {
       "64 on the clustered corpus, budget resolved by calibration " +
       "(nprobe = 0), contract green at full width") {
     val clustered = Dedup.materialize(Similarity.clusteredCorpus(emb))
-    val wmodel = Pca.fitIvfResidualWide(clustered, kDims = 8, dRed = 16,
-      nlist = 16)
-    val budget = Pca.calibrateWideResidualBudget(clustered, wmodel)
+    val wmodel = Pca.fitIvfResidual(clustered, kDims = 8, nlist = 16,
+      dRed = 16)
+    val budget = Pca.calibrateResidualBudget(clustered, wmodel)
     budget.measured shouldBe true
     budget.ok shouldBe true
-    val row = Pca.ivfResidualWideCheck(clustered,
-      wmodelOpt = Some(wmodel)).head()
+    val row = Pca.ivfResidualCheck(clustered,
+      modelOpt = Some(wmodel)).head()
     row.getBoolean(0) shouldBe true
     row.getBoolean(1) shouldBe true
   }
@@ -97,9 +96,9 @@ class WideResidualSpec extends SparkSuite with Matchers {
     val model = Pca.fit(clustered, 16)
     val cents = Similarity.coarseCentroids(
       Pca.project(clustered, model, projCol = "embedding"), 16, iters = 3)
-    val wmodel = Pca.fitIvfResidualWide(clustered, kDims = 8, dRed = 16,
-      nlist = 16)
-    val disp = Pca.annDispatchWide(clustered, model, cents, wmodel)
+    val wmodel = Pca.fitIvfResidual(clustered, kDims = 8, nlist = 16,
+      dRed = 16)
+    val disp = Pca.annDispatch(clustered, model, cents, wmodel)
     disp.n shouldBe n
     val chosen = if (disp.residual) disp.resid else disp.global
     val other = if (disp.residual) disp.global else disp.resid
@@ -108,11 +107,11 @@ class WideResidualSpec extends SparkSuite with Matchers {
     }
     chosen.measured shouldBe true
     val queries = clustered.filter(col("vec_id") < 20)
-    val auto = Pca.annTopKAutoWide(clustered, queries, model, cents,
+    val auto = Pca.annTopKAuto(clustered, queries, model, cents,
       wmodel, k = 5, dispatchOpt = Some(disp))
     val direct =
       if (disp.residual)
-        Pca.ivfResidualTopKWide(clustered, queries, wmodel, 5,
+        Pca.ivfResidualTopK(clustered, queries, wmodel, 5,
           disp.resid.nprobe, math.max(8,
             math.ceil(0.25 * disp.resid.nprobe * (n.toDouble / wmodel.nlist) / 5).toInt) * 5)
       else
@@ -131,17 +130,17 @@ class WideResidualSpec extends SparkSuite with Matchers {
     val model = Pca.fit(clustered, 16)
     val cents = Similarity.coarseCentroids(
       Pca.project(clustered, model, projCol = "embedding"), 16, iters = 3)
-    val wmodel = Pca.fitIvfResidualWide(clustered, kDims = 8, dRed = 16,
-      nlist = 16)
-    val disp = Pca.annDispatchWide(clustered, model, cents, wmodel)
+    val wmodel = Pca.fitIvfResidual(clustered, kDims = 8, nlist = 16,
+      dRed = 16)
+    val disp = Pca.annDispatch(clustered, model, cents, wmodel)
     val store = graft.util.Scratch.dir("graft-wide-disp").toString
     Pca.buildAnnDispatchStore(spark, store, disp)
     val back = Pca.annDispatchFromStore(spark, store)
     back shouldBe disp
     val queries = clustered.filter(col("vec_id") < 20)
-    val viaStore = Pca.annTopKAutoWide(clustered, queries, model, cents,
+    val viaStore = Pca.annTopKAuto(clustered, queries, model, cents,
       wmodel, k = 5, dispatchOpt = Some(back))
-    val viaLive = Pca.annTopKAutoWide(clustered, queries, model, cents,
+    val viaLive = Pca.annTopKAuto(clustered, queries, model, cents,
       wmodel, k = 5, dispatchOpt = Some(disp))
     viaStore.except(viaLive).count() shouldBe 0L
     viaLive.except(viaStore).count() shouldBe 0L
@@ -170,16 +169,17 @@ class WideResidualSpec extends SparkSuite with Matchers {
       // where the width routing lives
       val cd = Pca.crossDispatch(corpus, nQueries = 1L, k = 3,
         threshold = 0.4)
-      // the dispatcher measured the wide arm (no crash, no plain fit)
+      // the dispatcher measured a reduced layout (no crash, no
+      // full-width fit)
       withClue(s"dispatch=$cd n=$n:") {
-      cd.wmodel.isDefined shouldBe true
+      cd.rmodel.exists(_.reducer.isDefined) shouldBe true
       }
-      cd.rmodel shouldBe None
+      cd.rmodel.get.reducer.map(_.d) shouldBe Some(768)
       cd.resid.get.measured shouldBe true
-      // exactness identity of the wide cross path: all cells probed +
+      // exactness identity of the reduced cross path: all cells probed +
       // uncut pool leaves only the exact full-width rerank
-      val wm = cd.wmodel.get
-      val got = Pca.ivfResidualTopKCrossWide(corpus, queries, wm, k = 3,
+      val wm = cd.rmodel.get
+      val got = Pca.ivfResidualTopKCross(corpus, queries, wm, k = 3,
         nprobe = wm.nlist, pool = n.toInt, threshold = 0.4)
       // id spaces are disjoint (%5 split), so the self-exclusion in
       // bruteForceTopK never fires and it IS the exact cross reference

@@ -12,10 +12,19 @@
 #                        subprocess + 300 s kill, tools/compare_timed.py)
 #   planaudit.txt        plan-hygiene sweep over every gate plan
 #   bench.json           the sf0.1 board line (GRAFT_BENCH_JSON)
+#
+# Each compare summary is followed by the Verify log's count of
+# "Failed to compile the generated Java code" lines: Spark falls back to
+# interpreted execution on a codegen failure, so a gate can pass while
+# its stages run uncompiled. Expect 0.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 OUT=${1:-target/round_close}
 mkdir -p "$OUT"
+
+codegen_failures() {
+  echo "   codegen compile failures in $1: $(grep -c "Failed to compile the generated Java code" "$1")"
+}
 
 echo "== 1/4 correctness at sf0.01 (driver replica)"
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} sbt -batch \
@@ -24,6 +33,7 @@ SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} sbt -batch \
 python3 tools/compare.py /root/testdata/sf0.01 "$OUT/verify_sf0.01" \
   > "$OUT/compare_sf0.01.txt" 2>&1
 tail -1 "$OUT/compare_sf0.01.txt"
+codegen_failures "$OUT/verify_sf0.01.log"
 
 echo "== 2/4 correctness at sf0.1 (second scale factor)"
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)} sbt -batch \
@@ -34,6 +44,7 @@ python3 tools/compare_timed.py /root/testdata/sf0.1 "$OUT/verify_sf0.1" \
 grep -cE "^\s*\[PASS\]" "$OUT/compare_sf0.1.txt" | \
   xargs -I{} echo "   sf0.1 passes: {}"
 grep -E "^\s*\[(FAIL|TIMEOUT)\]" "$OUT/compare_sf0.1.txt" | head -20
+codegen_failures "$OUT/verify_sf0.1.log"
 
 echo "== 3/4 plan audit"
 sbt -batch "runMain graft.PlanAudit" > "$OUT/planaudit.txt" 2>&1
