@@ -818,8 +818,8 @@ object Curation {
     * of its geometry; the residual arm's is the probe-coverage
     * contract its calibrated budget prices — gate-pinned in-engine
     * against the exact kill set on the forced branch. `force` pins an
-    * arm so both branches verify against one oracle (the
-    * [[Similarity.similarPairsAuto]] convention).
+    * arm (see [[Pca.crossDispatch]]); a supplied dispatch serves the
+    * banded arm without a scan.
     *
     * `bar` defaults to 1.0: decontamination is leakage-sensitive, and
     * the residual arm only guarantees kill recall >= bar — a sub-1.0
@@ -835,27 +835,9 @@ object Curation {
                                 dim: Int = 64,
                                 dispatchOpt: Option[Pca.CrossDispatch] = None,
                                 force: Option[Boolean] = None): DataFrame = {
-    val d = dispatchOpt.getOrElse {
-      force match {
-        case Some(false) =>
-          Pca.CrossDispatch(residual = false, 0, 0d, 0d, None, None)
-        case Some(true) =>
-          val cd = Pca.crossDispatch(corpusVecs, benchVecs.count(),
-            bar = bar, kDims = kDims, threshold = threshold)
-          if (cd.rmodel.isDefined) cd.copy(residual = true)
-          else {
-            val n = corpusVecs.count()
-            val (nlist, _) = Similarity.scaledIvfConfig(n)
-            val dWidth = corpusVecs.select(col("embedding"))
-              .head.getSeq[Float](0).length
-            cd.copy(residual = true, rmodel = Some(
-              Pca.fitCrossResidual(corpusVecs, kDims, nlist, dWidth)))
-          }
-        case None =>
-          Pca.crossDispatch(corpusVecs, benchVecs.count(), bar = bar,
-            kDims = kDims, threshold = threshold)
-      }
-    }
+    val d = dispatchOpt.getOrElse(
+      Pca.crossDispatch(corpusVecs, benchVecs.count(), bar = bar,
+        kDims = kDims, threshold = threshold, force = force))
     if (sys.env.contains("GRAFT_PROBE"))
       println(f"[probe]   semanticDecontaminateAuto " +
         f"costBanded=${d.analyticBanded}%.3g " +
@@ -865,7 +847,7 @@ object Curation {
       // the decon arm serves the THRESHOLD-coverage budget, not the
       // kNN one the generic dispatch priced — see
       // semanticDeconResidualCheck for the measured divergence
-      val (_, npFloor) = Similarity.scaledIvfConfig(corpusVecs.count())
+      val (_, npFloor) = Similarity.scaledIvfConfig(d.n)
       // a reduced layout (wide corpus) prunes in the reduced space; the
       // coverage calibration and every probed candidate count kills at
       // FULL width either way
@@ -882,8 +864,7 @@ object Curation {
       // scaled config — shared-prefix hyperplanes make its candidates a
       // superset of the r15 geometry's, so recall only moves up)
       val (planes, bands, mp) = Similarity.scaledLshConfigWideArm(
-        corpusVecs.count(), threshold,
-        recallBar = Pca.crossBandRecallBar)
+        d.n, threshold, recallBar = Pca.crossBandRecallBar)
       semanticDecontaminate(docs, corpusVecs, benchVecs, threshold,
         numPlanes = planes, bands = bands, dim = dim, multiProbe = mp)
     }

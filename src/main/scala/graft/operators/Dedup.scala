@@ -367,7 +367,7 @@ object Dedup {
     // inherit the caller's thread-local job group, so it is re-set
     // inside the closure), and the dense branch must be able to kill
     // the abandoned write instead of letting it run to completion
-    // against scoreAllPairs' executors. Job TAGS give the second
+    // against the all-pairs scorer's executors. Job TAGS give the second
     // handle without disturbing the first (tags are a set; group id is
     // a single slot the caller owns).
     val sc = docs.sparkSession.sparkContext
@@ -399,14 +399,11 @@ object Dedup {
     // its postings, the shortened side ~(1−2t/(1+t)).
     // The capped path stays indexed: maxShingleDf is defined as an
     // index cut, and the cap guard below adjudicates its recall.
-    val prefixDensity =
-      density * (1 - threshold) * (1 - 2 * threshold / (1 + threshold))
-    if (sys.env.contains("GRAFT_PROBE"))
-      println(f"[probe]   ngramJaccard n=$nDocs density=$density%.3f " +
-        f"prefixDensity=$prefixDensity%.3f dense=${prefixDensity >= denseOverlapCutoff}")
-    if (maxShingleDf <= 0 && prefixDensity >= denseOverlapCutoff) {
+    val dense = denseRegime("ngramJaccard", Seq(nDocs), density,
+      (1 - threshold) * (1 - 2 * threshold / (1 + threshold)))
+    if (dense && maxShingleDf <= 0) {
       // the dense branch won: CANCEL the in-flight speculative write
-      // (it would otherwise compete with scoreAllPairs for executors
+      // (it would otherwise compete with the all-pairs scorer for executors
       // to produce a snapshot nobody reads), then retire whatever
       // landed. Cleanup failures are LOGGED — a leaked snapshot dir is
       // disk the operator owes an explanation for, not a silent drop.
@@ -426,8 +423,16 @@ object Dedup {
             org.apache.log4j.Logger.getLogger(getClass).warn(
               "ngramJaccard: speculative prefix snapshot failed", e)
       }(scala.concurrent.ExecutionContext.global)
-      scoreAllPairs(allPairsBlocked(sets, nDocs), threshold,
-        jaccard = true)
+      // size-ratio prefilter BEFORE the merge (the same bound the
+      // indexed path pushes into its candidate join): round(j,6) ≥ t
+      // forces min ≥ tSafe·max, so failing pairs skip the kernel
+      // entirely — they could only produce rows the filter drops
+      val tSafe = math.max(threshold - 1e-6, 0.0)
+      scoreJaccard(allPairsBlocked(sets, nDocs)
+          .filter(least(size(col("hs_a")), size(col("hs_b"))).cast("double") >=
+            lit(tSafe) * greatest(size(col("hs_a")), size(col("hs_b"))) - 1e-9),
+        Seq(least(col("id_a"), col("id_b")).as("doc_a"),
+          greatest(col("id_a"), col("id_b")).as("doc_b")), threshold)
     } else {
       val prefix = scala.concurrent.Await
         .result(prefixFut, scala.concurrent.duration.Duration.Inf)._1
@@ -536,84 +541,82 @@ object Dedup {
     * — the decontamination shape: a benchmark item quoted inside a
     * long training document has containment ≈ 1 and Jaccard ≈ 0, so
     * this (not a Jaccard join) is the metric benchmark-decon needs.
-    * Same exact small-side-prefix construction as the self-join form,
-    * over a side-tagged union with one consistent df order (windows
-    * key on (side, doc_id), so overlapping id spaces across the two
-    * frames stay distinct); only cross-side candidates are generated.
-    * Returns (doc_id [corpus side], probe_id, containment).
+    * The indexed form ([[containmentAcrossIndexed]]) with its corpus
+    * side computed on the spot: the corpus postings are df-ranked over
+    * the corpus itself and the probes are ranked under that corpus
+    * order (unseen shingles last) — exactly what
+    * [[buildContainmentIndex]] would persist — and both feed the one
+    * cross-set core, [[containmentAcross]]. Each side's windows key on
+    * its own doc ids, so overlapping id spaces across the two frames
+    * stay distinct. Returns (doc_id [corpus side], probe_id,
+    * containment).
     */
   def ngramContainmentAcross(corpus: DataFrame, probes: DataFrame,
                              n: Int = 2, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"ngramContainmentAcross: threshold must be in (0, 1], got $threshold")
-    // snapshots: each side's shingle kernel runs once (the corpus side
-    // is re-read by the verification fetch below), and the cross-set
-    // posting index — referenced by both join sides — is evaluated
-    // once (see ngramJaccard's reeval note)
+    // snapshots: each side's shingle kernel runs once (the sets are
+    // re-read by the verification fetch), and the corpus postings —
+    // read by the probe ranking's df table and by the candidate join —
+    // are evaluated once (see ngramJaccard's reeval note)
     val cs = snap(hashedShingles(corpus, n))
     val ps = snap(hashedShingles(probes, n))
+    containmentAcross("ngramContainmentAcross", cs, ps, threshold) {
+      val cposts = snap(dfRankedPostings(cs))
+      (cposts, frozenRankedPostings(ps, cposts.select(col("h"), col("df")).distinct()))
+    }
+  }
+
+  /** The exact cross-set containment join behind
+    * [[ngramContainmentAcross]] and [[containmentAcrossIndexed]], which
+    * differ only in where the corpus side comes from. `cs`/`ps` are
+    * (doc_id, hs) shingle sets; `postings` yields (corpus, probe)
+    * (doc_id, sz, h, pos) postings ranked under ONE shared total order
+    * — by name, so the dense regime never builds them.
+    *
+    * Dense regime (see [[denseOverlapCutoff]]): when a random
+    * (corpus, probe) pair shares ~1 shingle within the small-side
+    * prefix (the (1−t) factor — same shape as [[ngramContainment]]),
+    * the posting join is Θ(nc·np) anyway — run the rectangle-blocked
+    * exact verification instead.
+    *
+    * Otherwise the smaller set's prefix must share a shingle with the
+    * other side's full postings (the theorem; size ties count the
+    * probe as smaller — either choice is covered, it just must be
+    * deterministic), and the per-match positional bound prunes inside
+    * the join exactly as in [[ngramContainment]]. The theorem needs
+    * only a FIXED order shared by both sides, not a meaningful one, so
+    * any shared order gives the same answer.
+    */
+  private def containmentAcross(op: String, cs: DataFrame, ps: DataFrame,
+                                threshold: Double)(
+      postings: => (DataFrame, DataFrame)): DataFrame = {
+    val keys = Seq(col("doc_id"), col("probe_id"))
     val (nc, np, density) = crossOverlapDensity(cs, ps)
-    // dense-regime path choice (see [[denseOverlapCutoff]]): when a
-    // random (corpus, probe) pair shares ~1 shingle within the
-    // small-side prefix (the (1−t) factor — same shape as
-    // [[ngramContainment]]) the cross prefix join is Θ(nc·np) anyway
-    // — run the rectangle-blocked exact verification instead.
-    if (sys.env.contains("GRAFT_PROBE"))
-      println(f"[probe]   ngramContainmentAcross nc=$nc np=$np " +
-        f"density=$density%.3f prefixDensity=${density * (1 - threshold)}%.3f " +
-        f"dense=${density * (1 - threshold) >= denseOverlapCutoff}")
-    if (density * (1 - threshold) >= denseOverlapCutoff)
-      return scoreAcrossAllPairs(allPairsBlockedAcross(cs, nc, ps, np),
+    if (denseRegime(op, Seq(nc, np), density, 1 - threshold))
+      return scoreContainment(allPairsBlockedAcross(cs, nc, ps, np), keys,
         threshold)
-    val sets = cs.withColumn("side", lit(0))
-      .unionByName(ps.withColumn("side", lit(1)))
-    val posts = sets.select(col("side"), col("doc_id"),
-        size(col("hs")).as("sz"), explode_outer(col("hs")).as("h"))
-      .filter(col("h").isNotNull)
-    val dfTab = posts.groupBy("h").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("side"), col("doc_id"))
-      .orderBy(col("df"), col("h"))
-    val full = snap(posts.join(dfTab, "h")
-      .withColumn("pos", row_number().over(w) - 1))
-    val prefix = full.filter(
-      col("pos") < col("sz") - ceil(lit(threshold) * col("sz") - 1e-9) + 1)
-    // the smaller set's prefix probes the OTHER side's full postings
-    // (size ties break on (side, id) so each cross pair generates once)
-    val smallerFirst =
-      col("a.sz") < col("b.sz") ||
-        (col("a.sz") === col("b.sz") &&
-          struct(col("a.side"), col("a.doc_id")) <
-            struct(col("b.side"), col("b.doc_id")))
-    // per-match positional predicate in the join (see ngramContainment:
-    // the qualifying pair's earliest shared shingle survives it)
+    val (cposts, pposts) = postings
+    def plen(sz: Column) = sz - ceil(lit(threshold) * sz - 1e-9) + 1
+    val smallerIsProbe = col("p.sz") <= col("c.sz")
+    val prefixOk =
+      (smallerIsProbe && col("p.pos") < plen(col("p.sz"))) ||
+        (!smallerIsProbe && col("c.pos") < plen(col("c.sz")))
+    // earliest-shared-shingle positional bound under the SHARED order
+    // (both pos columns rank in the same total order, so the
+    // ngramContainment argument carries over verbatim)
     val alphaOk = (lit(1) +
-        least(col("a.sz") - 1 - col("a.pos"), col("b.sz") - 1 - col("b.pos")))
-      .cast("double") >= lit(threshold) * col("a.sz") - 1e-9
-    val cand = prefix.as("a")
-      .join(full.as("b"),
-        col("a.h") === col("b.h") && col("a.side") =!= col("b.side") &&
-          smallerFirst && alphaOk)
-      .select(col("a.side").as("side_s"), col("a.doc_id").as("id_s"),
-        col("b.doc_id").as("id_l"))
+        least(col("p.sz") - 1 - col("p.pos"), col("c.sz") - 1 - col("c.pos")))
+      .cast("double") >=
+        lit(threshold) * least(col("p.sz"), col("c.sz")) - 1e-9
+    val cand = cposts.as("c").join(pposts.as("p"),
+        col("c.h") === col("p.h") && prefixOk && alphaOk)
+      .select(col("c.doc_id").as("doc_id"), col("p.doc_id").as("probe_id"))
       .distinct()
-      // reorient by SIDE (side 0 = corpus), not by size
-      .select(
-        when(col("side_s") === 0, col("id_s")).otherwise(col("id_l")).as("doc_id"),
-        when(col("side_s") === 0, col("id_l")).otherwise(col("id_s")).as("probe_id"))
-    cand
-      .join(cs.select(col("doc_id"), col("hs").as("hs_c")), "doc_id")
-      .join(ps.select(col("doc_id").as("probe_id"), col("hs").as("hs_p")), "probe_id")
-      .select(col("doc_id"), col("probe_id"),
-        graft.functions.VectorFunctions.sortedIntersectAtLeast(
-          col("hs_c"), col("hs_p"),
-          containmentNeed(least(size(col("hs_c")), size(col("hs_p"))),
-            threshold)).as("inter"),
-        least(size(col("hs_c")), size(col("hs_p"))).cast("long").as("sz_min"))
-      .filter(col("inter") >= 0)
-      .withColumn("containment",
-        round(col("inter").cast("double") / col("sz_min"), 6))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_id"), col("probe_id"), col("containment"))
+    scoreContainment(cand
+      .join(cs.select(col("doc_id"), col("hs").as("hs_a")), "doc_id")
+      .join(ps.select(col("doc_id").as("probe_id"), col("hs").as("hs_b")),
+        "probe_id"), keys, threshold)
   }
 
   /** Per-doc postings of the shingle-hash sets, positioned by the
@@ -680,18 +683,7 @@ object Dedup {
     * [[hashedShingles]] exchange with the candidate-generation stage.
     */
   private def verifyJaccard(cand: DataFrame, sets: DataFrame,
-                            threshold: Double): DataFrame = {
-    // EARLY-EXIT merge: jaccard ≥ t needs inter ≥ t·(szA+szB)/(1+t);
-    // with the round(·,6) in the output filter a row can pass with
-    // jaccard as low as t − 5e-7, so the bound is taken at t − 1e-6
-    // (strictly looser) and survivors still face the EXACT original
-    // filter — identical answers, but the millions of non-qualifying
-    // candidates bail out of the merge the moment the remaining
-    // elements cannot reach the bound instead of walking both arrays.
-    val tSafe = math.max(threshold - 1e-6, 0.0)
-    val need = greatest(lit(0L), ceil(
-      lit(tSafe / (1 + tSafe)) *
-        (size(col("hs_a")) + size(col("hs_b"))).cast("double") - 1e-9))
+                            threshold: Double): DataFrame =
     // No explicit widen (r17): every caller feeds the output of a
     // `.distinct()`, whose final aggregate AQE widths by BYTES
     // (parallelismFirst, 1 MB min-partition) — at sf0.1 the 26 MB
@@ -705,18 +697,68 @@ object Dedup {
     // Worst case at the boundary (a ~1 MB candidate frame) is a
     // single-task merge wave of ~0.5 s — the same order as the task
     // overhead the widen itself cost.
-    cand
+    scoreJaccard(cand
       .join(sets.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
+      .join(sets.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b"),
+      Seq(col("doc_a"), col("doc_b")), threshold)
+
+  /** The one exact-Jaccard scorer: `rows` carry two sorted shingle-hash
+    * arrays `hs_a`/`hs_b`; returns the aliased `keys` plus the 6-dp
+    * rounded `jaccard`, rows below `threshold` dropped. Every Jaccard
+    * path (indexed, banded, blocked all-pairs) ends here, so they
+    * return bit-identical results.
+    *
+    * EARLY-EXIT merge: jaccard ≥ t needs inter ≥ t·(szA+szB)/(1+t);
+    * with the round(·,6) in the output filter a row can pass with
+    * jaccard as low as t − 5e-7, so the bound is taken at t − 1e-6
+    * (strictly looser) and survivors still face the EXACT original
+    * filter — identical answers, but the millions of non-qualifying
+    * candidates bail out of the merge the moment the remaining
+    * elements cannot reach the bound instead of walking both arrays.
+    */
+  private def scoreJaccard(rows: DataFrame, keys: Seq[Column],
+                           threshold: Double): DataFrame = {
+    val tSafe = math.max(threshold - 1e-6, 0.0)
+    val need = greatest(lit(0L), ceil(
+      lit(tSafe / (1 + tSafe)) *
+        (size(col("hs_a")) + size(col("hs_b"))).cast("double") - 1e-9))
+    rows.select(keys ++ Seq(
         graft.functions.VectorFunctions.sortedIntersectAtLeast(
           col("hs_a"), col("hs_b"), need).as("inter"),
-        size(col("hs_a")).cast("long").as("sz_a"), size(col("hs_b")).cast("long").as("sz_b"))
+        size(col("hs_a")).cast("long").as("sz_a"),
+        size(col("hs_b")).cast("long").as("sz_b")): _*)
       .filter(col("inter") >= 0)
       .withColumn("jaccard", round(col("inter").cast("double") /
         (col("sz_a") + col("sz_b") - col("inter")), 6))
       .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+      .drop("inter", "sz_a", "sz_b")
+  }
+
+  /** The one exact-containment scorer — [[scoreJaccard]]'s sibling for
+    * `round(inter / min(|A|,|B|), 6) ≥ t`. Early-exit bound:
+    * `round(inter/min, 6) ≥ t` requires `inter ≥ (t − 5e-7)·min`, so
+    * the merge may bail at `need = ⌈tSafe·min⌉` with tSafe = t − 1e-6
+    * (strictly looser — the identical-results argument above) and
+    * every surviving row still faces the EXACT metric filter. r17: the
+    * dense/all-pairs verifiers ran the FULL merge per pair (profiled
+    * at ~20 warm CPU-s on the sf0.1 all-pairs containment stage, 12.5M
+    * merges for 3.2k qualifying rows); they share this bound now.
+    */
+  private def scoreContainment(rows: DataFrame, keys: Seq[Column],
+                               threshold: Double): DataFrame = {
+    val tSafe = math.max(threshold - 1e-6, 0.0)
+    val szMin = least(size(col("hs_a")), size(col("hs_b")))
+    rows.select(keys ++ Seq(
+        graft.functions.VectorFunctions.sortedIntersectAtLeast(
+          col("hs_a"), col("hs_b"),
+          greatest(lit(0L), ceil(lit(tSafe) * szMin.cast("double") - 1e-9)))
+          .as("inter"),
+        szMin.cast("long").as("sz_min")): _*)
+      .filter(col("inter") >= 0)
+      .withColumn("containment",
+        round(col("inter").cast("double") / col("sz_min"), 6))
+      .filter(col("containment") >= threshold)
+      .drop("inter", "sz_min")
   }
 
   /** Dense-regime cutoff for the ngram pair operators' cost-based
@@ -742,14 +784,26 @@ object Dedup {
     * index path is always chosen; the dense branch exists for
     * boilerplate-heavy small-vocabulary slices, where Θ(n²) OUTPUT
     * makes all-pairs work the lower bound anyway. @volatile var so
-    * tests can pin either path and assert bit-identical outputs.
+    * tests can pin either path and assert bit-identical outputs;
+    * [[denseRegime]] is its one reader.
     */
   @volatile var denseOverlapCutoff: Double = 1.0
 
-  /** (nDocs, expected random-pair overlap) of a [[hashedShingles]]
-    * snapshot — see [[denseOverlapCutoff]]. Linear in the postings;
-    * the df aggregate is vocabulary-sized.
+  /** The dense-regime decision of every ngram pair operator: `density`
+    * (an [[overlapDensity]]/[[crossOverlapDensity]] statistic) scaled
+    * by the operator's `prefixFactor` reaches [[denseOverlapCutoff]].
+    * `ns` are the side sizes, for the probe line only.
     */
+  private def denseRegime(op: String, ns: Seq[Long], density: Double,
+                          prefixFactor: Double): Boolean = {
+    val prefixDensity = density * prefixFactor
+    val dense = prefixDensity >= denseOverlapCutoff
+    if (sys.env.contains("GRAFT_PROBE"))
+      println(f"[probe]   $op n=${ns.mkString("x")} density=$density%.3f " +
+        f"prefixDensity=$prefixDensity%.3f dense=$dense")
+    dense
+  }
+
   /** How many docs the density statistic reads in full before it
     * switches to a bounded deterministic sample. The dispatch needs
     * ONE bit (dense vs indexed) from `density`, and both paths are
@@ -764,8 +818,12 @@ object Dedup {
     * about the same anyway. Below the bound (every hash gate's sf)
     * the statistic is exact and decisions are bit-stable.
     */
-  @volatile var densitySampleDocs: Long = 2000L
+  val densitySampleDocs: Long = 2000L
 
+  /** (nDocs, expected random-pair overlap) of a [[hashedShingles]]
+    * snapshot — see [[denseOverlapCutoff]]. Linear in the postings;
+    * the df aggregate is vocabulary-sized.
+    */
   private[graft] def overlapDensity(sets: DataFrame): (Long, Double) = {
     val t0 = System.nanoTime()
     val n = sets.count()
@@ -852,7 +910,8 @@ object Dedup {
 
   /** Rectangle-blocked cross-set all-pairs: corpus blocks × probe
     * blocks, one equi-key per (p, q) cell; every (corpus, probe) pair
-    * meets on exactly one key. Returns (doc_id, probe_id, hs_c, hs_p).
+    * meets on exactly one key. Returns (doc_id, probe_id, hs_a, hs_b)
+    * — corpus set, probe set.
     */
   private def allPairsBlockedAcross(cs: DataFrame, nc: Long,
                                     ps: DataFrame, np: Long): DataFrame = {
@@ -870,84 +929,8 @@ object Dedup {
         (col("o") * bp + col("blk")).as("cell"))
     left.as("a").join(right.as("b"), col("a.cell") === col("b.cell"))
       .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("probe_id"),
-        col("a.hs").as("hs_c"), col("b.hs").as("hs_p"))
+        col("a.hs").as("hs_a"), col("b.hs").as("hs_b"))
   }
-
-  /** Exact verification over an [[allPairsBlocked]] frame — identical
-    * arithmetic (and 6-dp rounding) to the index paths' verifiers, so
-    * the two paths return bit-identical results. */
-  /** Early-exit intersection bound for a CONTAINMENT verification row:
-    * `round(inter/min, 6) ≥ t` requires `inter ≥ (t − 5e-7)·min`, so
-    * the merge may bail at `need = ⌈tSafe·min⌉` with tSafe = t − 1e-6
-    * (strictly looser — see [[verifyJaccard]], the identical-results
-    * argument) and every surviving row still faces the EXACT metric
-    * filter. r17: the dense/all-pairs verifiers ran the FULL merge per
-    * pair (profiled at ~20 warm CPU-s on the sf0.1 all-pairs
-    * containment stage, 12.5M merges for 3.2k qualifying rows); the
-    * index-path verifiers already early-exited via the same kernel.
-    */
-  private def containmentNeed(szMin: org.apache.spark.sql.Column,
-                              threshold: Double): org.apache.spark.sql.Column = {
-    val tSafe = math.max(threshold - 1e-6, 0.0)
-    greatest(lit(0L), ceil(lit(tSafe) * szMin.cast("double") - 1e-9))
-  }
-
-  private def scoreAllPairs(pairs: DataFrame, threshold: Double,
-                            jaccard: Boolean): DataFrame = {
-    val tSafe = math.max(threshold - 1e-6, 0.0)
-    if (jaccard) {
-      // size-ratio prefilter BEFORE the merge (the same bound the
-      // indexed path pushes into its candidate join): round(j,6) ≥ t
-      // forces min ≥ tSafe·max, so failing pairs skip the kernel
-      // entirely — they could only produce rows the filter drops
-      val base = pairs
-        .filter(least(size(col("hs_a")), size(col("hs_b"))).cast("double") >=
-          lit(tSafe) * greatest(size(col("hs_a")), size(col("hs_b"))) - 1e-9)
-        .select(
-          least(col("id_a"), col("id_b")).as("doc_a"),
-          greatest(col("id_a"), col("id_b")).as("doc_b"),
-          graft.functions.VectorFunctions.sortedIntersectAtLeast(
-            col("hs_a"), col("hs_b"),
-            greatest(lit(0L), ceil(lit(tSafe / (1 + tSafe)) *
-              (size(col("hs_a")) + size(col("hs_b"))).cast("double") - 1e-9)))
-            .as("inter"),
-          size(col("hs_a")).cast("long").as("sz_a"),
-          size(col("hs_b")).cast("long").as("sz_b"))
-        .filter(col("inter") >= 0)
-      base.withColumn("jaccard", round(col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")), 6))
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    } else
-      pairs.select(
-          least(col("id_a"), col("id_b")).as("doc_a"),
-          greatest(col("id_a"), col("id_b")).as("doc_b"),
-          graft.functions.VectorFunctions.sortedIntersectAtLeast(
-            col("hs_a"), col("hs_b"),
-            containmentNeed(least(size(col("hs_a")), size(col("hs_b"))),
-              threshold)).as("inter"),
-          least(size(col("hs_a")), size(col("hs_b"))).cast("long").as("sz_min"))
-        .filter(col("inter") >= 0)
-        .withColumn("containment",
-          round(col("inter").cast("double") / col("sz_min"), 6))
-        .filter(col("containment") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("containment"))
-  }
-
-  /** [[scoreAllPairs]] for the cross-set frame. */
-  private def scoreAcrossAllPairs(pairs: DataFrame,
-                                  threshold: Double): DataFrame =
-    pairs.select(col("doc_id"), col("probe_id"),
-        graft.functions.VectorFunctions.sortedIntersectAtLeast(
-          col("hs_c"), col("hs_p"),
-          containmentNeed(least(size(col("hs_c")), size(col("hs_p"))),
-            threshold)).as("inter"),
-        least(size(col("hs_c")), size(col("hs_p"))).cast("long").as("sz_min"))
-      .filter(col("inter") >= 0)
-      .withColumn("containment",
-        round(col("inter").cast("double") / col("sz_min"), 6))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_id"), col("probe_id"), col("containment"))
 
   /** CONTAINMENT near-dup pairs — `|A∩B| / min(|A|,|B|) ≥ threshold` —
     * the asymmetric sibling of [[ngramJaccard]], for the pair class
@@ -988,13 +971,10 @@ object Dedup {
     // [[denseOverlapCutoff]]. Containment's candidate join is
     // small-side prefix (~(1−t) of postings) × FULL index, so the
     // prefix scaling has a single (1−t) factor.
-    if (sys.env.contains("GRAFT_PROBE"))
-      println(f"[probe]   ngramContainment n=$nDocs density=$density%.3f " +
-        f"prefixDensity=${density * (1 - threshold)}%.3f " +
-        f"dense=${density * (1 - threshold) >= denseOverlapCutoff}")
-    if (density * (1 - threshold) >= denseOverlapCutoff)
-      scoreAllPairs(allPairsBlocked(sets, nDocs), threshold,
-        jaccard = false)
+    if (denseRegime("ngramContainment", Seq(nDocs), density, 1 - threshold))
+      scoreContainment(allPairsBlocked(sets, nDocs),
+        Seq(least(col("id_a"), col("id_b")).as("doc_a"),
+          greatest(col("id_a"), col("id_b")).as("doc_b")), threshold)
     else containmentIndexed(sets, threshold)
   }
 
@@ -1027,22 +1007,11 @@ object Dedup {
           alphaOk)
       .select(col("a.doc_id").as("doc_s"), col("b.doc_id").as("doc_l"))
       .distinct()
-    cand
-      .join(sets.select(col("doc_id").as("doc_s"), col("hs").as("hs_s")), "doc_s")
-      .join(sets.select(col("doc_id").as("doc_l"), col("hs").as("hs_l")), "doc_l")
-      .select(
-        least(col("doc_s"), col("doc_l")).as("doc_a"),
-        greatest(col("doc_s"), col("doc_l")).as("doc_b"),
-        graft.functions.VectorFunctions.sortedIntersectAtLeast(
-          col("hs_s"), col("hs_l"),
-          containmentNeed(least(size(col("hs_s")), size(col("hs_l"))),
-            threshold)).as("inter"),
-        least(size(col("hs_s")), size(col("hs_l"))).cast("long").as("sz_min"))
-      .filter(col("inter") >= 0)
-      .withColumn("containment",
-        round(col("inter").cast("double") / col("sz_min"), 6))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("containment"))
+    scoreContainment(cand
+      .join(sets.select(col("doc_id").as("doc_s"), col("hs").as("hs_a")), "doc_s")
+      .join(sets.select(col("doc_id").as("doc_l"), col("hs").as("hs_b")), "doc_l"),
+      Seq(least(col("doc_s"), col("doc_l")).as("doc_a"),
+        greatest(col("doc_s"), col("doc_l")).as("doc_b")), threshold)
   }
 
   /** MinHash signatures: for each doc, `numHashes` minima of seeded
@@ -1285,31 +1254,6 @@ object Dedup {
     missed.crossJoin(spurious).crossJoin(beyond)
   }
 
-  /** Connected components over a near-dup pair graph: the transitive
-    * closure that turns pairwise matches into dup GROUPS (A~B, B~C ⇒
-    * {A,B,C} share one group even if A,C never matched directly) —
-    * the contract an actual dedup pass needs, since keeping one doc
-    * per *pair* over-deletes chains.
-    *
-    * Output: one row per doc that appears in a pair —
-    * `(doc_id, component_id)` with `component_id` = min doc_id in the
-    * component (deterministic canonical representative).
-    *
-    * Algorithm: min-label propagation with pointer-jumping. Each round
-    * propagates the smallest neighbor label (one shuffle) and then
-    * shortcuts every label to its label's label (one more join) — the
-    * doubling step that turns O(diameter) rounds into O(log diameter),
-    * which is what survives adversarially long dup CHAINS (templated
-    * crawl pages) at corpus scale. The driver loop only checks a
-    * per-round convergence COUNT — no row data ever reaches the
-    * driver. Each round's labels are snapshotted to parquet so both
-    * the data lineage AND the logical plan stay O(1) per round (see
-    * the in-body comment — persist() alone lets the plan tree grow
-    * 4× per round).
-    */
-  def dupComponents(pairs: DataFrame): DataFrame =
-    dupComponents(pairs, hotDegree = 65536, driverEdgeBound = maxDriverEdges)
-
   /** Edge-count bound for [[dupComponents]]' small-graph fast path: a
     * pair graph with at most this many edges (known exactly — the
     * edge list is materialized before the choice) runs an exact
@@ -1325,9 +1269,10 @@ object Dedup {
     * pair graph blows the bound immediately; the CONTRACTED graphs
     * of [[mergedComponents]]' daily increments, by design a few
     * nodes per new-pair endpoint, are exactly what stays under it).
-    * 0 disables. @volatile var so tests can pin either path.
+    * 0 disables; callers (and specs) pin either path through
+    * [[dupComponents]]' `driverEdgeBound`.
     */
-  @volatile var maxDriverEdges: Long = 500000L
+  val maxDriverEdges: Long = 500000L
 
   /** Exact union-find over a driver-bounded edge list, root = min id
     * of each component (attach-larger-root-under-smaller keeps every
@@ -1358,24 +1303,39 @@ object Dedup {
       .toDF("doc_id", "component_id")
   }
 
-  /** [[dupComponents]] with an explicit hub threshold. `hotDegree`
-    * bounds the per-task shuffle rows of the propagation join: a node
-    * whose degree reaches it (web-duplicate graphs are power-law — a
-    * boilerplate page can match millions) is a HOT key, and the
-    * propagation handles hot keys on a broadcast path instead of the
-    * shuffle join (see in-body comment). Lower it in tests to force
-    * the path; raise it past the max degree to disable.
+  /** Connected components over a near-dup pair graph: the transitive
+    * closure that turns pairwise matches into dup GROUPS (A~B, B~C ⇒
+    * {A,B,C} share one group even if A,C never matched directly) —
+    * the contract an actual dedup pass needs, since keeping one doc
+    * per *pair* over-deletes chains.
+    *
+    * Output: one row per doc that appears in a pair —
+    * `(doc_id, component_id)` with `component_id` = min doc_id in the
+    * component (deterministic canonical representative).
+    *
+    * Algorithm: min-label propagation with pointer-jumping. Each round
+    * propagates the smallest neighbor label (one shuffle) and then
+    * shortcuts every label to its label's label (one more join) — the
+    * doubling step that turns O(diameter) rounds into O(log diameter),
+    * which is what survives adversarially long dup CHAINS (templated
+    * crawl pages) at corpus scale. The driver loop only checks a
+    * per-round convergence COUNT — no row data ever reaches the
+    * driver. Each round's labels are snapshotted to parquet so both
+    * the data lineage AND the logical plan stay O(1) per round (see
+    * the in-body comment — persist() alone lets the plan tree grow
+    * 4× per round).
+    *
+    * `hotDegree` bounds the per-task shuffle rows of the propagation
+    * join: a node whose degree reaches it (web-duplicate graphs are
+    * power-law — a boilerplate page can match millions) is a HOT key,
+    * and the propagation handles hot keys on a broadcast path instead
+    * of the shuffle join (see in-body comment). Lower it in tests to
+    * force the path; raise it past the max degree to disable.
+    * `driverEdgeBound` (see [[maxDriverEdges]]) gates the driver-local
+    * union-find fast path — 0 forces the distributed loop.
     */
-  def dupComponents(pairs: DataFrame, hotDegree: Int): DataFrame =
-    dupComponents(pairs, hotDegree, driverEdgeBound = 0L)
-
-  /** [[dupComponents]] with both knobs explicit; `driverEdgeBound`
-    * (see [[maxDriverEdges]]) gates the driver-local union-find fast
-    * path — 0 forces the distributed loop (what the 2-arg overload
-    * pins, so distributed-behavior specs stay on it).
-    */
-  def dupComponents(pairs: DataFrame, hotDegree: Int,
-                    driverEdgeBound: Long): DataFrame = {
+  def dupComponents(pairs: DataFrame, hotDegree: Int = 65536,
+                    driverEdgeBound: Long = maxDriverEdges): DataFrame = {
     val spark = pairs.sparkSession
     // snapshot the PAIRS to parquet, not persist(): the union below
     // reads its input twice (so materializing downstream of it would
@@ -1793,26 +1753,35 @@ object Dedup {
                              strCol: String, maxDist: Int): DataFrame = {
     require(maxDist >= 0,
       s"editDistanceJoinAcross: maxDist must be ≥ 0, got $maxDist")
-    val d = maxDist
     val cs = editStrings(corpus, strCol, "doc_id")
     val ps = editStrings(probes, strCol, "doc_id")
-    val cand = editSegments(cs, d)
-      .select(col("doc_id"), col("slot"), col("m"), col("h"))
+    editAcross(editSegments(cs, maxDist), cs, ps, maxDist)
+  }
+
+  /** The cross-set edit join behind [[editDistanceJoinAcross]] and
+    * [[editAcrossIndexed]], which differ only in where the corpus
+    * segments `segs` and strings `cstrs` come from: segment candidates
+    * against the probes' banded substrings, the both-short band block,
+    * then one threshold-banded Levenshtein per distinct candidate.
+    */
+  private def editAcross(segs: DataFrame, cstrs: DataFrame, ps: DataFrame,
+                         d: Int): DataFrame = {
+    val cand = segs.select(col("doc_id"), col("slot"), col("m"), col("h"))
       .join(editSubstrings(ps, d).select(col("doc_id").as("probe_id"),
         col("slot"), col("m"), col("h")), Seq("h", "slot", "m"))
       .select("doc_id", "probe_id")
-    val shortCand = cs.filter(col("len") <= d)
+    val shortCand = cstrs.filter(col("len") <= d)
       .select(col("doc_id"), explode(sequence(
         greatest(col("len") - d, lit(0)), col("len") + d)).as("lb"))
       .join(ps.filter(col("len") <= 2 * d)
         .select(col("doc_id").as("probe_id"), col("len").as("lb")), Seq("lb"))
       .select("doc_id", "probe_id")
     cand.unionByName(shortCand).distinct()
-      .join(cs.select(col("doc_id"), col("s").as("s_c")), "doc_id")
+      .join(cstrs.select(col("doc_id"), col("s").as("s_c")), "doc_id")
       .join(ps.select(col("doc_id").as("probe_id"), col("s").as("s_p")),
         "probe_id")
       .select(col("doc_id"), col("probe_id"),
-        levenshtein(col("s_c"), col("s_p"), maxDist).cast("long").as("dist"))
+        levenshtein(col("s_c"), col("s_p"), d).cast("long").as("dist"))
       .filter(col("dist") >= 0)
   }
 
@@ -2125,13 +2094,12 @@ object Dedup {
 
   /** Cross-set containment of `probes` against the INDEXED corpus —
     * [[ngramContainmentAcross]]'s exact answer (spec-proven equal)
-    * without touching old text: the corpus side is two parquet scans
-    * (postings + sets), the probe side one shingle pass. The smaller
-    * set's prefix must share a shingle with the other side's full
-    * postings (the theorem; size ties count the probe as smaller —
-    * either choice is covered, it just must be deterministic), and
-    * the per-match positional bound prunes inside the join exactly as
-    * in [[ngramContainment]]. Returns (doc_id, probe_id, containment).
+    * without touching old text: the corpus side is parquet scans
+    * (postings + sets), the probe side one shingle pass ranked under
+    * the stored frozen order; both feed [[containmentAcross]]. Its
+    * dense-regime decision reads the CURRENT stored corpus df, not the
+    * frozen order — the frozen order is a correctness device, the
+    * decision wants live cost. Returns (doc_id, probe_id, containment).
     */
   def containmentAcrossIndexed(probes: DataFrame, path: String,
                                n: Int = 2,
@@ -2146,57 +2114,12 @@ object Dedup {
     // absent from an older sets read — the verification join would
     // then silently drop those pairs instead of scoring them.
     val asOf = Some(graft.util.Manifest.snapshot(spark, path).gen)
-    // dense-regime path choice, same statistic as ngramContainmentAcross
-    // (the CURRENT stored corpus df, not the frozen order — the frozen
-    // order is a correctness device, the decision wants live cost):
-    // when a random (corpus, probe) pair shares ~1 shingle within the
-    // small-side prefix, the posting join is Θ(nc·np) anyway and the
-    // rectangle-blocked verification over the STORED sets does the
-    // same merges without the posting join + candidate distinct.
-    val csetsAll = graft.util.Manifest.read(spark, path, "sets", asOf)
-    val (nc, np, density) = crossOverlapDensity(csetsAll, ps)
-    if (sys.env.contains("GRAFT_PROBE"))
-      println(f"[probe]   containmentAcrossIndexed nc=$nc np=$np " +
-        f"density=$density%.3f prefixDensity=${density * (1 - threshold)}%.3f " +
-        f"dense=${density * (1 - threshold) >= denseOverlapCutoff}")
-    if (density * (1 - threshold) >= denseOverlapCutoff)
-      return scoreAcrossAllPairs(allPairsBlockedAcross(csetsAll, nc, ps, np),
-        threshold)
-    val dftab = graft.util.Manifest.read(spark, path, "dftab", asOf)
-    val pposts = snap(frozenRankedPostings(ps, dftab))
-    val cposts = graft.util.Manifest.read(spark, path, "postings", asOf)
-    def plen(sz: org.apache.spark.sql.Column) =
-      sz - ceil(lit(threshold) * sz - 1e-9) + 1
-    val smallerIsProbe = col("p.sz") <= col("c.sz")
-    val prefixOk =
-      (smallerIsProbe && col("p.pos") < plen(col("p.sz"))) ||
-        (!smallerIsProbe && col("c.pos") < plen(col("c.sz")))
-    // earliest-shared-shingle positional bound under the SHARED frozen
-    // order (both pos columns rank in the same total order, so the
-    // ngramContainment argument carries over verbatim)
-    val alphaOk = (lit(1) +
-        least(col("p.sz") - 1 - col("p.pos"), col("c.sz") - 1 - col("c.pos")))
-      .cast("double") >=
-        lit(threshold) * least(col("p.sz"), col("c.sz")) - 1e-9
-    val cand = cposts.as("c").join(pposts.as("p"),
-        col("c.h") === col("p.h") && prefixOk && alphaOk)
-      .select(col("c.doc_id").as("doc_id"), col("p.doc_id").as("probe_id"))
-      .distinct()
-    cand
-      .join(csetsAll.select(col("doc_id"), col("hs").as("hs_c")), "doc_id")
-      .join(ps.select(col("doc_id").as("probe_id"), col("hs").as("hs_p")),
-        "probe_id")
-      .select(col("doc_id"), col("probe_id"),
-        graft.functions.VectorFunctions.sortedIntersectAtLeast(
-          col("hs_c"), col("hs_p"),
-          containmentNeed(least(size(col("hs_c")), size(col("hs_p"))),
-            threshold)).as("inter"),
-        least(size(col("hs_c")), size(col("hs_p"))).cast("long").as("sz_min"))
-      .filter(col("inter") >= 0)
-      .withColumn("containment",
-        round(col("inter").cast("double") / col("sz_min"), 6))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_id"), col("probe_id"), col("containment"))
+    val cs = graft.util.Manifest.read(spark, path, "sets", asOf)
+    containmentAcross("containmentAcrossIndexed", cs, ps, threshold) {
+      val dftab = graft.util.Manifest.read(spark, path, "dftab", asOf)
+      val pposts = snap(frozenRankedPostings(ps, dftab))
+      (graft.util.Manifest.read(spark, path, "postings", asOf), pposts)
+    }
   }
 
   /** Fold a new corpus shard into the containment index: sets and
@@ -2293,25 +2216,8 @@ object Dedup {
     val d = graft.util.Manifest.read(spark, path, "params", asOf)
       .head().getInt(0)
     val ps = editStrings(probes, strCol, "doc_id")
-    val segs = graft.util.Manifest.read(spark, path, "segs", asOf)
-    val cstrs = graft.util.Manifest.read(spark, path, "strs", asOf)
-    val cand = segs.select(col("doc_id"), col("slot"), col("m"), col("h"))
-      .join(editSubstrings(ps, d).select(col("doc_id").as("probe_id"),
-        col("slot"), col("m"), col("h")), Seq("h", "slot", "m"))
-      .select("doc_id", "probe_id")
-    val shortCand = cstrs.filter(col("len") <= d)
-      .select(col("doc_id"), explode(sequence(
-        greatest(col("len") - d, lit(0)), col("len") + d)).as("lb"))
-      .join(ps.filter(col("len") <= 2 * d)
-        .select(col("doc_id").as("probe_id"), col("len").as("lb")), Seq("lb"))
-      .select("doc_id", "probe_id")
-    cand.unionByName(shortCand).distinct()
-      .join(cstrs.select(col("doc_id"), col("s").as("s_c")), "doc_id")
-      .join(ps.select(col("doc_id").as("probe_id"), col("s").as("s_p")),
-        "probe_id")
-      .select(col("doc_id"), col("probe_id"),
-        levenshtein(col("s_c"), col("s_p"), d).cast("long").as("dist"))
-      .filter(col("dist") >= 0)
+    editAcross(graft.util.Manifest.read(spark, path, "segs", asOf),
+      graft.util.Manifest.read(spark, path, "strs", asOf), ps, d)
   }
 
   // ── incremental connected components ──────────────────────────────

@@ -202,7 +202,7 @@ object FreqSketch {
     * shard ledger: re-build the store from the merged summary, which
     * collapses the shard count back to 1).
     */
-  @volatile var maxMergeRows: Long = 8L << 20
+  val maxMergeRows: Long = 8L << 20
 
   def mergedSketch(spark: SparkSession, path: String,
                    asOf: Option[Int] = None): (Map[String, Long], Long, Double) = {

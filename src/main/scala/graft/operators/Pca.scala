@@ -1320,11 +1320,15 @@ object Pca {
   /** The cross-arm decision with its evidence. `resid` is None when
     * stage 1 (the analytic cost comparison) kept the banded arm
     * without fitting anything — the cheap path for query-heavy calls.
+    * `n` (corpus count) and `d` (embedding width) are what the
+    * dispatch measured, so serving either arm from a supplied
+    * dispatch scans nothing (the [[AnnDispatch]] `n` contract).
     */
   case class CrossDispatch(residual: Boolean, nlist: Int,
                            analyticBanded: Double, analyticResidual: Double,
                            rmodel: Option[IvfResidualModel],
-                           resid: Option[CalibratedBudget])
+                           resid: Option[CalibratedBudget],
+                           n: Long, d: Int)
 
   /** Worst-case [[residualMoments]] per-task accumulator for a given
     * (nlist, d) — the arithmetic of the plan-time refusal.
@@ -1354,11 +1358,18 @@ object Pca {
     */
   private[graft] val crossBandRecallBar = 0.99999
 
+  /** `force` pins an arm for gate/spec verification of both branches
+    * against one oracle (the [[Similarity.similarPairsAuto]]
+    * convention): `Some(false)` stops after stage 1 on the banded arm,
+    * `Some(true)` skips stage 1's banded exit and takes the residual
+    * arm at the stage-2 fit and budget whatever the costs say.
+    */
   def crossDispatch(corpus: DataFrame, nQueries: Long, k: Int = 10,
                     bar: Double = 0.9, kDims: Int = 16,
                     threshold: Double = 0.4,
                     rmodelOpt: Option[IvfResidualModel] = None,
-                    budgetOpt: Option[CalibratedBudget] = None): CrossDispatch = {
+                    budgetOpt: Option[CalibratedBudget] = None,
+                    force: Option[Boolean] = None): CrossDispatch = {
     val n = corpus.count()
     val (nlist, npFloor) = Similarity.scaledIvfConfig(n)
     // price the geometry the banded branch actually SERVES (the wide
@@ -1378,9 +1389,9 @@ object Pca {
     val costBanded = n.toDouble * planes
     val costResidual = nQueries.toDouble * math.max(8, npFloor) *
       (n.toDouble / nlist) * kDims + nQueries.toDouble * nlist * d
-    if (costResidual >= costBanded)
+    if (force.contains(false) || (force.isEmpty && costResidual >= costBanded))
       return CrossDispatch(residual = false, nlist, costBanded, costResidual,
-        None, None)
+        None, None, n, d)
     // stage 2: the residual arm must hold the caller's bar at a
     // MEASURED budget (fit + calibration are training-class, amortized
     // via rmodelOpt/budgetOpt on repeated serving) — and the cost
@@ -1400,8 +1411,8 @@ object Pca {
     }
     val costCalibrated = nQueries.toDouble * budget.nprobe *
       (n.toDouble / nlist) * kDims + assignCost
-    CrossDispatch(budget.ok && costCalibrated < costBanded, nlist,
-      costBanded, costCalibrated, Some(rmodel), Some(budget))
+    CrossDispatch(force.getOrElse(budget.ok && costCalibrated < costBanded),
+      nlist, costBanded, costCalibrated, Some(rmodel), Some(budget), n, d)
   }
 
   /** MEASURED probe-budget calibration for THRESHOLD-match coverage —
@@ -1553,61 +1564,37 @@ object Pca {
 
   /** [[Similarity.knnJoinCross]] routed through [[crossDispatch]]: the
     * engine picks the banded recall-1.0 arm or the calibrated residual
-    * arm from the measured costs. `force` pins an arm for gate/spec
-    * verification of both branches against one oracle (the
-    * [[Similarity.similarPairsAuto]] convention).
+    * arm from the measured costs. `force` pins an arm (see
+    * [[crossDispatch]]); a supplied dispatch serves without a scan.
     */
   def knnJoinCrossAuto(left: DataFrame, right: DataFrame,
                        threshold: Double, k: Int, kDims: Int = 16,
                        bar: Double = 0.9, mult: Int = 8,
                        dispatchOpt: Option[CrossDispatch] = None,
                        force: Option[Boolean] = None): DataFrame = {
-    val d = dispatchOpt.getOrElse {
-      force match {
-        case Some(false) => CrossDispatch(residual = false, 0, 0d, 0d, None, None)
-        case Some(true) =>
-          crossDispatch(right, left.count(), k, bar, kDims, threshold) match {
-            case cd if cd.rmodel.isDefined => cd.copy(residual = true)
-            case cd =>
-              // stage-1 banded win fit nothing; a forced residual arm
-              // fits here — reduced when the plain moments would refuse
-              val n = right.count()
-              val (nlist, npFloor) = Similarity.scaledIvfConfig(n)
-              val dim = right.select(col("embedding"))
-                .head.getSeq[Float](0).length
-              val rm = fitCrossResidual(right, kDims, nlist, dim)
-              cd.copy(residual = true, rmodel = Some(rm),
-                resid = Some(calibrateResidualBudget(right, rm, k, bar,
-                  floor = math.max(8, npFloor))))
-          }
-        case None => crossDispatch(right, left.count(), k, bar, kDims, threshold)
-      }
-    }
+    val d = dispatchOpt.getOrElse(
+      crossDispatch(right, left.count(), k, bar, kDims, threshold, force = force))
     if (sys.env.contains("GRAFT_PROBE"))
       println(f"[probe]   knnJoinCrossAuto costBanded=${d.analyticBanded}%.3g " +
         f"costResidual=${d.analyticResidual}%.3g " +
         f"budget=${d.resid.map(_.nprobe).getOrElse(-1)} -> " +
         (if (d.residual) "residual" else "banded"))
     if (d.residual) {
-      val n = right.count()
       val np = d.resid.get.nprobe
       val rm = d.rmodel.get
       ivfResidualTopKCross(right, left, rm, k, np,
-        probedMassMult(n, rm.nlist, np, k, mult) * k, threshold)
+        probedMassMult(d.n, rm.nlist, np, k, mult) * k, threshold)
     } else {
       // serve the banded arm at the geometry the dispatcher PRICED —
       // the occupancy-scaled wide arm at the analytic recall bar, not
       // the fixed 32x16 default (r15 ADVICE finding 2: the default's
       // 2-bit bands put ~n/4 rows per bucket at large n, a
       // near-quadratic candidate stream nothing in the cost model
-      // represents); hyperplane width from one corpus row, like the
-      // dispatcher's assignment term
-      val n = right.count()
-      val (planes, bands, mp) = Similarity.scaledLshConfigWideArm(n,
+      // represents); hyperplane width is the dispatch's measured one
+      val (planes, bands, mp) = Similarity.scaledLshConfigWideArm(d.n,
         threshold, recallBar = crossBandRecallBar)
-      val dim = right.select(col("embedding")).head.getSeq[Float](0).length
       Similarity.knnJoinCross(left, right, threshold, k, planes, bands,
-        dim, multiProbe = mp)
+        d.d, multiProbe = mp)
     }
   }
   //

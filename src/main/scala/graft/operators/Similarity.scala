@@ -996,7 +996,7 @@ object Similarity {
     * (628 CPU-s over 3.1e7 units vs 391 over 2.0e8). Without it the
     * model flips to banded a decade before the real crossover.
     */
-  @volatile var bandedRowCostFactor: Double = 10.0
+  val bandedRowCostFactor: Double = 10.0
 
   def pairPlanFor(n: Long, threshold: Double, targetOccupancy: Int = 64,
                   recallBar: Double = 0.97, maxBands: Int = 32): PairPlan = {

@@ -158,6 +158,53 @@ class AnnDispatchSpec extends SparkSuite with Matchers {
     auto shouldBe exact
   }
 
+  test("crossDispatch carries the corpus count and width: with a dispatch " +
+      "passed in, building either auto function's banded-arm plan starts " +
+      "no Spark job") {
+    val corpus = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
+    val queries = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
+    val docs = corpus.select(col("vec_id").as("doc_id"))
+    val cd = Pca.crossDispatch(corpus, queries.count())
+    cd.residual shouldBe false
+    cd.n shouldBe corpus.count()
+    cd.d shouldBe corpus.select(col("embedding")).head.getSeq[Float](0).length
+    // jobs are counted per job group, so only this thread's actions count
+    val sc = spark.sparkContext
+    val build = s"cross-plan-build-${java.util.UUID.randomUUID()}"
+    val control = s"cross-plan-control-${java.util.UUID.randomUUID()}"
+    val buildJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val controlJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`build`) => buildJobs.incrementAndGet()
+          case Some(`control`) => controlJobs.incrementAndGet()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(build, "plan build only")
+      val (knn, decon) =
+        try (Pca.knnJoinCrossAuto(queries, corpus, 0.4, k = 3,
+            dispatchOpt = Some(cd)),
+          Curation.semanticDecontaminateAuto(docs, corpus, queries, 0.45,
+            dispatchOpt = Some(cd)))
+        finally sc.clearJobGroup()
+      // a control action in a second group: the listener bus is FIFO,
+      // so once its job is seen every plan-build job would have been
+      sc.setJobGroup(control, "control action")
+      try knn.count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (controlJobs.get() == 0 && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      controlJobs.get() should be > 0
+      buildJobs.get() shouldBe 0
+      decon.columns should contain("doc_id")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("crossDispatch stage 2 re-evaluates the cost inequality at the " +
       "CALIBRATED budget (r15 ADVICE finding 1): a ballooned budget " +
       "that now loses to the banded arm is not dispatched residual") {

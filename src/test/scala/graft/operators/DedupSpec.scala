@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
@@ -142,6 +142,24 @@ class DedupSpec extends SparkSuite with Matchers {
       .select(col("doc_a"), col("doc_b"), col("containment"))
   }
 
+  /** Every (corpus, probe) bigram pair scored by exact containment,
+    * sorted by (doc_id, probe_id). */
+  private def naiveContainmentAcross(corpus: DataFrame, probes: DataFrame,
+                                     threshold: Double): Array[Row] = {
+    val sh = (d: DataFrame) => d.select(col("doc_id"),
+      array_sort(array_distinct(transform(Dedup.shingles(col("text"), 2),
+        s => xxhash64(s)))).as("hs"))
+    sh(corpus).as("a").crossJoin(sh(probes).as("b"))
+      .filter(functions.size(col("a.hs")) > 0 && functions.size(col("b.hs")) > 0)
+      .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("probe_id"),
+        functions.size(array_intersect(col("a.hs"), col("b.hs"))).cast("double").as("i"),
+        least(functions.size(col("a.hs")), functions.size(col("b.hs"))).as("mn"))
+      .withColumn("containment", round(col("i") / col("mn"), 6))
+      .filter(col("containment") >= threshold)
+      .select("doc_id", "probe_id", "containment")
+      .orderBy("doc_id", "probe_id").collect()
+  }
+
   test("ngramContainment (small-side prefix filter) == naive all-pairs " +
       "containment, at two thresholds") {
     for (t <- Seq(0.4, 0.7)) {
@@ -178,22 +196,7 @@ class DedupSpec extends SparkSuite with Matchers {
     val bench = docs.filter(col("doc_id") % 10 === 0)
     val got = Dedup.ngramContainmentAcross(corpus, bench, n = 2, threshold = 0.5)
       .orderBy("doc_id", "probe_id").collect()
-    // naive: every cross pair, exact containment
-    val naive = {
-      val sh = (d: org.apache.spark.sql.DataFrame) => d.select(col("doc_id"),
-        array_sort(array_distinct(transform(Dedup.shingles(col("text"), 2),
-          s => xxhash64(s)))).as("hs"))
-      sh(corpus).as("a").crossJoin(sh(bench).as("b"))
-        .filter(functions.size(col("a.hs")) > 0 && functions.size(col("b.hs")) > 0)
-        .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("probe_id"),
-          functions.size(array_intersect(col("a.hs"), col("b.hs"))).cast("double").as("i"),
-          least(functions.size(col("a.hs")), functions.size(col("b.hs"))).as("mn"))
-        .withColumn("containment", round(col("i") / col("mn"), 6))
-        .filter(col("containment") >= 0.5)
-        .select("doc_id", "probe_id", "containment")
-        .orderBy("doc_id", "probe_id").collect()
-    }
-    got shouldBe naive
+    got shouldBe naiveContainmentAcross(corpus, bench, 0.5)
     // planted quote: a benchmark item embedded verbatim in a long host
     val host = (1 to 300).map(i => s"h$i").mkString(" ") + " " +
       (1 to 12).map(i => s"q$i").mkString(" ")
@@ -258,10 +261,10 @@ class DedupSpec extends SparkSuite with Matchers {
   test("dupComponents converges on a deep chain (pointer-jumping path)") {
     import spark.implicits._
     // a 20-node path: naive propagation needs ~20 rounds, doubling ~5.
-    // 2-arg overload = the DISTRIBUTED loop (the small-graph driver
-    // fast path would short-circuit the pointer-jumping under test)
+    // driverEdgeBound = 0 pins the DISTRIBUTED loop (the small-graph
+    // driver fast path would short-circuit the pointer-jumping under test)
     val pairs = (0L until 19L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.dupComponents(pairs, hotDegree = 65536)
+    val got = Dedup.dupComponents(pairs, hotDegree = 65536, driverEdgeBound = 0L)
       .as[(Long, Long)].collect()
     got.length shouldBe 20
     all(got.map(_._2)) shouldBe 0L
@@ -318,11 +321,12 @@ class DedupSpec extends SparkSuite with Matchers {
     var hot: Array[org.apache.spark.sql.Row] = null
     var cold: Array[org.apache.spark.sql.Row] = null
     val hotMax = maxTaskShuffleRead {
-      hot = Dedup.dupComponents(pairs, hotDegree = 1000)
+      hot = Dedup.dupComponents(pairs, hotDegree = 1000, driverEdgeBound = 0L)
         .orderBy("doc_id").collect()
     }
     val coldMax = maxTaskShuffleRead {
-      cold = Dedup.dupComponents(pairs, hotDegree = Int.MaxValue)
+      cold = Dedup.dupComponents(pairs, hotDegree = Int.MaxValue,
+        driverEdgeBound = 0L)
         .orderBy("doc_id").collect()
     }
     // same answer either way: every node labels to the hub's min id
@@ -342,8 +346,9 @@ class DedupSpec extends SparkSuite with Matchers {
     import spark.implicits._
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
-    // 2-arg = distributed loop — the per-round caches under test
-    val comp = Dedup.dupComponents(pairs, hotDegree = 65536)
+    // driverEdgeBound = 0: the distributed loop — the per-round caches
+    // under test
+    val comp = Dedup.dupComponents(pairs, hotDegree = 65536, driverEdgeBound = 0L)
     // the operator owns its per-round caches and releases every one —
     // a long-lived session must not accrete storage per call
     spark.sparkContext.getPersistentRDDs.keySet shouldBe cachedBefore
@@ -392,6 +397,31 @@ class DedupSpec extends SparkSuite with Matchers {
     // idempotent re-application through the manifest ledger
     Dedup.extendContainmentIndex(corpus1, path, shardId = Some("s1"))
     probe() shouldBe got1
+    // overlapping id spaces: probes re-keyed onto corpus0's doc_ids,
+    // half of them verbatim copies of the corpus doc with the SAME id
+    // (a containment-1.0 pair with doc_id == probe_id) — each side's
+    // postings rank per side, so one-shot, indexed and the naive cross
+    // scan agree on both regimes
+    val reKeyed = probes.withColumn("doc_id", col("doc_id") - 2)
+      .filter(col("doc_id") % 2 === 1)
+      .unionByName(corpus0.filter(col("doc_id") % 2 === 0))
+    val opath = graft.util.Scratch.dir("cont-idx-overlap").toString
+    Dedup.buildContainmentIndex(corpus0, opath)
+    def both() = (
+      Dedup.ngramContainmentAcross(corpus0, reKeyed, 2, 0.5)
+        .orderBy("doc_id", "probe_id").collect(),
+      Dedup.containmentAcrossIndexed(reKeyed, opath, 2, 0.5)
+        .orderBy("doc_id", "probe_id").collect())
+    val (oneShot, indexed) = both()
+    val (oneShotIdx, indexedIdx) =
+      try { Dedup.denseOverlapCutoff = Double.MaxValue; both() }
+      finally Dedup.denseOverlapCutoff = prevCut
+    val naive = naiveContainmentAcross(corpus0, reKeyed, 0.5)
+    oneShot shouldBe naive
+    indexed shouldBe naive
+    oneShotIdx shouldBe naive
+    indexedIdx shouldBe naive
+    naive.exists(r => r.getLong(0) == r.getLong(1)) shouldBe true
   }
 
   test("dupComponents driver-local union-find == distributed doubling loop") {
